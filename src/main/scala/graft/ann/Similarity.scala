@@ -26,7 +26,7 @@ import org.apache.spark.sql.expressions.Window
 object Similarity {
 
   /** Cosine between two array<double> columns — a native codegen
-    * expression ([[graft.expr.CosineSim]]) computing the exact ordered
+    * expression ([[graft.expr.VecCore.cosineBoxed]]) computing the exact ordered
     * fold the SQL oracle replicates (products summed left-to-right from
     * 0.0, sqrt of the ordered square sums, dot/(na*nb)). The previous
     * HOF formulation ([[cosineHof]], kept as the differential reference)
@@ -154,7 +154,7 @@ object Similarity {
 
   /** Fold argmax over a centroid-array COLUMN: best (max cosine, ties ->
     * first in cid-ascending order) — a native codegen expression
-    * ([[graft.expr.NearestCentroid]]) computing the exact fold the SQL
+    * ([[graft.expr.VecCore.nearestCid]]) computing the exact fold the SQL
     * oracle replicates with list_reduce (init cos=-2.0/cid=-1, strict
     * SQL-ordering `>`), with the stream vector's norm computed once
     * instead of once per centroid. [[nearestCidHof]] is the differential

@@ -159,6 +159,8 @@ object Num {
     if (s.isEmpty) None else pyFloat(s)
   }
 
-  def parseOrNull(raw: String): java.lang.Double =
-    parse(raw).map(java.lang.Double.valueOf).orNull
+  /** [[parse]] over a Catalyst string, boxed null on unparsable — the
+    * static target of `graft.expr.functions.parse_number`. */
+  def parseOrNull(raw: org.apache.spark.unsafe.types.UTF8String): java.lang.Double =
+    parse(raw.toString).map(java.lang.Double.valueOf).orNull
 }

@@ -90,7 +90,7 @@ object Dedup {
   }
 
   /** Lowercase alnum tokens — native single-pass expression
-    * (graft.expr.TokensExpr; `lower` stays a Catalyst child). The HOF
+    * (graft.expr.TextCore.tokens; `lower` stays a Catalyst argument). The HOF
     * formulation ([[tokensHof]], the differential reference) recompiled
     * the split regex and ran the empty-filter lambda interpreted per row.
     */
@@ -101,7 +101,7 @@ object Dedup {
     filter(split(lower(textCol), "[^a-z0-9]+"), x => x =!= "")
 
   /** Word k-shingles as strings ("a b c"); fewer than k tokens -> empty.
-    * Native single-pass expression (graft.expr.ShinglesExpr): same
+    * Native single-pass expression (graft.expr.TextCore.shingles): same
     * String.split token stream, same space-joined grams, same
     * first-occurrence array_distinct order as [[shinglesHof]]. */
   def shingles(textCol: Column, k: Int): Column =
@@ -170,7 +170,7 @@ object Dedup {
     * [[dupSpans]] (coverage stats) and [[removeDupSpans]] (text surgery). */
   private def dupSpanIslands(df: DataFrame, idCol: String, textCol: String,
                              k: Int, minCount: Int, site: String): DataFrame = {
-    // positional gram HASHES in one native pass (graft.expr.GramHashes):
+    // positional gram HASHES in one native pass (graft.expr.TextCore.gramHashes):
     // the gram strings are never materialized as rows — each row explodes
     // straight to (pos, 60-bit md5), the only columns the count/semi-join
     // pipeline reads. [[positionalGrams]] + md5Hash60 is the differential
@@ -302,10 +302,11 @@ object Dedup {
       .groupBy("band", "bucket")
       .agg(sort_array(collect_list(col("id"))).as("ids"))
       .where(size(col("ids")) >= 2)
-    // native pair emission (graft.expr.PairEmit): one nested loop per
+    // native pair emission (graft.expr.PairCore.pairs): one nested loop per
     // bucket — the HOF formulation ran every lambda interpreted and
     // `slice` allocated a fresh sub-array per outer element
-    grouped.select(explode(graft.expr.pairops.pair_emit(col("ids"))).as("p"))
+    grouped.select(explode(
+        graft.expr.pairops.pair_emit(col("ids"), grouped.schema("ids").dataType)).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
       .distinct()
   }
@@ -645,7 +646,8 @@ object Dedup {
       .groupBy("band", "bucket")
       .agg(sort_array(collect_list(struct(col("id"), col("is_new")))).as("ms"))
       .where(size(col("ms")) >= 2)
-    grouped.select(explode(graft.expr.pairops.pair_emit_new_only(col("ms"))).as("p"))
+    grouped.select(explode(
+        graft.expr.pairops.pair_emit_new_only(col("ms"), grouped.schema("ms").dataType)).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
       .distinct()
   }
@@ -746,7 +748,8 @@ object Dedup {
       .groupBy("block", "block_val")
       .agg(sort_array(collect_list(struct(col("id"), col("blocks")))).as("ms"))
       .where(size(col("ms")) >= 2)
-    grouped.select(explode(graft.expr.pairops.pair_emit_hamming(col("ms"))).as("p"))
+    grouped.select(explode(
+        graft.expr.pairops.pair_emit_hamming(col("ms"), grouped.schema("ms").dataType)).as("p"))
       .select(col("p.id_a"), col("p.id_b"), col("p.hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()

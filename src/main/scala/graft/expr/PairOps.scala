@@ -1,11 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -17,9 +13,9 @@ import org.apache.spark.sql.graftbridge.Bridge
  * y => struct(x, y)))))` — runs every lambda interpreted and `slice`
  * ALLOCATES a fresh sub-array per outer element (O(m) array copies per
  * m-member bucket on top of the O(m^2) pairs themselves). These
- * expressions emit the identical pair structs in one native nested loop
+ * kernels emit the identical pair structs in one native nested loop
  * over the sorted member list; id values are copied type-agnostically, so
- * the same expression serves long-keyed (doc ids) and string-keyed
+ * the same kernel serves long-keyed (doc ids) and string-keyed
  * (family hashes) callers. The hamming variant computes the same
  * `sum over blocks of bit_count(a xor b)` integer statistic inline.
  * PairOpsSpec holds the differentials against the HOF formulations.
@@ -110,104 +106,46 @@ object PairCore {
   }
 }
 
-private[expr] trait PairEmitBase extends UnaryExpression {
-  override def nullable: Boolean = false
-  protected def idType: DataType = child.dataType match {
-    case ArrayType(st: StructType, _) => st(0).dataType
-    case ArrayType(et, _) => et
-    case _ => NullType
-  }
-  protected def idNullable: Boolean = child.dataType match {
-    case ArrayType(st: StructType, _) => st(0).nullable
-    case ArrayType(_, cn) => cn
-    case _ => true
-  }
-}
-
-/** pair_emit(ms): array<struct<id_a, id_b>> of all (i<j) pairs of a
-  * plain id array. */
-case class PairEmit(child: Expression) extends PairEmitBase {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("id_a", idType, idNullable), StructField("id_b", idType, idNullable))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StructType, _) => TypeCheckResult.TypeCheckFailure(
-      s"pair_emit takes a PLAIN id array; for struct members use the specialized variants")
-    case ArrayType(_, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"pair_emit needs an array input, got $other")
+/** Column-level surface: static [[PairCore]] calls (see
+  * [[Bridge.staticInvoke]]). A StaticInvoke fixes its result type when it
+  * is built, so each builder takes the resolved type of the member column
+  * (`df.schema("ms").dataType`) and checks its shape there; the id type
+  * reaches the kernel as an object literal. A null member list gives a
+  * null pair array. */
+object pairops {
+  /** pair_emit(ms): array<struct<id_a, id_b>> of all (i<j) pairs of a
+    * plain id array. */
+  def pair_emit(ms: Column, msType: DataType): Column = msType match {
+    case ArrayType(_: StructType, _) => throw new IllegalArgumentException(
+      "pair_emit takes a PLAIN id array; for struct members use the specialized variants")
+    case ArrayType(id, idNullable) => emit("pairs", ms, msType, id, idNullable)
+    case other => throw new IllegalArgumentException(s"pair_emit needs an array input, got $other")
   }
 
-  override def eval(input: InternalRow): Any =
-    PairCore.pairs(child.eval(input).asInstanceOf[ArrayData], idType)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dtRef = ctx.addReferenceObj("idType", idType, classOf[DataType].getName)
-    defineCodeGen(ctx, ev, c => s"graft.expr.PairCore.pairs($c, $dtRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PairEmit =
-    copy(child = newChild)
-}
-
-/** pair_emit_new_only(ms): pairs with >= 1 new-epoch member. */
-case class PairEmitNewOnly(child: Expression) extends PairEmitBase {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("id_a", idType, idNullable), StructField("id_b", idType, idNullable))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+  /** pair_emit_new_only(ms): pairs with >= 1 new-epoch member. */
+  def pair_emit_new_only(ms: Column, msType: DataType): Column = msType match {
     case ArrayType(st: StructType, _) if st.length >= 2 && st(1).dataType == BooleanType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
+      emit("pairsNewOnly", ms, msType, st(0).dataType, st(0).nullable)
+    case other => throw new IllegalArgumentException(
       s"pair_emit_new_only needs array<struct<id, is_new: boolean>>, got $other")
   }
 
-  override def eval(input: InternalRow): Any =
-    PairCore.pairsNewOnly(child.eval(input).asInstanceOf[ArrayData], idType)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dtRef = ctx.addReferenceObj("idType", idType, classOf[DataType].getName)
-    defineCodeGen(ctx, ev, c => s"graft.expr.PairCore.pairsNewOnly($c, $dtRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PairEmitNewOnly =
-    copy(child = newChild)
-}
-
-/** pair_emit_hamming(ms): pairs + block hamming distance. */
-case class PairEmitHamming(child: Expression) extends PairEmitBase {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("id_a", idType, idNullable), StructField("id_b", idType, idNullable),
-    StructField("hamming", LongType, nullable = false))), containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(st: StructType, _)
-      if st.length >= 2 && (st(1).dataType match {
-        case ArrayType(LongType, _) => true; case _ => false
-      }) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
+  /** pair_emit_hamming(ms): pairs + block hamming distance. */
+  def pair_emit_hamming(ms: Column, msType: DataType): Column = msType match {
+    case ArrayType(st: StructType, _) if st.length >= 2 &&
+        (st(1).dataType match { case ArrayType(LongType, _) => true; case _ => false }) =>
+      emit("hammingPairs", ms, msType, st(0).dataType, st(0).nullable,
+        StructField("hamming", LongType, nullable = false))
+    case other => throw new IllegalArgumentException(
       s"pair_emit_hamming needs array<struct<id, blocks: array<bigint>>>, got $other")
   }
 
-  override def eval(input: InternalRow): Any =
-    PairCore.hammingPairs(child.eval(input).asInstanceOf[ArrayData], idType)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dtRef = ctx.addReferenceObj("idType", idType, classOf[DataType].getName)
-    defineCodeGen(ctx, ev, c => s"graft.expr.PairCore.hammingPairs($c, $dtRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PairEmitHamming =
-    copy(child = newChild)
-}
-
-/** Column-level surface. */
-object pairops {
-  def pair_emit(ms: Column): Column =
-    Bridge.column(PairEmit(Bridge.expression(ms)))
-  def pair_emit_new_only(ms: Column): Column =
-    Bridge.column(PairEmitNewOnly(Bridge.expression(ms)))
-  def pair_emit_hamming(ms: Column): Column =
-    Bridge.column(PairEmitHamming(Bridge.expression(ms)))
+  private def emit(fn: String, ms: Column, msType: DataType, idType: DataType,
+                   idNullable: Boolean, extra: StructField*): Column =
+    Bridge.staticInvoke(PairCore, fn,
+      ArrayType(StructType(Seq(StructField("id_a", idType, idNullable),
+        StructField("id_b", idType, idNullable)) ++ extra), containsNull = false),
+      Seq(ms -> msType,
+        Bridge.column(Literal.fromObject(idType)) -> ObjectType(classOf[DataType])),
+      propagateNull = true)
 }

@@ -1,24 +1,21 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native Catalyst expressions for the dedup signature computations.
+ * Native kernels for the dedup signature computations, called statically
+ * from whole-stage codegen through [[signatures]].
  *
  * The declarative formulation (a single `aggregate` fold whose accumulator
  * is the running array of minima / bit-sums) is semantically right but
  * allocates one boxed accumulator array PER ELEMENT — for SimHash that is
- * a 64-slot array per token. These expressions keep the exact same math
+ * a 64-slot array per token. These kernels keep the exact same math
  * (md5 of the UTF-8 string, hex-prefix integer parse, affine mixing mod
- * 2^31-1) with ONE primitive array per row, and stay inside whole-stage
- * codegen via a static call, like [[ParseNumber]]. The DuckDB oracles in
+ * 2^31-1) with ONE primitive array per row. The DuckDB oracles in
  * SparkEntry replicate the identical math, so outputs are bit-equal to
  * both the HOF formulation and the SQL.
  */
@@ -111,41 +108,18 @@ object SigCore {
   }
 }
 
-case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    SigCore.minhash(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.SigCore.minhash($c, $numHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-case class SimHashBlocksExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    SigCore.simhashBlocks(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.SigCore.simhashBlocks($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashBlocksExpr =
-    copy(child = newChild)
-}
-
-/** Column-level surface. */
+/** Column-level surface: static [[SigCore]] calls (see
+  * [[Bridge.staticInvoke]]); a null input gives a null signature. */
 object signatures {
+  private val longs = ArrayType(LongType, containsNull = false)
+
   /** minhash_sig(shingles, n): array<long> of n per-family minima. */
   def minhash_sig(shingles: Column, numHashes: Int): Column =
-    Bridge.column(MinHashSig(Bridge.expression(shingles), numHashes))
+    Bridge.staticInvoke(SigCore, "minhash", longs,
+      Seq(shingles -> ArrayType(StringType), lit(numHashes) -> IntegerType), propagateNull = true)
 
   /** simhash_blocks(tokens): array<long> of 4 16-bit signature blocks. */
   def simhash_blocks(tokens: Column): Column =
-    Bridge.column(SimHashBlocksExpr(Bridge.expression(tokens)))
+    Bridge.staticInvoke(SigCore, "simhashBlocks", longs, Seq(tokens -> ArrayType(StringType)),
+      propagateNull = true)
 }

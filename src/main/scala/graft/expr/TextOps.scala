@@ -1,25 +1,22 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.lower
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.functions.{lit, lower}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native Catalyst expressions for the corpus token/shingle/gram pipeline.
+ * Native kernels for the corpus token/shingle/gram pipeline, called
+ * statically from whole-stage codegen through [[textops]].
  *
  * The declarative chain `filter(split(lower(text), "[^a-z0-9]+"), _ != "")`
  * -> arrays_zip of k shifted slices -> transform(concat_ws) ->
  * array_distinct re-evaluates the token split per slice reference, runs
  * every lambda interpreted, and `String.split` recompiles the regex
  * Pattern on EVERY row (the exact code path `UTF8String.split` takes).
- * These expressions produce bit-identical outputs — same String.split(-1)
+ * These kernels produce bit-identical outputs — same String.split(-1)
  * semantics via a cached Pattern (Pattern.split IS String.split's slow
  * path), same empty-token filter, same space-joined grams, same
  * first-occurrence array_distinct order, same md5/60-bit gram hash as
@@ -180,13 +177,15 @@ object TextCore {
     * cannot overflow), so % == pmod and Long arithmetic is exact. The
     * declarative `aggregate` fold ran every lambda interpreted and
     * built the "w:"-prefixed string, the hex md5 string and a conv()
-    * parse per token; this is one digest per token, no strings. */
+    * parse per token; this is one digest per token, no strings. A null
+    * token nulls score_int, as the HOF's null concat nulls its fold. */
   def classifierScore(toks: ArrayData, nBuckets: Long): org.apache.spark.sql.catalyst.InternalRow = {
     val n = toks.numElements()
     val d = java.security.MessageDigest.getInstance("MD5")
     var score = 0L
     var i = 0
     while (i < n) {
+      if (toks.isNullAt(i)) return org.apache.spark.sql.catalyst.InternalRow(n.toLong, null)
       d.reset()
       d.update('w'.toByte)
       d.update(':'.toByte)
@@ -222,233 +221,61 @@ object TextCore {
   }
 }
 
-/** tokens(lowered): lowercase-alnum token array; pair with a `Lower`
-  * child via [[textops.tokens_of]]. */
-case class TokensExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"tokens needs a string input, got ${child.dataType}")
-
-  override def nullSafeEval(s: Any): Any = TextCore.tokens(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.expr.TextCore.tokens($s)")
-
-  override protected def withNewChildInternal(newChild: Expression): TokensExpr =
-    copy(child = newChild)
-}
-
-/** shingles(lowered, k): distinct word k-grams; null -> empty array. */
-case class ShinglesExpr(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"shingles needs a string input, got ${child.dataType}")
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    TextCore.shingles(child.eval(input).asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vGen = child.genCode(ctx)
-    val vVal = if (child.nullable) s"${vGen.isNull} ? null : ${vGen.value}" else vGen.value
-    val code =
-      code"""
-         |${vGen.code}
-         |${org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.javaType(dataType)} ${ev.value} =
-         |  graft.expr.TextCore.shingles(($vVal), $k);
-       """.stripMargin
-    ev.copy(code = code,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ShinglesExpr =
-    copy(child = newChild)
-}
-
-/** gram_hashes(tokens, k): 60-bit md5 of each positional k-gram; null ->
-  * empty array. */
-case class GramHashes(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"gram_hashes needs an array<string> input, got $other")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    TextCore.gramHashes(child.eval(input).asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vGen = child.genCode(ctx)
-    val vVal = if (child.nullable) s"${vGen.isNull} ? null : ${vGen.value}" else vGen.value
-    val code =
-      code"""
-         |${vGen.code}
-         |${org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.javaType(dataType)} ${ev.value} =
-         |  graft.expr.TextCore.gramHashes(($vVal), $k);
-       """.stripMargin
-    ev.copy(code = code,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): GramHashes =
-    copy(child = newChild)
-}
-
-/** shingle_hashes(lowered, k): 60-bit md5 per distinct word k-gram;
-  * null -> empty array. */
-case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"shingle_hashes needs a string input, got ${child.dataType}")
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    TextCore.shingleHashes(child.eval(input).asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vGen = child.genCode(ctx)
-    val vVal = if (child.nullable) s"${vGen.isNull} ? null : ${vGen.value}" else vGen.value
-    val code =
-      code"""
-         |${vGen.code}
-         |${org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.javaType(dataType)} ${ev.value} =
-         |  graft.expr.TextCore.shingleHashes(($vVal), $k);
-       """.stripMargin
-    ev.copy(code = code,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-    copy(child = newChild)
-}
-
-/** top_run_count(tokens): longest equal-token run (Gopher top-word
-  * count); null -> null (the HOF aggregate over sort_array(null)). */
-case class TopRunCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"top_run_count needs an array<string> input, got $other")
-    }
-
-  override def nullSafeEval(toks: Any): Any =
-    TextCore.topRunCount(toks.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.expr.TextCore.topRunCount($t)")
-
-  override protected def withNewChildInternal(newChild: Expression): TopRunCount =
-    copy(child = newChild)
-}
-
-/** two_gram_counts(tokens): struct(n_2grams, n_dup_2grams); null -> (0,0). */
-case class TwoGramCounts(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n2", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("ndup", LongType, nullable = false)))
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"two_gram_counts needs an array<string> input, got $other")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    TextCore.twoGramCounts(child.eval(input).asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vGen = child.genCode(ctx)
-    val vVal = if (child.nullable) s"${vGen.isNull} ? null : ${vGen.value}" else vGen.value
-    val code =
-      code"""
-         |${vGen.code}
-         |InternalRow ${ev.value} = graft.expr.TextCore.twoGramCounts(($vVal));
-       """.stripMargin
-    ev.copy(code = code,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TwoGramCounts =
-    copy(child = newChild)
-}
-
-/** classifier_score(tokens, nBuckets): struct(n_tokens, score_int) of
-  * the hashed linear classifier; null tokens -> null (the HOF's
-  * size(null)/aggregate(null) propagation). */
-case class ClassifierScore(child: Expression, nBuckets: Long) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_tokens", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("score_int", LongType, nullable = false)))
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"classifier_score needs an array<string> input, got $other")
-    }
-
-  override def nullSafeEval(toks: Any): Any =
-    TextCore.classifierScore(toks.asInstanceOf[ArrayData], nBuckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.expr.TextCore.classifierScore($t, ${nBuckets}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): ClassifierScore =
-    copy(child = newChild)
-}
-
-/** Column-level surface. */
+/** Column-level surface: each builder is one static [[TextCore]] call
+  * (see [[Bridge.staticInvoke]]). `Lower` stays a Catalyst argument, so
+  * case mapping is Spark's own. */
 object textops {
-  /** tokens_of(text): lowercase alnum tokens — `Lower` stays a Catalyst
-    * child so case mapping is Spark's own. */
+  private val strings = ArrayType(StringType, containsNull = false)
+  private val longs = ArrayType(LongType, containsNull = false)
+  private val tokenArray = ArrayType(StringType)
+
+  /** tokens_of(text): lowercase alnum tokens; null -> null. */
   def tokens_of(text: Column): Column =
-    Bridge.column(TokensExpr(Bridge.expression(lower(text))))
+    Bridge.staticInvoke(TextCore, "tokens", strings, Seq(lower(text) -> StringType),
+      propagateNull = true)
 
-  /** shingles_of(text, k): distinct word k-grams of the lowered text. */
+  /** shingles_of(text, k): distinct word k-grams of the lowered text;
+    * null -> empty. */
   def shingles_of(text: Column, k: Int): Column =
-    Bridge.column(ShinglesExpr(Bridge.expression(lower(text)), k))
+    Bridge.staticInvoke(TextCore, "shingles", strings,
+      Seq(lower(text) -> StringType, lit(k) -> IntegerType), propagateNull = false)
 
-  /** gram_hashes(tokens, k): 60-bit md5 per positional k-gram. */
+  /** gram_hashes(tokens, k): 60-bit md5 per positional k-gram; null -> empty. */
   def gram_hashes(tokens: Column, k: Int): Column =
-    Bridge.column(GramHashes(Bridge.expression(tokens), k))
+    Bridge.staticInvoke(TextCore, "gramHashes", longs,
+      Seq(tokens -> tokenArray, lit(k) -> IntegerType), propagateNull = false)
 
-  /** shingle_hashes(text, k): 60-bit md5 per distinct word k-gram. */
+  /** shingle_hashes(text, k): 60-bit md5 per distinct word k-gram; null -> empty. */
   def shingle_hashes(text: Column, k: Int): Column =
-    Bridge.column(ShingleHashes(Bridge.expression(lower(text)), k))
+    Bridge.staticInvoke(TextCore, "shingleHashes", longs,
+      Seq(lower(text) -> StringType, lit(k) -> IntegerType), propagateNull = false)
 
-  /** top_run_count(tokens): Gopher most-frequent-word count. */
+  /** top_run_count(tokens): Gopher most-frequent-word count; null -> null
+    * (the HOF aggregate over sort_array(null)). */
   def top_run_count(tokens: Column): Column =
-    Bridge.column(TopRunCount(Bridge.expression(tokens)))
+    Bridge.staticInvoke(TextCore, "topRunCount", LongType, Seq(tokens -> tokenArray),
+      propagateNull = true)
 
-  /** two_gram_counts(tokens): struct(n2, ndup) of the word 2-gram list. */
+  /** two_gram_counts(tokens): struct(n2, ndup) of the word 2-gram list;
+    * null -> (0, 0). */
   def two_gram_counts(tokens: Column): Column =
-    Bridge.column(TwoGramCounts(Bridge.expression(tokens)))
+    Bridge.staticInvoke(TextCore, "twoGramCounts",
+      StructType(Seq(StructField("n2", LongType, nullable = false),
+        StructField("ndup", LongType, nullable = false))),
+      Seq(tokens -> tokenArray), propagateNull = false)
 
   /** classifier_score(tokens, nBuckets): struct(n_tokens, score_int) of
-    * the hashed linear classifier. The cap keeps bucket * 2654435761
-    * within Long exactly, so native % == the HOF's pmod on every path. */
+    * the hashed linear classifier; null tokens -> null (the HOF's
+    * size(null)/aggregate(null) propagation), a null token -> null
+    * score_int (the HOF's null concat poisons the fold). The cap keeps
+    * bucket * 2654435761 within Long exactly, so native % == the HOF's
+    * pmod on every path. */
   def classifier_score(tokens: Column, nBuckets: Long): Column = {
     require(nBuckets > 0 && nBuckets <= Long.MaxValue / 2654435761L,
       s"nBuckets must be in (0, 2^31.7]: $nBuckets")
-    Bridge.column(ClassifierScore(Bridge.expression(tokens), nBuckets))
+    Bridge.staticInvoke(TextCore, "classifierScore",
+      StructType(Seq(StructField("n_tokens", LongType, nullable = false),
+        StructField("score_int", LongType, nullable = true))),
+      Seq(tokens -> tokenArray, lit(nBuckets) -> LongType), propagateNull = true)
   }
 }

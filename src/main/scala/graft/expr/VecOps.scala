@@ -2,16 +2,17 @@ package graft.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.sql.graftbridge.Bridge
 
 /**
- * Native Catalyst expressions for the embedding-vector hot path.
+ * Native kernels for the embedding-vector hot path.
  *
  * The declarative formulation of cosine similarity
  * (`aggregate(zip_with(a, b, _*_), 0.0, _+_)` plus two norm folds) is
@@ -20,7 +21,7 @@ import org.apache.spark.sql.graftbridge.Bridge
  * and the IVF argmax recomputes the stream-side norm once per centroid. At
  * q30's shape that kept HotSpot compiling megamorphic interpreter paths
  * (2-5 s of JIT per run, 20+ s cold) on top of 4 array passes per cosine.
- * These expressions keep the EXACT evaluation semantics — sequential
+ * These kernels keep the EXACT evaluation semantics — sequential
  * left-to-right IEEE folds from 0.0, `sqrt` of the ordered square sums,
  * final `dot / (na * nb)` — so results are bit-equal to the HOF
  * formulation and to the frozen SQL oracles (the [[SigCore]] guarantee;
@@ -29,10 +30,9 @@ import org.apache.spark.sql.graftbridge.Bridge
  * Replicated edge semantics (pinned by VecOpsSpec):
  *  - Null propagation: any null element nulls the norm it occurs in;
  *    a length mismatch nulls the dot (zip_with pads with null). A null
- *    DIVISOR (either norm null) yields null; a COMPUTABLE zero divisor
- *    under ANSI mode throws Spark's DIVIDE_BY_ZERO exactly as the HOF's
- *    `Divide` does (the divisor is evaluated before the dividend's
- *    nullity matters); otherwise IEEE x/0.0 applies.
+ *    DIVISOR (either norm null) or a null DIVIDEND yields null; only then
+ *    does a zero divisor under ANSI mode throw Spark's DIVIDE_BY_ZERO,
+ *    exactly as the HOF's `Divide` does; otherwise IEEE x/0.0 applies.
  *  - Double comparisons use [[SQLOrderingUtil.compareDoubles]] — Spark's
  *    post-SPARK-32110 semantics in BOTH codegen and interpreted paths
  *    (NaN greatest, -0.0 == 0.0) — for the argmax `>` and the sign-LSH
@@ -58,9 +58,10 @@ object VecCore {
       val y = b.getDouble(i); sb += y * y
       i += 1
     }
+    // a null dividend nulls `Divide` before its zero-divisor check runs
+    if (la != lb) return null // dot null (zip_with pads) -> null dividend
     val div = math.sqrt(sa) * math.sqrt(sb)
     if (div == 0.0 && ansi) throw Bridge.divideByZeroError()
-    if (la != lb) return null // dot null (zip_with pads) -> null dividend
     var dot = 0.0
     i = 0
     while (i < la) { dot += a.getDouble(i) * b.getDouble(i); i += 1 }
@@ -71,13 +72,13 @@ object VecCore {
     * the [[graft.ann.Similarity]] fold (init cos=-2.0/cid=-1, SQL-ordering
     * `>` so the FIRST best wins ties) in one pass, with the stream
     * vector's norm computed once instead of once per centroid. Returns a
-    * boxed Long — null only in the degenerate HOF case where a winning
-    * centroid struct carries a null cid. */
+    * boxed Long — null for a null centroid array, or in the degenerate
+    * HOF case where a winning centroid struct carries a null cid. */
   def nearestCid(v: ArrayData, cl: ArrayData, ansi: Boolean): java.lang.Long = {
     // a NULL stream vector nulls every per-centroid cosine (the HOF's
     // zip_with(null, c) case) but not the fold itself -> the init cid -1
     // survives; only a null CENTROID ARRAY nulls the whole expression
-    // (handled by the caller)
+    if (cl == null) return null
     val n = if (v == null) 0 else v.numElements()
     var sa = 0.0; var vNull = v == null
     var i = 0
@@ -104,18 +105,18 @@ object VecCore {
             else { val y = c.getDouble(d); sb += y * y }
             d += 1
           }
-          if (!vNull && !cNull) { // else divisor null -> cos null -> skip
+          // divisor null or dot null (zip_with pads a length mismatch) ->
+          // cos null -> skip, before `Divide`'s zero-divisor check
+          if (!vNull && !cNull && m == n) {
             val div = na * math.sqrt(sb)
             if (div == 0.0 && ansi) throw Bridge.divideByZeroError()
-            if (!vNull && m == n) { // else dot null -> cos null -> skip
-              var dot = 0.0
-              d = 0
-              while (d < n) { dot += v.getDouble(d) * c.getDouble(d); d += 1 }
-              val cos = dot / div
-              if (SQLOrderingUtil.compareDoubles(cos, bestCos) > 0) {
-                bestCos = cos
-                bestCid = if (ct.isNullAt(0)) null else java.lang.Long.valueOf(ct.getLong(0))
-              }
+            var dot = 0.0
+            d = 0
+            while (d < n) { dot += v.getDouble(d) * c.getDouble(d); d += 1 }
+            val cos = dot / div
+            if (SQLOrderingUtil.compareDoubles(cos, bestCos) > 0) {
+              bestCos = cos
+              bestCid = if (ct.isNullAt(0)) null else java.lang.Long.valueOf(ct.getLong(0))
             }
           }
         }
@@ -150,96 +151,17 @@ object VecCore {
   }
 }
 
-/** cosine(a, b) over two array<double> columns, bit-equal to the HOF
-  * formulation (see [[VecCore.cosineBoxed]]); `ansi` is captured at plan
-  * build so the DIVIDE_BY_ZERO behavior matches the session's `Divide`. */
-case class CosineSim(left: Expression, right: Expression, ansi: Boolean)
-  extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true; case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim needs two array<double> inputs, got ${left.dataType} / ${right.dataType}")
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecCore.cosineBoxed(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], ansi)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val tmp = ctx.freshName("cos")
-      s"""
-         |java.lang.Double $tmp = graft.expr.VecCore.cosineBoxed($a, $b, $ansi);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp.doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** nearest_cid(v, cl): argmax-cosine centroid id over a one-row broadcast
-  * array<struct<cid:long, c:array<double>>> column (see
-  * [[VecCore.nearestCid]]). */
-case class NearestCentroid(left: Expression, right: Expression, ansi: Boolean)
-  extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  /** A null STREAM VECTOR does not null the result (the fold init -1
-    * survives, see [[VecCore.nearestCid]]); only a null centroid array
-    * does — so the default null-intolerant eval/codegen cannot be used. */
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val cl = right.eval(input)
-    if (cl == null) null
-    else {
-      val v = left.eval(input)
-      VecCore.nearestCid(v.asInstanceOf[ArrayData], cl.asInstanceOf[ArrayData], ansi)
-    }
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(st: StructType, _))
-        if st.length == 2 && st(0).dataType == LongType &&
-          (st(1).dataType match { case ArrayType(DoubleType, _) => true; case _ => false }) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"nearest_cid needs (array<double>, array<struct<cid:long,c:array<double>>>), got $l / $r")
-    }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vGen = left.genCode(ctx)
-    val clGen = right.genCode(ctx)
-    val tmp = ctx.freshName("cid")
-    val vVal = if (left.nullable) s"${vGen.isNull} ? null : ${vGen.value}" else vGen.value
-    val code =
-      code"""
-         |${clGen.code}
-         |boolean ${ev.isNull} = true;
-         |long ${ev.value} = -1L;
-         |if (!${clGen.isNull}) {
-         |  ${vGen.code}
-         |  java.lang.Long $tmp = graft.expr.VecCore.nearestCid(
-         |    ($vVal), ${clGen.value}, $ansi);
-         |  if ($tmp != null) { ${ev.isNull} = false; ${ev.value} = $tmp.longValue(); }
-         |}
-       """.stripMargin
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): NearestCentroid =
-    copy(left = newLeft, right = newRight)
-}
-
 /** sign_bucket(v): 1-bit-per-plane LSH bucket id from hyperplane weights
   * carried as an expression PARAMETER (a references-array object in
   * codegen) instead of nPlanes x dim array literals — the plan stays O(1)
-  * in nPlanes x dim. */
+  * in nPlanes x dim.
+  *
+  * The one hand-written expression left, kept for its plan text: as a
+  * [[Bridge.staticInvoke]] argument the weights are either an array
+  * literal (at q25's 6 x 64 planes, 8.8 KB of plan text for the literal
+  * alone, against 0.9 KB for the whole projection here) or an object
+  * literal printed as the array's identity hash, so two builds of the
+  * same query give different plans. */
 case class SignLshBucket(child: Expression, weights: Array[Double],
                          nPlanes: Int, dim: Int) extends UnaryExpression {
   override def dataType: DataType = LongType
@@ -276,15 +198,28 @@ case class SignLshBucket(child: Expression, weights: Array[Double],
 
 /** Column-level surface. */
 object vecops {
-  /** cosine_sim(a, b): exact HOF-fold cosine of two array<double> columns. */
+  /** cosine_sim(a, b): exact HOF-fold cosine of two array<double>
+    * columns, one static [[VecCore.cosineBoxed]] call (see
+    * [[Bridge.staticInvoke]]); `ansi` is captured at plan build so the
+    * DIVIDE_BY_ZERO behavior matches the session's `Divide`. */
   def cosine_sim(a: Column, b: Column): Column =
-    Bridge.column(CosineSim(Bridge.expression(a), Bridge.expression(b),
-      SQLConf.get.ansiEnabled))
+    Bridge.staticInvoke(VecCore, "cosineBoxed", DoubleType,
+      Seq(a -> ArrayType(DoubleType), b -> ArrayType(DoubleType),
+        lit(SQLConf.get.ansiEnabled) -> BooleanType),
+      propagateNull = true, returnNullable = true)
 
-  /** nearest_cid(v, cl): argmax-cosine cid over the broadcast centroid array. */
+  /** nearest_cid(v, cl): argmax-cosine cid over the broadcast
+    * array<struct<cid:long, c:array<double>>> centroid column — one
+    * static [[VecCore.nearestCid]] call (see [[Bridge.staticInvoke]]); a
+    * null stream vector does not null the result, a null centroid array
+    * does (inside the kernel). */
   def nearest_cid(v: Column, cl: Column): Column =
-    Bridge.column(NearestCentroid(Bridge.expression(v), Bridge.expression(cl),
-      SQLConf.get.ansiEnabled))
+    Bridge.staticInvoke(VecCore, "nearestCid", LongType,
+      Seq(v -> ArrayType(DoubleType),
+        cl -> ArrayType(StructType(Seq(StructField("cid", LongType),
+          StructField("c", ArrayType(DoubleType))))),
+        lit(SQLConf.get.ansiEnabled) -> BooleanType),
+      propagateNull = false, returnNullable = true)
 
   /** sign_bucket(v, weights): sign-LSH bucket id from literal hyperplanes. */
   def sign_bucket(v: Column, weights: Array[Array[Double]]): Column = {

@@ -21,7 +21,7 @@ import org.apache.spark.sql.expressions.Window
 object CorpusAnalysis {
 
   /** Lowercase alnum tokens (same tokenizer as the dedup family) —
-    * native single-pass expression, see graft.expr.TokensExpr. */
+    * native single-pass expression, see graft.expr.TextCore.tokens. */
   private def tokens(textCol: Column): Column =
     graft.expr.textops.tokens_of(textCol)
 
@@ -88,8 +88,8 @@ object CorpusAnalysis {
   def contamination(df: DataFrame, idCol: String, textCol: String,
                     k: Int = 8, benchOutOf256: Int = 16,
                     maxDf: Int = 10000): DataFrame = {
-    // distinct shingle HASHES in one native pass (graft.expr
-    // .ShingleHashes): the gram strings never materialize as rows, and
+    // distinct shingle HASHES in one native pass (graft.expr.TextCore
+    // .shingleHashes): the gram strings never materialize as rows, and
     // the KeyCaps double pass below re-runs only this fused expression
     val raw = df.select(col(idCol).as("doc_id"),
         explode(graft.expr.textops.shingle_hashes(col(textCol), k)).as("h"))

@@ -301,7 +301,7 @@ object TextAnalysis {
    */
   /** (tokens, top-word run count, n_2grams, n_dup_2grams) — shared by
     * [[repetitionStats]] and [[corpusFilter]]; native one-pass
-    * expressions (graft.expr.TopRunCount / TwoGramCounts — the former
+    * expressions (graft.expr.TextCore.topRunCount / twoGramCounts — the former
     * interpreted struct-accumulator fold allocated one struct per token;
     * [[repetitionPiecesHof]] is the differential reference). */
   private[graft] def repetitionPieces(t: Column): (Column, Column, Column, Column) = {
@@ -432,13 +432,15 @@ object TextAnalysis {
    */
   def hashClassifierScore(df: DataFrame, idCol: String, textCol: String,
                           nBuckets: Int): DataFrame = {
-    // native one-digest-per-token fold (graft.expr.ClassifierScore) —
+    // native one-digest-per-token fold (graft.expr.TextCore.classifierScore) —
     // the former `aggregate` HOF ran every lambda interpreted and built
     // the "w:" concat, the md5 HEX string and a conv() parse per token;
     // [[hashClassifierScoreHof]] is the differential reference
+    // the struct is projected once and expanded after: selecting both
+    // fields off the call itself evaluated the classifier twice per row
     val cs = graft.expr.textops.classifier_score(alnumTokens(col(textCol)), nBuckets.toLong)
-    df.select(col(idCol), cs.getField("n_tokens").as("n_tokens"),
-        cs.getField("score_int").as("score_int"))
+    df.select(col(idCol), cs.as("cs"))
+      .select(col(idCol), col("cs.n_tokens").as("n_tokens"), col("cs.score_int").as("score_int"))
       .withColumn("keep", col("score_int") > 0L)
   }
 
@@ -447,15 +449,20 @@ object TextAnalysis {
   private[graft] def hashClassifierScoreHof(df: DataFrame, idCol: String, textCol: String,
                                             nBuckets: Int): DataFrame = {
     val toks = alnumTokens(col(textCol))
-    val bucket = (t: Column) =>
-      pmod(conv(substring(md5(concat(lit("w:"), t)), 1, 15), 16, 10).cast("long"),
-        lit(nBuckets.toLong))
-    // weight(b) in [-4095, 4095]: Knuth-multiplicative spread of the bucket id
-    val weight = (t: Column) => pmod(bucket(t) * lit(2654435761L), lit(8191L)) - lit(4095L)
     df.select(col(idCol),
         size(toks).cast("long").as("n_tokens"),
-        aggregate(toks, lit(0L), (acc, t) => acc + weight(t)).as("score_int"))
+        classifierFoldHof(toks, nBuckets).as("score_int"))
       .withColumn("keep", col("score_int") > 0L)
+  }
+
+  /** The declarative score_int fold over a token array. */
+  private[graft] def classifierFoldHof(toks: Column, nBuckets: Long): Column = {
+    val bucket = (t: Column) =>
+      pmod(conv(substring(md5(concat(lit("w:"), t)), 1, 15), 16, 10).cast("long"),
+        lit(nBuckets))
+    // weight(b) in [-4095, 4095]: Knuth-multiplicative spread of the bucket id
+    val weight = (t: Column) => pmod(bucket(t) * lit(2654435761L), lit(8191L)) - lit(4095L)
+    aggregate(toks, lit(0L), (acc, t) => acc + weight(t))
   }
 
   /**

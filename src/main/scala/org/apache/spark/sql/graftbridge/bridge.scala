@@ -2,7 +2,9 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
+import org.apache.spark.sql.types.{AbstractDataType, DataType}
 
 /**
  * Minimal bridge into Spark's `private[sql]` Column<->Expression converters
@@ -13,6 +15,25 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The one way graft.expr defines a native expression: a static call
+    * `kernel.fn(args...)` into a kernel object (TextCore, SigCore, ...) as
+    * Spark's own `StaticInvoke` — one static call inside whole-stage
+    * codegen, reflection on the interpreted path. Each argument carries
+    * its expected input type (StaticInvoke's `inputTypes`, `private[sql]`,
+    * hence bridged), which drives the analysis-time type check;
+    * `propagateNull` nulls the result on any null argument instead of
+    * passing it to the kernel; `returnNullable` marks a kernel that can
+    * itself return null. Build-time constants ride as literal arguments.
+    * The arguments are converted eagerly, so the call is complete even
+    * where no Dataset converts it later: a SQL function builder returns
+    * it straight into analysis. */
+  def staticInvoke(kernel: AnyRef, fn: String, dataType: DataType,
+                   args: Seq[(Column, AbstractDataType)], propagateNull: Boolean,
+                   returnNullable: Boolean = false): Column =
+    column(StaticInvoke(kernel.getClass, dataType, fn,
+      args.map(a => ColumnNodeToExpressionConverter(a._1.node)), args.map(_._2),
+      propagateNull = propagateNull, returnNullable = returnNullable))
 
   /** The ANSI DIVIDE_BY_ZERO error `Divide` throws — bridged because
     * QueryExecutionErrors is private[sql]; used by graft.expr.VecCore to

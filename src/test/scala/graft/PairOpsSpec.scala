@@ -5,10 +5,11 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Differential equivalence of the native pair-emission expressions
-  * (graft.expr.PairEmit / PairEmitNewOnly / PairEmitHamming) against the
-  * HOF formulations they replaced — exact, over string- and long-keyed
-  * member lists, empty/singleton lists, and real bucket contents. */
+/** Differential equivalence of the native pair-emission builders
+  * (graft.expr.pairops over PairCore.pairs / pairsNewOnly / hammingPairs)
+  * against the HOF formulations they replaced — exact, over string- and
+  * long-keyed member lists, empty/singleton lists, and real bucket
+  * contents, with codegen fallback off (see [[CodegenOnly]]). */
 class PairOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = {
@@ -24,7 +25,7 @@ class PairOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  test("PairEmit == HOF pairs on long and string id lists") {
+  test("PairEmit == HOF pairs on long and string id lists") { CodegenOnly(spark) {
     import spark.implicits._
     val longLists = Seq(Seq[Long](), Seq(7L), Seq(1L, 2L), Seq(5L, 1L, 9L, 3L), (0L until 40L))
       .map(_.toArray).toDF("ids")
@@ -32,13 +33,13 @@ class PairOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.toArray).toDF("ids")
     for (df <- Seq(longLists, strLists)) {
       val rows = df.select(
-        graft.expr.pairops.pair_emit(col("ids")).as("nat"),
+        graft.expr.pairops.pair_emit(col("ids"), df.schema("ids").dataType).as("nat"),
         graft.dedup.Dedup.pairsHof(col("ids")).as("hof")).collect()
       rows.foreach(r => assert(r.get(0) == r.get(1), s"pair_emit mismatch: ${r.get(0)} vs ${r.get(1)}"))
     }
-  }
+  }}
 
-  test("PairEmitNewOnly == HOF on mixed old/new members") {
+  test("PairEmitNewOnly == HOF on mixed old/new members") { CodegenOnly(spark) {
     import spark.implicits._
     val df = Seq(
       Seq(("a", true)), Seq(("a", false), ("b", false)),
@@ -48,7 +49,7 @@ class PairOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(transform(col("raw"), x =>
         struct(x.getField("_1").as("id"), x.getField("_2").as("is_new"))).as("ms"))
     val rows = df.select(
-      graft.expr.pairops.pair_emit_new_only(col("ms")).as("nat"),
+      graft.expr.pairops.pair_emit_new_only(col("ms"), df.schema("ms").dataType).as("nat"),
       graft.dedup.Dedup.pairsNewOnlyHof(col("ms")).as("hof")).collect()
     // HOF emits (id_a, id_b, any_new); native emits (id_a, id_b) — compare projected
     rows.foreach { r =>
@@ -56,9 +57,9 @@ class PairOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val hof = r.getSeq[org.apache.spark.sql.Row](1).map(x => (x.get(0), x.get(1)))
       assert(nat == hof, s"pair_emit_new_only mismatch: $nat vs $hof")
     }
-  }
+  }}
 
-  test("PairEmitHamming == HOF on real simhash buckets") {
+  test("PairEmitHamming == HOF on real simhash buckets") { CodegenOnly(spark) {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val sigs = graft.dedup.Dedup.simhashBlocks(docs, "doc_id", "text")
     val grouped = sigs.select(col("doc_id").as("id"), col("blocks"),
@@ -66,9 +67,9 @@ class PairOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .groupBy("block", "block_val")
       .agg(sort_array(collect_list(struct(col("id"), col("blocks")))).as("ms"))
     val rows = grouped.select(
-      graft.expr.pairops.pair_emit_hamming(col("ms")).as("nat"),
+      graft.expr.pairops.pair_emit_hamming(col("ms"), grouped.schema("ms").dataType).as("nat"),
       graft.dedup.Dedup.hammingPairsHof(col("ms")).as("hof")).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.get(0) == r.get(1), s"pair_emit_hamming mismatch"))
-  }
+  }}
 }

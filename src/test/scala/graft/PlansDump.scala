@@ -47,8 +47,9 @@ object PlansDump {
       SparkEntry.queries("q27_join_agg")(spark, dir).explain("formatted")
     }
     section("q02 parse_number (custom expression inside codegen)",
-      "ParseNumber emits a static call in doGenCode, so the projection stays " +
-      "in WholeStageCodegen — no UDF/encoder boundary.") {
+      "parse_number is a static_invoke of graft.core.Num.parseOrNull — one " +
+      "static call in the generated code, so the projection stays in " +
+      "WholeStageCodegen — no UDF/encoder boundary.") {
       SparkEntry.queries("q02_parse_number")(spark, dir).explain("formatted")
     }
     section("q24 ANN brute-force top-k (salted two-level reduction)",
@@ -69,8 +70,9 @@ object PlansDump {
       SparkEntry.queries("q30_ann_ivf")(spark, dir).explain("formatted")
     }
     section("q21 MinHash candidates (single-fold signature, broadcast-capped bucket shuffle)",
-      "Signatures are ONE native-expression projection per row (MinHashSig " +
-      "static call inside WholeStageCodegen, no cached intermediates, no " +
+      "Signatures are ONE native-expression projection per row (a " +
+      "static_invoke of graft.expr.SigCore.minhash inside WholeStageCodegen, " +
+      "no cached intermediates, no " +
       "persist). The bucket-size guard is a map-side-combinable groupBy " +
       "count (partial_count before its Exchange) whose over-cap keys " +
       "anti-filter via BroadcastHashJoin LeftAnti — a degenerate bucket's " +
@@ -346,9 +348,11 @@ object PlansDump {
       SparkEntry.queries("q67_global_shuffle")(spark, dir).explain("formatted")
     }
     section("q68 hashed linear classifier (map-only scoring pass)",
-      "Hashing-trick featurize + integer linear score as a codegen'd HOF " +
-      "fold — ZERO Exchange: the canonical score-100-TB-with-a-linear-model " +
-      "pass is embarrassingly parallel.") {
+      "Hashing-trick featurize + integer linear score as ONE static_invoke " +
+      "of graft.expr.TextCore.classifierScore per row (the struct is " +
+      "projected once, its fields expanded by the next Project) — ZERO " +
+      "Exchange: the canonical score-100-TB-with-a-linear-model pass is " +
+      "embarrassingly parallel.") {
       SparkEntry.queries("q68_hash_classifier")(spark, dir).explain("formatted")
     }
     section("q69 context-window truncation (dual-frame window on one Exchange)",

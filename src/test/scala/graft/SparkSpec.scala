@@ -232,33 +232,18 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("parse_number is callable from SQL (extension function builder)") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    // same registration triple as graft.expr.GraftExtensions.injectFunction
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("parse_number"),
-      new ExpressionInfo(classOf[graft.expr.ParseNumber].getName, "parse_number"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.expr.ParseNumber(children.head))
+    // the functions GraftExtensions itself injects, as spark.sql.extensions
+    // registers them at session build
+    org.apache.spark.sql.graftbridge.TestExtensions
+      .registerFunctions(spark, new graft.expr.GraftExtensions())
     val r = spark.sql("SELECT parse_number('1 234,56') AS p, parse_number('абв') AS q").collect()(0)
     assert(r.getDouble(0) == 1234.56)
     assert(r.isNullAt(1))
-    // the signature expressions register the same way (GraftExtensions triple)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("simhash_blocks"),
-      new ExpressionInfo(classOf[graft.expr.SimHashBlocksExpr].getName, "simhash_blocks"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.expr.SimHashBlocksExpr(children.head))
     val b = spark.sql("SELECT simhash_blocks(array('hello', 'world')) AS b").collect()(0)
     assert(b.getSeq[Long](0).length == 4)
-    // minhash_sig through the REAL GraftExtensions builder: INT and BIGINT
-    // numHashes literals both fold (Number.intValue); a non-foldable second
-    // argument fails with a clear message, not a ClassCastException
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[graft.expr.MinHashSig].getName, "minhash_sig"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.expr.GraftExtensions.minhashSigBuilder(children))
+    // minhash_sig: INT and BIGINT numHashes literals both fold
+    // (Number.intValue); a non-foldable second argument fails with a clear
+    // message, not a ClassCastException
     val sInt = spark.sql("SELECT minhash_sig(array('a b c'), 8) AS s").collect()(0).getSeq[Long](0)
     val sLong = spark.sql("SELECT minhash_sig(array('a b c'), CAST(8 AS BIGINT)) AS s")
       .collect()(0).getSeq[Long](0)
@@ -267,6 +252,11 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sql("SELECT minhash_sig(array('a'), CAST(rand() * 8 AS INT)) AS s").collect()
     }
     assert(err.getMessage != null)
+    // a wrong-typed argument fails at analysis, before any job runs
+    val typeErr = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT simhash_blocks(1) AS b")
+    }
+    assert(typeErr.getMessage.contains("DATATYPE_MISMATCH"), typeErr.getMessage)
   }
 
   test("IVF top-k with full probing equals brute force; partial probing is a subset search") {

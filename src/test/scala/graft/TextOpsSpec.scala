@@ -5,12 +5,13 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Differential equivalence of the native text expressions
-  * (graft.expr.TokensExpr / ShinglesExpr / GramHashes / TopRunCount /
-  * TwoGramCounts) against the declarative HOF formulations they replaced
-  * — exact, on real documents and adversarial strings (unicode, empties,
-  * punctuation-only, nulls, case edges), under codegen and in lambda
-  * (interpreted) position. */
+/** Differential equivalence of the native text builders (graft.expr
+  * .textops over TextCore.tokens / shingles / gramHashes / shingleHashes /
+  * topRunCount / twoGramCounts / classifierScore) against the declarative
+  * HOF formulations they replaced — exact, on real documents and
+  * adversarial strings (unicode, empties, punctuation-only, nulls, case
+  * edges), under codegen with fallback off (see [[CodegenOnly]]) and in
+  * lambda (interpreted) position. */
 class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = {
@@ -58,23 +59,23 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("TokensExpr == HOF tokenizer on real docs + adversarial strings") {
+  test("TokensExpr == HOF tokenizer on real docs + adversarial strings") { CodegenOnly(spark) {
     for (df <- Seq(docsDf, advDf)) {
       assertColsEqual(df,
         graft.dedup.Dedup.tokens(col("text")),
         graft.dedup.Dedup.tokensHof(col("text")), "tokens")
     }
-  }
+  }}
 
-  test("ShinglesExpr == HOF shingles (k=3 and k=8)") {
+  test("ShinglesExpr == HOF shingles (k=3 and k=8)") { CodegenOnly(spark) {
     for (df <- Seq(docsDf, advDf); k <- Seq(3, 8)) {
       assertColsEqual(df,
         graft.dedup.Dedup.shingles(col("text"), k),
         graft.dedup.Dedup.shinglesHof(col("text"), k), s"shingles k=$k")
     }
-  }
+  }}
 
-  test("GramHashes == positionalGrams + md5Hash60 (k=8)") {
+  test("GramHashes == positionalGrams + md5Hash60 (k=8)") { CodegenOnly(spark) {
     // HOF reference: positional grams joined then hashed per gram
     def hofHashes(t: org.apache.spark.sql.Column, k: Int) = {
       val toks = graft.dedup.Dedup.tokensHof(t)
@@ -90,9 +91,9 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         graft.expr.textops.gram_hashes(graft.dedup.Dedup.tokens(col("text")), k),
         hofHashes(col("text"), k), s"gram_hashes k=$k")
     }
-  }
+  }}
 
-  test("TopRunCount / TwoGramCounts == HOF repetition pieces") {
+  test("TopRunCount / TwoGramCounts == HOF repetition pieces") { CodegenOnly(spark) {
     val (_, natTop, natN2, natDup) = graft.text.TextAnalysis.repetitionPieces(col("text"))
     val (_, hofTop, hofN2, hofDup) = graft.text.TextAnalysis.repetitionPiecesHof(col("text"))
     for (df <- Seq(docsDf, advDf)) {
@@ -100,18 +101,18 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assertColsEqual(df, natN2, hofN2, "n_2grams")
       assertColsEqual(df, natDup, hofDup, "n_dup_2grams")
     }
-  }
+  }}
 
-  test("ShingleHashes == explode(shingles)+md5Hash60 multiset (k=2 and k=8)") {
+  test("ShingleHashes == explode(shingles)+md5Hash60 multiset (k=2 and k=8)") { CodegenOnly(spark) {
     for (df <- Seq(docsDf, advDf); k <- Seq(2, 8)) {
       assertColsEqual(df,
         graft.expr.textops.shingle_hashes(col("text"), k),
         transform(graft.dedup.Dedup.shinglesHof(col("text"), k),
           g => graft.dedup.Dedup.md5Hash60(g)), s"shingle_hashes k=$k")
     }
-  }
+  }}
 
-  test("ClassifierScore == HOF hashClassifierScore (nBuckets 2^10 and 2^20)") {
+  test("ClassifierScore == HOF hashClassifierScore (nBuckets 2^10 and 2^20)") { CodegenOnly(spark) {
     for (src <- Seq(docsDf, advDf); nb <- Seq(1 << 10, 1 << 20)) {
       val nat = graft.text.TextAnalysis.hashClassifierScore(src, "doc_id", "text", nb)
       val hof = graft.text.TextAnalysis.hashClassifierScoreHof(src, "doc_id", "text", nb)
@@ -123,9 +124,26 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(nat.schema.map(f => (f.name, f.dataType)) ==
         hof.schema.map(f => (f.name, f.dataType)))
     }
-  }
+  }}
 
-  test("interpreted (lambda) path matches codegen for tokens/shingles") {
+  test("classifier_score of a token array with a null element == HOF fold") { CodegenOnly(spark) {
+    // the HOF's concat("w:", null) nulls its fold: score_int null, n_tokens
+    // kept — as a folded literal (eval) and as a column (codegen)
+    import org.apache.spark.sql.types._
+    val rows = spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(Seq("a", null))), 1)
+    val oneRow = spark.createDataFrame(rows,
+      StructType(Seq(StructField("t", ArrayType(StringType, containsNull = true)))))
+    for (toks <- Seq(array(lit("a"), lit(null).cast("string")), col("t"))) {
+      val r = oneRow.select(
+        graft.expr.textops.classifier_score(toks, 1024L).as("cs"),
+        graft.text.TextAnalysis.classifierFoldHof(toks, 1024L).as("hof"))
+        .collect()(0)
+      assert(r.getStruct(0).getLong(0) == 2L)
+      assert(r.getStruct(0).isNullAt(1) && r.isNullAt(1), r)
+    }
+  }}
+
+  test("interpreted (lambda) path matches codegen for tokens/shingles") { CodegenOnly(spark) {
     // evaluate the native expressions INSIDE a transform lambda (eval path)
     val df = docsDf.limit(50).unionByName(advDf)
     val viaLambda = df
@@ -141,5 +159,5 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = direct.collect().map(r => r.getLong(0) -> (r.get(1), r.get(2))).toMap
     assert(l.keySet == d.keySet)
     l.foreach { case (k, v) => assert(v == d(k), s"lambda-vs-codegen mismatch at doc_id=$k") }
-  }
+  }}
 }

@@ -6,12 +6,12 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Differential equivalence of the native vector expressions
-  * (graft.expr.CosineSim / NearestCentroid / SignLshBucket) against the
+/** Differential equivalence of the native vector operators
+  * (graft.expr.vecops.cosine_sim / nearest_cid / SignLshBucket) against the
   * declarative HOF formulations they replaced — bit-exact, including the
   * null / NaN / signed-zero / length-mismatch edge cases, on real
-  * embeddings and on adversarial vectors, under codegen AND interpreted
-  * eval (the HOF-lambda path). */
+  * embeddings and on adversarial vectors, under codegen with fallback off
+  * (see [[CodegenOnly]]) AND interpreted eval (the HOF-lambda path). */
 class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = {
@@ -61,7 +61,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
   }
 
-  test("CosineSim == HOF cosine bit-for-bit on real embeddings (codegen path)") {
+  test("CosineSim == HOF cosine bit-for-bit on real embeddings (codegen path)") { CodegenOnly(spark) {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val a = emb.select(col("vec_id").as("ia"), col("v").as("va")).where(col("ia") < 60)
@@ -75,7 +75,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     both.foreach { r =>
       assert(bits(r.get(2)) == bits(r.get(3)), s"cosine mismatch at (${r.get(0)},${r.get(1)})")
     }
-  }
+  }}
 
   /** True when the cosine divisor (na*nb) is COMPUTABLE and exactly zero —
     * the one case where the session's ANSI mode makes both formulations
@@ -87,7 +87,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     noNull(a) && noNull(b) && (sqrt(sumsq(a)) * sqrt(sumsq(b)) === 0.0)
   }
 
-  test("CosineSim == HOF cosine on adversarial vectors (NaN/-0.0/Inf/null/len)") {
+  test("CosineSim == HOF cosine on adversarial vectors (NaN/-0.0/Inf/null/len)") { CodegenOnly(spark) {
     val df = vecDf(fuzzVectors(48, 8))
     val a = df.select(col("id").as("ia"), col("v").as("va"))
     val b = df.select(col("id").as("ib"), col("v").as("vb"))
@@ -102,9 +102,9 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(bits(r.get(2)) == bits(r.get(3)),
         s"cosine mismatch at (${r.get(0)},${r.get(1)}): ${r.get(2)} vs ${r.get(3)}")
     }
-  }
+  }}
 
-  test("CosineSim replicates the HOF's ANSI DIVIDE_BY_ZERO on zero-norm pairs") {
+  test("CosineSim replicates the HOF's ANSI DIVIDE_BY_ZERO on zero-norm pairs") { CodegenOnly(spark) {
     assume(spark.conf.get("spark.sql.ansi.enabled") == "true")
     val zeros = vecDf(Seq(Seq[java.lang.Double](0.0, 0.0), Seq[java.lang.Double](1.0, 2.0)))
     def run(c: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Throwable =
@@ -117,9 +117,27 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.toString).mkString("|")
     assert(msg(eNat).contains("DIVIDE_BY_ZERO"), msg(eNat))
     assert(msg(eHof).contains("DIVIDE_BY_ZERO"), msg(eHof))
-  }
+  }}
 
-  test("NearestCentroid == HOF argmax fold on real embeddings + adversarial centroids") {
+  test("length-mismatched zero vectors give null, not DIVIDE_BY_ZERO, under ANSI") {
+    CodegenOnly(spark, "spark.sql.ansi.enabled" -> "true") {
+    // `Divide` nulls on a null dividend (the padded zip_with dot) before
+    // its zero-divisor check, so the HOF never throws here
+    val zeros = vecDf(Seq(Seq[java.lang.Double](0.0, 0.0), Seq[java.lang.Double](0.0, 0.0, 0.0)))
+    val a = zeros.where(col("id") === 0).select(col("v").as("va"))
+    val b = zeros.where(col("id") === 1).select(col("v").as("vb"))
+    val cos = a.crossJoin(b).select(
+      graft.ann.Similarity.cosine(col("va"), col("vb")).as("nat"),
+      graft.ann.Similarity.cosineHof(col("va"), col("vb")).as("hof")).collect()
+    assert(cos.length == 1 && cos(0).isNullAt(0) && cos(0).isNullAt(1), cos.toSeq)
+    val cl = b.select(array(struct(lit(7L).as("cid"), col("vb").as("c"))).as("__cl"))
+    val cid = a.crossJoin(cl).select(
+      graft.expr.vecops.nearest_cid(col("va"), col("__cl")).as("nat"),
+      graft.ann.Similarity.nearestCidHof(col("va"), col("__cl")).as("hof")).collect()
+    assert(cid.length == 1 && cid(0).getLong(0) == -1L && cid(0).getLong(1) == -1L, cid.toSeq)
+  }}
+
+  test("NearestCentroid == HOF argmax fold on real embeddings + adversarial centroids") { CodegenOnly(spark) {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id").cast("long").as("id"), col("embedding").cast("array<double>").as("v"))
     val cents = graft.ann.Similarity.trainIvfCentroids(emb, "id", "v", k = 8, trainN = 256)
@@ -160,9 +178,9 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r.get(1) == r.get(2),
         s"nearest_cid adversarial mismatch at id=${r.get(0)}: ${r.get(1)} vs ${r.get(2)}")
     }
-  }
+  }}
 
-  test("SignLshBucket == HOF bucket on real embeddings + adversarial vectors") {
+  test("SignLshBucket == HOF bucket on real embeddings + adversarial vectors") { CodegenOnly(spark) {
     val weights = graft.ann.Similarity.planeWeights(nPlanes = 6, dim = 64)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -180,10 +198,10 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r.get(1) == r.get(2),
         s"bucket adversarial mismatch at id=${r.get(0)}: ${r.get(1)} vs ${r.get(2)}")
     }
-  }
+  }}
 
-  test("interpreted eval path matches codegen (expressions used inside HOF lambdas)") {
-    // probeScores in ivfTopK evaluates CosineSim INSIDE a transform lambda,
+  test("interpreted eval path matches codegen (expressions used inside HOF lambdas)") { CodegenOnly(spark) {
+    // probeScores in ivfTopK evaluates cosine_sim INSIDE a transform lambda,
     // i.e. via Expression.eval — pin that path against the codegen'd one.
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id").cast("long").as("id"), col("embedding").cast("array<double>").as("v"))
@@ -202,5 +220,5 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(direct(id).sorted(Ordering.by((x: Any) => x.toString)) ==
         cs.sorted(Ordering.by((x: Any) => x.toString)), s"lambda-vs-codegen mismatch at id=$id")
     }
-  }
+  }}
 }
