@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
  */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
+  /** The session every query timing runs in (Bench and QuickQ). */
+  private[graft] def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -26,6 +27,21 @@ object Bench {
     val t0 = System.nanoTime()
     f
     (System.nanoTime() - t0) / 1e9
+  }
+
+  /** One timed unit: build `q` over `dir` and run it into the noop sink. */
+  private[graft] def runNoop(spark: SparkSession, q: SparkEntry.Query, dir: String): Unit =
+    q.build(spark, dir).write.format("noop").mode("overwrite").save()
+
+  /** Run every query once against the sf0.001 sibling of `sfDir` (or
+    * `sfDir` itself when there is none): same plans, so codegen + JIT are
+    * hot and first-query JVM warmup is not billed to whichever query runs
+    * first (round-1 bench billed ~7s of warmup to q02). Failures are
+    * ignored here; the timed run reports them. */
+  private[graft] def warmUp(spark: SparkSession, queries: Seq[SparkEntry.Query], sfDir: String): Unit = {
+    val small = sfDir.replaceAll("sf[0-9.]+", "sf0.001")
+    val warmDir = if (new java.io.File(small).isDirectory) small else sfDir
+    queries.foreach(q => try runNoop(spark, q, warmDir) catch { case _: Throwable => () })
   }
 
   final case class PinnedResult(bestSec: Double, ceilingOps: Double, ceilingSmallOps: Double,
@@ -113,9 +129,12 @@ object Bench {
       else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
     }
 
+  private[graft] def envSfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private[graft] def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val sfDir = envSfDir
+    val cpus = envCpus
     val sf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1).toDouble).getOrElse(0.1)
     val nTurns = math.max(2000L, (sf * 1000000).toLong) // sf0.1 -> 100k turns
 
@@ -177,51 +196,12 @@ object Bench {
     val caps = graft.skew.CapMetrics.register(spark)
 
     // -- per-query timings on the sf dir ---------------------------------
-    val benchQueries = Seq(
-      "q02_parse_number", "q05_regex_extract", "q06_dedup_firstwins",
-      "q07_group_stats", "q10_topk", "q11_fuzzy_topk", "q12_dedup_exact",
-      "q15_token_counts", "q17_sessionize", "q18_extract_turns",
-      "q19_extract_items", "q21_minhash_candidates", "q22_simhash_candidates",
-      "q24_ann_topk", "q25_ann_lsh", "q26_multimodal_meta", "q30_ann_ivf", "q34_lsh_dedup",
-      "q35_distinctive_terms", "q37_contamination", "q38_boilerplate",
-      "q39_asof_join", "q40_range_join", "q41_blocked_match",
-      "q43_repetition", "q44_corpus_filter", "q45_stratified_sample",
-      "q46_pack_sequences", "q47_quantize_int8", "q48_source_filter",
-      "q49_session_window", "q50_contamination_bloom", "q51_dup_spans",
-      "q52_cluster_best", "q53_lexical_commonness", "q54_vocab_topk",
-      "q55_source_mix", "q56_semdedup_pairs", "q57_corpus_chain",
-      "q58_incremental_dedup", "q59_semdedup_keep",
-      "q60_semdedup_incremental", "q61_remove_dup_spans", "q62_bpe_pairs",
-      "q63_pack_whole", "q64_strip_boiler_turns", "q65_length_profile",
-      "q66_conv_integrity", "q67_global_shuffle", "q68_hash_classifier",
-      "q69_truncate_context", "q70_chunk_docs", "q71_conv_dedup",
-      "q72_agent_loops", "q73_repair_order", "q74_preference_pairs",
-      "q75_temperature_sample", "q76_dup_flow_matrix", "q77_curriculum",
-      "q78_transcript_chain", "q79_kmv_sketch", "q80_tool_transitions",
-      "q81_bottomk_sample", "q82_centroid_sim", "q83_epoch_repeats",
-      "q84_bottomk_per_group", "q85_oov_audit")
-    val all = SparkEntry.queries
-    // warmup: run every benched query once against the smallest sf dir —
-    // same plans, so codegen + JIT are hot and first-query JVM warmup is
-    // not billed to whichever query runs first (round-1 bench billed ~7s
-    // of warmup to q02)
-    val warmDir = {
-      val small = sfDir.replaceAll("sf[0-9.]+", "sf0.001")
-      if (new java.io.File(small).isDirectory) small else sfDir
-    }
-    benchQueries.foreach { name =>
-      all.get(name).foreach { fn =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-    }
+    val benched = SparkEntry.benched
+    warmUp(spark, benched, sfDir)
     caps.clear() // only the timed sf-dir runs count
-    val results = benchQueries.flatMap { name =>
-      all.get(name).map { fn =>
-        val sec = try time(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-        catch { case _: Throwable => -1.0 }
-        name -> sec
-      }
+    val results = benched.map { q =>
+      val sec = try time(runNoop(spark, q, sfDir)) catch { case _: Throwable => -1.0 }
+      q.name -> sec
     }
     org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
     val capDropsJson = graft.skew.CapMetrics.toJson(caps.snapshot())

@@ -6,13 +6,18 @@ import org.apache.spark.sql.expressions.Window
 import graft.expr.functions.parse_number
 
 /**
- * Driver contract (see SURVEY.md §7): one `queries` entry per implemented
- * operator family, with a DuckDB-equivalent `oracleSql` wherever the
- * operator is SQL-expressible; engine-level operators (the 7-parser turn
- * extraction, WRatio matching, MinHash/SimHash whose hash functions are
- * engine-specific) are rows-only entries backed by ScalaTest golden specs.
+ * Driver contract (see SURVEY.md §7): one [[SparkEntry.Query]] per
+ * implemented operator family in [[SparkEntry.registry]], each with its
+ * DuckDB oracle. Most oracles are SQL replicas of the Spark plan; the
+ * engine-level queries (q18/q19 7-parser turn extraction, q20 WRatio
+ * matching) read committed golden parquet (`goldenOracleSql`).
  */
 object SparkEntry {
+
+  /** One registry entry: the Spark builder over an sf dir, its DuckDB
+    * oracle (statements split on `;\n`), and whether graft.Bench times it. */
+  final case class Query(name: String, build: (SparkSession, String) => DataFrame,
+                         oracleSql: String, benched: Boolean)
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
@@ -2091,179 +2096,99 @@ object SparkEntry {
 
   // -------------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_text_metrics" -> (qTextMetrics _),
-    "q02_parse_number" -> (qParseNumber _),
-    "q03_line_explode" -> (qLineExplode _),
-    "q04_line_filters" -> (qLineFilters _),
-    "q05_regex_extract" -> (qRegexExtract _),
-    "q06_dedup_firstwins" -> (qDedupFirstWins _),
-    "q07_group_stats" -> (qGroupStats _),
-    "q08_best_argmax" -> (qBestArgmax _),
-    "q09_doctype_scores" -> (qDoctypeScores _),
-    "q10_topk" -> (qTopK _),
-    "q11_fuzzy_topk" -> (qFuzzyTopK _),
-    "q12_dedup_exact" -> (qDedupExact _),
-    "q13_ngram_jaccard" -> (qNgramJaccard _),
-    "q14_lang_id" -> (qLangId _),
-    "q15_token_counts" -> (qTokenCounts _),
-    "q16_fingerprint" -> (qFingerprint _),
-    "q17_sessionize" -> (qSessionize _),
-    "q18_extract_turns" -> (qExtractTurns _),
-    "q19_extract_items" -> (qExtractItems _),
-    "q20_wratio_match" -> (qWratioMatch _),
-    "q21_minhash_candidates" -> (qMinhashCandidates _),
-    "q22_simhash_candidates" -> (qSimhashCandidates _),
-    "q23_embed_neardup" -> (qEmbedNearDup _),
-    "q24_ann_topk" -> (qAnnTopK _),
-    "q25_ann_lsh" -> (qAnnLsh _),
-    "q26_multimodal_meta" -> (qMultimodalMeta _),
-    "q27_join_agg" -> (qJoinAgg _),
-    "q30_ann_ivf" -> (qAnnIvf _),
-    "q31_dedup_clusters" -> (qDedupClusters _),
-    "q32_quality_score" -> (qQuality _),
-    "q33_det_sample" -> (qSample _),
-    "q28_rollup" -> (qRollup _),
-    "q29_running_sum" -> (qRunningSum _),
-    "q34_lsh_dedup" -> (qLshDedup _),
-    "q35_distinctive_terms" -> (qDistinctiveTerms _),
-    "q36_pii_scrub" -> (qPiiScrub _),
-    "q37_contamination" -> (qContamination _),
-    "q38_boilerplate" -> (qBoilerplate _),
-    "q39_asof_join" -> (qAsofJoin _),
-    "q40_range_join" -> (qRangeJoin _),
-    "q41_blocked_match" -> (qBlockedMatch _),
-    "q42_asof_salted" -> (qAsofSalted _),
-    "q43_repetition" -> (qRepetition _),
-    "q44_corpus_filter" -> (qCorpusFilter _),
-    "q45_stratified_sample" -> (qStratifiedSample _),
-    "q46_pack_sequences" -> (qPackSequences _),
-    "q47_quantize_int8" -> (qQuantize _),
-    "q48_source_filter" -> (qSourceFilter _),
-    "q49_session_window" -> (qSessionWindow _),
-    "q50_contamination_bloom" -> (qContaminationBloom _),
-    "q51_dup_spans" -> (qDupSpans _),
-    "q52_cluster_best" -> (qClusterBest _),
-    "q53_lexical_commonness" -> (qLexicalCommonness _),
-    "q54_vocab_topk" -> (qVocabTopK _),
-    "q55_source_mix" -> (qSourceMix _),
-    "q56_semdedup_pairs" -> (qSemDedup _),
-    "q57_corpus_chain" -> (qCorpusChain _),
-    "q58_incremental_dedup" -> (qIncrementalDedup _),
-    "q59_semdedup_keep" -> (qSemDedupKeep _),
-    "q60_semdedup_incremental" -> (qSemDedupIncr _),
-    "q61_remove_dup_spans" -> (qRemoveDupSpans _),
-    "q62_bpe_pairs" -> (qBpePairs _),
-    "q63_pack_whole" -> (qPackWhole _),
-    "q64_strip_boiler_turns" -> (qStripBoilerTurns _),
-    "q65_length_profile" -> (qLengthProfile _),
-    "q66_conv_integrity" -> (qConvIntegrity _),
-    "q67_global_shuffle" -> (qGlobalShuffle _),
-    "q68_hash_classifier" -> (qHashClassifier _),
-    "q69_truncate_context" -> (qTruncateContext _),
-    "q70_chunk_docs" -> (qChunkDocs _),
-    "q71_conv_dedup" -> (qConvDedup _),
-    "q72_agent_loops" -> (qAgentLoops _),
-    "q73_repair_order" -> (qRepairOrder _),
-    "q74_preference_pairs" -> (qPreferencePairs _),
-    "q75_temperature_sample" -> (qTemperatureSample _),
-    "q76_dup_flow_matrix" -> (qDupFlowMatrix _),
-    "q77_curriculum" -> (qCurriculum _),
-    "q78_transcript_chain" -> (qTranscriptChain _),
-    "q79_kmv_sketch" -> (qKmvSketch _),
-    "q80_tool_transitions" -> (qToolTransitions _),
-    "q81_bottomk_sample" -> (qBottomKSample _),
-    "q82_centroid_sim" -> (qCentroidSim _),
-    "q83_epoch_repeats" -> (qEpochRepeats _),
-    "q84_bottomk_per_group" -> (qBottomKPerGroup _),
-    "q85_oov_audit" -> (qOovAudit _))
+  /** Every query in q-number order: the one list Verify, Bench, QuickQ,
+    * PlansDump and GoldenParquetGen read. */
+  lazy val registry: Seq[Query] = Seq(
+    Query("q01_text_metrics", qTextMetrics, oTextMetrics, benched = false),
+    Query("q02_parse_number", qParseNumber, pnumMacro + ";\n" + oParseNumber, benched = true),
+    Query("q03_line_explode", qLineExplode, oLineExplode, benched = false),
+    Query("q04_line_filters", qLineFilters, oLineFilters, benched = false),
+    Query("q05_regex_extract", qRegexExtract, oRegexExtract, benched = true),
+    Query("q06_dedup_firstwins", qDedupFirstWins, oDedupFirstWins, benched = true),
+    Query("q07_group_stats", qGroupStats, oGroupStats, benched = true),
+    Query("q08_best_argmax", qBestArgmax, oBestArgmax, benched = false),
+    Query("q09_doctype_scores", qDoctypeScores, oDoctypeScores, benched = false),
+    Query("q10_topk", qTopK, oTopK, benched = true),
+    Query("q11_fuzzy_topk", qFuzzyTopK, oFuzzyTopK, benched = true),
+    Query("q12_dedup_exact", qDedupExact, oDedupExact, benched = true),
+    Query("q13_ngram_jaccard", qNgramJaccard, oNgramJaccardFull, benched = false),
+    Query("q14_lang_id", qLangId, oLangId, benched = false),
+    Query("q15_token_counts", qTokenCounts, oTokenCounts, benched = true),
+    Query("q16_fingerprint", qFingerprint, oFingerprint, benched = false),
+    Query("q17_sessionize", qSessionize, oSessionize, benched = true),
+    Query("q18_extract_turns", qExtractTurns, goldenOracleSql("q18_extract_turns"), benched = true),
+    Query("q19_extract_items", qExtractItems, goldenOracleSql("q19_extract_items"), benched = true),
+    Query("q20_wratio_match", qWratioMatch, goldenOracleSql("q20_wratio_match"), benched = false),
+    Query("q21_minhash_candidates", qMinhashCandidates, minhashCandSql(k = 3, bands = 8, rowsPerBand = 4, maxBucket = 10000), benched = true),
+    Query("q22_simhash_candidates", qSimhashCandidates, simhashCandSql(maxHamming = 3, maxBucket = 10000), benched = true),
+    Query("q23_embed_neardup", qEmbedNearDup, oEmbedNearDup, benched = false),
+    Query("q24_ann_topk", qAnnTopK, oAnnTopK, benched = true),
+    Query("q25_ann_lsh", qAnnLsh, lshPairsSql(nPlanes = 6, dim = 64, threshold = 0.3, maxBucket = 10000), benched = true),
+    Query("q26_multimodal_meta", qMultimodalMeta, oMultimodalMeta, benched = true),
+    Query("q27_join_agg", qJoinAgg, oJoinAgg, benched = false),
+    Query("q28_rollup", qRollup, oRollup, benched = false),
+    Query("q29_running_sum", qRunningSum, oRunningSum, benched = false),
+    Query("q30_ann_ivf", qAnnIvf, ivfSql(k = 16, nProbe = 4, topK = 5, nQueries = 10, trainN = 4096), benched = true),
+    Query("q31_dedup_clusters", qDedupClusters, oDedupClusters, benched = false),
+    Query("q32_quality_score", qQuality, oQuality, benched = false),
+    Query("q33_det_sample", qSample, oSample, benched = false),
+    Query("q34_lsh_dedup", qLshDedup, oLshDedup, benched = true),
+    Query("q35_distinctive_terms", qDistinctiveTerms, oDistinctiveTerms, benched = true),
+    Query("q36_pii_scrub", qPiiScrub, oPiiScrub, benched = false),
+    Query("q37_contamination", qContamination, oContamination, benched = true),
+    Query("q38_boilerplate", qBoilerplate, oBoilerplate, benched = true),
+    Query("q39_asof_join", qAsofJoin, oAsofJoin, benched = true),
+    Query("q40_range_join", qRangeJoin, oRangeJoin, benched = true),
+    Query("q41_blocked_match", qBlockedMatch, oBlockedMatch, benched = true),
+    Query("q42_asof_salted", qAsofSalted, oAsofSaltedHot, benched = false),
+    Query("q43_repetition", qRepetition, oRepetition, benched = true),
+    Query("q44_corpus_filter", qCorpusFilter, oCorpusFilter, benched = true),
+    Query("q45_stratified_sample", qStratifiedSample, oStratifiedSample, benched = true),
+    Query("q46_pack_sequences", qPackSequences, oPackSequences, benched = true),
+    Query("q47_quantize_int8", qQuantize, oQuantize, benched = true),
+    Query("q48_source_filter", qSourceFilter, oSourceFilter, benched = true),
+    Query("q49_session_window", qSessionWindow, oSessionWindow, benched = true),
+    Query("q50_contamination_bloom", qContaminationBloom, oContamination, benched = true),
+    Query("q51_dup_spans", qDupSpans, oDupSpans, benched = true),
+    Query("q52_cluster_best", qClusterBest, oClusterBest, benched = true),
+    Query("q53_lexical_commonness", qLexicalCommonness, oLexicalCommonness, benched = true),
+    Query("q54_vocab_topk", qVocabTopK, oVocabTopK, benched = true),
+    Query("q55_source_mix", qSourceMix, oSourceMix, benched = true),
+    Query("q56_semdedup_pairs", qSemDedup, oSemDedup, benched = true),
+    Query("q57_corpus_chain", qCorpusChain, oCorpusChain, benched = true),
+    Query("q58_incremental_dedup", qIncrementalDedup, oLshDedup, benched = true),
+    Query("q59_semdedup_keep", qSemDedupKeep, oSemDedupKeep, benched = true),
+    Query("q60_semdedup_incremental", qSemDedupIncr, oSemDedupIncr, benched = true),
+    Query("q61_remove_dup_spans", qRemoveDupSpans, oRemoveDupSpans, benched = true),
+    Query("q62_bpe_pairs", qBpePairs, oBpePairs, benched = true),
+    Query("q63_pack_whole", qPackWhole, oPackWhole, benched = true),
+    Query("q64_strip_boiler_turns", qStripBoilerTurns, oStripBoilerTurns, benched = true),
+    Query("q65_length_profile", qLengthProfile, oLengthProfile, benched = true),
+    Query("q66_conv_integrity", qConvIntegrity, oConvIntegrity, benched = true),
+    Query("q67_global_shuffle", qGlobalShuffle, oGlobalShuffle, benched = true),
+    Query("q68_hash_classifier", qHashClassifier, oHashClassifier, benched = true),
+    Query("q69_truncate_context", qTruncateContext, oTruncateContext, benched = true),
+    Query("q70_chunk_docs", qChunkDocs, oChunkDocs, benched = true),
+    Query("q71_conv_dedup", qConvDedup, oConvDedup, benched = true),
+    Query("q72_agent_loops", qAgentLoops, oAgentLoops, benched = true),
+    Query("q73_repair_order", qRepairOrder, oRepairOrder, benched = true),
+    Query("q74_preference_pairs", qPreferencePairs, oPreferencePairs, benched = true),
+    Query("q75_temperature_sample", qTemperatureSample, oTemperatureSample, benched = true),
+    Query("q76_dup_flow_matrix", qDupFlowMatrix, oDupFlowMatrix, benched = true),
+    Query("q77_curriculum", qCurriculum, oCurriculum, benched = true),
+    Query("q78_transcript_chain", qTranscriptChain, oTranscriptChain, benched = true),
+    Query("q79_kmv_sketch", qKmvSketch, oKmvSketch, benched = true),
+    Query("q80_tool_transitions", qToolTransitions, oToolTransitions, benched = true),
+    Query("q81_bottomk_sample", qBottomKSample, oBottomKSample, benched = true),
+    Query("q82_centroid_sim", qCentroidSim, oCentroidSim, benched = true),
+    Query("q83_epoch_repeats", qEpochRepeats, oEpochRepeats, benched = true),
+    Query("q84_bottomk_per_group", qBottomKPerGroup, oBottomKPerGroup, benched = true),
+    Query("q85_oov_audit", qOovAudit, oOovAudit, benched = true))
 
-  def oracleSql: Map[String, String] = Map(
-    "q01_text_metrics" -> oTextMetrics,
-    "q02_parse_number" -> (pnumMacro + ";\n" + oParseNumber),
-    "q03_line_explode" -> oLineExplode,
-    "q04_line_filters" -> oLineFilters,
-    "q05_regex_extract" -> oRegexExtract,
-    "q06_dedup_firstwins" -> oDedupFirstWins,
-    "q07_group_stats" -> oGroupStats,
-    "q08_best_argmax" -> oBestArgmax,
-    "q09_doctype_scores" -> oDoctypeScores,
-    "q10_topk" -> oTopK,
-    "q11_fuzzy_topk" -> oFuzzyTopK,
-    "q12_dedup_exact" -> oDedupExact,
-    "q13_ngram_jaccard" -> oNgramJaccardFull,
-    "q14_lang_id" -> oLangId,
-    "q15_token_counts" -> oTokenCounts,
-    "q16_fingerprint" -> oFingerprint,
-    "q17_sessionize" -> oSessionize,
-    "q18_extract_turns" -> goldenOracleSql("q18_extract_turns"),
-    "q19_extract_items" -> goldenOracleSql("q19_extract_items"),
-    "q20_wratio_match" -> goldenOracleSql("q20_wratio_match"),
-    "q21_minhash_candidates" -> minhashCandSql(k = 3, bands = 8, rowsPerBand = 4, maxBucket = 10000),
-    "q22_simhash_candidates" -> simhashCandSql(maxHamming = 3, maxBucket = 10000),
-    "q23_embed_neardup" -> oEmbedNearDup,
-    "q24_ann_topk" -> oAnnTopK,
-    "q25_ann_lsh" -> lshPairsSql(nPlanes = 6, dim = 64, threshold = 0.3, maxBucket = 10000),
-    "q26_multimodal_meta" -> oMultimodalMeta,
-    "q30_ann_ivf" -> ivfSql(k = 16, nProbe = 4, topK = 5, nQueries = 10, trainN = 4096),
-    "q34_lsh_dedup" -> oLshDedup,
-    "q35_distinctive_terms" -> oDistinctiveTerms,
-    "q36_pii_scrub" -> oPiiScrub,
-    "q37_contamination" -> oContamination,
-    "q38_boilerplate" -> oBoilerplate,
-    "q39_asof_join" -> oAsofJoin,
-    "q40_range_join" -> oRangeJoin,
-    "q27_join_agg" -> oJoinAgg,
-    "q28_rollup" -> oRollup,
-    "q29_running_sum" -> oRunningSum,
-    "q31_dedup_clusters" -> oDedupClusters,
-    "q32_quality_score" -> oQuality,
-    "q33_det_sample" -> oSample,
-    "q41_blocked_match" -> oBlockedMatch,
-    "q42_asof_salted" -> oAsofSaltedHot,
-    "q43_repetition" -> oRepetition,
-    "q44_corpus_filter" -> oCorpusFilter,
-    "q45_stratified_sample" -> oStratifiedSample,
-    "q46_pack_sequences" -> oPackSequences,
-    "q47_quantize_int8" -> oQuantize,
-    "q48_source_filter" -> oSourceFilter,
-    "q49_session_window" -> oSessionWindow,
-    "q50_contamination_bloom" -> oContamination,
-    "q51_dup_spans" -> oDupSpans,
-    "q52_cluster_best" -> oClusterBest,
-    "q53_lexical_commonness" -> oLexicalCommonness,
-    "q54_vocab_topk" -> oVocabTopK,
-    "q55_source_mix" -> oSourceMix,
-    "q56_semdedup_pairs" -> oSemDedup,
-    "q57_corpus_chain" -> oCorpusChain,
-    "q58_incremental_dedup" -> oLshDedup,
-    "q59_semdedup_keep" -> oSemDedupKeep,
-    "q60_semdedup_incremental" -> oSemDedupIncr,
-    "q61_remove_dup_spans" -> oRemoveDupSpans,
-    "q62_bpe_pairs" -> oBpePairs,
-    "q63_pack_whole" -> oPackWhole,
-    "q64_strip_boiler_turns" -> oStripBoilerTurns,
-    "q65_length_profile" -> oLengthProfile,
-    "q66_conv_integrity" -> oConvIntegrity,
-    "q67_global_shuffle" -> oGlobalShuffle,
-    "q68_hash_classifier" -> oHashClassifier,
-    "q69_truncate_context" -> oTruncateContext,
-    "q70_chunk_docs" -> oChunkDocs,
-    "q71_conv_dedup" -> oConvDedup,
-    "q72_agent_loops" -> oAgentLoops,
-    "q73_repair_order" -> oRepairOrder,
-    "q74_preference_pairs" -> oPreferencePairs,
-    "q75_temperature_sample" -> oTemperatureSample,
-    "q76_dup_flow_matrix" -> oDupFlowMatrix,
-    "q77_curriculum" -> oCurriculum,
-    "q78_transcript_chain" -> oTranscriptChain,
-    "q79_kmv_sketch" -> oKmvSketch,
-    "q80_tool_transitions" -> oToolTransitions,
-    "q81_bottomk_sample" -> oBottomKSample,
-    "q82_centroid_sim" -> oCentroidSim,
-    "q83_epoch_repeats" -> oEpochRepeats,
-    "q84_bottomk_per_group" -> oBottomKPerGroup,
-    "q85_oov_audit" -> oOovAudit)
+  lazy val byName: Map[String, Query] = registry.map(q => q.name -> q).toMap
+
+  /** The queries graft.Bench times, in registry order. */
+  def benched: Seq[Query] = registry.filter(_.benched)
 
   /** n-gram jaccard oracle: shingles built identically (token 3-grams over
     * lowercase alnum tokens, distinct). */

@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.registry result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -20,10 +20,11 @@ object Verify {
     // query below so silent truncation shows up in the round artifacts
     val caps = graft.skew.CapMetrics.register(spark)
     val capsByQuery = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.registry.foreach { query =>
+      val name = query.name
       caps.clear()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        query.build(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
         val snap = caps.snapshot()
@@ -47,8 +48,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.registry
+      .map(query => s"${q(query.name)}: ${q(query.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -50,7 +50,8 @@ object SigCore {
 
   /** MinHash signature of a shingle array: sig_i = min over shingles of
     * (a_i * (md5Hash60 mod P) + c_i) mod P; empty input -> all P (the fold
-    * init), matching the HOF formulation. */
+    * init), matching the HOF formulation; a null shingle -> null, as for a
+    * null array. */
   def minhash(arr: ArrayData, numHashes: Int): ArrayData = {
     val ps = params(numHashes)
     val sig = new Array[Long](numHashes)
@@ -58,6 +59,7 @@ object SigCore {
     var i = 0
     val n = arr.numElements()
     while (i < n) {
+      if (arr.isNullAt(i)) return null
       val h = md5Hash60(arr.getUTF8String(i).getBytes) % P
       var j = 0
       while (j < numHashes) {
@@ -73,13 +75,15 @@ object SigCore {
   /** SimHash 4x16-bit blocks of a token array: global bit g of the token
     * hash comes from the two 32-bit md5-hex halves (hi = hex chars 1-8 =
     * digest bytes 0-3, lo = chars 9-16 = bytes 4-7); bit g of the
-    * signature is set when the +-1 sign-sum over tokens is positive. */
+    * signature is set when the +-1 sign-sum over tokens is positive; a
+    * null token -> null, as for a null array. */
   def simhashBlocks(arr: ArrayData): ArrayData = {
     val counts = new Array[Int](64)
     val d = md5.get()
     var i = 0
     val n = arr.numElements()
     while (i < n) {
+      if (arr.isNullAt(i)) return null
       d.reset()
       val dig = d.digest(arr.getUTF8String(i).getBytes)
       val hi = ((dig(0) & 0xffL) << 24) | ((dig(1) & 0xffL) << 16) | ((dig(2) & 0xffL) << 8) | (dig(3) & 0xffL)
@@ -109,17 +113,19 @@ object SigCore {
 }
 
 /** Column-level surface: static [[SigCore]] calls (see
-  * [[Bridge.staticInvoke]]); a null input gives a null signature. */
+  * [[Bridge.staticInvoke]]); a null input or a null element gives a null
+  * signature. */
 object signatures {
   private val longs = ArrayType(LongType, containsNull = false)
 
   /** minhash_sig(shingles, n): array<long> of n per-family minima. */
   def minhash_sig(shingles: Column, numHashes: Int): Column =
     Bridge.staticInvoke(SigCore, "minhash", longs,
-      Seq(shingles -> ArrayType(StringType), lit(numHashes) -> IntegerType), propagateNull = true)
+      Seq(shingles -> ArrayType(StringType), lit(numHashes) -> IntegerType),
+      propagateNull = true, returnNullable = true)
 
   /** simhash_blocks(tokens): array<long> of 4 16-bit signature blocks. */
   def simhash_blocks(tokens: Column): Column =
     Bridge.staticInvoke(SigCore, "simhashBlocks", longs, Seq(tokens -> ArrayType(StringType)),
-      propagateNull = true)
+      propagateNull = true, returnNullable = true)
 }

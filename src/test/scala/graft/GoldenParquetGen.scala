@@ -30,7 +30,7 @@ object GoldenParquetGen {
     Files.createDirectories(Paths.get(outBase))
     queries.foreach { name =>
       val slices = sfDirs.map { dir =>
-        SparkEntry.queries(name)(spark, dir)
+        SparkEntry.byName(name).build(spark, dir)
           .withColumn("n_turns", lit(SparkEntry.nTurns(dir)))
       }
       val tmp = Files.createTempDirectory(s"golden-$name").toString

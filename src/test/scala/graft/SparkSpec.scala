@@ -102,13 +102,18 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(total == 300L)
   }
 
-  test("driver contract: every query has an oracle and vice versa") {
-    // a queries entry without an oracleSql entry silently downgrades to a
-    // rows-only check in the driver; an orphan oracle is dead SQL
-    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet,
-      s"mismatch: ${(SparkEntry.queries.keySet diff SparkEntry.oracleSql.keySet) ++
-        (SparkEntry.oracleSql.keySet diff SparkEntry.queries.keySet)}")
-    assert(SparkEntry.queries.size >= 52)
+  test("query registry: 85 queries in q-number order, 67 benched") {
+    // every entry carries its own oracle by type; what the type cannot
+    // say is that names are unique and ordered (Verify's dump order,
+    // Bench's JSON key order) and that no oracle is blank
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == 85)
+    assert(names.forall(_.matches("q\\d\\d_[a-z0-9_]+")), names)
+    // strictly increasing q-numbers: ordered, and no name or number twice
+    val qNums = names.map(_.take(3))
+    assert(qNums.distinct == qNums && qNums.sorted == qNums, s"not in strict q-number order: $names")
+    SparkEntry.registry.foreach(q => assert(q.oracleSql.trim.nonEmpty, s"${q.name} has a blank oracle"))
+    assert(SparkEntry.benched.size == 67)
   }
 
   test("committed-only read hides uncommitted chunks and audits checksums") {
@@ -257,6 +262,17 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sql("SELECT simhash_blocks(1) AS b")
     }
     assert(typeErr.getMessage.contains("DATATYPE_MISMATCH"), typeErr.getMessage)
+    // a null array element gives a null signature (as a null array does),
+    // interpreted and in generated code, not a NullPointerException
+    val nulls = spark.sql(
+      "SELECT minhash_sig(array('a', NULL), 8) AS m, simhash_blocks(array('a', NULL)) AS s").collect()(0)
+    assert(nulls.isNullAt(0) && nulls.isNullAt(1))
+    val rows = CodegenOnly(spark) {
+      spark.range(2).selectExpr("IF(id = 0, array('a', NULL), array('a')) AS a")
+        .selectExpr("minhash_sig(a, 8) AS m", "simhash_blocks(a) AS s").collect()
+    }
+    assert(rows(0).isNullAt(0) && rows(0).isNullAt(1))
+    assert(rows(1).getSeq[Long](0).length == 8 && rows(1).getSeq[Long](1).length == 4)
   }
 
   test("IVF top-k with full probing equals brute force; partial probing is a subset search") {

@@ -3,10 +3,12 @@ package graft.core
 import graft.io.Transcripts
 import ParserCommon._
 
-/** Dev microprobe: sub-phase allocation breakdown for the two biggest
-  * allocators (competitive, universal). SharedLines+segmentation are
-  * precomputed OUTSIDE the measured closure, unlike HotPathProbe, so each
-  * number is the phase alone. Usage: sbt "Test/runMain graft.core.AllocProbe [n]" */
+/** Dev microprobe: per-parser allocation (B/turn) and best-of-3 time
+  * (µs/turn) of the per-turn engine, with sub-phase allocation breakdowns
+  * for the two biggest allocators (competitive, universal).
+  * SharedLines+segmentation are precomputed OUTSIDE the measured closure,
+  * so each number is the phase alone. For stack samples use the JDK's JFR
+  * (`jcmd <pid> JFR.start`, `jfr print`). Usage: sbt "Test/runMain graft.core.AllocProbe [n]" */
 object AllocProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 4000
@@ -80,8 +82,14 @@ object AllocProbe {
     }
     alloc("env.recommendations")(i => Engine.recommendations(if (i % 2 == 0) "invoice" else "unknown"))
     alloc("ENGINE.full")(i => Engine.parseTurn("c", 0, texts(i)))
+    time("sharedLines+segment")(i => Segmentation.segmentShared(new SharedLines(texts(i))))
     time("comp.full")(i => try CompetitiveParser.parse(shared(i), segs(i)) catch { case _: Exception => Nil })
     time("univ.full")(i => try UniversalCoreParser.parse(shared(i), segs(i)) catch { case _: Exception => Nil })
+    time("invoice.full")(i => try InvoiceParser.parse(shared(i), segs(i)) catch { case _: Exception => Nil })
+    time("commercial.full")(i => try CommercialParser.parse(shared(i), segs(i)) catch { case _: Exception => Nil })
+    time("supplierProfile")(i => try SupplierProfiles.parseWithProfile(texts(i), segs(i)) catch { case _: Exception => Nil })
+    time("tableExtractor")(i => try TableExtractor.parse(segs(i)) catch { case _: Exception => Nil })
+    time("preciseTable")(i => try PreciseTableParser.parse(segs(i)) catch { case _: Exception => Nil })
     time("ENGINE.full")(i => Engine.parseTurn("c", 0, texts(i)))
   }
 }

@@ -42,3 +42,4 @@ for name, sql in sorted(oracle.items()):
     except Exception as e:
         print(f"ERR  {name}: {e}"); fails += 1
 print("FAILS:", fails)
+sys.exit(1 if fails else 0)

@@ -135,3 +135,4 @@ for id_, pname, mine, ref in examples:
     rr = ref if isinstance(ref, str) else json.dumps(ref, ensure_ascii=False)[:600]
     print(" engine:", mm)
     print(" ref   :", rr)
+sys.exit(1 if mismatch else 0)
