@@ -40,12 +40,4 @@ object Pipeline {
         col("item.total").as("total"), col("item.supplier").as("supplier"),
         col("item.source").as("source"), col("item.confidence").as("confidence"))
   }
-
-  /** Per-turn extracted text + metrics (the north rule's byte-compared
-    * output), ordered stably by (conv_id, turn_idx). */
-  def extractedText(turns: DataFrame): DataFrame =
-    extractTurns(turns).toDF()
-      .select("conv_id", "turn_idx", "extracted_text", "n_chars", "n_lines", "n_tables",
-        "has_text", "doc_type", "best_parser", "best_count")
-      .orderBy("conv_id", "turn_idx")
 }

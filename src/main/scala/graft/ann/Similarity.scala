@@ -313,20 +313,12 @@ object Similarity {
         col(vecCol).cast("array<double>").as("v")), "v", cents)
       .localCheckpoint()
     val allAssigned = oldAssigned.select("id", "v", "cid")
-      .withColumn("is_new", lit(false))
-      .unionByName(newAssigned.select("id", "v", "cid").withColumn("is_new", lit(true)))
-    val capped = graft.skew.KeyCaps.dropOverCapKeys(allAssigned, Seq("cid"), maxBucket,
-      site = "semdedup_incr_clusters")
-    val a = capped.select(col("cid"), col("id").as("id_a"), col("v").as("v_a"),
-      col("is_new").as("__na"))
-    val b = capped.select(col("cid"), col("id").as("id_b"), col("v").as("v_b"),
-      col("is_new").as("__nb"))
-    val pairs = a.join(b, Seq("cid"))
-      .where(col("id_a") < col("id_b") && (col("__na") || col("__nb")))
-      .withColumn("cosine", cosine(col("v_a"), col("v_b")))
-      .where(col("cosine") > threshold)
+      .withColumn("__n", lit(false))
+      .unionByName(newAssigned.select("id", "v", "cid").withColumn("__n", lit(true)))
+    val pairs = inClusterPairs(allAssigned, threshold, maxBucket, site = "semdedup_incr_clusters",
+        pairPred = col("__na") || col("__nb"))
       .select("id_a", "id_b", "cid", "cosine")
-    (pairs, allAssigned.drop("is_new"))
+    (pairs, allAssigned.drop("__n"))
   }
 
   /** [[semDedupPairsWithCentroids]] over an ALREADY-ASSIGNED (id, v,
@@ -338,15 +330,20 @@ object Similarity {
       .select("id_a", "id_b", "cid", "cosine")
 
   /** Capped in-cluster above-threshold cosine pairs from an assigned
-    * (id, v, cid) working set — the shared core of [[semDedupPairs]] and
-    * [[semDedupKeep]]. */
+    * (id, v, cid) working set — the one pairing core of [[semDedupPairs]],
+    * [[semDedupKeep]] and [[semDedupPairsIncremental]]. Each side of the
+    * cid self-join carries id and v as id_a/v_a (id_b/v_b) and any other
+    * column `c` of `assigned` as `c`+"a" (`c`+"b"); `pairPred` is an extra
+    * pair filter over those, applied with id_a < id_b before any cosine. */
   private def inClusterPairs(assigned: DataFrame, threshold: Double,
-                             maxBucket: Int, site: String): DataFrame = {
+                             maxBucket: Int, site: String,
+                             pairPred: Column = lit(true)): DataFrame = {
     val capped = graft.skew.KeyCaps.dropOverCapKeys(assigned, Seq("cid"), maxBucket,
       site = site)
-    val a = capped.select(col("cid"), col("id").as("id_a"), col("v").as("v_a"))
-    val b = capped.select(col("cid"), col("id").as("id_b"), col("v").as("v_b"))
-    a.join(b, Seq("cid")).where(col("id_a") < col("id_b"))
+    val extra = capped.columns.filterNot(Set("id", "v", "cid"))
+    def side(s: String) = capped.select(Seq(col("cid"), col("id").as(s"id_$s"),
+      col("v").as(s"v_$s")) ++ extra.map(c => col(c).as(c + s)): _*)
+    side("a").join(side("b"), Seq("cid")).where(col("id_a") < col("id_b") && pairPred)
       .withColumn("cosine", cosine(col("v_a"), col("v_b")))
       .where(col("cosine") > threshold)
   }

@@ -192,9 +192,8 @@ object Engine {
     Py.containsAny(name, Rules.bestSelectionProductWords)
   }
 
-  /** Simple 3-class doc-type detection (universal_parser.py:833-848). */
-  def detectDocumentType(text: String): String = detectDocumentTypeLower(Py.lower(text))
-
+  /** Simple 3-class doc-type detection over lowercased text
+    * (universal_parser.py:833-848). */
   def detectDocumentTypeLower(lower: String): String = {
     if (Py.containsAny(lower, Rules.docTypeCommercial)) "commercial_proposal"
     else if (Py.containsAny(lower, Rules.docTypeInvoice)) "invoice"
@@ -204,9 +203,6 @@ object Engine {
 
   /** A4 — 4-class keyword-hit scores, normalized (ocr_processor.py:209-275).
     * Returned as (invoice, commercial, competitive, contract). */
-  def documentTypeScores(text: String): (Double, Double, Double, Double) =
-    documentTypeScoresLower(Py.lower(text))
-
   def documentTypeScoresLower(lower: String): (Double, Double, Double, Double) = {
     val inv = Py.countContains(lower, Rules.scoreInvoiceKeywords).toDouble
     val com = Py.countContains(lower, Rules.scoreCommercialKeywords).toDouble
@@ -235,9 +231,6 @@ object Engine {
   }
 
   /** F9 — OCR-needed gate (enhanced_extractor.py:248-277). */
-  def needsFallback(text: String, tables: Seq[Tab]): Boolean =
-    needsFallbackLower(text, Py.lower(text), tables)
-
   def needsFallbackLower(text: String, lower: String, tables: Seq[Tab]): Boolean = {
     if (Py.pyStripLen(text) < 100) return true
     if (Py.countContains(lower, Rules.qualityGateKeywords) < 2) return true

@@ -142,9 +142,6 @@ object Segmentation {
     out.toIndexedSeq
   }
 
-  private def isTabular(line: String): Boolean =
-    splitCells(line).length >= 2
-
   /** Java-regex-default \s (the class `cellGap` compiles with). */
   private def isSplitWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000b' || c == '\f' || c == '\r'

@@ -348,19 +348,6 @@ object Patterns {
   val blockSplit: Pattern =
     Pattern.compile("\\n[\\s\\x1c-\\x1f]*\\n", Pattern.UNICODE_CHARACTER_CLASS)
 
-  /** Does `\n\s*\n` (Python \s) occur at all? Existence scan so turns
-    * without any blank-line separator skip the regex split. */
-  def hasPyBlockGap(s: String): Boolean = {
-    var i = s.indexOf('\n')
-    while (i >= 0) {
-      var j = i + 1
-      while (j < s.length && s.charAt(j) != '\n' && Py.isPySpace(s.charAt(j))) j += 1
-      if (j < s.length && s.charAt(j) == '\n') return true
-      i = s.indexOf('\n', i + 1)
-    }
-    false
-  }
-
   val textPatterns: Seq[Pattern] = Seq(py(Rules.textP1), py(Rules.textP2), py(Rules.textP3))
   val invoicePatterns: Seq[Pattern] = Seq(py(Rules.invoiceP1))
   val commercialPatterns: Seq[Pattern] = Seq(py(Rules.commercialP1))

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.DataType
 
 /**
  * Corpus-level deduplication operators for training-data pipelines:
@@ -54,9 +55,14 @@ object Dedup {
       (a, c)
     }
 
+  /** The exact-duplicate key: text with whitespace runs collapsed to one
+    * space, trimmed and lowercased. Every exact-dedup, fingerprint and
+    * boilerplate operator hashes this one normalization. */
+  def normText(text: Column): Column = lower(trim(regexp_replace(text, "\\s+", " ")))
+
   /** Exact dedup on normalized text: keep the smallest doc id per hash. */
   def exact(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val norm = lower(trim(regexp_replace(col(textCol), "\\s+", " ")))
+    val norm = normText(col(textCol))
     df.withColumn("norm_hash", md5(norm))
       .groupBy("norm_hash")
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_docs"))
@@ -278,37 +284,37 @@ object Dedup {
         slice(sigCol, b * rowsPerBand + 1, rowsPerBand), x => x.cast("string"))))
     }: _*)
 
-  /** In-bucket (a < b) pairs from a (id, band, bucket) table: ONE shuffle
-    * (groupBy the bucket key), sorted in-bucket ids, nested-loop pair
-    * emission, distinct across bands. Buckets larger than `maxBucket` are
-    * excluded — the explicit skew guard; at LSH-sensible parameters a
-    * bucket that large is a degenerate collision class, not a near-dup
-    * set. */
-  private def pairsWithinBuckets(banded: DataFrame, maxBucket: Int,
-                                 site: String): DataFrame = {
-    // broadcast-hot-set guard (graft.skew.KeyCaps): bucket sizes from a
-    // map-side-combinable groupBy count, over-cap buckets dropped by a
-    // broadcast anti-join BEFORE their rows enter the bucket exchange or
-    // collect_list materializes them. A degenerate bucket's rows are
-    // filtered map-side and never serialize through any single task —
-    // unlike the former window count, which had no partial aggregation and
-    // scanned the whole hot bucket in one task before dropping it. The
-    // count pass recomputes the signature expressions once more (pure
-    // map-side, embarrassingly parallel — the right trade at corpus
-    // scale). Singleton buckets emit no pairs and are dropped after the
-    // aggregation (1-element lists — no extra shuffle).
+  /** In-bucket pairs, the one pairing core of every MinHash/SimHash
+    * candidate generator: ONE shuffle (groupBy the bucket `keys`), the
+    * bucket's `member`s collected into a sorted list named `list`, and a
+    * native nested-loop `emit` (a graft.expr.pairops function) exploded to
+    * one `p` struct per pair — callers pick the struct fields and dedupe
+    * across buckets. Buckets larger than `maxBucket` are excluded — the
+    * explicit skew guard; at LSH-sensible parameters a bucket that large
+    * is a degenerate collision class, not a near-dup set.
+    *
+    * The guard is graft.skew.KeyCaps' broadcast hot set: bucket sizes
+    * from a map-side-combinable groupBy count, over-cap buckets dropped by
+    * a broadcast anti-join BEFORE their rows enter the bucket exchange or
+    * collect_list materializes them. A degenerate bucket's rows are
+    * filtered map-side and never serialize through any single task —
+    * unlike a window count, which has no partial aggregation and scans
+    * the whole hot bucket in one task before dropping it. The count pass
+    * recomputes the input's expressions once more (pure map-side,
+    * embarrassingly parallel — the right trade at corpus scale).
+    * Singleton buckets emit no pairs and are dropped after the
+    * aggregation (1-element lists — no extra shuffle). Emission is one
+    * native nested loop per bucket (graft.expr.PairCore), not a HOF that
+    * runs its lambdas interpreted and copies a sub-array per member. */
+  private def bucketPairs(banded: DataFrame, keys: Seq[String], member: Column, list: String,
+                          maxBucket: Int, site: String)
+                         (emit: (Column, DataType) => Column): DataFrame = {
     val grouped = graft.skew.KeyCaps
-      .dropOverCapKeys(banded, Seq("band", "bucket"), maxBucket, site = site)
-      .groupBy("band", "bucket")
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .where(size(col("ids")) >= 2)
-    // native pair emission (graft.expr.PairCore.pairs): one nested loop per
-    // bucket — the HOF formulation ran every lambda interpreted and
-    // `slice` allocated a fresh sub-array per outer element
-    grouped.select(explode(
-        graft.expr.pairops.pair_emit(col("ids"), grouped.schema("ids").dataType)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .distinct()
+      .dropOverCapKeys(banded, keys, maxBucket, site = site)
+      .groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(member)).as(list))
+      .where(size(col(list)) >= 2)
+    grouped.select(explode(emit(col(list), grouped.schema(list).dataType)).as("p"))
   }
 
   /** Declarative (pure-HOF) pair emission — differential reference for
@@ -338,7 +344,10 @@ object Dedup {
                                         maxBucket: Int, site: String): DataFrame = {
     val banded = sigs.select(col(idCol).as("id"),
       posexplode(minhashBuckets(col("sig"), bands, rowsPerBand)).as(Seq("band", "bucket")))
-    pairsWithinBuckets(banded, maxBucket, site)
+    bucketPairs(banded, Seq("band", "bucket"), col("id"), "ids", maxBucket, site)(
+        graft.expr.pairops.pair_emit)
+      .select(col("p.id_a"), col("p.id_b"))
+      .distinct()
   }
 
   /** Exact n-gram Jaccard verify over given candidate pairs (the scale
@@ -440,7 +449,17 @@ object Dedup {
   /** (doc_id, __text, __fh) projection — the family-membership map. */
   private def fam(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-      .withColumn("__fh", md5(lower(trim(regexp_replace(col("__text"), "\\s+", " ")))))
+      .withColumn("__fh", md5(normText(col("__text"))))
+
+  /** One keeper row per family `__fh` via a combinable min-struct
+    * aggregate: `member` (a field named doc_id) leads the struct, so min
+    * == the min-id member's row, and a billion-copy family collapses to
+    * ONE row per map partition before its exchange — no window, no join
+    * against the raw rows. `n` aggregates the family size. */
+  private def collapseFamilies(rows: DataFrame, member: Column, n: Column): DataFrame =
+    rows.groupBy("__fh").agg(min(struct(member, col("__text"))).as("__rep"), n.as("__n"))
+      .select(col("__fh"), col("__rep.doc_id").as("__keeper"),
+        col("__rep.__text").as("__text"), col("__n"))
 
   /** Build a fresh [[DedupIndex]] from a corpus (one full epoch).
     * `materializeVerified = false` skips the verified-pair checkpoint for
@@ -451,10 +470,6 @@ object Dedup {
                       k: Int = 3, bands: Int = 16, rowsPerBand: Int = 2,
                       threshold: Double = 0.5,
                       materializeVerified: Boolean = true): DedupIndex = {
-    // one keeper row per family via a combinable min-struct aggregate
-    // (doc_id leads the struct, so min == the min-id member's row): a
-    // billion-copy family collapses to ONE row per map partition before
-    // its exchange — no window, no join against the raw rows.
     // localCheckpoint: this IS the exact-dedup output (one row per
     // DISTINCT text — the deduped corpus a production chain materializes
     // to storage before near-dup anyway); it feeds the signature chain ~3x
@@ -472,11 +487,7 @@ object Dedup {
     // shingle+signature fold over every rep. The sig-null filter below
     // is exactly [[minhashSignatures]]' has-at-least-one-shingle gate
     // (< k tokens -> when() null).
-    val famSig = fam(df, idCol, textCol).groupBy("__fh").agg(
-        min(struct(col("doc_id"), col("__text"))).as("__rep"),
-        count(lit(1)).as("__n"))
-      .select(col("__fh"), col("__rep.doc_id").as("__keeper"),
-        col("__rep.__text").as("__text"), col("__n"))
+    val famSig = collapseFamilies(fam(df, idCol, textCol), col("doc_id"), count(lit(1)))
       .withColumn("sig", when(size(tokens(col("__text"))) >= k,
         graft.expr.signatures.minhash_sig(shingles(col("__text"), k), bands * rowsPerBand)))
       .localCheckpoint()
@@ -564,18 +575,10 @@ object Dedup {
     // reads `touched` instead. The batch aggregate appears twice inside
     // this one plan (semi-join probe + union arm) — identical subtrees,
     // planned as a ReusedExchange, not a second scan.
-    val newFam = fam(newDocs, idCol, textCol).groupBy("__fh").agg(
-        min(struct(col("doc_id"), col("__text"))).as("__rep"),
-        count(lit(1)).as("__n"))
-      .select(col("__fh"), col("__rep.doc_id").as("__keeper"),
-        col("__rep.__text").as("__text"), col("__n"))
-    val touched = index.famAgg.join(newFam.select("__fh"), Seq("__fh"), "left_semi")
-      .unionByName(newFam)
-      .groupBy("__fh").agg(
-        min(struct(col("__keeper").as("doc_id"), col("__text"))).as("__rep"),
-        sum(col("__n")).as("__n"))
-      .select(col("__fh"), col("__rep.doc_id").as("__keeper"),
-        col("__rep.__text").as("__text"), col("__n"))
+    val newFam = collapseFamilies(fam(newDocs, idCol, textCol), col("doc_id"), count(lit(1)))
+    val touched = collapseFamilies(
+        index.famAgg.join(newFam.select("__fh"), Seq("__fh"), "left_semi").unionByName(newFam),
+        col("__keeper").as("doc_id"), sum(col("__n")))
       .localCheckpoint() // delta-sized
     val mergedFamAgg = index.famAgg
       .join(touched.select("__fh"), Seq("__fh"), "left_anti")
@@ -595,7 +598,14 @@ object Dedup {
       .join(freshSigs.select(col("__fh"), lit(true).as("__new")), Seq("__fh"), "left")
       .select(col("__fh").as("id"), coalesce(col("__new"), lit(false)).as("is_new"),
         posexplode(minhashBuckets(col("sig"), bands, rowsPerBand)).as(Seq("band", "bucket")))
-    val newCands = pairsWithinBucketsNewOnly(bandedAll, 10000, "incr_lsh_buckets")
+    // in-bucket pairs where AT LEAST ONE side is a new-epoch family: the
+    // is_new flag rides through the sorted member list and old/old pairs
+    // are skipped at emission (they are already in the index)
+    val newCands = bucketPairs(bandedAll, Seq("band", "bucket"),
+        struct(col("id"), col("is_new")), "ms", 10000, "incr_lsh_buckets")(
+        graft.expr.pairops.pair_emit_new_only)
+      .select(col("p.id_a"), col("p.id_b"))
+      .distinct()
       .localCheckpoint()
     val newVerified = jaccardVerify(mergedFamAgg.select(col("__fh"), col("__text")),
         newCands, "__fh", "__text", k, index.threshold)
@@ -633,23 +643,6 @@ object Dedup {
                                idCol: String, textCol: String): (DataFrame, DedupIndex) = {
     val merged = mergeDedupIndex(index, newDocs, idCol, textCol)
     (clustersFromIndex(merged, fam(allDocs, idCol, textCol)), merged)
-  }
-
-  /** In-bucket pairs where AT LEAST ONE side is a new-epoch family: same
-    * single-shuffle group-and-emit as [[pairsWithinBuckets]], with the
-    * is_new flag carried through the sorted id list and old/old pairs
-    * skipped at emission (they are already in the index). */
-  private def pairsWithinBucketsNewOnly(banded: DataFrame, maxBucket: Int,
-                                        site: String): DataFrame = {
-    val grouped = graft.skew.KeyCaps
-      .dropOverCapKeys(banded, Seq("band", "bucket"), maxBucket, site = site)
-      .groupBy("band", "bucket")
-      .agg(sort_array(collect_list(struct(col("id"), col("is_new")))).as("ms"))
-      .where(size(col("ms")) >= 2)
-    grouped.select(explode(
-        graft.expr.pairops.pair_emit_new_only(col("ms"), grouped.schema("ms").dataType)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .distinct()
   }
 
   /** Declarative (pure-HOF) new-only pair emission — differential
@@ -740,16 +733,8 @@ object Dedup {
     val sigs = simhashBlocks(df, idCol, textCol)
     val banded = sigs.select(col(idCol).as("id"), col("blocks"),
       posexplode(col("blocks")).as(Seq("block", "block_val")))
-    // same broadcast-hot-set guard as pairsWithinBuckets: combinable
-    // groupBy count + broadcast anti-join drops a degenerate block's rows
-    // map-side before the bucket exchange; singletons fall out post-agg
-    val grouped = graft.skew.KeyCaps
-      .dropOverCapKeys(banded, Seq("block", "block_val"), maxBucket, site = "simhash_buckets")
-      .groupBy("block", "block_val")
-      .agg(sort_array(collect_list(struct(col("id"), col("blocks")))).as("ms"))
-      .where(size(col("ms")) >= 2)
-    grouped.select(explode(
-        graft.expr.pairops.pair_emit_hamming(col("ms"), grouped.schema("ms").dataType)).as("p"))
+    bucketPairs(banded, Seq("block", "block_val"), struct(col("id"), col("blocks")), "ms",
+        maxBucket, site = "simhash_buckets")(graft.expr.pairops.pair_emit_hamming)
       .select(col("p.id_a"), col("p.id_b"), col("p.hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()
@@ -928,12 +913,5 @@ object Dedup {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
     parent.keySet().asScala.toSeq.map(x => (x, find(x))).toDF("doc_id", "cluster_id")
-  }
-
-  /** First-wins dedup window (A1 at corpus level): one row per key, winner =
-    * lowest (orderCols). */
-  def firstWins(df: DataFrame, keyCols: Seq[String], orderCols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(orderCols.map(col): _*)
-    df.withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
   }
 }

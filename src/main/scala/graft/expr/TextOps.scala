@@ -82,22 +82,30 @@ object TextCore {
     * positional k-gram of a token array, index order, non-distinct —
     * the [[graft.dedup.Dedup]] dupSpans gram pipeline fused so the gram
     * strings are never materialized as rows. Fewer than k tokens ->
-    * empty; null input -> empty (when-otherwise branch in the HOF). */
+    * empty; null input -> empty (when-otherwise branch in the HOF); a
+    * null token is left out of its grams, as concat_ws leaves it out. */
   def gramHashes(toks: ArrayData, k: Int): ArrayData = {
     if (toks == null) return ArrayData.toArrayData(new Array[Long](0))
     val n = toks.numElements()
     if (n < k) return ArrayData.toArrayData(new Array[Long](0))
     val bs = new Array[Array[Byte]](n)
     var i = 0
-    while (i < n) { bs(i) = toks.getUTF8String(i).getBytes; i += 1 }
+    while (i < n) { if (!toks.isNullAt(i)) bs(i) = toks.getUTF8String(i).getBytes; i += 1 }
     val d = java.security.MessageDigest.getInstance("MD5")
     val out = new Array[Long](n - k + 1)
     i = 0
     while (i <= n - k) {
+      // concat_ws(" ", ...) of the HOF: a null token and its separator are skipped
       d.reset()
-      d.update(bs(i))
-      var j = 1
-      while (j < k) { d.update(' '.toByte); d.update(bs(i + j)); j += 1 }
+      var first = true
+      var j = 0
+      while (j < k) {
+        if (bs(i + j) != null) {
+          if (!first) d.update(' '.toByte)
+          d.update(bs(i + j)); first = false
+        }
+        j += 1
+      }
       val dig = d.digest()
       var v = 0L
       var b = 0
@@ -150,14 +158,17 @@ object TextCore {
     * adjacently — the Gopher most-frequent-word count. Result is
     * sort-order-independent (only equal-adjacency matters), identical to
     * the `aggregate` fold over sort_array in the HOF reference. Empty ->
-    * 0. */
+    * 0. A null token is a run of its own (null never equals the previous
+    * token in the fold), so it counts 1 and joins no run. */
   def topRunCount(toks: ArrayData): Long = {
-    val n = toks.numElements()
-    if (n == 0) return 0L
-    val arr = new Array[UTF8String](n)
+    val n0 = toks.numElements()
+    if (n0 == 0) return 0L
+    val arr = new Array[UTF8String](n0)
+    var n = 0
     var i = 0
-    while (i < n) { arr(i) = toks.getUTF8String(i); i += 1 }
-    java.util.Arrays.sort(arr.asInstanceOf[Array[AnyRef]])
+    while (i < n0) { if (!toks.isNullAt(i)) { arr(n) = toks.getUTF8String(i); n += 1 }; i += 1 }
+    if (n == 0) return 1L
+    java.util.Arrays.sort(arr.asInstanceOf[Array[AnyRef]], 0, n)
     var best = 1L; var run = 1L
     i = 1
     while (i < n) {
@@ -204,16 +215,19 @@ object TextCore {
   /** (n_2grams, n_dup_2grams) of the non-distinct word 2-gram list — the
     * Gopher duplicate-2-gram signal, one pass with a hash set instead of
     * materializing the gram array twice (size + array_distinct). Null or
-    * <2 tokens -> (0, 0), the HOF's when-otherwise(empty) branch. */
+    * <2 tokens -> (0, 0), the HOF's when-otherwise(empty) branch. A null
+    * token is left out of its grams, as the HOF's concat_ws leaves it out. */
   def twoGramCounts(toks: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
     if (toks == null || toks.numElements() < 2)
       return org.apache.spark.sql.catalyst.InternalRow(0L, 0L)
     val n = toks.numElements()
+    def tok(i: Int): String = if (toks.isNullAt(i)) null else toks.getUTF8String(i).toString
     val seen = new java.util.HashSet[String]()
     var dup = 0L
     var i = 0
     while (i < n - 1) {
-      val g = toks.getUTF8String(i).toString + " " + toks.getUTF8String(i + 1).toString
+      val a = tok(i); val b = tok(i + 1)
+      val g = if (a == null) (if (b == null) "" else b) else if (b == null) a else a + " " + b
       if (!seen.add(g)) dup += 1
       i += 1
     }

@@ -1,6 +1,6 @@
 package graft.matching
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.rules.Rules
@@ -18,15 +18,6 @@ import graft.rules.Rules
 object Matching {
 
   val wratioUdf = udf((a: String, b: String) => Fuzzy.wratio(a, b))
-
-  /** Levenshtein-based ratio — SQL-expressible scorer variant used for the
-    * DuckDB oracle (same formula both sides): (1 - lev/greatest(len)) * 100
-    * over lowercase inputs. */
-  def levRatio(a: Column, b: Column): Column = {
-    val la = lower(a); val lb = lower(b)
-    round(lit(100.0) * (lit(1.0) - levenshtein(la, lb).cast("double") /
-      greatest(length(la), length(lb)).cast("double")), 2)
-  }
 
   /**
    * Top-k fuzzy matches per item (matcher.py find_matches: limit=3,
@@ -120,19 +111,5 @@ object Matching {
       .withColumn("is_auto_match", col("score") >= auto)
     // restore the full item row (unique-by-key precondition above)
     items.join(ranked.drop(nameCol), itemKeyCols)
-  }
-
-  /** J2 batch matcher: best suggestion folded onto each item row
-    * (matcher.py:121-158). */
-  def batchMatch(items: DataFrame, products: DataFrame,
-                 itemKeyCols: Seq[String], nameCol: String = "name"): DataFrame = {
-    val best = topMatches(items, products, itemKeyCols, nameCol, limit = 1)
-      .select((itemKeyCols.map(col) :+ col("match_sku").as("sku_suggestion")
-        :+ col("score").as("confidence_score") :+ col("is_auto_match").as("is_auto_matched")
-        :+ col("product_id")): _*)
-    items.join(best, itemKeyCols, "left")
-      .withColumn("confidence_score", coalesce(col("confidence_score"), lit(0.0)))
-      .withColumn("is_auto_matched", coalesce(col("is_auto_matched"), lit(false)))
-      .withColumn("sku", when(col("is_auto_matched"), col("sku_suggestion")))
   }
 }

@@ -68,11 +68,4 @@ object Multimodal {
         }
       }
   }
-
-  /** Frame sampling plan for videos: every `stride`-th frame index —
-    * declarative explode, no decode needed to plan. */
-  def sampleFrames(meta: DataFrame, stride: Int): DataFrame =
-    meta.where(col("kind") === "video")
-      .select(col("media_id"),
-        explode(sequence(lit(0), col("n_frames") - 1, lit(stride))).as("frame_idx"))
 }

@@ -19,13 +19,4 @@ object Salt {
   def saltedRepartition(df: DataFrame, numPartitions: Int, salt: Int): DataFrame =
     df.repartition(numPartitions, col("conv_id"), pmod(hash(col("turn_idx")), lit(salt)))
       .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-
-  /** Pick a salt from observed skew: target at most `maxPerPartition` turns
-    * of one conversation per partition. Cheap count-by-key sketch — one
-    * narrow aggregation over just conv_id (column-pruned scan). */
-  def chooseSalt(df: DataFrame, maxPerPartition: Long): Int = {
-    val maxConv = df.groupBy("conv_id").count()
-      .agg(max("count")).collect()(0).getLong(0)
-    math.max(1, math.min(1024, (maxConv / math.max(1L, maxPerPartition)).toInt + 1))
-  }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 
 /**
@@ -59,48 +59,100 @@ object StreamingExtract {
     * lifetime dedup stays a batch job over the accumulated table. */
   def streamingDedup(turns: DataFrame, horizon: String = "10 minutes"): DataFrame =
     turns
-      .withColumn("fp", md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))))
+      .withColumn("fp", md5(graft.dedup.Dedup.normText(col("text"))))
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("fp")
 
-  // ---- watermark-bounded MinHash near-dup candidates -----------------------
+  // ---- watermark-bounded in-bucket pairing ---------------------------------
 
-  final case class BucketDoc(id: Long, tsUs: Long)
+  /** A live bucket member: id, event time and (SemDeDup only) its vector. */
+  final case class BucketDoc(id: Long, tsUs: Long, v: Array[Double])
   /** `overCapUntilUs` > 0 marks a tombstoned (over-cap) bucket: pairing is
     * suspended until the watermark passes the bucket's latest arrival —
     * the bucket has actually DRAINED, not merely been forgotten. */
   final case class BucketState(docs: List[BucketDoc], overCapUntilUs: Long = 0L)
   final case class CandPair(id_a: Long, id_b: Long)
+  final case class SemPair(id_a: Long, id_b: Long, cosine: Double)
 
   /**
-   * Streaming MinHash-LSH near-duplicate candidates — the watermark-
-   * bounded analog of graft.dedup.Dedup.minhashCandidates: each document
-   * is signed map-side with the same codegen'd minhash_sig expression and
-   * banded into the same (band, bucket) keys; per-bucket state (doc ids
-   * live within the watermark horizon) is held in
-   * flatMapGroupsWithState, and a pair (a < b) is emitted when the later
-   * document arrives in a bucket the earlier one still occupies.
+   * The one per-bucket state machine behind [[streamingNearDup]] and
+   * [[streamingSemDedup]]: a pair is emitted when a later document
+   * arrives in a bucket an earlier one still occupies, `pair(lo, hi)`
+   * (lo.id < hi.id) deciding what — if anything — the pair becomes.
    *
    * Contracts:
    *  - State is bounded by the horizon (docs with ts below the watermark
    *    are evicted; idle buckets flush via EventTimeTimeout) — the only
    *    tractable contract on an unbounded stream; corpus-lifetime dedup
    *    stays the batch chain.
-   *  - A pair sharing several bands is emitted once per shared bucket;
-   *    consumers dedupe downstream (the batch operator ends in distinct()
-   *    — a streaming global distinct would itself need unbounded state).
-   *  - With a horizon wider than the data span, the distinct pair set
-   *    EQUALS batch minhashCandidates (StreamingSpec differential).
+   *  - In-batch order is deterministic: a pair is emitted by its later
+   *    (ts, id) member against everything live before it.
    *  - `maxBucket` mirrors the batch degenerate-bucket cap as the bucket
    *    GROWS, and the check runs BEFORE any pair materializes: when
-   *    live + incoming docs would exceed the cap, the batch's pairing
-   *    loop never starts (a 100k-identical-doc microbatch costs O(n)
-   *    state, not O(n^2) pair objects) and the bucket is TOMBSTONED —
-   *    it emits nothing further until the watermark passes its latest
-   *    arrival (i.e. it has actually drained), arrivals during the
-   *    tombstone extending the drain point. Pairs emitted before the
-   *    crossing are not retracted (append streams cannot retract) — the
-   *    batch operator is the authority for exact cap semantics.
+   *    live + incoming docs would exceed the cap, the pairing loop never
+   *    starts (a 100k-identical-doc microbatch costs O(n) state, not
+   *    O(n^2) pair objects) and the bucket is TOMBSTONED — it emits
+   *    nothing further until the watermark passes its latest arrival
+   *    (i.e. it has actually drained), arrivals during the tombstone
+   *    extending the drain point. Pairs emitted before the crossing are
+   *    not retracted (append streams cannot retract) — the batch
+   *    operator is the authority for exact cap semantics.
+   */
+  private def pairLiveBucket[P](rows: Iterator[BucketDoc], state: GroupState[BucketState],
+                                maxBucket: Int)
+                               (pair: (BucketDoc, BucketDoc) => Option[P]): Iterator[P] = {
+    val wmUs = state.getCurrentWatermarkMs() * 1000L
+    val st = state.getOption
+    val incoming = rows.toList.sortBy(d => (d.tsUs, d.id))
+    def tombstone(untilUs: Long): Iterator[P] = {
+      if (wmUs >= untilUs) state.remove() // drained — pairing may resume
+      else {
+        state.update(BucketState(Nil, overCapUntilUs = untilUs))
+        state.setTimeoutTimestamp(math.max(untilUs / 1000L + 1L,
+          state.getCurrentWatermarkMs() + 1L))
+      }
+      Iterator.empty
+    }
+    if (st.exists(_.overCapUntilUs > 0L)) {
+      // still hot: arrivals extend the drain point; emit nothing
+      tombstone((st.get.overCapUntilUs +: incoming.map(_.tsUs + 1L)).max)
+    } else {
+      val prev = st.map(_.docs).getOrElse(Nil).filter(_.tsUs >= wmUs)
+      if (prev.size + incoming.size > maxBucket) {
+        tombstone(((prev ++ incoming).map(_.tsUs + 1L) :+ (wmUs + 1L)).max)
+      } else {
+        val out = List.newBuilder[P]
+        var live = prev
+        incoming.foreach { d =>
+          live.foreach { o =>
+            if (o.id != d.id) out ++= (if (o.id < d.id) pair(o, d) else pair(d, o))
+          }
+          live = d :: live
+        }
+        val keep = live.filter(_.tsUs >= wmUs)
+        if (keep.isEmpty) state.remove()
+        else {
+          state.update(BucketState(keep))
+          state.setTimeoutTimestamp(math.max(keep.map(_.tsUs).max / 1000L + 1L,
+            state.getCurrentWatermarkMs() + 1L))
+        }
+        out.result().distinct.iterator
+      }
+    }
+  }
+
+  /**
+   * Streaming MinHash-LSH near-duplicate candidates — the watermark-
+   * bounded analog of graft.dedup.Dedup.minhashCandidates: each document
+   * is signed map-side with the same codegen'd minhash_sig expression and
+   * banded into the same (band, bucket) keys; every bucket is paired by
+   * [[pairLiveBucket]] (its state, horizon and cap contracts).
+   *
+   * A pair sharing several bands is emitted once per shared bucket;
+   * consumers dedupe downstream (the batch operator ends in distinct() —
+   * a streaming global distinct would itself need unbounded state). With
+   * a horizon wider than the data span, the distinct pair set EQUALS
+   * batch minhashCandidates (StreamingSpec differential).
    */
   def streamingNearDup(docs: DataFrame, idCol: String, textCol: String, tsCol: String,
                        horizon: String = "10 minutes",
@@ -108,7 +160,6 @@ object StreamingExtract {
                        maxBucket: Int = 10000): Dataset[CandPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     val sigs = docs
       .withWatermark(tsCol, horizon)
       .where(size(graft.dedup.Dedup.tokens(col(textCol))) >= k)
@@ -125,60 +176,13 @@ object StreamingExtract {
       .flatMapGroupsWithState[BucketState, CandPair](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (_, rows, state) =>
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val st = state.getOption
-          // deterministic in-batch order: a pair is emitted by its later
-          // (ts, id) member against everything live before it
-          val incoming = rows.map(r => BucketDoc(r._2, r._3)).toList
-            .sortBy(d => (d.tsUs, d.id))
-          def tombstone(untilUs: Long): Iterator[CandPair] = {
-            if (wmUs >= untilUs) state.remove() // drained — pairing may resume
-            else {
-              state.update(BucketState(Nil, overCapUntilUs = untilUs))
-              state.setTimeoutTimestamp(math.max(untilUs / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-            }
-            Iterator.empty
-          }
-          if (st.exists(_.overCapUntilUs > 0L)) {
-            // still hot: arrivals extend the drain point; emit nothing
-            tombstone((st.get.overCapUntilUs +: incoming.map(_.tsUs + 1L)).max)
-          } else {
-            val prev = st.map(_.docs).getOrElse(Nil).filter(_.tsUs >= wmUs)
-            // cap check BEFORE the pairing loop materializes anything: a
-            // degenerate bucket arriving in one microbatch costs O(n)
-            // state here, never O(n^2) CandPair objects
-            if (prev.size + incoming.size > maxBucket) {
-              tombstone(((prev ++ incoming).map(_.tsUs + 1L) :+ (wmUs + 1L)).max)
-            } else {
-              val out = List.newBuilder[CandPair]
-              var live = prev
-              incoming.foreach { d =>
-                live.foreach { o =>
-                  if (o.id != d.id)
-                    out += (if (o.id < d.id) CandPair(o.id, d.id) else CandPair(d.id, o.id))
-                }
-                live = d :: live
-              }
-              val keep = live.filter(_.tsUs >= wmUs)
-              if (keep.isEmpty) state.remove()
-              else {
-                state.update(BucketState(keep))
-                state.setTimeoutTimestamp(math.max(keep.map(_.tsUs).max / 1000L + 1L,
-                  state.getCurrentWatermarkMs() + 1L))
-              }
-              out.result().distinct.iterator
-            }
+          pairLiveBucket(rows.map(r => BucketDoc(r._2, r._3, null)), state, maxBucket) {
+            (lo, hi) => Some(CandPair(lo.id, hi.id))
           }
       }
   }
 
   // ---- watermark-bounded streaming SemDeDup --------------------------------
-
-  final case class SemDoc(id: Long, v: Array[Double], tsUs: Long)
-  /** Same tombstone contract as [[BucketState]]. */
-  final case class SemBucketState(docs: List[SemDoc], overCapUntilUs: Long = 0L)
-  final case class SemPair(id_a: Long, id_b: Long, cosine: Double)
 
   /** Sequential cosine with the EXACT fold order of
     * graft.ann.Similarity.cosine (products summed left-to-right from 0.0)
@@ -200,14 +204,9 @@ object StreamingExtract {
    * `cents` table rides in as a stream-static broadcast — the paper
    * trains k-means once, and a streaming job reuses the persisted epoch
    * quantizer, exactly like [[graft.ann.Similarity.semDedupPairsIncremental]]);
-   * per-cluster live-document state in flatMapGroupsWithState pairs each
-   * arrival against the live members of its cluster, cosine computed with
-   * the batch fold order.
-   *
-   * Contracts mirror [[streamingNearDup]]: state bounded by the
-   * watermark horizon; the `maxBucket` cap is enforced BEFORE pairing
-   * (O(n) state, never O(n^2) pair objects) with the same
-   * tombstone-until-drained semantics; with a horizon wider than the
+   * every cluster is paired by [[pairLiveBucket]] (its state, horizon and
+   * cap contracts), keeping a pair when its cosine, computed with the
+   * batch fold order, clears `threshold`. With a horizon wider than the
    * data span the pair set (cosines included, bit-exact) EQUALS batch
    * [[graft.ann.Similarity.semDedupPairsWithCentroids]].
    */
@@ -217,7 +216,6 @@ object StreamingExtract {
                         threshold: Double = 0.3, maxBucket: Int = 10000): Dataset[SemPair] = {
     val spark = emb.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     val assigned = graft.ann.Similarity.assignNearest(
       emb.withWatermark(tsCol, horizon)
         .select(col(idCol).cast("long").as("id"),
@@ -226,51 +224,14 @@ object StreamingExtract {
       .select(col("cid"), col("id"), col("v"), unix_micros(col("__ts")).as("us"), col("__ts"))
       .as[(Long, Long, Array[Double], Long, java.sql.Timestamp)]
     assigned.groupByKey(_._1)
-      .flatMapGroupsWithState[SemBucketState, SemPair](
+      .flatMapGroupsWithState[BucketState, SemPair](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (_, rows, state) =>
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val st = state.getOption
-          val incoming = rows.map(r => SemDoc(r._2, r._3, r._4)).toList
-            .sortBy(d => (d.tsUs, d.id))
-          def tombstone(untilUs: Long): Iterator[SemPair] = {
-            if (wmUs >= untilUs) state.remove()
-            else {
-              state.update(SemBucketState(Nil, overCapUntilUs = untilUs))
-              state.setTimeoutTimestamp(math.max(untilUs / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-            }
-            Iterator.empty
-          }
-          if (st.exists(_.overCapUntilUs > 0L)) {
-            tombstone((st.get.overCapUntilUs +: incoming.map(_.tsUs + 1L)).max)
-          } else {
-            val prev = st.map(_.docs).getOrElse(Nil).filter(_.tsUs >= wmUs)
-            if (prev.size + incoming.size > maxBucket) {
-              tombstone(((prev ++ incoming).map(_.tsUs + 1L) :+ (wmUs + 1L)).max)
-            } else {
-              val out = List.newBuilder[SemPair]
-              var live = prev
-              incoming.foreach { d =>
-                live.foreach { o =>
-                  if (o.id != d.id) {
-                    val c = cosineSeq(o.v, d.v)
-                    if (c > threshold)
-                      out += (if (o.id < d.id) SemPair(o.id, d.id, c)
-                              else SemPair(d.id, o.id, c))
-                  }
-                }
-                live = d :: live
-              }
-              val keep = live.filter(_.tsUs >= wmUs)
-              if (keep.isEmpty) state.remove()
-              else {
-                state.update(SemBucketState(keep))
-                state.setTimeoutTimestamp(math.max(keep.map(_.tsUs).max / 1000L + 1L,
-                  state.getCurrentWatermarkMs() + 1L))
-              }
-              out.result().distinct.iterator
-            }
+          pairLiveBucket(rows.map(r => BucketDoc(r._2, r._4, r._3)), state, maxBucket) {
+            (lo, hi) =>
+              // the batch side computes cosine(v_a, v_b) with id_a < id_b
+              val c = cosineSeq(lo.v, hi.v)
+              if (c > threshold) Some(SemPair(lo.id, hi.id, c)) else None
           }
       }
   }
@@ -300,7 +261,6 @@ object StreamingExtract {
                         lateness: String = "0 seconds"): Dataset[SessionOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     val gapUs = gapMinutes * 60L * 1000000L
     val evs = events
       .withWatermark("ts", lateness)
@@ -353,7 +313,6 @@ object StreamingExtract {
   def statefulConvTracker(turns: DataFrame): Dataset[ConvUpdate] = {
     val spark = turns.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     graft.Pipeline.extractTurns(turns)
       .groupByKey(_.conv_id)
       .mapGroupsWithState[ConvState, ConvUpdate](GroupStateTimeout.NoTimeout()) {

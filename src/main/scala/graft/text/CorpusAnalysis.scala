@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.dedup.Dedup
 
 /**
  * Corpus-level training-data operators: statistics and filters that need
@@ -20,11 +21,6 @@ import org.apache.spark.sql.expressions.Window
  */
 object CorpusAnalysis {
 
-  /** Lowercase alnum tokens (same tokenizer as the dedup family) —
-    * native single-pass expression, see graft.expr.TextCore.tokens. */
-  private def tokens(textCol: Column): Column =
-    graft.expr.textops.tokens_of(textCol)
-
   /**
    * Top distinctive terms per document — the TF-IDF shape with an
    * integer-exact ranking: high term frequency first, low document
@@ -35,7 +31,7 @@ object CorpusAnalysis {
    */
   def distinctiveTerms(df: DataFrame, idCol: String, textCol: String,
                        topK: Int = 5): DataFrame = {
-    val toks = df.select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("term"))
+    val toks = df.select(col(idCol).as("doc_id"), explode(Dedup.tokens(col(textCol))).as("term"))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     // document frequency via a map-side-combinable groupBy over the SAME
     // aggregated tf rows, joined back on term. NOT a window count over
@@ -195,7 +191,7 @@ object CorpusAnalysis {
    * once (reused exchange).
    */
   def lexicalCommonness(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = df.select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("term"))
+    val toks = df.select(col(idCol).as("doc_id"), explode(Dedup.tokens(col(textCol))).as("term"))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("__tf"))
     val freq = tf.groupBy("term").agg(sum("__tf").as("__freq"))
     tf.join(freq, Seq("term"))
@@ -216,7 +212,7 @@ object CorpusAnalysis {
    * only.
    */
   def vocabTopK(df: DataFrame, textCol: String, k: Int): DataFrame = {
-    val toks = df.select(explode(tokens(col(textCol))).as("term"))
+    val toks = df.select(explode(Dedup.tokens(col(textCol))).as("term"))
     toks.groupBy("term").agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), asc("term"))
       .limit(k)
@@ -252,7 +248,7 @@ object CorpusAnalysis {
    */
   def oovAudit(df: DataFrame, idCol: String, textCol: String,
                vocab: DataFrame): DataFrame = {
-    val toks = df.select(col(idCol), explode_outer(tokens(col(textCol))).as("term"))
+    val toks = df.select(col(idCol), explode_outer(Dedup.tokens(col(textCol))).as("term"))
     toks.join(broadcast(vocab.select(col("term")).withColumn("__in", lit(1))),
         Seq("term"), "left")
       .groupBy(col(idCol))
@@ -285,7 +281,7 @@ object CorpusAnalysis {
    * (Spark's `sequence(0, -1)` would DESCEND, not produce empty).
    */
   def bpePairCounts(df: DataFrame, textCol: String, k: Int): DataFrame = {
-    val wc = df.select(explode(tokens(col(textCol))).as("word"))
+    val wc = df.select(explode(Dedup.tokens(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("__wc"))
     wc.where(length(col("word")) >= 2)
       .select(explode(transform(
@@ -313,7 +309,7 @@ object CorpusAnalysis {
   def sourceMix(df: DataFrame, sourceCol: String, textCol: String): DataFrame = {
     val per = df.groupBy(col(sourceCol).as("source"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(tokens(col(textCol))).cast("long")).as("n_tokens"),
+        sum(size(Dedup.tokens(col(textCol))).cast("long")).as("n_tokens"),
         sum(length(col(textCol)).cast("long")).as("n_chars_total"))
     val tot = per.agg(sum("n_tokens").as("__tot"))
     per.crossJoin(broadcast(tot))
@@ -365,7 +361,7 @@ object CorpusAnalysis {
   /**
    * Boilerplate-TURN stripping over multi-turn transcripts — the
    * transcript-granularity main-content extraction: a turn whose
-   * normalized text (the [[graft.dedup.Dedup.exact]] normalization)
+   * normalized text (the [[Dedup.normText]] normalization)
    * appears in at least `minConvs` DISTINCT conversations is boilerplate
    * (repeated system prompts, canned greetings, templated tool banners)
    * and is cut from the assembled conversation. Emits one row per
@@ -387,7 +383,7 @@ object CorpusAnalysis {
                             textCol: String, minConvs: Int): DataFrame = {
     val base = turns.select(col(convCol).as("conv_id"), col(idxCol).as("turn_idx"),
       col(textCol).as("text"),
-      md5(lower(trim(regexp_replace(col(textCol), "\\s+", " ")))).as("__h"))
+      md5(Dedup.normText(col(textCol))).as("__h"))
     val perConvTurn = base.select("__h", "conv_id")
       .groupBy("__h", "conv_id").agg(count(lit(1)).as("__cnt"))
     val nconv = perConvTurn.groupBy("__h").agg(count(lit(1)).as("__nconv"))

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.dedup.Dedup
 
 /**
  * Text-analysis operators for large-scale training-data pipelines:
@@ -274,14 +275,11 @@ object TextAnalysis {
 
   /** Fingerprinting: md5 of the normalized text + an 8-hex-char bucket. */
   def fingerprint(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val norm = lower(trim(regexp_replace(col(textCol), "\\s+", " ")))
+    val norm = Dedup.normText(col(textCol))
     df.withColumn("fp", md5(norm))
       .withColumn("fp_bucket", substring(md5(norm), 1, 8))
       .withColumn("norm_len", length(norm).cast("long"))
   }
-
-  private def alnumTokens(t: Column): Column =
-    graft.expr.textops.tokens_of(t)
 
   /** Non-distinct word 2-grams ("a b"): the repetition unit. */
   private def word2grams(toks: Column): Column = {
@@ -305,15 +303,15 @@ object TextAnalysis {
     * interpreted struct-accumulator fold allocated one struct per token;
     * [[repetitionPiecesHof]] is the differential reference). */
   private[graft] def repetitionPieces(t: Column): (Column, Column, Column, Column) = {
-    val toks = alnumTokens(t)
+    val toks = Dedup.tokens(t)
     val tg = graft.expr.textops.two_gram_counts(toks)
     (toks, graft.expr.textops.top_run_count(toks),
       tg.getField("n2"), tg.getField("ndup"))
   }
 
-  /** The declarative (pure-HOF) formulation — differential reference. */
-  private[graft] def repetitionPiecesHof(t: Column): (Column, Column, Column, Column) = {
-    val toks = filter(split(lower(t), "[^a-z0-9]+"), x => x =!= "")
+  /** The declarative (pure-HOF) formulation over a token array —
+    * differential reference. */
+  private[graft] def repetitionPiecesHof(toks: Column): (Column, Column, Column, Column) = {
     val sorted = sort_array(toks)
     val zero = struct(lit(null).cast("string").as("prev"),
       lit(0L).as("run"), lit(0L).as("best"))
@@ -376,7 +374,7 @@ object TextAnalysis {
       topCount.cast("double") / size(toks).cast("double")).otherwise(0.0)
     val dupFrac = when(n2 > 0,
       ndup.cast("double") / n2.cast("double")).otherwise(0.0)
-    val norm = lower(trim(regexp_replace(t, "\\s+", " ")))
+    val norm = Dedup.normText(t)
     val flagged = qualityScore(langId(df, textCol), textCol)
       .withColumn("pass_quality", col("is_quality"))
       .withColumn("pass_lang", col("pred_lang") === lang)
@@ -438,7 +436,7 @@ object TextAnalysis {
     // [[hashClassifierScoreHof]] is the differential reference
     // the struct is projected once and expanded after: selecting both
     // fields off the call itself evaluated the classifier twice per row
-    val cs = graft.expr.textops.classifier_score(alnumTokens(col(textCol)), nBuckets.toLong)
+    val cs = graft.expr.textops.classifier_score(Dedup.tokens(col(textCol)), nBuckets.toLong)
     df.select(col(idCol), cs.as("cs"))
       .select(col(idCol), col("cs.n_tokens").as("n_tokens"), col("cs.score_int").as("score_int"))
       .withColumn("keep", col("score_int") > 0L)
@@ -448,7 +446,7 @@ object TextAnalysis {
     * TextOpsSpec. */
   private[graft] def hashClassifierScoreHof(df: DataFrame, idCol: String, textCol: String,
                                             nBuckets: Int): DataFrame = {
-    val toks = alnumTokens(col(textCol))
+    val toks = Dedup.tokens(col(textCol))
     df.select(col(idCol),
         size(toks).cast("long").as("n_tokens"),
         classifierFoldHof(toks, nBuckets).as("score_int"))

@@ -53,7 +53,7 @@ object TranscriptChain {
       .localCheckpoint() // consumed by the boiler df aggregate AND its join-back
     // 3. boilerplate-turn strip (q64 semantics): normalized turn text
     //    repeated across >= minConvs distinct conversations is cut
-    val h = md5(lower(trim(regexp_replace(col("text"), "\\s+", " "))))
+    val h = md5(graft.dedup.Dedup.normText(col("text")))
     val nconv = gated.select(h.as("__h"), col("conv_id"))
       .groupBy("__h", "conv_id").agg(count(lit(1)).as("__cnt"))
       .groupBy("__h").agg(count(lit(1)).as("__nconv"))

@@ -56,6 +56,16 @@ object PlansDump {
       "WholeStageCodegen — no UDF/encoder boundary.") {
       SparkEntry.byName("q02_parse_number").build(spark, dir)
     }
+    section("q12 exact dedup (combinable min/count per normalized-text hash)",
+      "md5 of the normalized text (Dedup.normText) and min(doc_id)/count per " +
+      "hash — partial aggregates before the one hash-keyed Exchange, no window.") {
+      SparkEntry.byName("q12_dedup_exact").build(spark, dir)
+    }
+    section("q16 fingerprint (map-only normalized-text hash)",
+      "md5 of the normalized text (Dedup.normText), its 8-char bucket and " +
+      "the normalized length in one projection — no Exchange.") {
+      SparkEntry.byName("q16_fingerprint").build(spark, dir)
+    }
     section("q24 ANN brute-force top-k (salted two-level reduction)",
       "The per-query top-k runs as TWO windows: first within (query_id, salt) " +
       "— parallel across salt buckets, so no task ever sorts a corpus-sized " +
@@ -87,6 +97,15 @@ object PlansDump {
       "Exchange, where the former window count scanned the whole hot " +
       "bucket in one task.") {
       SparkEntry.byName("q21_minhash_candidates").build(spark, dir)
+    }
+    section("q22 SimHash candidates (native blocks, the MinHash bucket-pairing core)",
+      "SimHash blocks are one static_invoke of graft.expr.SigCore.simhashBlocks " +
+      "per row; the (block, block_val) buckets go through the same capped " +
+      "pairing as q21 (Dedup.bucketPairs: combinable count + broadcast " +
+      "anti-join guard, one bucket Exchange, native hamming pair emission; " +
+      "at sf0.01 no key is over the cap, so the anti-join is in the Initial " +
+      "Plan only).") {
+      SparkEntry.byName("q22_simhash_candidates").build(spark, dir)
     }
     section("q25 ANN sign-LSH pairs (capped bucket join)",
       "The bucketed working set is localCheckpoint'ed once, bucket sizes " +
@@ -263,6 +282,27 @@ object PlansDump {
       "duplicates can be a large fraction of a real corpus — though at " +
       "this scale AQE broadcasts the loser set).") {
       SparkEntry.byName("q57_corpus_chain").build(spark, dir)
+    }
+    section("q34 LSH dedup clusters (checkpointed family/signature and pair tables)",
+      "The family table, candidate and verified pairs and the components " +
+      "are computed and checkpointed before this plan: the family table " +
+      "enters as Scan ExistingRDD, the union-find labels as a " +
+      "LocalTableScan, and what runs here is the label join and the " +
+      "family re-expansion join against the corpus scan.") {
+      SparkEntry.byName("q34_lsh_dedup").build(spark, dir)
+    }
+    section("q52 cluster representatives (combinable per-cluster argmax)",
+      "q34's clusters joined to the score column, then a min(struct) " +
+      "aggregate per cluster_id — partial aggregates before its Exchange, " +
+      "no window.") {
+      SparkEntry.byName("q52_cluster_best").build(spark, dir)
+    }
+    section("q59 SemDeDup keep (in-cluster pairs -> components -> farthest-from-centroid keeper)",
+      "q56's capped in-cluster pairs feed the connected components before " +
+      "this plan (their labels enter as a LocalTableScan); the keeper is a " +
+      "combinable min(struct(cen_cos, doc_id)) per group, partial " +
+      "aggregates before its Exchange, against the broadcast centroid table.") {
+      SparkEntry.byName("q59_semdedup_keep").build(spark, dir)
     }
     section("q58 incremental dedup (fold a new batch into a persisted index — old corpus never re-signed)",
       "The even-id half plays the persisted index (family table + " +

@@ -405,4 +405,59 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(gotPairs() == Set((21L, 22L)),
       s"pairing must resume after the tombstone drains: ${gotPairs()}")
   }
+
+  test("streaming SemDeDup tombstones an over-cap cluster BEFORE materializing pairs") {
+    val sq = spark; import sq.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-ssemcap").toString
+    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val outDir = s"$base/out"
+    val t0 = java.sql.Timestamp.valueOf("2024-03-01 00:00:00").getTime
+    val hot = Array.tabulate(8)(d => math.sin(d + 1.0))
+    // sign +1: the hot cluster; sign -1: the opposite cluster
+    def vec(id: Long, sign: Double, minutes: Long) =
+      (id, hot.map(x => (sign * x).toFloat), new java.sql.Timestamp(t0 + minutes * 60000L))
+    // a fixed two-centroid quantizer: the hot direction and its opposite
+    val cents = Seq((0L, hot), (1L, hot.map(-_))).toDF("cid", "c")
+    def runOnce(): Unit = {
+      val stream = spark.readStream
+        .schema(org.apache.spark.sql.types.StructType.fromDDL(
+          "vec_id BIGINT, embedding ARRAY<FLOAT>, ts TIMESTAMP"))
+        .parquet(inDir)
+      graft.streaming.StreamingExtract
+        .streamingSemDedup(stream, cents, "vec_id", "embedding", "ts",
+          horizon = "60 minutes", threshold = 0.3, maxBucket = 5)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[graft.streaming.StreamingExtract.SemPair], _: Long) =>
+          df.write.mode("append").parquet(outDir)
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .awaitTermination()
+    }
+    def gotPairs() =
+      if (!new java.io.File(outDir).exists()) Set.empty[(Long, Long)]
+      else spark.read.parquet(outDir).select("id_a", "id_b").distinct()
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // 12 identical vectors land in one cluster in one microbatch at
+    // maxBucket=5: the cap check fires before any cosine is computed, so
+    // the degenerate cluster emits ZERO pairs (not 66)
+    (1L to 12L).map(i => vec(i, 1.0, i)).toDF("vec_id", "embedding", "ts")
+      .write.mode("append").parquet(inDir)
+    runOnce()
+    assert(gotPairs().isEmpty, s"over-cap cluster must emit nothing: ${gotPairs()}")
+    // arrivals while the cluster is tombstoned emit nothing either
+    Seq(vec(13, 1.0, 20), vec(14, 1.0, 21)).toDF("vec_id", "embedding", "ts")
+      .write.mode("append").parquet(inDir)
+    runOnce()
+    assert(gotPairs().isEmpty, s"tombstoned cluster must stay silent: ${gotPairs()}")
+    // a sentinel in the OTHER cluster advances the watermark past the drain point...
+    Seq(vec(900, -1.0, 50000L)).toDF("vec_id", "embedding", "ts")
+      .write.mode("append").parquet(inDir)
+    runOnce()
+    // ...after which the same cluster pairs again (it drained)
+    Seq(vec(21, 1.0, 100000L), vec(22, 1.0, 100001L))
+      .toDF("vec_id", "embedding", "ts").write.mode("append").parquet(inDir)
+    runOnce()
+    assert(gotPairs() == Set((21L, 22L)),
+      s"pairing must resume after the tombstone drains: ${gotPairs()}")
+  }
 }

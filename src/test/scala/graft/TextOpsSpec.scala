@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Differential equivalence of the native text builders (graft.expr
@@ -75,27 +75,29 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }}
 
+  /** HOF reference of gram_hashes: positional grams of a token array,
+    * joined then hashed per gram. */
+  private def hofHashes(toks: Column, k: Int): Column = {
+    val n = size(toks)
+    val zipped = arrays_zip((0 until k).map(j => slice(toks, lit(j + 1), n - (k - 1))): _*)
+    val joined = transform(zipped,
+      s => concat_ws(" ", (0 until k).map(j => s.getField(j.toString)): _*))
+    val grams = when(n >= k, joined).otherwise(array().cast("array<string>"))
+    transform(grams, g => graft.dedup.Dedup.md5Hash60(g))
+  }
+
   test("GramHashes == positionalGrams + md5Hash60 (k=8)") { CodegenOnly(spark) {
-    // HOF reference: positional grams joined then hashed per gram
-    def hofHashes(t: org.apache.spark.sql.Column, k: Int) = {
-      val toks = graft.dedup.Dedup.tokensHof(t)
-      val n = size(toks)
-      val zipped = arrays_zip((0 until k).map(j => slice(toks, lit(j + 1), n - (k - 1))): _*)
-      val joined = transform(zipped,
-        s => concat_ws(" ", (0 until k).map(j => s.getField(j.toString)): _*))
-      val grams = when(n >= k, joined).otherwise(array().cast("array<string>"))
-      transform(grams, g => graft.dedup.Dedup.md5Hash60(g))
-    }
     for (df <- Seq(docsDf, advDf); k <- Seq(2, 8)) {
       assertColsEqual(df,
         graft.expr.textops.gram_hashes(graft.dedup.Dedup.tokens(col("text")), k),
-        hofHashes(col("text"), k), s"gram_hashes k=$k")
+        hofHashes(graft.dedup.Dedup.tokensHof(col("text")), k), s"gram_hashes k=$k")
     }
   }}
 
   test("TopRunCount / TwoGramCounts == HOF repetition pieces") { CodegenOnly(spark) {
     val (_, natTop, natN2, natDup) = graft.text.TextAnalysis.repetitionPieces(col("text"))
-    val (_, hofTop, hofN2, hofDup) = graft.text.TextAnalysis.repetitionPiecesHof(col("text"))
+    val (_, hofTop, hofN2, hofDup) =
+      graft.text.TextAnalysis.repetitionPiecesHof(graft.dedup.Dedup.tokensHof(col("text")))
     for (df <- Seq(docsDf, advDf)) {
       assertColsEqual(df, natTop, hofTop, "top_run_count")
       assertColsEqual(df, natN2, hofN2, "n_2grams")
@@ -141,6 +143,32 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r.getStruct(0).getLong(0) == 2L)
       assert(r.getStruct(0).isNullAt(1) && r.isNullAt(1), r)
     }
+  }}
+
+  test("gram_hashes / top_run_count / two_gram_counts of token arrays with null elements == HOF") { CodegenOnly(spark) {
+    // the HOFs' concat_ws leaves a null token out of its gram, and in the
+    // top-run fold a null never equals the previous token — checked as
+    // folded literals (interpreted eval) and as a column (codegen)
+    import org.apache.spark.sql.types._
+    val arrays: Seq[Seq[String]] = Seq(Seq("a", null), Seq(null), Seq(null, null, null),
+      Seq("b", null, "b", "a", null, "b"), Seq("x", "y", null, "x", "y", null, "x", "y"))
+    def check(df: DataFrame, toks: Column): Unit = {
+      val (_, hofTop, hofN2, hofDup) = graft.text.TextAnalysis.repetitionPiecesHof(toks)
+      val tg = graft.expr.textops.two_gram_counts(toks)
+      assertColsEqual(df, graft.expr.textops.top_run_count(toks), hofTop, "top_run_count")
+      assertColsEqual(df, tg.getField("n2"), hofN2, "n_2grams")
+      assertColsEqual(df, tg.getField("ndup"), hofDup, "n_dup_2grams")
+      for (k <- Seq(2, 3))
+        assertColsEqual(df, graft.expr.textops.gram_hashes(toks, k), hofHashes(toks, k),
+          s"gram_hashes k=$k")
+    }
+    val rows = arrays.zipWithIndex.map { case (a, i) => org.apache.spark.sql.Row(i.toLong, a) }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      StructType(Seq(StructField("doc_id", LongType, nullable = false),
+        StructField("t", ArrayType(StringType, containsNull = true)))))
+    check(df, col("t"))
+    val oneRow = spark.range(1).select(col("id").as("doc_id"))
+    arrays.foreach(a => check(oneRow, array(a.map(x => lit(x).cast("string")): _*)))
   }}
 
   test("interpreted (lambda) path matches codegen for tokens/shingles") { CodegenOnly(spark) {

@@ -1,0 +1,103 @@
+#!/usr/bin/env python3
+"""Compare the plan shapes of two PLANS.md dumps, section by section.
+
+    python3 tools/plan_diff.py OLD.md NEW.md [q21 q22 ...]
+
+A section is one `## <title>` heading of the dump; only its fenced plan
+block is compared, never the prose note above it. Sections are matched by
+title. Optional arguments restrict the comparison to sections whose title
+starts with one of them (`q57` matches "q57 composed corpus chain ...").
+
+Before comparing, everything that changes between two runs of the SAME
+code is masked:
+  - expression ids (`name#123L` -> `name#L`);
+  - lambda class names (`$$Lambda$12/0x00007f..` -> `$$Lambda`) and object
+    identity hashes (`Kmv$KmvAgg@631c4e65` -> `Kmv$KmvAgg@`);
+  - RDD ids and their call-site line numbers
+    (`MapPartitionsRDD[845] at localCheckpoint at Dedup.scala:482`
+     -> `MapPartitionsRDD[] at localCheckpoint at Dedup.scala`);
+  - the directory part of `file:` locations (the checkout's own path);
+  - exchange `plan_id=N`, whole-stage `codegen id : N`, and the stage id
+    that AQE prints as the `Arguments: N` of a query-stage node (both are
+    numbered in the order stages happen to finish).
+
+Prints one line per compared section (`same` / `DIFF` / `MISSING`), a
+unified diff of the masked plan for each differing section, and exits 1
+if any compared section differs or is missing on one side.
+"""
+import difflib
+import re
+import sys
+
+MASKS = [
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"\$\$Lambda(\$\d+)?(/0x[0-9a-f]+)?"), "$$Lambda"),
+    (re.compile(r"([\w$])@[0-9a-f]+\b"), r"\1@"),
+    (re.compile(r"RDD\[\d+\] at (\S+) at ([\w$.]+):\d+"), r"RDD[] at \1 at \2"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"codegen id : \d+"), "codegen id : N"),
+    (re.compile(r"file:[^\s,\]]*/"), "file:.../"),
+]
+NODE = re.compile(r"^\(\d+\) (\S+)")
+STAGE_ID = re.compile(r"^Arguments: \d+$")
+
+
+def mask(lines):
+    out, node = [], ""
+    for line in lines:
+        m = NODE.match(line)
+        if m:
+            node = m.group(1)
+        if node.endswith("QueryStage") and STAGE_ID.match(line):
+            line = "Arguments: N"
+        for pat, rep in MASKS:
+            line = pat.sub(rep, line)
+        out.append(line)
+    return out
+
+
+def sections(path):
+    """title -> masked lines of the section's fenced blocks."""
+    secs, title, in_code = {}, None, False
+    with open(path, encoding="utf-8") as f:
+        for raw in f:
+            line = raw.rstrip("\n")
+            if not in_code and line.startswith("## "):
+                title = line[3:].strip()
+                secs[title] = []
+            elif line.startswith("```"):
+                in_code = not in_code
+            elif in_code and title is not None:
+                secs[title].append(line)
+    return {t: mask(ls) for t, ls in secs.items()}
+
+
+def main(argv):
+    if len(argv) < 3:
+        print(__doc__.strip().splitlines()[2].strip(), file=sys.stderr)
+        return 2
+    old, new = sections(argv[1]), sections(argv[2])
+    wanted = argv[3:]
+    titles = [t for t in dict.fromkeys(list(old) + list(new))
+              if not wanted or any(t.startswith(w) for w in wanted)]
+    unmatched = [w for w in wanted if not any(t.startswith(w) for t in titles)]
+    for w in unmatched:
+        print(f"MISSING  {w}: no section title starts with it")
+    bad = len(unmatched)
+    for t in titles:
+        if t not in old or t not in new:
+            print(f"MISSING  {t} (only in {'new' if t in new else 'old'})")
+            bad += 1
+        elif old[t] == new[t]:
+            print(f"same     {t}")
+        else:
+            print(f"DIFF     {t}")
+            sys.stdout.writelines(l + "\n" for l in difflib.unified_diff(
+                old[t], new[t], "old", "new", n=1, lineterm=""))
+            bad += 1
+    print(f"sections={len(titles)} differing={bad}")
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv))
