@@ -223,19 +223,22 @@ object SparkEntry {
     1 -> "small widget", 2 -> "large bolt", 3 -> "economy gadget",
     4 -> "standard fitting", 5 -> "promo anodized tube", 6 -> "cold rolled steel")
 
-  private def qFuzzyTopK(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val cands = candidateProducts.toDF("cand_id", "cand_name")
+  /** q11/q41's scorer and selection: the SQL-expressible levenshtein
+    * ratio of the lowercased names, then `Matching.rankTop` (top 3 per
+    * part at score >= 40, auto at >= 90). */
+  private def levTop3(pairs: DataFrame): DataFrame = {
     val la = lower(col("p_name")); val lb = lower(col("cand_name"))
     val score = lit(100.0) * (lit(1.0) - levenshtein(la, lb).cast("double") /
       greatest(length(la), length(lb)).cast("double"))
-    val w = Window.partitionBy("p_partkey").orderBy(desc("score"), asc("cand_id"))
-    t(spark, dir, "part").select("p_partkey", "p_name")
-      .crossJoin(broadcast(cands))
-      .withColumn("score", score)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= 3 && col("score") >= 40.0)
-      .withColumn("is_auto", col("score") >= 90.0)
+    graft.matching.Matching.rankTop(pairs.withColumn("score", score), Seq("p_partkey"),
+        "cand_id", limit = 3, suggest = 40.0, auto = 90.0, autoCol = "is_auto")
+      .withColumn("rank", col("rank").cast("long"))
+  }
+
+  private def qFuzzyTopK(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val cands = candidateProducts.toDF("cand_id", "cand_name")
+    levTop3(t(spark, dir, "part").select("p_partkey", "p_name").crossJoin(broadcast(cands)))
       .select("p_partkey", "rank", "cand_id", "score", "is_auto")
   }
 
@@ -260,7 +263,7 @@ object SparkEntry {
   // token's character 3-grams (short tokens stand in for their own grams —
   // the dual-key scheme that recalls in-token typo/transliteration pairs
   // sharing no whole word), equi-join, score only co-blocked pairs,
-  // per-item top-k.
+  // per-item top-k — Matching's own co-blocking and rank steps.
   private def qBlockedMatch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cands = candidateProducts.toDF("cand_id", "cand_name")
@@ -272,18 +275,10 @@ object SparkEntry {
           i => tok.substr(i, lit(3)))))
       array_distinct(concat(toks, grams))
     }
-    val pTok = parts.withColumn("tok", explode(blockKeys(col("p_name"))))
-    val cTok = cands.withColumn("tok", explode(blockKeys(col("cand_name"))))
-    val blocked = pTok.join(broadcast(cTok), Seq("tok"))
-      .select("p_partkey", "p_name", "cand_id", "cand_name").distinct()
-    val la = lower(col("p_name")); val lb = lower(col("cand_name"))
-    val score = lit(100.0) * (lit(1.0) - levenshtein(la, lb).cast("double") /
-      greatest(length(la), length(lb)).cast("double"))
-    val w = Window.partitionBy("p_partkey").orderBy(desc("score"), asc("cand_id"))
-    blocked.withColumn("score", score)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= 3 && col("score") >= 40.0)
-      .select("p_partkey", "rank", "cand_id", "score")
+    val blocked = graft.matching.Matching.coBlocked(parts, "p_name", cands, "cand_id",
+        "cand_name", blockKeys)
+      .join(broadcast(cands), Seq("cand_id"))
+    levTop3(blocked).select("p_partkey", "rank", "cand_id", "score")
   }
 
   private val oBlockedMatch =

@@ -36,18 +36,7 @@ object Verify {
     }
     Files.writeString(Paths.get(s"$outDir/cap_metrics.json"),
       capsByQuery.map { case (k, v) => s""""$k": $v""" }.mkString("{", ",", "}"))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import graft.io.Manifests.{jsonString => q}
     val json = SparkEntry.registry
       .map(query => s"${q(query.name)}: ${q(query.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

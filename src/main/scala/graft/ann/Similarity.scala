@@ -29,37 +29,10 @@ object Similarity {
     * expression ([[graft.expr.VecCore.cosineBoxed]]) computing the exact ordered
     * fold the SQL oracle replicates (products summed left-to-right from
     * 0.0, sqrt of the ordered square sums, dot/(na*nb)). The previous
-    * HOF formulation ([[cosineHof]], kept as the differential reference)
+    * HOF formulation (graft.HofRefs.cosineHof, the differential reference)
     * computed the same values but interpreted, with one lambda dispatch
     * per element and 4 array passes per pair. */
   def cosine(a: Column, b: Column): Column = graft.expr.vecops.cosine_sim(a, b)
-
-  /** The declarative (pure-HOF) cosine — identical math to [[cosine]];
-    * kept as the differential reference for SparkSpec's
-    * expression-equivalence test. */
-  private[graft] def cosineHof(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), _ + _)
-    val na = sqrt(aggregate(transform(a, x => x * x), lit(0.0), _ + _))
-    val nb = sqrt(aggregate(transform(b, x => x * x), lit(0.0), _ + _))
-    dot / (na * nb)
-  }
-
-  /** Two-level per-key top-k: candidates are first reduced to k within
-    * (key, salt) buckets — parallel across saltBuckets tasks — then the
-    * survivors (key x saltBuckets x k rows) are reduced to the global
-    * per-key top-k. Identical result to a single window (top-k of a union
-    * of bucket top-ks is the global top-k), but no corpus-sized single-key
-    * sort partition. */
-  private def saltedTopK(scored: DataFrame, keyCol: String, saltOn: String,
-                         orderBy: Seq[Column], k: Int,
-                         saltBuckets: Int = 64): DataFrame = {
-    val w1 = Window.partitionBy(col(keyCol), col("__salt")).orderBy(orderBy: _*)
-    val w2 = Window.partitionBy(col(keyCol)).orderBy(orderBy: _*)
-    scored.withColumn("__salt", pmod(xxhash64(col(saltOn)), lit(saltBuckets)))
-      .withColumn("__r1", row_number().over(w1)).where(col("__r1") <= k)
-      .withColumn("rank", row_number().over(w2).cast("long")).where(col("rank") <= k)
-      .drop("__salt", "__r1")
-  }
 
   /**
    * Brute-force top-k: for each query vector (id in [0, nQueries)), the k
@@ -75,7 +48,7 @@ object Similarity {
     val scored = corpus.crossJoin(broadcast(queries))
       .where(col("query_id") =!= col("nbr_id"))
       .withColumn("cosine", cosine(col("q_v"), col("nbr_v")))
-    saltedTopK(scored, "query_id", "nbr_id", Seq(desc("cosine"), asc("nbr_id")), k)
+    graft.skew.Salt.topK(scored, "query_id", "nbr_id", Seq(desc("cosine"), asc("nbr_id")), k, "rank")
       .select("query_id", "rank", "nbr_id", "cosine")
   }
 
@@ -92,18 +65,10 @@ object Similarity {
     * ([[graft.expr.SignLshBucket]]); the hyperplanes ride in the
     * expression's references array instead of nPlanes x dim array
     * literals in the plan. Same per-plane ordered-fold dot and `>= 0`
-    * sign as the HOF formulation ([[lshBucketHof]], the differential
+    * sign as the HOF formulation (graft.HofRefs.lshBucketHof, the differential
     * reference). */
   def lshBucket(vecCol: Column, weights: Array[Array[Double]]): Column =
     graft.expr.vecops.sign_bucket(vecCol, weights)
-
-  /** The declarative (pure-HOF) bucket id — differential reference. */
-  private[graft] def lshBucketHof(vecCol: Column, weights: Array[Array[Double]]): Column =
-    weights.zipWithIndex.map { case (w, p) =>
-      val wLit = array(w.map(lit(_)): _*)
-      val dot = aggregate(zip_with(vecCol, wLit, (x, y) => x * y), lit(0.0), _ + _)
-      when(dot >= 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
 
   /** LSH-bucketed near-neighbor pairs: cosine computed only within buckets.
     * `maxBucket` is the explicit skew guard its MinHash/SimHash siblings
@@ -125,15 +90,10 @@ object Similarity {
     // count task (the former window count had no partial aggregation).
     // Singleton buckets stay in the join input — a 1-row bucket joins only
     // itself and dies at id_a < id_b, costing nothing.
-    val vv0 = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
+    val bucketed = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("bucket", lshBucket(col("v"), planeWeights(nPlanes, dim)))
       .localCheckpoint()
-    val vv = graft.skew.KeyCaps.dropOverCapKeys(vv0, Seq("bucket"), maxBucket, site = "lsh_embedding_buckets")
-    val a = vv.select(col("bucket"), col("id").as("id_a"), col("v").as("v_a"))
-    val b = vv.select(col("bucket"), col("id").as("id_b"), col("v").as("v_b"))
-    a.join(b, Seq("bucket")).where(col("id_a") < col("id_b"))
-      .withColumn("cosine", cosine(col("v_a"), col("v_b")))
-      .where(col("cosine") > threshold)
+    cappedPairs(bucketed, "bucket", threshold, maxBucket, site = "lsh_embedding_buckets")
       .select("id_a", "id_b", "cosine").distinct()
   }
 
@@ -157,19 +117,10 @@ object Similarity {
     * ([[graft.expr.VecCore.nearestCid]]) computing the exact fold the SQL
     * oracle replicates with list_reduce (init cos=-2.0/cid=-1, strict
     * SQL-ordering `>`), with the stream vector's norm computed once
-    * instead of once per centroid. [[nearestCidHof]] is the differential
+    * instead of once per centroid. graft.HofRefs.nearestCidHof is the differential
     * reference. */
   private def nearestCid(vecCol: Column, clCol: Column): Column =
     graft.expr.vecops.nearest_cid(vecCol, clCol)
-
-  /** The declarative (pure-HOF) argmax — differential reference. */
-  private[graft] def nearestCidHof(vecCol: Column, clCol: Column): Column = {
-    val scored = transform(clCol,
-      ct => struct(cosineHof(vecCol, ct.getField("c")).as("cos"), ct.getField("cid").as("cid")))
-    aggregate(scored, struct(lit(-2.0).as("cos"), lit(-1L).as("cid")),
-      (acc, s) => when(s.getField("cos") > acc.getField("cos"), s).otherwise(acc))
-      .getField("cid")
-  }
 
   /** Map-side centroid assignment: cross-join the ONE-row broadcast
     * centroid array onto the stream side and fold — a
@@ -180,6 +131,14 @@ object Similarity {
     df.crossJoin(broadcast(centroidArray(cents)))
       .withColumn(outCol, nearestCid(col(vecCol), col("__cl")))
       .drop("__cl")
+
+  /** The (id: long, v: array<double>) projection of an embedding table. */
+  private def idVec(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    emb.select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("v"))
+
+  private def assignEmb(emb: DataFrame, idCol: String, vecCol: String, cents: DataFrame,
+                        outCol: String = "cid"): DataFrame =
+    assignNearest(idVec(emb, idCol, vecCol), "v", cents, outCol)
 
   /**
    * Deterministic coarse quantizer, faiss-style, fully distributed: train
@@ -207,9 +166,7 @@ object Similarity {
    */
   def trainIvfCentroids(emb: DataFrame, idCol: String, vecCol: String,
                         k: Int, trainN: Int = 4096): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hashed = emb.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
+    val hashed = idVec(emb, idCol, vecCol)
       .withColumn("__h", md5(concat(lit("ivf:"), col("id").cast("string"))))
     // the sample count (for the seed stride) rides in the SAME
     // single-partition window pass that ranks the sample — no separate
@@ -273,14 +230,9 @@ object Similarity {
     * (faiss practice, and what makes [[semDedupPairsIncremental]] exact). */
   def semDedupPairsWithCentroids(emb: DataFrame, idCol: String, vecCol: String,
                                  cents: DataFrame, threshold: Double = 0.3,
-                                 maxBucket: Int = 10000): DataFrame = {
-    val assigned = assignNearest(
-      emb.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v")), "v", cents)
-      .localCheckpoint()
-    inClusterPairs(assigned, threshold, maxBucket, site = "semdedup_clusters")
-      .select("id_a", "id_b", "cid", "cosine")
-  }
+                                 maxBucket: Int = 10000): DataFrame =
+    semDedupPairsFromAssigned(assignEmb(emb, idCol, vecCol, cents).localCheckpoint(),
+      threshold, maxBucket)
 
   /**
    * Incremental SemDeDup: fold a NEW embedding batch into an existing
@@ -308,15 +260,12 @@ object Similarity {
     // working set is a lazy union over the previous epoch's
     // already-materialized checkpoint — per-epoch cost is O(batch),
     // not O(corpus)
-    val newAssigned = assignNearest(
-      newEmb.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v")), "v", cents)
-      .localCheckpoint()
+    val newAssigned = assignEmb(newEmb, idCol, vecCol, cents).localCheckpoint()
     val allAssigned = oldAssigned.select("id", "v", "cid")
       .withColumn("__n", lit(false))
       .unionByName(newAssigned.select("id", "v", "cid").withColumn("__n", lit(true)))
-    val pairs = inClusterPairs(allAssigned, threshold, maxBucket, site = "semdedup_incr_clusters",
-        pairPred = col("__na") || col("__nb"))
+    val pairs = cappedPairs(allAssigned, "cid", threshold, maxBucket,
+        site = "semdedup_incr_clusters", pairPred = col("__na") || col("__nb"))
       .select("id_a", "id_b", "cid", "cosine")
     (pairs, allAssigned.drop("__n"))
   }
@@ -326,24 +275,23 @@ object Similarity {
     * (epoch pipelines: the assignment is the artifact, don't redo it). */
   def semDedupPairsFromAssigned(assigned: DataFrame, threshold: Double = 0.3,
                                 maxBucket: Int = 10000): DataFrame =
-    inClusterPairs(assigned, threshold, maxBucket, site = "semdedup_clusters")
+    cappedPairs(assigned, "cid", threshold, maxBucket, site = "semdedup_clusters")
       .select("id_a", "id_b", "cid", "cosine")
 
-  /** Capped in-cluster above-threshold cosine pairs from an assigned
-    * (id, v, cid) working set — the one pairing core of [[semDedupPairs]],
-    * [[semDedupKeep]] and [[semDedupPairsIncremental]]. Each side of the
-    * cid self-join carries id and v as id_a/v_a (id_b/v_b) and any other
-    * column `c` of `assigned` as `c`+"a" (`c`+"b"); `pairPred` is an extra
-    * pair filter over those, applied with id_a < id_b before any cosine. */
-  private def inClusterPairs(assigned: DataFrame, threshold: Double,
-                             maxBucket: Int, site: String,
-                             pairPred: Column = lit(true)): DataFrame = {
-    val capped = graft.skew.KeyCaps.dropOverCapKeys(assigned, Seq("cid"), maxBucket,
-      site = site)
-    val extra = capped.columns.filterNot(Set("id", "v", "cid"))
-    def side(s: String) = capped.select(Seq(col("cid"), col("id").as(s"id_$s"),
+  /** Capped in-key above-threshold cosine pairs from an (id, v, `key`)
+    * working set — the one pairing core of [[lshNearPairs]] (key: bucket)
+    * and the SemDeDup operators (key: cid); over-cap keys are dropped first
+    * (KeyCaps, reported under `site`). Each self-join side carries id/v as
+    * id_a/v_a (id_b/v_b) and any other column `c` as `c`+"a" (`c`+"b");
+    * `pairPred` filters over those with id_a < id_b, before any cosine. */
+  private def cappedPairs(keyed: DataFrame, key: String, threshold: Double,
+                          maxBucket: Int, site: String,
+                          pairPred: Column = lit(true)): DataFrame = {
+    val capped = graft.skew.KeyCaps.dropOverCapKeys(keyed, Seq(key), maxBucket, site = site)
+    val extra = capped.columns.filterNot(Set("id", "v", key))
+    def side(s: String) = capped.select(Seq(col(key), col("id").as(s"id_$s"),
       col("v").as(s"v_$s")) ++ extra.map(c => col(c).as(c + s)): _*)
-    side("a").join(side("b"), Seq("cid")).where(col("id_a") < col("id_b") && pairPred)
+    side("a").join(side("b"), Seq(key)).where(col("id_a") < col("id_b") && pairPred)
       .withColumn("cosine", cosine(col("v_a"), col("v_b")))
       .where(col("cosine") > threshold)
   }
@@ -369,23 +317,18 @@ object Similarity {
                    k: Int = 16, trainN: Int = 4096,
                    threshold: Double = 0.3, maxBucket: Int = 10000): DataFrame = {
     val cents = trainIvfCentroids(emb, idCol, vecCol, k, trainN)
-    val assigned = assignNearest(
-      emb.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v")), "v", cents)
-      .localCheckpoint()
+    val assigned = assignEmb(emb, idCol, vecCol, cents).localCheckpoint()
     // no pair checkpoint: the pair set has exactly ONE consumer (the
     // clustering uv table, itself checkpointed off the materialized
     // `assigned` working set) — a driver round-trip bought nothing
-    val pairs = inClusterPairs(assigned, threshold, maxBucket, site = "semdedup_keep_clusters")
+    val pairs = cappedPairs(assigned, "cid", threshold, maxBucket, site = "semdedup_keep_clusters")
       .select("id_a", "id_b")
     val groups = graft.dedup.Dedup.dedupClusters(pairs)
     val withCos = groups
       .join(assigned.select(col("id").as("doc_id"), col("v"), col("cid")), Seq("doc_id"))
       .join(broadcast(cents), Seq("cid"))
       .withColumn("cen_cos", cosine(col("v"), col("c")))
-    withCos.groupBy("cluster_id")
-      .agg(count(lit(1)).as("n_members"),
-        min(struct(col("cen_cos"), col("doc_id"))).as("__b"))
+    graft.dedup.Dedup.keepBest(withCos, col("cen_cos"))
       .select(col("cluster_id"), col("n_members"),
         col("__b.doc_id").as("keeper_id"), col("__b.cen_cos").as("keeper_cos"))
   }
@@ -398,10 +341,7 @@ object Similarity {
               nQueries: Int, topK: Int, k: Int = 16, nProbe: Int = 4,
               trainN: Int = 4096): DataFrame = {
     val cents = trainIvfCentroids(emb, idCol, vecCol, k, trainN)
-    val assignments = assignNearest(
-      emb.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v")), "v", cents,
-      outCol = "centroid_id")
+    val assignments = assignEmb(emb, idCol, vecCol, cents, outCol = "centroid_id")
     // per-query probe list: sort struct(-cos, cid) ascending = cos desc,
     // ties -> lowest cid; slice the first nProbe — all map-side over the
     // broadcast centroid array
@@ -417,7 +357,7 @@ object Similarity {
     val scored = probes.join(assignments, Seq("centroid_id"))
       .where(col("query_id") =!= col("id"))
       .withColumn("cosine", cosine(col("q_v"), col("v")))
-    saltedTopK(scored, "query_id", "id", Seq(desc("cosine"), asc("id")), topK)
+    graft.skew.Salt.topK(scored, "query_id", "id", Seq(desc("cosine"), asc("id")), topK, "rank")
       .select(col("query_id"), col("rank"), col("id").as("nbr_id"), col("cosine"))
   }
 

@@ -215,9 +215,6 @@ object Engine {
 
   /** A5 — quality validation (ocr_processor.py:277-321):
     * (text_quality, table_quality, overall). */
-  def quality(text: String, tables: Seq[Tab]): (Double, Double, Double) =
-    qualityLower(if (text != null && text.nonEmpty) Py.lower(text) else null, tables)
-
   def qualityLower(lowerOrNull: String, tables: Seq[Tab]): (Double, Double, Double) = {
     val tq =
       if (lowerOrNull != null)

@@ -66,17 +66,9 @@ object ParserCommon {
     * the mapping usually collapses to a single entry -> the parsers fall
     * through to their positional/content fallbacks. Mirrored faithfully
     * (confirmed by the tools/parity_check.py sweep against the reference).
+    * Reads the [[Tab]]'s cached per-column keys (several parsers would
+    * otherwise recompute identical header cleanups per turn).
     * @param clean whether to apply the [^\w\s]->space cleanup first */
-  def mapBySynonyms(header: IndexedSeq[Option[String]],
-                    fields: Seq[(String, Seq[String])],
-                    clean: Boolean): mutable.LinkedHashMap[String, Int] =
-    mapBySynonymsKeys(
-      if (clean) header.map(c => Py.cleanColName(Py.pyStr(c)))
-      else header.map(c => Py.pyStrip(Py.lower(Py.pyStr(c)))),
-      fields)
-
-  /** [[mapBySynonyms]] over a [[Tab]], reusing its cached per-column keys
-    * (several parsers recompute identical header cleanups per turn). */
   def mapBySynonyms(table: Tab, fields: Seq[(String, Seq[String])],
                     clean: Boolean): mutable.LinkedHashMap[String, Int] =
     mapBySynonymsKeys(if (clean) table.headerClean else table.headerLower, fields)
@@ -226,9 +218,6 @@ object ParserCommon {
   /** Common text-line prefilter used by invoice/commercial text paths
     * (invoice_parser.py:348-362): strip, len>=10, not header/service line,
     * not all-numeric, has a letter, no itogo phrase. */
-  def passesStrictLinePrefilter(line: String, headerWords: Seq[String], serviceWords: Seq[String]): Boolean =
-    passesStrictLinePrefilter(line, Py.lower(line), headerWords, serviceWords)
-
   def passesStrictLinePrefilter(line: String, lower: String,
                                 headerWords: Seq[String], serviceWords: Seq[String]): Boolean = {
     if (line.isEmpty || line.length < Rules.minLineLength) return false

@@ -97,54 +97,24 @@ object Dedup {
 
   /** Lowercase alnum tokens — native single-pass expression
     * (graft.expr.TextCore.tokens; `lower` stays a Catalyst argument). The HOF
-    * formulation ([[tokensHof]], the differential reference) recompiled
-    * the split regex and ran the empty-filter lambda interpreted per row.
+    * formulation (graft.HofRefs.tokensHof, the differential reference in
+    * the test tree) recompiled the split regex and ran the empty-filter
+    * lambda interpreted per row.
     */
   def tokens(textCol: Column): Column = graft.expr.textops.tokens_of(textCol)
-
-  /** The declarative (pure-HOF) tokenizer — differential reference. */
-  private[graft] def tokensHof(textCol: Column): Column =
-    filter(split(lower(textCol), "[^a-z0-9]+"), x => x =!= "")
 
   /** Word k-shingles as strings ("a b c"); fewer than k tokens -> empty.
     * Native single-pass expression (graft.expr.TextCore.shingles): same
     * String.split token stream, same space-joined grams, same
-    * first-occurrence array_distinct order as [[shinglesHof]]. */
+    * first-occurrence array_distinct order as graft.HofRefs.shinglesHof. */
   def shingles(textCol: Column, k: Int): Column =
     graft.expr.textops.shingles_of(textCol, k)
-
-  /** The declarative (pure-HOF) shingler — differential reference.
-    *
-    * Built with arrays_zip over k shifted slices, NOT transform over an
-    * index sequence: a lambda body re-evaluates every non-lambda
-    * subexpression per element, which would make shingling O(tokens^2);
-    * zip arguments are evaluated once. */
-  private[graft] def shinglesHof(textCol: Column, k: Int): Column = {
-    val toks = tokensHof(textCol)
-    val n = size(toks)
-    val zipped = arrays_zip((0 until k).map(j => slice(toks, lit(j + 1), n - (k - 1))): _*)
-    val joined = transform(zipped,
-      s => concat_ws(" ", (0 until k).map(j => s.getField(j.toString)): _*))
-    array_distinct(when(n >= k, joined).otherwise(array().cast("array<string>")))
-  }
 
   /** Portable 60-bit hash of a string: first 15 hex chars of md5, parsed as
     * an integer — bit-identical in any engine with md5 (DuckDB:
     * ('0x'||substr(md5(s),1,15))::BIGINT). */
   def md5Hash60(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long")
-
-  /** NON-distinct word k-grams in position order (index i = token
-    * position of the gram's first token) — same arrays_zip construction
-    * as [[shingles]] (O(n), evaluated once per row), minus the distinct:
-    * positions are the point here. */
-  private def positionalGrams(toksCol: Column, k: Int): Column = {
-    val n = size(toksCol)
-    val zipped = arrays_zip((0 until k).map(j => slice(toksCol, lit(j + 1), n - (k - 1))): _*)
-    val joined = transform(zipped,
-      s => concat_ws(" ", (0 until k).map(j => s.getField(j.toString)): _*))
-    when(n >= k, joined).otherwise(array().cast("array<string>"))
-  }
 
   /**
    * Span-level duplicated-text coverage — the substring-dedup shape of
@@ -179,8 +149,8 @@ object Dedup {
     // positional gram HASHES in one native pass (graft.expr.TextCore.gramHashes):
     // the gram strings are never materialized as rows — each row explodes
     // straight to (pos, 60-bit md5), the only columns the count/semi-join
-    // pipeline reads. [[positionalGrams]] + md5Hash60 is the differential
-    // reference formulation.
+    // pipeline reads. TextOpsSpec's positional-gram md5Hash60 fold is the
+    // differential reference formulation.
     val base = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("tk"))
       .select(col("doc_id"), size(col("tk")).cast("long").as("n_tokens"),
         posexplode(graft.expr.textops.gram_hashes(col("tk"), k)).as(Seq("pos", "h")))
@@ -265,18 +235,6 @@ object Dedup {
       .select(col(idCol),
         graft.expr.signatures.minhash_sig(shingles(col(textCol), k), numHashes).as("sig"))
 
-  /** The declarative (pure-HOF) formulation of the signature — identical
-    * math to the native expression; kept as the differential reference for
-    * SparkSpec's expression-equivalence test. */
-  private[graft] def minhashSigHof(textCol: Column, k: Int, numHashes: Int): Column = {
-    val paramsLit = array(hashParams(numHashes).map { case (a, c) =>
-      struct(lit(a).as("a"), lit(c).as("c")) }: _*)
-    val base = transform(shingles(textCol, k), s => pmod(md5Hash60(s), lit(P)))
-    aggregate(base, array_repeat(lit(P), numHashes),
-      (acc, h) => zip_with(acc, paramsLit,
-        (m, pr) => least(m, pmod(pr.getField("a") * h + pr.getField("c"), lit(P)))))
-  }
-
   /** Per-band bucket keys: md5 of the band's comma-joined signature rows. */
   def minhashBuckets(sigCol: Column, bands: Int, rowsPerBand: Int): Column =
     array((0 until bands).map { b =>
@@ -316,13 +274,6 @@ object Dedup {
       .where(size(col(list)) >= 2)
     grouped.select(explode(emit(col(list), grouped.schema(list).dataType)).as("p"))
   }
-
-  /** Declarative (pure-HOF) pair emission — differential reference for
-    * PairOpsSpec. */
-  private[graft] def pairsHof(ids: Column): Column =
-    flatten(transform(ids, (x, i) =>
-      transform(slice(ids, i + lit(2), size(ids) - i - 1),
-        y => struct(x.as("id_a"), y.as("id_b")))))
 
   /**
    * MinHash-LSH candidate pairs: band the signature (`bands` x
@@ -645,16 +596,6 @@ object Dedup {
     (clustersFromIndex(merged, fam(allDocs, idCol, textCol)), merged)
   }
 
-  /** Declarative (pure-HOF) new-only pair emission — differential
-    * reference for PairOpsSpec. */
-  private[graft] def pairsNewOnlyHof(ms: Column): Column =
-    flatten(transform(ms, (x, i) =>
-      filter(
-        transform(slice(ms, i + lit(2), size(ms) - i - 1),
-          y => struct(x.getField("id").as("id_a"), y.getField("id").as("id_b"),
-            (x.getField("is_new") || y.getField("is_new")).as("any_new"))),
-        p => p.getField("any_new"))))
-
   /**
    * Representative selection for near-dup clusters: a real dedup keeps the
    * BEST copy of each duplicate family (here: highest `scoreCol`, tie ->
@@ -679,13 +620,21 @@ object Dedup {
     val clusters = lshDedupClusters(df, idCol, textCol, k, bands, rowsPerBand, threshold)
     val scored = clusters.join(
       df.select(col(idCol).as("doc_id"), col(scoreCol).as("__score")), Seq("doc_id"))
-    scored.groupBy("cluster_id").agg(
-        count(lit(1)).as("n_members"),
-        min(struct((lit(0.0) - col("__score").cast("double")).as("negs"),
-          col("doc_id"), col("__score").as("s"))).as("__b"))
+    keepBest(scored, (lit(0.0) - col("__score").cast("double")).as("negs"),
+        carry = Seq(col("__score").as("s")))
       .select(col("cluster_id"), col("n_members"),
         col("__b.doc_id").as("keeper_id"), col("__b.s").as("keeper_score"))
   }
+
+  /** Keep-best per cluster (q52, q57, q59): per `cluster_id`, `__b` =
+    * min(struct(order, doc_id, carry...)), the member with the smallest
+    * `order` (ties: smallest doc_id) with `carry` riding along, plus
+    * `n_members` (pruned by the optimizer where no caller reads it).
+    * Combinable, so a giant cluster partial-combines map-side instead of
+    * sorting in one window task. */
+  def keepBest(members: DataFrame, order: Column, carry: Seq[Column] = Nil): DataFrame =
+    members.groupBy("cluster_id").agg(count(lit(1)).as("n_members"),
+      min(struct((order +: col("doc_id") +: carry): _*)).as("__b"))
 
   /**
    * SimHash signature as 4 x 16-bit blocks (array<long>, values in
@@ -704,27 +653,6 @@ object Dedup {
     df.select(col(idCol),
       graft.expr.signatures.simhash_blocks(tokens(col(textCol))).as("blocks"))
 
-  /** Declarative (pure-HOF) blocks formulation — identical math to the
-    * native expression; kept for SparkSpec's equivalence test. One fold
-    * carrying all 64 bit-sums, thresholded in the finish lambda. */
-  private[graft] def simhashBlocksHof(textCol: Column): Column = {
-    val th = transform(tokens(textCol), t => struct(
-      conv(substring(md5(t), 1, 8), 16, 10).cast("long").as("hi"),
-      conv(substring(md5(t), 9, 8), 16, 10).cast("long").as("lo")))
-    // per-bit descriptor: which half holds global bit g, and its mask
-    val bitsLit = array((0 until 64).map { g =>
-      struct(lit(g < 32).as("lo"), lit(1L << (g % 32)).as("mask"))
-    }: _*)
-    val masks16 = array((0 until 16).map(j => lit(1L << j)): _*)
-    aggregate(th, array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc, bitsLit, (a, pr) =>
-        a + when(when(pr.getField("lo"), h.getField("lo")).otherwise(h.getField("hi"))
-          .bitwiseAND(pr.getField("mask")) =!= 0L, 1L).otherwise(-1L)),
-      acc => transform(sequence(lit(0), lit(3)), b =>
-        aggregate(zip_with(slice(acc, b * 16 + lit(1), lit(16)), masks16,
-          (s, m) => when(s > 0, m).otherwise(lit(0L))), lit(0L), _ + _)))
-  }
-
   /** Hamming-near pairs via the 4x16-bit block pigeonhole (any pair within
     * hamming distance 3 shares at least one exact block). Same
     * group-by-bucket single-shuffle pairing as MinHash. */
@@ -739,16 +667,6 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
       .distinct()
   }
-
-  /** Declarative (pure-HOF) hamming pair emission — differential
-    * reference for PairOpsSpec. */
-  private[graft] def hammingPairsHof(ms: Column): Column =
-    flatten(transform(ms, (x, i) =>
-      transform(slice(ms, i + lit(2), size(ms) - i - 1),
-        y => struct(x.getField("id").as("id_a"), y.getField("id").as("id_b"),
-          aggregate(zip_with(x.getField("blocks"), y.getField("blocks"),
-            (p, q) => bit_count(p.bitwiseXOR(q)).cast("long")), lit(0L), _ + _)
-            .as("hamming")))))
 
   /** Embedding cosine near-duplicates over a bounded id range (brute-force
     * verify shape; the scale path buckets by hyperplane LSH first —

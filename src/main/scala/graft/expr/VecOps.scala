@@ -130,7 +130,7 @@ object VecCore {
     * when the ordered-fold dot of plane p satisfies the SQL `>= 0` test —
     * compareDoubles semantics, so a NaN dot SETS the bit; a
     * length-mismatched or null-element vector gives a null dot and hence
-    * bit 0, exactly as [[graft.ann.Similarity.lshBucketHof]]. */
+    * bit 0, exactly as graft.HofRefs.lshBucketHof. */
   def signBucket(v: ArrayData, w: Array[Double], nPlanes: Int, dim: Int): Long = {
     if (v == null) return 0L // null dots -> when() otherwise-branch -> all bits 0
     val n = v.numElements()

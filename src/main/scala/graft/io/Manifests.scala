@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /**
  * Chunked, manifest-committed, exactly-resumable extraction runs
@@ -26,37 +26,58 @@ object Manifests {
                                  input: String, predicate: String,
                                  files: Seq[(String, Long)] = Nil)
 
-  private def manifestPath(outDir: String, k: Int): Path =
-    Paths.get(outDir, "manifest", f"chunk-$k%05d.json")
+  def isCommitted(outDir: String, k: Int): Boolean =
+    Files.exists(Paths.get(outDir, "manifest", f"chunk-$k%05d.json"))
 
-  def isCommitted(outDir: String, k: Int): Boolean = Files.exists(manifestPath(outDir, k))
+  /** `s` as a quoted JSON string, backslash, quote and every control char
+    * escaped: a Windows input path or a tab in an oracle's SQL must not
+    * make the file unreadable to a JSON reader. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
-  private def commit(outDir: String, m: ChunkManifest): Unit = {
-    val dir = Paths.get(outDir, "manifest")
-    Files.createDirectories(dir)
-    val filesJson = m.files
-      .map { case (name, sz) => s"""{"file":"$name","bytes":$sz}""" }
-      .mkString("[", ",", "]")
-    val json =
-      s"""{"chunk":${m.chunk},"rows":${m.rows},"bytes":${m.bytes},"checksum":${m.checksum},""" +
-      s""""input":"${m.input}","predicate":"${m.predicate}","partition_files":$filesJson}"""
-    val tmp = dir.resolve(f".chunk-${m.chunk}%05d.json.tmp")
+  /** Atomic tmp+rename write of `json` as manifest/`name`. */
+  private def writeAtomic(outDir: String, name: String, json: String): Unit = {
+    val dir = Files.createDirectories(Paths.get(outDir, "manifest"))
+    val tmp = dir.resolve(s".$name.tmp")
     Files.writeString(tmp, json)
-    Files.move(tmp, manifestPath(outDir, m.chunk), StandardCopyOption.ATOMIC_MOVE)
+    Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  def readManifests(outDir: String): Seq[ChunkManifest] = {
+  /** The texts of every manifest/`prefix`-NNNNN.json, in file-name order. */
+  private def readAll(outDir: String, prefix: String): Seq[String] = {
     val dir = Paths.get(outDir, "manifest")
     if (!Files.exists(dir)) return Nil
     import scala.jdk.CollectionConverters._
-    Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.matches("chunk-\\d+\\.json")).toSeq.sortBy(_.toString)
-      .map { p =>
-        val s = Files.readString(p)
-        def num(k: String): Long = s.split("\"" + k + "\":")(1).takeWhile(c => c.isDigit || c == '-').toLong
-        ChunkManifest(num("chunk").toInt, num("rows"), num("bytes"), num("checksum"), "", "")
-      }
+    scala.util.Using.resource(Files.list(dir))(_.iterator().asScala.toSeq)
+      .filter(_.getFileName.toString.matches(prefix + "-\\d+\\.json")).sortBy(_.toString)
+      .map(Files.readString)
   }
+
+  /** Integer field `k` of a manifest's JSON text. */
+  private def num(json: String, k: String): Long =
+    json.split("\"" + k + "\":")(1).takeWhile(c => c.isDigit || c == '-').toLong
+
+  private def commit(outDir: String, m: ChunkManifest): Unit = {
+    val filesJson = m.files
+      .map { case (name, sz) => s"""{"file":${jsonString(name)},"bytes":$sz}""" }
+      .mkString("[", ",", "]")
+    val json =
+      s"""{"chunk":${m.chunk},"rows":${m.rows},"bytes":${m.bytes},"checksum":${m.checksum},""" +
+      s""""input":${jsonString(m.input)},"predicate":${jsonString(m.predicate)},""" +
+      s""""partition_files":$filesJson}"""
+    writeAtomic(outDir, f"chunk-${m.chunk}%05d.json", json)
+  }
+
+  def readManifests(outDir: String): Seq[ChunkManifest] =
+    readAll(outDir, "chunk").map(s => ChunkManifest(num(s, "chunk").toInt, num(s, "rows"),
+      num(s, "bytes"), num(s, "checksum"), "", ""))
 
   /**
    * Consistent read of a [[resumableExtract]] output — the Iceberg reader
@@ -92,9 +113,6 @@ object Manifests {
 
   final case class Snapshot(version: Int, chunks: Seq[Int], rows: Long, bytes: Long)
 
-  private def snapshotPath(outDir: String, v: Int): Path =
-    Paths.get(outDir, "manifest", f"snapshot-$v%05d.json")
-
   /**
    * Freeze the CURRENT committed chunk set as the next snapshot version
    * (atomic tmp+rename, like chunk commits). Chunks committed after this
@@ -108,31 +126,20 @@ object Manifests {
     require(ms.nonEmpty, s"nothing committed under $outDir to snapshot")
     val v = snapshots(outDir).lastOption.map(_.version + 1).getOrElse(1)
     val s = Snapshot(v, ms.map(_.chunk), ms.map(_.rows).sum, ms.map(_.bytes).sum)
-    val dir = Paths.get(outDir, "manifest")
-    val json = s"""{"version":${s.version},"chunks":${s.chunks.mkString("[", ",", "]")},""" +
-      s""""rows":${s.rows},"bytes":${s.bytes}}"""
-    val tmp = dir.resolve(f".snapshot-$v%05d.json.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, snapshotPath(outDir, v), StandardCopyOption.ATOMIC_MOVE)
+    writeAtomic(outDir, f"snapshot-$v%05d.json",
+      s"""{"version":${s.version},"chunks":${s.chunks.mkString("[", ",", "]")},""" +
+        s""""rows":${s.rows},"bytes":${s.bytes}}""")
     s
   }
 
   /** All snapshot versions, oldest first. */
-  def snapshots(outDir: String): Seq[Snapshot] = {
-    val dir = Paths.get(outDir, "manifest")
-    if (!Files.exists(dir)) return Nil
-    import scala.jdk.CollectionConverters._
-    Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.matches("snapshot-\\d+\\.json")).toSeq.sortBy(_.toString)
-      .map { p =>
-        val s = Files.readString(p)
-        def num(k: String): Long = s.split("\"" + k + "\":")(1).takeWhile(c => c.isDigit || c == '-').toLong
-        val chunks = s.split("\"chunks\":\\[")(1).takeWhile(_ != ']')
-        Snapshot(num("version").toInt,
-          if (chunks.isEmpty) Nil else chunks.split(',').toSeq.map(_.trim.toInt),
-          num("rows"), num("bytes"))
-      }
-  }
+  def snapshots(outDir: String): Seq[Snapshot] =
+    readAll(outDir, "snapshot").map { s =>
+      val chunks = s.split("\"chunks\":\\[")(1).takeWhile(_ != ']')
+      Snapshot(num(s, "version").toInt,
+        if (chunks.isEmpty) Nil else chunks.split(',').toSeq.map(_.trim.toInt),
+        num(s, "rows"), num(s, "bytes"))
+    }
 
   /**
    * Time-travel read: exactly the chunk set frozen by snapshot `version`,

@@ -1,6 +1,6 @@
 package graft.matching
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.rules.Rules
@@ -36,12 +36,32 @@ object Matching {
     val scored = items
       .crossJoin(broadcast(prods))
       .withColumn("score", wratioUdf(col(nameCol), col("match_name")))
+    rankTop(scored, itemKeyCols, "product_id", limit, suggest, auto, "is_auto_match")
+  }
+
+  /** The matcher's selection step (matcher.py find_matches; also q11/q41):
+    * per item, `rank` by score desc then `candId` asc, keep rank <= limit
+    * and score >= suggest, flag `autoCol` at score >= auto. */
+  def rankTop(scored: DataFrame, itemKeyCols: Seq[String], candId: String,
+              limit: Int, suggest: Double, auto: Double, autoCol: String): DataFrame = {
     val w = Window.partitionBy(itemKeyCols.map(col): _*)
-      .orderBy(desc("score"), asc("product_id")) // deterministic tie-break
+      .orderBy(desc("score"), asc(candId))
     scored
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= limit && col("score") >= suggest)
-      .withColumn("is_auto_match", col("score") >= auto)
+      .withColumn(autoCol, col("score") >= auto)
+  }
+
+  /** The co-blocking step ([[topMatchesBlocked]], q41): the distinct
+    * (item row, `catalogId`) pairs sharing a blocking key, the exploded
+    * catalog keys broadcast. `items` columns must be orderable. */
+  def coBlocked(items: DataFrame, nameCol: String, catalog: DataFrame, catalogId: String,
+                catalogName: String, keys: Column => Column): DataFrame = {
+    val catKeys = catalog.select(col(catalogId), explode(keys(col(catalogName))).as("__tok"))
+    items.withColumn("__tok", explode(keys(col(nameCol))))
+      .join(broadcast(catKeys), Seq("__tok"))
+      .select((items.columns.map(col) :+ col(catalogId)): _*)
+      .distinct()
   }
 
   /** Blocking keys: the processed tokens UNION every token's character
@@ -92,23 +112,13 @@ object Matching {
                         auto: Double = Rules.autoMatchThreshold): DataFrame = {
     val prods = products.select(
       col("product_id"), col("sku").as("match_sku"), col("name").as("match_name"))
-    val prodTok = prods.select(col("product_id"),
-      explode(blockKeysUdf(col("match_name"))).as("__tok"))
-    val keyCols = itemKeyCols.map(col)
-    val cands = items.select((keyCols :+ col(nameCol)): _*)
-      .withColumn("__tok", explode(blockKeysUdf(col(nameCol))))
-      .join(broadcast(prodTok), Seq("__tok"))
-      .select((keyCols :+ col(nameCol) :+ col("product_id")): _*)
-      .distinct()
+    val cands = coBlocked(items.select((itemKeyCols :+ nameCol).map(col): _*), nameCol,
+      prods, "product_id", "match_name", blockKeysUdf(_))
     val scored = cands
       .join(broadcast(prods), Seq("product_id"))
       .withColumn("score", wratioUdf(col(nameCol), col("match_name")))
-    val w = Window.partitionBy(keyCols: _*)
-      .orderBy(desc("score"), asc("product_id"))
-    val ranked = scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= limit && col("score") >= suggest)
-      .withColumn("is_auto_match", col("score") >= auto)
+    val ranked = rankTop(scored, itemKeyCols, "product_id", limit, suggest, auto,
+      "is_auto_match")
     // restore the full item row (unique-by-key precondition above)
     items.join(ranked.drop(nameCol), itemKeyCols)
   }

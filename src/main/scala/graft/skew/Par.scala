@@ -1,6 +1,9 @@
 package graft.skew
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /**
  * Scale-adaptive parallelism floor for COMPUTE-DENSE map stages
@@ -33,13 +36,24 @@ import org.apache.spark.sql.DataFrame
  * only the map-only site keeps the floor.
  *
  * Safety: `df.rdd.getNumPartitions` is job-free only when the plan has
- * no un-materialized shuffle below it (with AQE, partition resolution
- * of a shuffly plan would EXECUTE its stages). Callers therefore apply
- * this to raw scans or localCheckpoint'ed tables only.
+ * no un-materialized exchange below it (with AQE, partition resolution
+ * of a shuffly plan would EXECUTE its stages while the caller is still
+ * building its plan). `floor` therefore refuses such a plan before it
+ * touches `.rdd`: apply it to raw scans or localCheckpoint'ed tables.
  */
 object Par {
   def floor(df: DataFrame): DataFrame = {
+    require(!pendingExchange(df.queryExecution.executedPlan), "Par.floor on a plan with " +
+      "an exchange that has not run: resolving its partitions would run Spark jobs")
     val cores = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
+  }
+
+  /** An unmaterialized exchange anywhere in the plan, AQE's included. */
+  private def pendingExchange(p: SparkPlan): Boolean = p match {
+    case _: QueryStageExec => false
+    case a: AdaptiveSparkPlanExec => pendingExchange(a.executedPlan)
+    case _: Exchange => true
+    case _ => p.children.exists(pendingExchange)
   }
 }

@@ -48,12 +48,11 @@ object CorpusChain {
       .localCheckpoint()
     // keep-best per cluster: combinable argmax (min of (-score, id)) —
     // a giant family partial-combines map-side, no cluster window
-    val keepers = clusters
+    val scored = clusters
       .join(survivors.select(col(idCol).as("doc_id"), col(scoreCol).as("__score")),
         Seq("doc_id"))
-      .groupBy("cluster_id")
-      .agg(min(struct((lit(0.0) - col("__score").cast("double")).as("negs"),
-        col("doc_id"))).as("__b"))
+    val keepers = graft.dedup.Dedup.keepBest(scored,
+        (lit(0.0) - col("__score").cast("double")).as("negs"))
       .select(col("cluster_id"), col("__b.doc_id").as("__keeper"))
     // losers = clustered docs that are not their cluster's keeper. At
     // corpus scale duplicates can be a large FRACTION of the corpus, so

@@ -281,14 +281,6 @@ object TextAnalysis {
       .withColumn("norm_len", length(norm).cast("long"))
   }
 
-  /** Non-distinct word 2-grams ("a b"): the repetition unit. */
-  private def word2grams(toks: Column): Column = {
-    val n = size(toks)
-    val zipped = arrays_zip(slice(toks, lit(1), n - 1), slice(toks, lit(2), n - 1))
-    when(n >= 2, transform(zipped, s => concat_ws(" ", s.getField("0"), s.getField("1"))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /**
    * Gopher-style repetition filters per document: the most-frequent-word
    * fraction and the duplicate-2-gram fraction — the standard signals for
@@ -301,28 +293,12 @@ object TextAnalysis {
     * [[repetitionStats]] and [[corpusFilter]]; native one-pass
     * expressions (graft.expr.TextCore.topRunCount / twoGramCounts — the former
     * interpreted struct-accumulator fold allocated one struct per token;
-    * [[repetitionPiecesHof]] is the differential reference). */
+    * graft.HofRefs.repetitionPiecesHof is the differential reference). */
   private[graft] def repetitionPieces(t: Column): (Column, Column, Column, Column) = {
     val toks = Dedup.tokens(t)
     val tg = graft.expr.textops.two_gram_counts(toks)
     (toks, graft.expr.textops.top_run_count(toks),
       tg.getField("n2"), tg.getField("ndup"))
-  }
-
-  /** The declarative (pure-HOF) formulation over a token array —
-    * differential reference. */
-  private[graft] def repetitionPiecesHof(toks: Column): (Column, Column, Column, Column) = {
-    val sorted = sort_array(toks)
-    val zero = struct(lit(null).cast("string").as("prev"),
-      lit(0L).as("run"), lit(0L).as("best"))
-    val topCount = aggregate(sorted, zero, (acc, tok) => {
-      val newRun = when(tok === acc.getField("prev"), acc.getField("run") + 1L).otherwise(lit(1L))
-      struct(tok.as("prev"), newRun.as("run"),
-        greatest(acc.getField("best"), newRun).as("best"))
-    }).getField("best")
-    val grams = word2grams(toks)
-    (toks, topCount, size(grams).cast("long"),
-      (size(grams) - size(array_distinct(grams))).cast("long"))
   }
 
   def repetitionStats(df: DataFrame, idCol: String, textCol: String,
@@ -433,34 +409,13 @@ object TextAnalysis {
     // native one-digest-per-token fold (graft.expr.TextCore.classifierScore) —
     // the former `aggregate` HOF ran every lambda interpreted and built
     // the "w:" concat, the md5 HEX string and a conv() parse per token;
-    // [[hashClassifierScoreHof]] is the differential reference
+    // graft.HofRefs.hashClassifierScoreHof is the differential reference
     // the struct is projected once and expanded after: selecting both
     // fields off the call itself evaluated the classifier twice per row
     val cs = graft.expr.textops.classifier_score(Dedup.tokens(col(textCol)), nBuckets.toLong)
     df.select(col(idCol), cs.as("cs"))
       .select(col(idCol), col("cs.n_tokens").as("n_tokens"), col("cs.score_int").as("score_int"))
       .withColumn("keep", col("score_int") > 0L)
-  }
-
-  /** The declarative (pure-HOF) formulation — differential reference for
-    * TextOpsSpec. */
-  private[graft] def hashClassifierScoreHof(df: DataFrame, idCol: String, textCol: String,
-                                            nBuckets: Int): DataFrame = {
-    val toks = Dedup.tokens(col(textCol))
-    df.select(col(idCol),
-        size(toks).cast("long").as("n_tokens"),
-        classifierFoldHof(toks, nBuckets).as("score_int"))
-      .withColumn("keep", col("score_int") > 0L)
-  }
-
-  /** The declarative score_int fold over a token array. */
-  private[graft] def classifierFoldHof(toks: Column, nBuckets: Long): Column = {
-    val bucket = (t: Column) =>
-      pmod(conv(substring(md5(concat(lit("w:"), t)), 1, 15), 16, 10).cast("long"),
-        lit(nBuckets))
-    // weight(b) in [-4095, 4095]: Knuth-multiplicative spread of the bucket id
-    val weight = (t: Column) => pmod(bucket(t) * lit(2654435761L), lit(8191L)) - lit(4095L)
-    aggregate(toks, lit(0L), (acc, t) => acc + weight(t))
   }
 
   /**
@@ -533,7 +488,7 @@ object TextAnalysis {
    *
    * Scale shape: a bare per-group rank window would sort EVERY row of a
    * group in one task — a 10^11-doc source is a straggler. Instead the
-   * salted two-level reduction (the q24 pattern): top-k within
+   * salted two-level reduction (graft.skew.Salt.topK, as q24): top-k within
    * (group, salt) buckets — parallel across saltBuckets tasks — then
    * top-k of the survivors (group x saltBuckets x k rows). Identical
    * output to the single window (the k smallest of a union of bucket
@@ -544,15 +499,8 @@ object TextAnalysis {
                       k: Int, saltBuckets: Int = 64): DataFrame = {
     require(k > 0, s"k must be positive: $k")
     val key = md5(concat(lit(s"bkgroup:$seed:"), col(idCol).cast("string")))
-    val ord = Seq(col("sample_key").asc, col(idCol).asc)
-    val w1 = Window.partitionBy(col(grpCol), col("__salt")).orderBy(ord: _*)
-    val w2 = Window.partitionBy(col(grpCol)).orderBy(ord: _*)
-    df.select(col(grpCol), col(idCol), key.as("sample_key"))
-      .withColumn("__salt", pmod(xxhash64(col(idCol)), lit(saltBuckets)))
-      .withColumn("__r1", row_number().over(w1)).where(col("__r1") <= k)
-      .withColumn("sample_rank", row_number().over(w2).cast("long"))
-      .where(col("sample_rank") <= k)
-      .drop("__salt", "__r1")
+    graft.skew.Salt.topK(df.select(col(grpCol), col(idCol), key.as("sample_key")),
+      grpCol, idCol, Seq(col("sample_key").asc, col(idCol).asc), k, "sample_rank", saltBuckets)
   }
 
   /**

@@ -34,7 +34,7 @@ class PairOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (df <- Seq(longLists, strLists)) {
       val rows = df.select(
         graft.expr.pairops.pair_emit(col("ids"), df.schema("ids").dataType).as("nat"),
-        graft.dedup.Dedup.pairsHof(col("ids")).as("hof")).collect()
+        HofRefs.pairsHof(col("ids")).as("hof")).collect()
       rows.foreach(r => assert(r.get(0) == r.get(1), s"pair_emit mismatch: ${r.get(0)} vs ${r.get(1)}"))
     }
   }}
@@ -50,7 +50,7 @@ class PairOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         struct(x.getField("_1").as("id"), x.getField("_2").as("is_new"))).as("ms"))
     val rows = df.select(
       graft.expr.pairops.pair_emit_new_only(col("ms"), df.schema("ms").dataType).as("nat"),
-      graft.dedup.Dedup.pairsNewOnlyHof(col("ms")).as("hof")).collect()
+      HofRefs.pairsNewOnlyHof(col("ms")).as("hof")).collect()
     // HOF emits (id_a, id_b, any_new); native emits (id_a, id_b) — compare projected
     rows.foreach { r =>
       val nat = r.getSeq[org.apache.spark.sql.Row](0).map(x => (x.get(0), x.get(1)))
@@ -68,7 +68,7 @@ class PairOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .agg(sort_array(collect_list(struct(col("id"), col("blocks")))).as("ms"))
     val rows = grouped.select(
       graft.expr.pairops.pair_emit_hamming(col("ms"), grouped.schema("ms").dataType).as("nat"),
-      graft.dedup.Dedup.hammingPairsHof(col("ms")).as("hof")).collect()
+      HofRefs.hammingPairsHof(col("ms")).as("hof")).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.get(0) == r.get(1), s"pair_emit_hamming mismatch"))
   }}

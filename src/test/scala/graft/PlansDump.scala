@@ -160,6 +160,22 @@ object PlansDump {
         graft.io.Transcripts.productsDim(spark),
         Seq("conv_id", "turn_idx", "item_idx"))
     }
+    section("q11 fuzzy top-3 (broadcast cross join, the matcher's rank step)",
+      "Every part is scored against the broadcast 6-row catalog with the " +
+      "levenshtein ratio (BroadcastNestedLoopJoin, the corpus streams), then " +
+      "Matching.rankTop: one p_partkey-keyed Exchange between the partial and " +
+      "final WindowGroupLimit, then the row_number Window " +
+      "(score desc, cand_id asc), rank <= 3 and score >= 40, the auto flag.") {
+      SparkEntry.byName("q11_fuzzy_topk").build(spark, dir)
+    }
+    section("q41 blocked match (the matcher's co-blocking and rank steps)",
+      "Matching.coBlocked explodes each part's and each catalog row's " +
+      "token + char-3-gram keys, joins them on the key against the " +
+      "broadcast exploded catalog and keeps distinct (part, cand_id) pairs " +
+      "(a HashAggregate around one Exchange); the 6-row catalog joins back " +
+      "(broadcast) for the name, and Matching.rankTop ranks as in q11.") {
+      SparkEntry.byName("q41_blocked_match").build(spark, dir)
+    }
     section("q42 salted as-of join on a Zipf-hot key (bucket-parallel windows)",
       "The driver fixture collapses ~2/3 of users onto one id; the window " +
       "partitions on (key, time-bucket) instead of key alone, so the hot " +

@@ -102,6 +102,45 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(total == 300L)
   }
 
+  test("manifest JSON escapes its strings: a quote or backslash in the input keeps it parseable") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-json").toString
+    val turns = graft.io.Transcripts.generateDF(spark, 40L)
+    val inputDesc = "a\"b\\c"
+    assert(graft.io.Manifests.resumableExtract(spark, turns, dir, nChunks = 2, numPartitions = 2,
+      salt = 2, inputDesc = inputDesc) == 2)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (k <- 0 until 2) {
+      val text = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(dir, "manifest", f"chunk-$k%05d.json"))
+      val node = mapper.readTree(text) // throws on malformed JSON
+      assert(node.get("input").asText() == inputDesc, text)
+      assert(node.get("chunk").asInt() == k && node.get("partition_files").isArray, text)
+    }
+    val ms = graft.io.Manifests.readManifests(dir)
+    assert(ms.map(_.chunk) == Seq(0, 1) && ms.map(_.rows).sum == 40L)
+    assert(graft.io.Manifests.readCommitted(spark, dir, verify = true).count() == 40L)
+  }
+
+  test("Par.floor refuses a plan with an unmaterialized exchange before running any job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val shuffly = spark.range(0, 1000).toDF("x").groupBy((col("x") % 7).as("k")).count()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      intercept[IllegalArgumentException] { graft.skew.Par.floor(shuffly) }
+      Bridge.waitListenerBus(spark)
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran while the plan was being built")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // a single-partition scan still gets its floor
+    val scan = spark.range(0, 100, 1, 1).toDF("x")
+    assert(graft.skew.Par.floor(scan).queryExecution.executedPlan.toString.contains("RoundRobinPartitioning"))
+  }
+
   test("query registry: 85 queries in q-number order, 67 benched") {
     // every entry carries its own oracle by type; what the type cannot
     // say is that names are unique and ordered (Verify's dump order,
@@ -210,14 +249,14 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         graft.expr.signatures.minhash_sig(graft.dedup.Dedup.shingles(col("text"), 3), 32).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val mHof = docs.select(col("doc_id"),
-        graft.dedup.Dedup.minhashSigHof(col("text"), 3, 32).as("sig"))
+        HofRefs.minhashSigHof(col("text"), 3, 32).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(mExpr == mHof)
     val sExpr = docs.select(col("doc_id"),
         graft.expr.signatures.simhash_blocks(graft.dedup.Dedup.tokens(col("text"))).as("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val sHof = docs.select(col("doc_id"),
-        graft.dedup.Dedup.simhashBlocksHof(col("text")).as("b"))
+        HofRefs.simhashBlocksHof(col("text")).as("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sExpr == sHof)
   }

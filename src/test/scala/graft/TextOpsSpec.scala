@@ -63,7 +63,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (df <- Seq(docsDf, advDf)) {
       assertColsEqual(df,
         graft.dedup.Dedup.tokens(col("text")),
-        graft.dedup.Dedup.tokensHof(col("text")), "tokens")
+        HofRefs.tokensHof(col("text")), "tokens")
     }
   }}
 
@@ -71,7 +71,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (df <- Seq(docsDf, advDf); k <- Seq(3, 8)) {
       assertColsEqual(df,
         graft.dedup.Dedup.shingles(col("text"), k),
-        graft.dedup.Dedup.shinglesHof(col("text"), k), s"shingles k=$k")
+        HofRefs.shinglesHof(col("text"), k), s"shingles k=$k")
     }
   }}
 
@@ -90,14 +90,14 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (df <- Seq(docsDf, advDf); k <- Seq(2, 8)) {
       assertColsEqual(df,
         graft.expr.textops.gram_hashes(graft.dedup.Dedup.tokens(col("text")), k),
-        hofHashes(graft.dedup.Dedup.tokensHof(col("text")), k), s"gram_hashes k=$k")
+        hofHashes(HofRefs.tokensHof(col("text")), k), s"gram_hashes k=$k")
     }
   }}
 
   test("TopRunCount / TwoGramCounts == HOF repetition pieces") { CodegenOnly(spark) {
     val (_, natTop, natN2, natDup) = graft.text.TextAnalysis.repetitionPieces(col("text"))
     val (_, hofTop, hofN2, hofDup) =
-      graft.text.TextAnalysis.repetitionPiecesHof(graft.dedup.Dedup.tokensHof(col("text")))
+      HofRefs.repetitionPiecesHof(HofRefs.tokensHof(col("text")))
     for (df <- Seq(docsDf, advDf)) {
       assertColsEqual(df, natTop, hofTop, "top_run_count")
       assertColsEqual(df, natN2, hofN2, "n_2grams")
@@ -109,7 +109,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (df <- Seq(docsDf, advDf); k <- Seq(2, 8)) {
       assertColsEqual(df,
         graft.expr.textops.shingle_hashes(col("text"), k),
-        transform(graft.dedup.Dedup.shinglesHof(col("text"), k),
+        transform(HofRefs.shinglesHof(col("text"), k),
           g => graft.dedup.Dedup.md5Hash60(g)), s"shingle_hashes k=$k")
     }
   }}
@@ -117,7 +117,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ClassifierScore == HOF hashClassifierScore (nBuckets 2^10 and 2^20)") { CodegenOnly(spark) {
     for (src <- Seq(docsDf, advDf); nb <- Seq(1 << 10, 1 << 20)) {
       val nat = graft.text.TextAnalysis.hashClassifierScore(src, "doc_id", "text", nb)
-      val hof = graft.text.TextAnalysis.hashClassifierScoreHof(src, "doc_id", "text", nb)
+      val hof = HofRefs.hashClassifierScoreHof(src, "doc_id", "text", nb)
       val n = nat.collect().map(r => r.get(0) -> (r.get(1), r.get(2), r.get(3))).toMap
       val h = hof.collect().map(r => r.get(0) -> (r.get(1), r.get(2), r.get(3))).toMap
       assert(n.nonEmpty && n.keySet == h.keySet)
@@ -138,7 +138,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (toks <- Seq(array(lit("a"), lit(null).cast("string")), col("t"))) {
       val r = oneRow.select(
         graft.expr.textops.classifier_score(toks, 1024L).as("cs"),
-        graft.text.TextAnalysis.classifierFoldHof(toks, 1024L).as("hof"))
+        HofRefs.classifierFoldHof(toks, 1024L).as("hof"))
         .collect()(0)
       assert(r.getStruct(0).getLong(0) == 2L)
       assert(r.getStruct(0).isNullAt(1) && r.isNullAt(1), r)
@@ -153,7 +153,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val arrays: Seq[Seq[String]] = Seq(Seq("a", null), Seq(null), Seq(null, null, null),
       Seq("b", null, "b", "a", null, "b"), Seq("x", "y", null, "x", "y", null, "x", "y"))
     def check(df: DataFrame, toks: Column): Unit = {
-      val (_, hofTop, hofN2, hofDup) = graft.text.TextAnalysis.repetitionPiecesHof(toks)
+      val (_, hofTop, hofN2, hofDup) = HofRefs.repetitionPiecesHof(toks)
       val tg = graft.expr.textops.two_gram_counts(toks)
       assertColsEqual(df, graft.expr.textops.top_run_count(toks), hofTop, "top_run_count")
       assertColsEqual(df, tg.getField("n2"), hofN2, "n_2grams")

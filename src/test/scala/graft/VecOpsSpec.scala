@@ -69,7 +69,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val both = a.crossJoin(b)
       .select(col("ia"), col("ib"),
         graft.ann.Similarity.cosine(col("va"), col("vb")).as("nat"),
-        graft.ann.Similarity.cosineHof(col("va"), col("vb")).as("hof"))
+        HofRefs.cosineHof(col("va"), col("vb")).as("hof"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>
@@ -95,7 +95,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .where(col("va").isNull || col("vb").isNull || !divisorZero(col("va"), col("vb")))
       .select(col("ia"), col("ib"),
         graft.ann.Similarity.cosine(col("va"), col("vb")).as("nat"),
-        graft.ann.Similarity.cosineHof(col("va"), col("vb")).as("hof"))
+        HofRefs.cosineHof(col("va"), col("vb")).as("hof"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>
@@ -112,7 +112,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         zeros.where(col("id") === 0).select(c(col("v")).as("c")).collect()
       }
     val eNat = run(v => graft.ann.Similarity.cosine(v, v))
-    val eHof = run(v => graft.ann.Similarity.cosineHof(v, v))
+    val eHof = run(v => HofRefs.cosineHof(v, v))
     def msg(t: Throwable): String =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.toString).mkString("|")
     assert(msg(eNat).contains("DIVIDE_BY_ZERO"), msg(eNat))
@@ -128,12 +128,12 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = zeros.where(col("id") === 1).select(col("v").as("vb"))
     val cos = a.crossJoin(b).select(
       graft.ann.Similarity.cosine(col("va"), col("vb")).as("nat"),
-      graft.ann.Similarity.cosineHof(col("va"), col("vb")).as("hof")).collect()
+      HofRefs.cosineHof(col("va"), col("vb")).as("hof")).collect()
     assert(cos.length == 1 && cos(0).isNullAt(0) && cos(0).isNullAt(1), cos.toSeq)
     val cl = b.select(array(struct(lit(7L).as("cid"), col("vb").as("c"))).as("__cl"))
     val cid = a.crossJoin(cl).select(
       graft.expr.vecops.nearest_cid(col("va"), col("__cl")).as("nat"),
-      graft.ann.Similarity.nearestCidHof(col("va"), col("__cl")).as("hof")).collect()
+      HofRefs.nearestCidHof(col("va"), col("__cl")).as("hof")).collect()
     assert(cid.length == 1 && cid(0).getLong(0) == -1L && cid(0).getLong(1) == -1L, cid.toSeq)
   }}
 
@@ -145,7 +145,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val assigned = emb.crossJoin(broadcast(cl))
       .select(col("id"),
         graft.expr.vecops.nearest_cid(col("v"), col("__cl")).as("nat"),
-        graft.ann.Similarity.nearestCidHof(col("v"), col("__cl")).as("hof"))
+        HofRefs.nearestCidHof(col("v"), col("__cl")).as("hof"))
       .collect()
     assert(assigned.nonEmpty)
     assigned.foreach { r =>
@@ -172,7 +172,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = probe.crossJoin(broadcast(cl2))
       .select(col("id"),
         graft.expr.vecops.nearest_cid(col("v"), col("__cl")).as("nat"),
-        graft.ann.Similarity.nearestCidHof(col("v"), col("__cl")).as("hof"))
+        HofRefs.nearestCidHof(col("v"), col("__cl")).as("hof"))
       .collect()
     out.foreach { r =>
       assert(r.get(1) == r.get(2),
@@ -186,14 +186,14 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val got = emb.select(col("vec_id"),
       graft.ann.Similarity.lshBucket(col("v"), weights).as("nat"),
-      graft.ann.Similarity.lshBucketHof(col("v"), weights).as("hof")).collect()
+      HofRefs.lshBucketHof(col("v"), weights).as("hof")).collect()
     assert(got.nonEmpty)
     got.foreach { r => assert(r.get(1) == r.get(2), s"bucket mismatch at ${r.get(0)}") }
     val w8 = graft.ann.Similarity.planeWeights(nPlanes = 5, dim = 8)
     val fz = vecDf(fuzzVectors(64, 8))
     val got2 = fz.select(col("id"),
       graft.ann.Similarity.lshBucket(col("v"), w8).as("nat"),
-      graft.ann.Similarity.lshBucketHof(col("v"), w8).as("hof")).collect()
+      HofRefs.lshBucketHof(col("v"), w8).as("hof")).collect()
     got2.foreach { r =>
       assert(r.get(1) == r.get(2),
         s"bucket adversarial mismatch at id=${r.get(0)}: ${r.get(1)} vs ${r.get(2)}")

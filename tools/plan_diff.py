@@ -8,9 +8,17 @@ block is compared, never the prose note above it. Sections are matched by
 title. Optional arguments restrict the comparison to sections whose title
 starts with one of them (`q57` matches "q57 composed corpus chain ...").
 
-Before comparing, everything that changes between two runs of the SAME
+An AQE section is compared on its Final Plan tree, the detail blocks of the
+nodes in that tree, with every node renumbered in the order it first
+appears there, and the shape of its Initial Plan tree, node numbers masked.
+Explain numbers nodes globally, and the Initial Plan may number a shared
+`Scan ExistingRDD` once or twice from one run of the same code to the next,
+which would otherwise shift the Final Plan's numbers too.
+
+Before comparing, everything else that changes between two runs of the SAME
 code is masked:
-  - expression ids (`name#123L` -> `name#L`);
+  - expression ids (`name#123L` -> `name#L`) and the JVM-wide counter in
+    lambda variable names (`lambda x_115#` -> `lambda x_#`);
   - lambda class names (`$$Lambda$12/0x00007f..` -> `$$Lambda`) and object
     identity hashes (`Kmv$KmvAgg@631c4e65` -> `Kmv$KmvAgg@`);
   - RDD ids and their call-site line numbers
@@ -19,7 +27,9 @@ code is masked:
   - the directory part of `file:` locations (the checkout's own path);
   - exchange `plan_id=N`, whole-stage `codegen id : N`, and the stage id
     that AQE prints as the `Arguments: N` of a query-stage node (both are
-    numbered in the order stages happen to finish).
+    numbered in the order stages happen to finish);
+  - the `sizeInBytes` of a broadcast query stage (the hashed relation's
+    allocated pages, which follow the JVM's heap size, not the data).
 
 Prints one line per compared section (`same` / `DIFF` / `MISSING`), a
 unified diff of the masked plan for each differing section, and exits 1
@@ -31,6 +41,7 @@ import sys
 
 MASKS = [
     (re.compile(r"#\d+"), "#"),
+    (re.compile(r"(lambda \w+?)_\d+#"), r"\1_#"),
     (re.compile(r"\$\$Lambda(\$\d+)?(/0x[0-9a-f]+)?"), "$$Lambda"),
     (re.compile(r"([\w$])@[0-9a-f]+\b"), r"\1@"),
     (re.compile(r"RDD\[\d+\] at (\S+) at ([\w$.]+):\d+"), r"RDD[] at \1 at \2"),
@@ -40,6 +51,42 @@ MASKS = [
 ]
 NODE = re.compile(r"^\(\d+\) (\S+)")
 STAGE_ID = re.compile(r"^Arguments: \d+$")
+BCAST_SIZE = re.compile(r"(BroadcastQueryStage \(\d+\), Statistics\(sizeInBytes=)[^,]+")
+TREE_ID = re.compile(r"\((\d+)\)")
+DETAIL_ID = re.compile(r"^\((\d+)\)")
+REUSES = re.compile(r"(Reuses operator id: )(\d+)")
+
+
+def final_plan(lines):
+    """An AQE explain cut to its Final Plan tree and that tree's node
+    details, nodes renumbered by first appearance, plus the Initial Plan
+    tree with node numbers masked; other plans unchanged."""
+    if "+- == Final Plan ==" not in lines:
+        return lines
+    end = lines.index("+- == Initial Plan ==")
+    tree, ids = lines[:end], {}
+    for line in tree:
+        for m in TREE_ID.finditer(line):
+            ids.setdefault(m.group(1), str(len(ids) + 1))
+    renum = lambda m: "(" + ids.get(m.group(1), m.group(1)) + ")"
+    out = [TREE_ID.sub(renum, l) for l in tree]
+    blocks, cur, initial = [], None, True
+    for line in lines[end:]:
+        initial = initial and DETAIL_ID.match(line) is None
+        if initial:
+            out.append(TREE_ID.sub("(N)", line))
+            continue
+        m = DETAIL_ID.match(line)
+        if m:
+            cur = [] if m.group(1) in ids else None
+            if cur is not None:
+                blocks.append((int(ids[m.group(1)]), cur))
+        if cur is not None:
+            cur.append(REUSES.sub(lambda r: r.group(1) + ids.get(r.group(2), r.group(2)),
+                                  DETAIL_ID.sub(renum, line)))
+    for _, block in sorted(blocks, key=lambda b: b[0]):
+        out += block
+    return out
 
 
 def mask(lines):
@@ -50,6 +97,7 @@ def mask(lines):
             node = m.group(1)
         if node.endswith("QueryStage") and STAGE_ID.match(line):
             line = "Arguments: N"
+        line = BCAST_SIZE.sub(r"\1", line)
         for pat, rep in MASKS:
             line = pat.sub(rep, line)
         out.append(line)
@@ -69,7 +117,7 @@ def sections(path):
                 in_code = not in_code
             elif in_code and title is not None:
                 secs[title].append(line)
-    return {t: mask(ls) for t, ls in secs.items()}
+    return {t: mask(final_plan(ls)) for t, ls in secs.items()}
 
 
 def main(argv):
