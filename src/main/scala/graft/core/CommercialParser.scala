@@ -5,21 +5,13 @@ import graft.core.Py.PyStringOps
 import graft.model.Item
 import graft.rules.Rules
 import ParserCommon._
+import java.util.regex.{Matcher, Pattern}
 
 /**
  * Commercial-proposal parser — semantics of the reference
  * CommercialProposalParser (app/pipeline/commercial_parser.py).
  */
-object CommercialParser {
-
-  def parse(text: String, tables: Seq[Tab]): Seq[Item] =
-    parse(new SharedLines(text), tables)
-
-  def parse(shared: SharedLines, tables: Seq[Tab]): Seq[Item] = {
-    val items = tables.zipWithIndex.flatMap { case (t, i) => parseTable(t, i) } ++
-      (if (shared.text != null && shared.text.nonEmpty) parseText(shared) else Nil)
-    dedup(items).filter(validate)
-  }
+object CommercialParser extends DocumentParser {
 
   // commercial_parser.py:96-128
   private[core] def identifyColumns(table: Tab): Option[Map[String, Int]] = {
@@ -36,60 +28,23 @@ object CommercialParser {
     else if (n >= 4) Map("name" -> 0, "qty" -> 1, "price" -> 2, "total" -> 3)
     else Map.empty
 
-  private def parseTable(table: Tab, tableIdx: Int): Seq[Item] =
-    try {
-      identifyColumns(table) match {
-        case Some(m) => parseWithMapping(table, m, tableIdx)
-        case None => parseByContent(table, tableIdx)
-      }
-    } catch { case _: Exception => Nil }
+  protected def parseTable(table: Tab, tableIdx: Int): Seq[Item] =
+    mappedOrContent(table, tableIdx, identifyColumns(table), mappedRow, contentRow)
 
-  private def parseWithMapping(table: Tab, m: Map[String, Int], tableIdx: Int): Seq[Item] = {
-    val out = Seq.newBuilder[Item]
-    var rowIdx = 0
-    while (rowIdx < table.rows.length) {
-      val row = table.rows(rowIdx)
-      val parsed: Option[Item] = try {
-        val firstCell = if (row.nonEmpty) Py.pyStr(row(0)) else ""
-        if (Py.containsAny(Py.lower(firstCell), Rules.headerFirstCellCommercial)) None
-        else {
-          var name = if (m.contains("name")) ilocStr(row, m("name")) else ""
-          val qty = if (m.contains("qty")) Num.parse(iloc(row, m("qty")).orNull) else Some(1.0)
-          val unit = if (m.contains("unit")) ilocStr(row, m("unit")) else ""
-          val price = if (m.contains("price")) Num.parse(iloc(row, m("price")).orNull) else Some(0.0)
-          val total0 = if (m.contains("total")) Num.parse(iloc(row, m("total")).orNull) else None
-          if (isEmptyName(name)) None
-          else if (isServiceRow(name, Rules.serviceRowShort)) None
-          else {
-            name = cleanName(name)
-            val total = backfillIfNone(total0, qty, price)
-            val it = Item.base(name, qty, unit.pyStrip, price, "RUB", total,
-              s"table_${tableIdx}_row_$rowIdx", 0.95)
-            if (validate(it)) Some(it) else None
-          }
-        }
-      } catch { case _: Exception => None }
-      parsed.foreach(out += _)
-      rowIdx += 1
+  private def mappedRow(row: Row, m: Map[String, Int], tableIdx: Int, rowIdx: Int): Option[Item] =
+    if (isHeaderRow(row, Rules.headerFirstCellCommercial)) None
+    else {
+      val r = new MappedRow(row, m)
+      if (isEmptyName(r.name) || isServiceRow(r.name, Rules.serviceRowShort)) None
+      else {
+        val it = Item.base(cleanName(r.name), r.qty, r.unit.pyStrip, r.price, "RUB", r.total,
+          s"table_${tableIdx}_row_$rowIdx", 0.95)
+        if (validate(it)) Some(it) else None
+      }
     }
-    out.result()
-  }
 
   // commercial_parser.py:215-325
-  private def parseByContent(table: Tab, tableIdx: Int): Seq[Item] = {
-    val out = Seq.newBuilder[Item]
-    var rowIdx = 1
-    while (rowIdx < table.rows.length) {
-      val values = table.rowVals(rowIdx)
-      if (values.length >= 4)
-        (try parseRowValues(values, tableIdx, rowIdx) catch { case _: Exception => None })
-          .foreach(out += _)
-      rowIdx += 1
-    }
-    out.result()
-  }
-
-  private def parseRowValues(values: IndexedSeq[String], tableIdx: Int, rowIdx: Int): Option[Item] = {
+  private def contentRow(values: IndexedSeq[String], tableIdx: Int, rowIdx: Int): Option[Item] = {
     if (values.length < 4) return None
     if (!Patterns.matchAt(Patterns.digitsOnly, values(0))) return None
     var name = if (values.length > 1) values(1) else ""
@@ -136,46 +91,24 @@ object CommercialParser {
   }
 
   // -- text path (commercial_parser.py:327-393) --
-  private def parseText(shared: SharedLines): Seq[Item] = {
-    val out = Seq.newBuilder[Item]
-    var lineIdx = 0
-    while (lineIdx < shared.stripped.length) {
-      val line = shared.stripped(lineIdx)
-      if (shared.hasDigit(lineIdx) &&
-          passesStrictLinePrefilter(line, shared.lower(lineIdx), Rules.headerLineCommercial, Rules.serviceLineCommercial))
-        parseLine(line).foreach(it =>
-          out += it.copy(source = s"text_line_$lineIdx", confidence = 0.7))
-      lineIdx += 1
+  protected def parseText(shared: SharedLines): Seq[Item] =
+    eachLine(shared) { i =>
+      val line = shared.stripped(i)
+      val lower = shared.lower(i)
+      val excluded = Py.containsAny(lower, Rules.headerLineCommercial) ||
+        Py.containsAny(lower, Rules.serviceLineCommercial)
+      if (!passesStrictLinePrefilter(line, lower, excluded)) None
+      else atLine(firstMatch(Patterns.commercialPatterns, line)(lineItem), "text_line_", i, 0.7)
     }
-    out.result()
-  }
 
-  private def parseLine(line: String): Option[Item] = {
-    // explicit first-match-wins loop: the iterator.flatMap chain
-    // allocated ~5 wrapper objects per call on the per-line hot path
-    val __ps = Patterns.commercialPatterns
-    var __pi = 0
-    while (__pi < __ps.length) {
-      val p = __ps(__pi)
-      val __r: Option[Item] = {
-      val m = Patterns.cachedMatcher(p, line)
-      if (!m.find()) None
-      else try {
-        var name = m.group("name").pyStrip
-        val qty = Num.parse(m.group("qty"))
-        val unit = Option(m.group("unit")).getOrElse("")
-        val price = Num.parse(m.group("price"))
-        val total0 = Num.parse(m.group("total"))
-        name = cleanName(name)
-        val total = backfillFalsy(total0, qty, price)
-        val it = Item.base(name, qty, unit, price, "RUB", total, "regex_match", 0.85)
-        if (validate(it)) Some(it) else None
-      } catch { case _: Exception => None }
-      }
-      if (__r.isDefined) return __r
-      __pi += 1
-    }
-    None
+  private val lineItem: (Pattern, Matcher) => Option[Item] = (_, m) => {
+    val name = cleanName(m.group("name").pyStrip)
+    val qty = Num.parse(m.group("qty"))
+    val unit = Option(m.group("unit")).getOrElse("")
+    val price = Num.parse(m.group("price"))
+    val total = backfillFalsy(Num.parse(m.group("total")), qty, price)
+    val it = Item.base(name, qty, unit, price, "RUB", total, "regex_match", 0.85)
+    if (validate(it)) Some(it) else None
   }
 
   /** commercial _clean_name also strips the leading tech-spec prefix

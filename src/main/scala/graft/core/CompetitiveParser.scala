@@ -5,26 +5,18 @@ import graft.core.Py.PyStringOps
 import graft.model.Item
 import graft.rules.Rules
 import ParserCommon._
+import java.util.regex.{Matcher, Pattern}
 import scala.collection.mutable
 
 /**
  * Competitive-procedure parser — semantics of the reference CompetitiveParser
  * (app/pipeline/competitive_parser.py). Includes the structured key:value
  * block path (R14) and the token-class table-line splitter (R13).
+ * `parse` throws PyTypeError (mirroring the reference's uncaught TypeError
+ * on `None * float` in _parse_structured_block) — callers treat it as a
+ * whole-parser error.
  */
-object CompetitiveParser {
-
-  /** Throws PyTypeError (mirroring the reference's uncaught TypeError on
-    * `None * float` in _parse_structured_block) — callers treat it as a
-    * whole-parser error. */
-  def parse(text: String, tables: Seq[Tab]): Seq[Item] =
-    parse(new SharedLines(text), tables)
-
-  def parse(shared: SharedLines, tables: Seq[Tab]): Seq[Item] = {
-    val items = tables.zipWithIndex.flatMap { case (t, i) => parseTable(t, i) } ++
-      (if (shared.text != null && shared.text.nonEmpty) parseText(shared) else Nil)
-    dedup(items).filter(validate)
-  }
+object CompetitiveParser extends DocumentParser {
 
   // competitive_parser.py:134-202
   private[core] def identifyColumns(table: Tab): Option[Map[String, Int]] = {
@@ -63,61 +55,26 @@ object CompetitiveParser {
     else mapping.toMap
   }
 
-  private def parseTable(table: Tab, tableIdx: Int): Seq[Item] =
-    try {
-      identifyColumns(table) match {
-        case Some(m) => parseWithMapping(table, m, tableIdx)
-        case None => parseByContent(table, tableIdx)
-      }
-    } catch { case _: Exception => Nil }
+  protected def parseTable(table: Tab, tableIdx: Int): Seq[Item] =
+    mappedOrContent(table, tableIdx, identifyColumns(table), mappedRow, contentRow)
 
-  private def parseWithMapping(table: Tab, m: Map[String, Int], tableIdx: Int): Seq[Item] = {
-    val out = Seq.newBuilder[Item]
-    var rowIdx = 0
-    while (rowIdx < table.rows.length) {
-      val row = table.rows(rowIdx)
-      val parsed: Option[Item] = try {
-        if (rowIdx == 0) None // header skip is positional here (competitive_parser.py:210-212)
-        else {
-          val name = if (m.contains("name")) ilocStr(row, m("name")) else ""
-          val qty = if (m.contains("qty")) Num.parse(iloc(row, m("qty")).orNull) else Some(1.0)
-          val unit = if (m.contains("unit")) ilocStr(row, m("unit")) else ""
-          val price = if (m.contains("price")) Num.parse(iloc(row, m("price")).orNull) else Some(0.0)
-          val currency = if (m.contains("currency")) ilocStr(row, m("currency")) else "RUB"
-          val total0 = if (m.contains("total")) Num.parse(iloc(row, m("total")).orNull) else None
-          val supplier = if (m.contains("supplier")) ilocStr(row, m("supplier")) else ""
-          if (isEmptyName(name)) None
-          else if (isServiceRow(name, Rules.serviceRowShort)) None
-          else {
-            val total = backfillIfNone(total0, qty, price)
-            val cur = { val c = currency.pyStrip; if (c.nonEmpty) c else "RUB" }
-            val it = Item(name.pyStrip, "", qty, unit.pyStrip, price, cur, total,
-              supplier.pyStrip, s"table_${tableIdx}_row_$rowIdx", 0.95)
-            if (validate(it)) Some(it) else None
-          }
-        }
-      } catch { case _: Exception => None }
-      parsed.foreach(out += _)
-      rowIdx += 1
+  private def mappedRow(row: Row, m: Map[String, Int], tableIdx: Int, rowIdx: Int): Option[Item] =
+    if (rowIdx == 0) None // header skip is positional here (competitive_parser.py:210-212)
+    else {
+      val r = new MappedRow(row, m)
+      val currency = r.str("currency", "RUB").pyStrip
+      val supplier = r.str("supplier")
+      if (isEmptyName(r.name) || isServiceRow(r.name, Rules.serviceRowShort)) None
+      else {
+        val it = Item(r.name.pyStrip, "", r.qty, r.unit.pyStrip, r.price,
+          if (currency.nonEmpty) currency else "RUB", r.total,
+          supplier.pyStrip, s"table_${tableIdx}_row_$rowIdx", 0.95)
+        if (validate(it)) Some(it) else None
+      }
     }
-    out.result()
-  }
 
   // competitive_parser.py:257-341
-  private def parseByContent(table: Tab, tableIdx: Int): Seq[Item] = {
-    val out = Seq.newBuilder[Item]
-    var rowIdx = 1
-    while (rowIdx < table.rows.length) {
-      val values = table.rowVals(rowIdx)
-      if (values.length >= 3)
-        (try parseRowValues(values, tableIdx, rowIdx) catch { case _: Exception => None })
-          .foreach(out += _)
-      rowIdx += 1
-    }
-    out.result()
-  }
-
-  private def parseRowValues(values: IndexedSeq[String], tableIdx: Int, rowIdx: Int): Option[Item] = {
+  private def contentRow(values: IndexedSeq[String], tableIdx: Int, rowIdx: Int): Option[Item] = {
     if (values.length < 3) return None
     val name = values(0)
     val numbers = {
@@ -156,29 +113,21 @@ object CompetitiveParser {
   }
 
   // -- text path (competitive_parser.py:343-455,612-679) --
-  private def parseText(shared: SharedLines): Seq[Item] = {
-    val items = mutable.ArrayBuffer.empty[Item]
-    // structured key:value blocks first (T5/R14)
-    items ++= parseStructuredTextShared(shared)
-    // index loop: zipWithIndex materialized a tuple array per turn
-    var lineIdx = 0
-    while (lineIdx < shared.stripped.length) {
-      val line = shared.stripped(lineIdx)
-      if (shared.hasDigit(lineIdx) && passesPrefilter(line, shared.lower(lineIdx))) {
-        parseTableLine(line, lineIdx) match {
-          case Some(it) => items += it
-          case None =>
-            parseLine(line).foreach(it =>
-              items += it.copy(source = s"text_line_$lineIdx", confidence = 0.7))
-        }
+  // structured key:value blocks first (T5/R14), then per line the R13
+  // token splitter, else the line patterns
+  protected def parseText(shared: SharedLines): Seq[Item] =
+    parseStructuredTextShared(shared) ++ eachLine(shared) { i =>
+      val line = shared.stripped(i)
+      val lower = shared.lower(i)
+      val excluded = Py.containsAny(lower, Rules.headerLineCompetitive) ||
+        Py.containsAny(lower, Rules.serviceLineCompetitive)
+      if (!passesStrictLinePrefilter(line, lower, excluded)) None
+      else {
+        val tableLine = parseTableLine(line, i)
+        if (tableLine.isDefined) tableLine
+        else atLine(firstMatch(Patterns.competitivePatterns, line)(lineItem), "text_line_", i, 0.7)
       }
-      lineIdx += 1
     }
-    items.toSeq
-  }
-
-  private def passesPrefilter(line: String, lower: String): Boolean =
-    passesStrictLinePrefilter(line, lower, Rules.headerLineCompetitive, Rules.serviceLineCompetitive)
 
   /** R14 — key:value structured blocks (competitive_parser.py:387-455),
     * evaluated LINE-WISE over the turn's shared stripped lines: no text
@@ -321,45 +270,22 @@ object CompetitiveParser {
     } catch { case _: Exception => None }
   }
 
-  private def parseLine(line: String): Option[Item] = {
-    // explicit first-match-wins loop: the iterator.flatMap chain
-    // allocated ~5 wrapper objects per call on the per-line hot path
-    val __ps = Patterns.competitivePatterns
-    var __pi = 0
-    while (__pi < __ps.length) {
-      val p = __ps(__pi)
-      val __r: Option[Item] = {
-      val m = Patterns.cachedMatcher(p, line)
-      if (!m.find()) None
-      else try {
-        var name = m.group("name").pyStrip
-        val qty = Num.parse(m.group("qty"))
-        var unit = Option(m.group("unit")).getOrElse("")
-        val price = Num.parse(m.group("price"))
-        val currency = Option(m.group("currency")).filter(_.nonEmpty).getOrElse("RUB")
-        var total: Option[Double] = None
-        if (hasGroup(p, "total")) {
-          val g = m.group("total")
-          if (g != null && g.nonEmpty) total = Num.parse(g)
-        }
-        if (total.isEmpty && truthy(qty) && truthy(price)) total = Some(qty.get * price.get)
-        name = Py.pySplit(name).mkString(" ") // ' '.join(name.split())
-        if (unit.nonEmpty) {
-          unit = unit.pyStrip
-          unit = Patterns.cachedMatcher(Patterns.unitCleanup, unit).replaceAll("")
-        }
-        val it = Item(name, "", qty, unit, price, currency, total, "", "regex_match", 0.85)
-        if (validate(it)) Some(it) else None
-      } catch { case _: Exception => None }
-      }
-      if (__r.isDefined) return __r
-      __pi += 1
+  private val lineItem: (Pattern, Matcher) => Option[Item] = (p, m) => {
+    val name = Py.pySplit(m.group("name").pyStrip).mkString(" ") // ' '.join(name.split())
+    val qty = Num.parse(m.group("qty"))
+    var unit = Option(m.group("unit")).getOrElse("")
+    val price = Num.parse(m.group("price"))
+    val currency = Option(m.group("currency")).filter(_.nonEmpty).getOrElse("RUB")
+    var total: Option[Double] = None
+    if (hasGroup(p, "total")) {
+      val g = m.group("total")
+      if (g != null && g.nonEmpty) total = Num.parse(g)
     }
-    None
+    if (total.isEmpty && truthy(qty) && truthy(price)) total = Some(qty.get * price.get)
+    if (unit.nonEmpty) unit = Patterns.cachedMatcher(Patterns.unitCleanup, unit.pyStrip).replaceAll("")
+    val it = Item(name, "", qty, unit, price, currency, total, "", "regex_match", 0.85)
+    if (validate(it)) Some(it) else None
   }
-
-  private def hasGroup(p: java.util.regex.Pattern, g: String): Boolean =
-    p.pattern().contains(s"(?<$g>")
 
   /** competitive_parser.py:577-591 — basic validation. */
   def validate(it: Item): Boolean = validateBasic(it)

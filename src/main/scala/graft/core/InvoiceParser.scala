@@ -5,34 +5,17 @@ import graft.core.Py.PyStringOps
 import graft.model.Item
 import graft.rules.Rules
 import ParserCommon._
+import java.util.regex.{Matcher, Pattern}
 
 /**
  * Invoice (счёт на оплату) parser — semantics of the reference InvoiceParser
  * (app/pipeline/invoice_parser.py).
  */
-object InvoiceParser {
-
-  def parse(text: String, tables: Seq[Tab]): Seq[Item] =
-    parse(new SharedLines(text), tables)
-
-  def parse(shared: SharedLines, tables: Seq[Tab]): Seq[Item] = {
-    val items = tables.zipWithIndex.flatMap { case (t, i) => parseTable(t, i) } ++
-      (if (shared.text != null && shared.text.nonEmpty) parseText(shared) else Nil)
-    dedup(items).filter(validate)
-  }
+object InvoiceParser extends DocumentParser {
 
   // -- column identification (invoice_parser.py:93-146) --
-  private val elifFields: Seq[(String, Seq[String])] = Seq(
-    "number" -> Seq("№", "номер", "позиция"),
-    "article" -> Seq("артикул", "код", "арт"),
-    "name" -> Seq("наименование", "товары", "работы", "услуги", "название"),
-    "qty" -> Seq("количество", "кол-во", "колво"),
-    "unit" -> Seq("ед", "единица", "изм"),
-    "price" -> Seq("цена", "стоимость", "руб"),
-    "total" -> Seq("сумма", "итого", "всего"))
-
   private[core] def identifyColumns(table: Tab): Option[Map[String, Int]] = {
-    var mapping = mapByElifChain(table.header, elifFields).toMap
+    var mapping = mapByElifChain(table.header, Rules.invoiceColumnWords).toMap
     if (mapping.isEmpty) mapping = byPosition(table.nCols)
     if (mapping.contains("name") && (mapping.contains("qty") || mapping.contains("price")))
       Some(mapping)
@@ -47,61 +30,24 @@ object InvoiceParser {
     else if (n >= 5) Map("number" -> 0, "name" -> 1, "qty" -> 2, "price" -> 3, "total" -> 4)
     else Map.empty
 
-  private def parseTable(table: Tab, tableIdx: Int): Seq[Item] =
-    try {
-      identifyColumns(table) match {
-        case Some(m) => parseWithMapping(table, m, tableIdx)
-        case None => parseByContent(table, tableIdx)
-      }
-    } catch { case _: Exception => Nil }
+  protected def parseTable(table: Tab, tableIdx: Int): Seq[Item] =
+    mappedOrContent(table, tableIdx, identifyColumns(table), mappedRow, contentRow)
 
-  private def parseWithMapping(table: Tab, m: Map[String, Int], tableIdx: Int): Seq[Item] = {
-    val out = Seq.newBuilder[Item]
-    var rowIdx = 0
-    while (rowIdx < table.rows.length) {
-      val row = table.rows(rowIdx)
-      val parsed: Option[Item] = try {
-        val firstCell = if (row.nonEmpty) Py.pyStr(row(0)) else ""
-        if (Py.containsAny(Py.lower(firstCell), Rules.headerFirstCellInvoice)) None
-        else {
-          val article = if (m.contains("article")) ilocStr(row, m("article")) else ""
-          var name = if (m.contains("name")) ilocStr(row, m("name")) else ""
-          val qty = if (m.contains("qty")) Num.parse(iloc(row, m("qty")).orNull) else Some(1.0)
-          val unit = if (m.contains("unit")) ilocStr(row, m("unit")) else ""
-          val price = if (m.contains("price")) Num.parse(iloc(row, m("price")).orNull) else Some(0.0)
-          val total0 = if (m.contains("total")) Num.parse(iloc(row, m("total")).orNull) else None
-          if (isEmptyName(name)) None
-          else if (isServiceRow(name, Rules.serviceRowInvoice)) None
-          else {
-            name = Py.cleanName(name)
-            val total = backfillIfNone(total0, qty, price)
-            val it = Item(name, article.pyStrip, qty, unit.pyStrip, price, "RUB", total, "",
-              s"table_${tableIdx}_row_$rowIdx", 0.95)
-            if (validate(it)) Some(it) else None
-          }
-        }
-      } catch { case _: Exception => None }
-      parsed.foreach(out += _)
-      rowIdx += 1
+  private def mappedRow(row: Row, m: Map[String, Int], tableIdx: Int, rowIdx: Int): Option[Item] =
+    if (isHeaderRow(row, Rules.headerFirstCellInvoice)) None
+    else {
+      val r = new MappedRow(row, m)
+      val article = r.str("article")
+      if (isEmptyName(r.name) || isServiceRow(r.name, Rules.serviceRowInvoice)) None
+      else {
+        val it = Item(Py.cleanName(r.name), article.pyStrip, r.qty, r.unit.pyStrip, r.price, "RUB",
+          r.total, "", s"table_${tableIdx}_row_$rowIdx", 0.95)
+        if (validate(it)) Some(it) else None
+      }
     }
-    out.result()
-  }
 
   /** Content-based fallback (invoice_parser.py:246-340). */
-  private def parseByContent(table: Tab, tableIdx: Int): Seq[Item] = {
-    val out = Seq.newBuilder[Item]
-    var rowIdx = 1
-    while (rowIdx < table.rows.length) {
-      val values = table.rowVals(rowIdx)
-      if (values.length >= 5)
-        (try parseRowValues(values, tableIdx, rowIdx) catch { case _: Exception => None })
-          .foreach(out += _)
-      rowIdx += 1
-    }
-    out.result()
-  }
-
-  private def parseRowValues(values: IndexedSeq[String], tableIdx: Int, rowIdx: Int): Option[Item] = {
+  private def contentRow(values: IndexedSeq[String], tableIdx: Int, rowIdx: Int): Option[Item] = {
     if (values.length < 5) return None
     if (!Patterns.matchAt(Patterns.digitsOnly, values(0))) return None
     val article = if (values.length > 1) values(1) else ""
@@ -121,48 +67,23 @@ object InvoiceParser {
   }
 
   // -- text path (invoice_parser.py:342-411) --
-  private def parseText(shared: SharedLines): Seq[Item] = {
-    val out = Seq.newBuilder[Item]
-    var lineIdx = 0
-    while (lineIdx < shared.stripped.length) {
-      val line = shared.stripped(lineIdx)
-      if (shared.hasDigit(lineIdx) &&
-          passesStrictLinePrefilterHits(line, shared.lower(lineIdx),
-            shared.headerInvoice(lineIdx), shared.serviceInvoice(lineIdx)))
-        parseLine(line).foreach(it =>
-          out += it.copy(source = s"text_line_$lineIdx", confidence = 0.7))
-      lineIdx += 1
+  protected def parseText(shared: SharedLines): Seq[Item] =
+    eachLine(shared) { i =>
+      val line = shared.stripped(i)
+      val excluded = shared.headerInvoice(i) || shared.serviceInvoice(i)
+      if (!passesStrictLinePrefilter(line, shared.lower(i), excluded)) None
+      else atLine(firstMatch(Patterns.invoicePatterns, line)(lineItem), "text_line_", i, 0.7)
     }
-    out.result()
-  }
 
-  private def parseLine(line: String): Option[Item] = {
-    // explicit first-match-wins loop: the iterator.flatMap chain
-    // allocated ~5 wrapper objects per call on the per-line hot path
-    val __ps = Patterns.invoicePatterns
-    var __pi = 0
-    while (__pi < __ps.length) {
-      val p = __ps(__pi)
-      val __r: Option[Item] = {
-      val m = Patterns.cachedMatcher(p, line)
-      if (!m.find()) None
-      else try {
-        val article = Option(m.group("article")).getOrElse("")
-        var name = m.group("name").pyStrip
-        val qty = Num.parse(m.group("qty"))
-        val unit = Option(m.group("unit")).getOrElse("")
-        val price = Num.parse(m.group("price"))
-        val total0 = Num.parse(m.group("total"))
-        name = Py.cleanName(name)
-        val total = backfillFalsy(total0, qty, price) // `total if total else qty*price`
-        val it = Item(name, article, qty, unit, price, "RUB", total, "", "regex_match", 0.85)
-        if (validate(it)) Some(it) else None
-      } catch { case _: Exception => None }
-      }
-      if (__r.isDefined) return __r
-      __pi += 1
-    }
-    None
+  private val lineItem: (Pattern, Matcher) => Option[Item] = (_, m) => {
+    val article = Option(m.group("article")).getOrElse("")
+    val name = Py.cleanName(m.group("name").pyStrip)
+    val qty = Num.parse(m.group("qty"))
+    val unit = Option(m.group("unit")).getOrElse("")
+    val price = Num.parse(m.group("price"))
+    val total = backfillFalsy(Num.parse(m.group("total")), qty, price) // `total if total else qty*price`
+    val it = Item(name, article, qty, unit, price, "RUB", total, "", "regex_match", 0.85)
+    if (validate(it)) Some(it) else None
   }
 
   /** invoice_parser.py:491-514 */

@@ -4,6 +4,7 @@ import graft.core.Py.PyStringOps
 
 import graft.model.Item
 import graft.rules.Rules
+import java.util.regex.{Matcher, Pattern}
 import scala.collection.mutable
 
 /** Shared parser machinery (the reference duplicates all of this per parser;
@@ -56,6 +57,116 @@ object ParserCommon {
     }
     out.toSeq
   }
+
+  /** A table row: one cell per column, None for a pandas NaN. */
+  type Row = IndexedSeq[Option[String]]
+
+  /** Item of row or line `i`, if any. A primitive-Int SAM: the row and line
+    * loops call it per index, and Function1[Int, _] would box the index. */
+  trait ItemAt { def apply(i: Int): Option[Item] }
+
+  /** The skeleton of the five reference document parsers (parser.py:44-314
+    * and its invoice/commercial/competitive/universal copies): every table
+    * through [[eachTable]], then, for a non-empty text, the text pass, then
+    * first-wins [[dedup]] and the parser's validation. The text pass runs
+    * outside any catch: an exception there fails the whole parser (the
+    * competitive structured-block TypeError relies on it). */
+  abstract class DocumentParser {
+    protected def parseTable(table: Tab, tableIdx: Int): Seq[Item]
+    protected def parseText(shared: SharedLines): Seq[Item]
+    def validate(it: Item): Boolean
+
+    final def parse(text: String, tables: Seq[Tab]): Seq[Item] =
+      parse(new SharedLines(text), tables)
+
+    final def parse(shared: SharedLines, tables: Seq[Tab]): Seq[Item] = {
+      val items = eachTable(tables)(parseTable) ++
+        (if (shared.text != null && shared.text.nonEmpty) parseText(shared) else Nil)
+      dedup(items).filter(validate)
+    }
+  }
+
+  /** Items of every table in order; a table whose parse throws yields
+    * none (each reference parser's per-table try/except). */
+  def eachTable(tables: Seq[Tab])(parseTable: (Tab, Int) => Seq[Item]): Seq[Item] = {
+    val out = Seq.newBuilder[Item]
+    val it = tables.iterator
+    var tableIdx = 0
+    while (it.hasNext) {
+      val table = it.next()
+      out ++= (try parseTable(table, tableIdx) catch { case _: Exception => Nil })
+      tableIdx += 1
+    }
+    out.result()
+  }
+
+  /** Items of rows `from` until `until` (at most the table's end); a row
+    * whose parse throws is dropped (the reference's per-row try/except). */
+  def eachRow(table: Tab, from: Int, until: Int = Int.MaxValue)(parseRow: ItemAt): Seq[Item] = {
+    val out = Seq.newBuilder[Item]
+    var rowIdx = from
+    while (rowIdx < until && rowIdx < table.rows.length) {
+      val it = try parseRow(rowIdx) catch { case _: Exception => None }
+      if (it.isDefined) out += it.get
+      rowIdx += 1
+    }
+    out.result()
+  }
+
+  /** The mapping-or-content table pass of the invoice, commercial and
+    * competitive parsers: with a column mapping, every row from
+    * row 0 through `mapped`; without one, the content fallback over rows
+    * 1.. on each row's non-empty cell values. */
+  def mappedOrContent(table: Tab, tableIdx: Int, mapping: Option[Map[String, Int]],
+                      mapped: (Row, Map[String, Int], Int, Int) => Option[Item],
+                      content: (IndexedSeq[String], Int, Int) => Option[Item]): Seq[Item] =
+    mapping match {
+      case Some(m) => eachRow(table, 0)(rowIdx => mapped(table.rows(rowIdx), m, tableIdx, rowIdx))
+      case None => eachRow(table, 1)(rowIdx => content(table.rowVals(rowIdx), tableIdx, rowIdx))
+    }
+
+  /** The text-lines pass: every stripped line of at least
+    * `Rules.minLineLength` chars that carries a digit (an item needs a
+    * parseable qty and price) goes to `lineItem` by index. */
+  def eachLine(shared: SharedLines)(lineItem: ItemAt): Seq[Item] = {
+    val out = Seq.newBuilder[Item]
+    var lineIdx = 0
+    while (lineIdx < shared.stripped.length) {
+      if (shared.stripped(lineIdx).length >= Rules.minLineLength && shared.hasDigit(lineIdx)) {
+        val it = lineItem(lineIdx)
+        if (it.isDefined) out += it.get
+      }
+      lineIdx += 1
+    }
+    out.result()
+  }
+
+  /** `it` re-sourced as `<source><lineIdx>` with `confidence`. */
+  def atLine(it: Option[Item], source: String, lineIdx: Int, confidence: Double): Option[Item] =
+    if (it.isEmpty) it else Some(it.get.copy(source = source + lineIdx, confidence = confidence))
+
+  /** First pattern, in order, that finds a match in `line` and whose
+    * `build` yields an item; a `build` that throws (a missing group, a
+    * None*float) yields none, as the reference's per-pattern try/except.
+    * Parsers pass a function value they hold, so the per-line call
+    * allocates no closure. */
+  def firstMatch(patterns: Seq[Pattern], line: String)
+                (build: (Pattern, Matcher) => Option[Item]): Option[Item] = {
+    var i = 0
+    while (i < patterns.length) {
+      val p = patterns(i)
+      val m = Patterns.cachedMatcher(p, line)
+      if (m.find()) {
+        val it = try build(p, m) catch { case _: Exception => None }
+        if (it.isDefined) return it
+      }
+      i += 1
+    }
+    None
+  }
+
+  /** Does `p` declare the named group `g`? */
+  def hasGroup(p: Pattern, g: String): Boolean = p.pattern().contains(s"(?<$g>")
 
   /** Header-synonym column mapping (parser.py:131-150 /
     * universal_parser.py:470-493 / commercial / competitive). The
@@ -136,8 +247,71 @@ object ParserCommon {
   def iloc(row: IndexedSeq[Option[String]], i: Int): Option[String] =
     if (i < 0 || i >= row.length) throw new RowIndexError else row(i)
 
-  /** `str(row.iloc[i])` (missing -> "None"). */
-  def ilocStr(row: IndexedSeq[Option[String]], i: Int): String = Py.pyStr(iloc(row, i))
+  /** Is the row a repeated header: does its first cell (`str(row.iloc[0])`,
+    * lowered) contain one of `words`? */
+  def isHeaderRow(row: Row, words: Seq[String]): Boolean =
+    Py.containsAnyLowered(if (row.nonEmpty) Py.pyStr(row(0)) else "", words)
+
+  private val one = Some(1.0)
+  private val zero = Some(0.0)
+
+  /** A row read through a document parser's column mapping (the mapped
+    * table pass of parser.py, invoice_parser.py and their copies):
+    * `str(row.iloc[m[f]])` for a mapped field, a default otherwise; qty
+    * defaults to 1, price to 0, and an absent total is back-filled as
+    * qty*price. The constructor reads name, qty, unit, price and total,
+    * which every such parser reads; any other field is read through [[str]]
+    * where the parser's reference reads it, since a mapped index past the
+    * row's end raises [[RowIndexError]] and drops the row. */
+  final class MappedRow(row: Row, m: Map[String, Int]) {
+    def str(field: String, default: String = ""): String =
+      if (m.contains(field)) Py.pyStr(iloc(row, m(field))) else default
+    private def num(field: String, default: Option[Double]): Option[Double] =
+      if (m.contains(field)) Num.parse(iloc(row, m(field)).orNull) else default
+    val name: String = str("name")
+    val qty: Option[Double] = num("qty", one)
+    val unit: String = str("unit")
+    val price: Option[Double] = num("price", zero)
+    val total: Option[Double] = backfillIfNone(num("total", None), qty, price)
+  }
+
+  /** Cells of a product-table row read through a fixed column map
+    * (table_extractor.py, precise_table_parser.py, supplier_profiles.py). */
+  final case class ProductCells(name: String, article: String, unit: String,
+                                qty: Option[Double], price: Option[Double], total: Option[Double]) {
+    /** The row's item at confidence 0.95, or None without a name, qty or price. */
+    def item(source: String): Option[Item] =
+      if (name == null || name.isEmpty || qty.isEmpty || price.isEmpty) None
+      else Some(Item(name, article, qty, unit, price, "RUB", backfillIfNone(total, qty, price), "",
+        source, 0.95))
+  }
+
+  /** [[ProductCells]] of `row`: a column past the row's end is skipped;
+    * numbers parse, NaN -> None; the name is null when unmapped or NaN;
+    * article and unit are "" when unmapped or past the end and null when
+    * NaN (the reference item dict keeps the NaN as None). `norm` is the
+    * parser's cell cleanup. */
+  def readProductCells(row: Row, m: Map[String, Int], norm: String => String): ProductCells = {
+    var name: String = null
+    var article, unit = ""
+    var qty, price, total: Option[Double] = None
+    m.foreach { case (field, colIdx) =>
+      if (colIdx < row.length) {
+        val cell = row(colIdx)
+        val s = if (cell.isDefined) cell.get else null
+        field match {
+          case "qty" => if (s != null) qty = Num.parse(s)
+          case "price" => if (s != null) price = Num.parse(s)
+          case "total" => if (s != null) total = Num.parse(s)
+          case "name" => if (s != null) name = norm(s)
+          case "article" => article = if (s != null) norm(s) else null
+          case "unit" => unit = if (s != null) norm(s) else null
+          case _ => // "number": read but never used by the item
+        }
+      }
+    }
+    ProductCells(name, article, unit, qty, price, total)
+  }
 
   /** Non-null, non-empty stripped cell values of a row (the content-fallback
     * `row_values` collection, invoice_parser.py:256-259). Single builder
@@ -215,30 +389,14 @@ object ParserCommon {
     false
   }
 
-  /** Common text-line prefilter used by invoice/commercial text paths
-    * (invoice_parser.py:348-362): strip, len>=10, not header/service line,
-    * not all-numeric, has a letter, no itogo phrase. */
-  def passesStrictLinePrefilter(line: String, lower: String,
-                                headerWords: Seq[String], serviceWords: Seq[String]): Boolean = {
-    if (line.isEmpty || line.length < Rules.minLineLength) return false
-    if (Py.containsAny(lower, headerWords) || Py.containsAny(lower, serviceWords)) return false
-    if (Patterns.matchAt(Patterns.allNumericLine, line)) return false
-    if (!Patterns.search(Patterns.hasLetter, line)) return false
-    if (Patterns.search(Patterns.itogoLine, lower)) return false
-    true
-  }
-
-  /** Variant with precomputed header/service hits (pure-boolean conditions —
-    * evaluation order does not affect the outcome). */
-  def passesStrictLinePrefilterHits(line: String, lower: String,
-                                    headerHit: Boolean, serviceHit: Boolean): Boolean = {
-    if (line.isEmpty || line.length < Rules.minLineLength) return false
-    if (headerHit || serviceHit) return false
-    if (Patterns.matchAt(Patterns.allNumericLine, line)) return false
-    if (!Patterns.search(Patterns.hasLetter, line)) return false
-    if (Patterns.search(Patterns.itogoLine, lower)) return false
-    true
-  }
+  /** The strict text-line prefilter of the invoice, commercial and
+    * competitive text paths (invoice_parser.py:348-362): not a header or
+    * service line (`excluded`, the caller's keyword hits), not
+    * all-numeric, has a letter, no itogo phrase. The length gate is
+    * [[eachLine]]'s. */
+  def passesStrictLinePrefilter(line: String, lower: String, excluded: Boolean): Boolean =
+    !excluded && !Patterns.matchAt(Patterns.allNumericLine, line) &&
+      Patterns.search(Patterns.hasLetter, line) && !Patterns.search(Patterns.itogoLine, lower)
 
   /** Service-row check on an item name. */
   def isServiceRow(name: String, words: Seq[String]): Boolean =

@@ -81,10 +81,8 @@ object SupplierProfiles {
   }
 
   private def parseDocument(p: Profile, text: String, tables: Seq[Tab]): Seq[Item] = {
-    val items = tables.zipWithIndex.flatMap { case (t, i) =>
-      try {
-        if (isCompatibleTable(p, t)) parseTableWithProfile(p, t, i) else Nil
-      } catch { case _: Exception => Nil }
+    val items = eachTable(tables) { (t, i) =>
+      if (isCompatibleTable(p, t)) parseTableWithProfile(p, t, i) else Nil
     }
     // text path uses profile item_patterns — empty for all default profiles,
     // so it yields nothing (supplier_profiles.py:209-241); omitted.
@@ -101,50 +99,11 @@ object SupplierProfiles {
     p.headerPatterns.exists(pat => Patterns.search(Patterns.profilePattern(pat), headersText))
   }
 
-  private def parseTableWithProfile(p: Profile, table: Tab, tableIdx: Int): Seq[Item] = {
-    val out = Seq.newBuilder[Item]
-    var rowIdx = 0
-    while (rowIdx < table.rows.length) {
+  private def parseTableWithProfile(p: Profile, table: Tab, tableIdx: Int): Seq[Item] =
+    eachRow(table, 0) { rowIdx =>
       val row = table.rows(rowIdx)
-      val parsed: Option[Item] = try {
-        val firstCell = if (row.nonEmpty) Py.pyStr(row(0)) else ""
-        if (Py.containsAny(Py.lower(firstCell), Rules.headerFirstCellTable)) None
-        else {
-          var name: Option[String] = None
-          var article: Option[String] = None
-          var unit: Option[String] = None
-          var articleMapped, unitMapped = false
-          var qty: Option[Double] = None
-          var price: Option[Double] = None
-          var total: Option[Double] = None
-          p.columnMapping.foreach { case (field, colIdx) =>
-            if (colIdx < row.length) {
-              val cell = row(colIdx)
-              field match {
-                case "qty" => qty = cell.flatMap(Num.parse)
-                case "price" => price = cell.flatMap(Num.parse)
-                case "total" => total = cell.flatMap(Num.parse)
-                case "name" => name = cell.map(_.pyStrip)
-                case "article" => articleMapped = true; article = cell.map(_.pyStrip)
-                case "unit" => unitMapped = true; unit = cell.map(_.pyStrip)
-                case _ => // number — extracted but unused in the item
-              }
-            }
-          }
-          if (name.forall(_.isEmpty) || qty.isEmpty || price.isEmpty) None
-          else {
-            val totalF = backfillIfNone(total, qty, price)
-            // mapped-but-missing cells stay None in the reference item dict
-            val articleS = if (articleMapped) article.orNull else ""
-            val unitS = if (unitMapped) unit.orNull else ""
-            Some(Item(name.get, articleS, qty, unitS, price, "RUB",
-              totalF, "", s"profile_${p.id}_table_${tableIdx}_row_$rowIdx", 0.95))
-          }
-        }
-      } catch { case _: Exception => None }
-      parsed.foreach(out += _)
-      rowIdx += 1
+      if (isHeaderRow(row, Rules.headerFirstCellTable)) None
+      else readProductCells(row, p.columnMapping, Py.pyStrip)
+        .item(s"profile_${p.id}_table_${tableIdx}_row_$rowIdx")
     }
-    out.result()
-  }
 }

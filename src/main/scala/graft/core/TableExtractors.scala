@@ -5,7 +5,6 @@ import graft.core.Py.PyStringOps
 import graft.model.Item
 import graft.rules.Rules
 import ParserCommon._
-import scala.collection.mutable
 
 /**
  * Table-only extractors — semantics of the reference TableExtractor
@@ -15,22 +14,10 @@ import scala.collection.mutable
  */
 object TableExtractor {
 
-  private val elifFields: Seq[(String, Seq[String])] = Seq(
-    "number" -> Seq("№", "номер", "позиция"),
-    "article" -> Seq("артикул", "код", "арт"),
-    "name" -> Seq("наименование", "товары", "работы", "услуги", "название"),
-    "qty" -> Seq("количество", "кол-во", "колво"),
-    "unit" -> Seq("ед", "единица", "изм"),
-    "price" -> Seq("цена", "стоимость", "руб"),
-    "total" -> Seq("сумма", "итого", "всего"))
-
-  def parse(tables: Seq[Tab]): Seq[Item] =
-    tables.zipWithIndex.flatMap { case (t, i) =>
-      try extractFromTable(t, i) catch { case _: Exception => Nil }
-    }
+  def parse(tables: Seq[Tab]): Seq[Item] = eachTable(tables)(extractFromTable)
 
   private[core] def identifyColumns(table: Tab): Option[Map[String, Int]] = {
-    var mapping = mapByElifChain(table.header, elifFields).toMap
+    var mapping = mapByElifChain(table.header, Rules.invoiceColumnWords).toMap
     if (mapping.isEmpty) mapping = byPosition(table.nCols)
     if (mapping.contains("name") && (mapping.contains("qty") || mapping.contains("price")))
       Some(mapping)
@@ -44,68 +31,17 @@ object TableExtractor {
     else if (n >= 4) Map("name" -> 0, "qty" -> 1, "price" -> 2, "total" -> 3)
     else Map.empty
 
-  private def extractFromTable(table: Tab, tableIdx: Int): Seq[Item] = {
+  private def extractFromTable(table: Tab, tableIdx: Int): Seq[Item] =
     identifyColumns(table) match {
       case None => Nil
       case Some(m) =>
-        val out = Seq.newBuilder[Item]
-        var rowIdx = 0
-        while (rowIdx < table.rows.length) {
+        eachRow(table, 0) { rowIdx =>
           val row = table.rows(rowIdx)
-          (try {
-            val firstCell = if (row.nonEmpty) Py.pyStr(row(0)) else ""
-            if (Py.containsAnyLowered(firstCell, Rules.headerFirstCellTable)) None
-            else extractItemFromRow(row, m, tableIdx, rowIdx)
-              .filter(validateProduct(_, Rules.excludeWordsTableExtractor))
-          } catch { case _: Exception => None }).foreach(out += _)
-          rowIdx += 1
+          if (isHeaderRow(row, Rules.headerFirstCellTable)) None
+          else readProductCells(row, m, Py.pyStrip).item(s"table_${tableIdx}_row_$rowIdx")
+            .filter(validateProduct(_, Rules.excludeWordsTableExtractor))
         }
-        out.result()
     }
-  }
-
-  // string-field state: 0 = unmapped/out-of-range -> "", 1 = mapped cell
-  // was NaN -> null (table_extractor.py:196-197), 2 = value
-  private def extractItemFromRow(row: IndexedSeq[Option[String]], m: Map[String, Int],
-                                 tableIdx: Int, rowIdx: Int): Option[Item] = {
-    try {
-      var nameV: String = null
-      var artState = 0; var artV: String = null
-      var unitState = 0; var unitV: String = null
-      var qty: Option[Double] = None
-      var price: Option[Double] = None
-      var total: Option[Double] = None
-      m.foreach { case (field, colIdx) =>
-        if (colIdx < row.length) {
-          val cell = row(colIdx)
-          field match {
-            case "qty" => cell.foreach(v => qty = Num.parse(v))
-            case "price" => cell.foreach(v => price = Num.parse(v))
-            case "total" => cell.foreach(v => total = Num.parse(v))
-            case "name" => cell.foreach(v => nameV = v.pyStrip)
-            case "article" => cell match {
-              case Some(v) => artState = 2; artV = v.pyStrip
-              case None => artState = 1
-            }
-            case "unit" => cell match {
-              case Some(v) => unitState = 2; unitV = v.pyStrip
-              case None => unitState = 1
-            }
-            case _ => // "number": collected but never read by the item
-          }
-        }
-      }
-      if (nameV == null || nameV.isEmpty || qty.isEmpty || price.isEmpty) None
-      else {
-        val totalB = backfillIfNone(total, qty, price)
-        def strOrNull(state: Int, v: String): String =
-          if (state == 0) "" else if (state == 1) null else v
-        Some(Item(nameV, strOrNull(artState, artV), qty,
-          strOrNull(unitState, unitV), price, "RUB", totalB, "",
-          s"table_${tableIdx}_row_$rowIdx", 0.95))
-      }
-    } catch { case _: Exception => None }
-  }
 }
 
 object PreciseTableParser {
@@ -119,10 +55,7 @@ object PreciseTableParser {
     "price" -> Seq("цена", "стоимость", "руб", "без ндс"),
     "total" -> Seq("сумма", "итого", "всего", "с ндс"))
 
-  def parse(tables: Seq[Tab]): Seq[Item] =
-    tables.zipWithIndex.flatMap { case (t, i) =>
-      try extractFromTable(t, i) catch { case _: Exception => Nil }
-    }
+  def parse(tables: Seq[Tab]): Seq[Item] = eachTable(tables)(extractFromTable)
 
   private[core] def identifyColumns(table: Tab): Option[Map[String, Int]] = {
     var mapping = mapByElifChain(table.header, elifFields, collapseWs = true).toMap
@@ -141,99 +74,49 @@ object PreciseTableParser {
     else if (n >= 4) Map("name" -> 0, "qty" -> 1, "price" -> 2, "total" -> 3)
     else Map.empty
 
-  private def extractFromTable(table: Tab, tableIdx: Int): Seq[Item] = {
+  private def extractFromTable(table: Tab, tableIdx: Int): Seq[Item] =
     identifyColumns(table) match {
       case None => Nil
       case Some(m) =>
-        val out = Seq.newBuilder[Item]
-        var rowIdx = 0
-        while (rowIdx < table.rows.length) {
+        eachRow(table, 0) { rowIdx =>
           val row = table.rows(rowIdx)
-          (try {
-            if (isHeaderRow(row) || isServiceRowAnyCell(row)) None
-            else extractItemFromRow(row, m, tableIdx, rowIdx)
-              .filter(validateProduct(_, Rules.excludeWordsPrecise))
-          } catch { case _: Exception => None }).foreach(out += _)
-          rowIdx += 1
+          if (isHeaderRow(row, Rules.headerFirstCellPrecise) || isServiceRowAnyCell(row)) None
+          else extractItemFromRow(row, m, tableIdx, rowIdx)
+            .filter(validateProduct(_, Rules.excludeWordsPrecise))
         }
-        out.result()
     }
-  }
-
-  private def isHeaderRow(row: IndexedSeq[Option[String]]): Boolean = {
-    val firstCell = if (row.nonEmpty) Py.pyStr(row(0)) else ""
-    Py.containsAnyLowered(firstCell, Rules.headerFirstCellPrecise)
-  }
 
   /** F5 — ANY cell containing an exclude word kills the row
     * (precise_table_parser.py:266-281). */
-  private def isServiceRowAnyCell(row: IndexedSeq[Option[String]]): Boolean =
+  private def isServiceRowAnyCell(row: Row): Boolean =
     row.exists {
       case Some(cell) => Py.containsAnyLowered(cell, Rules.excludeWordsPrecise)
       case None => false
     }
 
-  // same local-state layout as TableExtractor.extractItemFromRow
-  private def extractItemFromRow(row: IndexedSeq[Option[String]], m: Map[String, Int],
-                                 tableIdx: Int, rowIdx: Int): Option[Item] = {
-    try {
-      var nameV: String = null
-      var artState = 0; var artV: String = null
-      var unitState = 0; var unitV: String = null
-      var qty: Option[Double] = None
-      var price: Option[Double] = None
-      var total: Option[Double] = None
-      m.foreach { case (field, colIdx) =>
-        if (colIdx < row.length) {
-          val cell = row(colIdx)
-          field match {
-            case "qty" => cell.foreach(v => qty = Num.parse(v))
-            case "price" => cell.foreach(v => price = Num.parse(v))
-            case "total" => cell.foreach(v => total = Num.parse(v))
-            case "name" => cell.foreach(v => nameV = Py.collapseWs(v))
-            case "article" => cell match {
-              case Some(v) => artState = 2; artV = Py.collapseWs(v)
-              case None => artState = 1
-            }
-            case "unit" => cell match {
-              case Some(v) => unitState = 2; unitV = Py.collapseWs(v)
-              case None => unitState = 1
-            }
-            case _ => // "number": collected but never read by the item
-          }
+  private def extractItemFromRow(row: Row, m: Map[String, Int], tableIdx: Int, rowIdx: Int): Option[Item] = {
+    val cells = readProductCells(row, m, Py.collapseWs)
+    var name = cells.name
+    var unit = cells.unit
+    // neighbor-cell unit lookup (M4, precise_table_parser.py:301-308):
+    // fires when the mapped unit cell is absent, NaN, or empty
+    if (m.contains("unit") && (unit == null || unit.isEmpty)) {
+      val unitCol = m("unit")
+      if (unitCol + 1 < row.length) row(unitCol + 1).foreach { uv =>
+        val u = uv.pyStrip
+        if (u.nonEmpty && u != "None" && u.length <= 5) unit = u
+      }
+    }
+    // split-header name merge (M4, precise_table_parser.py:310-320)
+    if (m.contains("name") && name != null && name.nonEmpty) {
+      val nameCol = m("name")
+      (1 to 4).foreach { i =>
+        if (nameCol + i < row.length) row(nameCol + i).foreach { nv =>
+          val n = nv.pyStrip
+          if (n.nonEmpty && n != "None" && n.length > 2) name = name + " " + Py.collapseWs(n)
         }
       }
-      // neighbor-cell unit lookup (M4, precise_table_parser.py:301-308):
-      // fires when the mapped unit cell is absent, NaN, or empty
-      if (m.contains("unit") && (unitState != 2 || unitV.isEmpty)) {
-        val unitCol = m("unit")
-        if (unitCol + 1 < row.length) row(unitCol + 1).foreach { uv =>
-          val u = uv.pyStrip
-          if (u.nonEmpty && u != "None" && u.length <= 5) { unitState = 2; unitV = u }
-        }
-      }
-      // split-header name merge (M4, precise_table_parser.py:310-320)
-      if (m.contains("name") && nameV != null && nameV.nonEmpty) {
-        val nameCol = m("name")
-        var merged = nameV
-        (1 to 4).foreach { i =>
-          if (nameCol + i < row.length) row(nameCol + i).foreach { nv =>
-            val n = nv.pyStrip
-            if (n.nonEmpty && n != "None" && n.length > 2)
-              merged = merged + " " + Py.collapseWs(n)
-          }
-        }
-        nameV = merged
-      }
-      if (nameV == null || nameV.isEmpty || qty.isEmpty || price.isEmpty) None
-      else {
-        val totalB = if (total.isEmpty && truthy(qty) && truthy(price)) Some(qty.get * price.get) else total
-        def strOrNull(state: Int, v: String): String =
-          if (state == 0) "" else if (state == 1) null else v
-        Some(Item(nameV, strOrNull(artState, artV), qty,
-          strOrNull(unitState, unitV), price, "RUB", totalB, "",
-          s"table_${tableIdx}_row_$rowIdx", 0.95))
-      }
-    } catch { case _: Exception => None }
+    }
+    cells.copy(name = name, unit = unit).item(s"table_${tableIdx}_row_$rowIdx")
   }
 }

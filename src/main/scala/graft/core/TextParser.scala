@@ -5,49 +5,30 @@ import graft.core.Py.PyStringOps
 import graft.model.Item
 import graft.rules.Rules
 import ParserCommon._
+import java.util.regex.{Matcher, Pattern}
 
 /**
  * Generic text/table parser — semantics of the reference TextParser
  * (app/pipeline/parser.py:44-314): tables pass, then text-lines pass,
  * first-wins dedup, basic validation.
  */
-object TextParser {
+object TextParser extends DocumentParser {
 
-  def parse(text: String, tables: Seq[Tab]): Seq[Item] =
-    parse(new SharedLines(text), tables)
-
-  def parse(shared: SharedLines, tables: Seq[Tab]): Seq[Item] = {
-    val items = tables.zipWithIndex.flatMap { case (t, i) => parseTable(t, i) } ++
-      (if (shared.text != null && shared.text.nonEmpty) parseTextLines(shared) else Nil)
-    dedup(items).filter(validateBasic)
-  }
-
-  private def parseTable(table: Tab, tableIdx: Int): Seq[Item] = {
-    try {
-      val mapping = mapBySynonyms(table, Rules.textColumnPatterns, clean = false)
-      // require name + >=2 fields (parser.py:147)
-      if (mapping.contains("name") && mapping.size >= 2)
-        parseWithMapping(table, mapping.toMap, tableIdx)
-      else
-        parseFallback(table, tableIdx)
-    } catch { case _: Exception => Nil }
-  }
-
-  private def parseWithMapping(table: Tab, m: Map[String, Int], tableIdx: Int): Seq[Item] =
-    table.rows.zipWithIndex.flatMap { case (row, rowIdx) =>
-      try {
-        val name = if (m.contains("name")) ilocStr(row, m("name")) else ""
-        val qty = if (m.contains("qty")) Num.parse(iloc(row, m("qty")).orNull) else Some(1.0)
-        val unit = if (m.contains("unit")) ilocStr(row, m("unit")) else ""
-        val price = if (m.contains("price")) Num.parse(iloc(row, m("price")).orNull) else Some(0.0)
-        val currency = if (m.contains("currency")) ilocStr(row, m("currency")) else "RUB"
-        val total0 = if (m.contains("total")) Num.parse(iloc(row, m("total")).orNull) else None
-        val total = backfillIfNone(total0, qty, price)
-        Some(Item.base(name, qty, unit, price, currency, total,
+  protected def parseTable(table: Tab, tableIdx: Int): Seq[Item] = {
+    val mapping = mapBySynonyms(table, Rules.textColumnPatterns, clean = false)
+    // require name + >=2 fields (parser.py:147)
+    if (mapping.contains("name") && mapping.size >= 2) {
+      val m = mapping.toMap
+      eachRow(table, 0) { rowIdx =>
+        val r = new MappedRow(table.rows(rowIdx), m)
+        Some(Item.base(r.name, r.qty, r.unit, r.price, r.str("currency", "RUB"), r.total,
           s"table_${tableIdx}_row_$rowIdx", 0.9))
-      } catch { case _: Exception => None }
-    }
+      }
+    } else parseFallback(table, tableIdx)
+  }
 
+  /** Row-text fallback. It has no per-row try/except: a row that throws
+    * ends the whole table, so it is not an [[eachRow]]. */
   private def parseFallback(table: Tab, tableIdx: Int): Seq[Item] =
     table.rows.zipWithIndex.flatMap { case (row, rowIdx) =>
       // ' '.join(str(cell) for cell in row if notna) (parser.py:187)
@@ -57,47 +38,25 @@ object TextParser {
       else None
     }
 
-  private def parseTextLines(shared: SharedLines): Seq[Item] = {
-    val out = Seq.newBuilder[Item]
-    var lineIdx = 0
-    while (lineIdx < shared.stripped.length) {
-      val line = shared.stripped(lineIdx)
-      if (!line.isEmpty && line.length >= Rules.minLineLength && shared.hasDigit(lineIdx))
-        parseSingleLine(line).foreach(it =>
-          out += it.copy(source = s"text_line_$lineIdx", confidence = 0.6))
-      lineIdx += 1
-    }
-    out.result()
-  }
+  protected def parseText(shared: SharedLines): Seq[Item] =
+    eachLine(shared)(i => atLine(parseSingleLine(shared.stripped(i)), "text_line_", i, 0.6))
 
   /** Try patterns R1-R3 in order; first VALID match wins (parser.py:216-245). */
-  def parseSingleLine(line: String): Option[Item] = {
-    // explicit first-match-wins loop: the iterator.flatMap chain
-    // allocated ~5 wrapper objects per call on the per-line hot path
-    val __ps = Patterns.textPatterns
-    var __pi = 0
-    while (__pi < __ps.length) {
-      val p = __ps(__pi)
-      val __r: Option[Item] = {
-      val m = Patterns.cachedMatcher(p, line)
-      if (!m.find()) None
-      else try {
-        val name = m.group("name").pyStrip
-        val qty = Num.parse(m.group("qty"))
-        // m.group("unit") THROWS when the pattern lacks the group — mirroring
-        // Python's IndexError that makes pattern 3 (no unit group) dead code
-        // in the reference (parser.py:222-231 under except).
-        val unit = Option(m.group("unit")).getOrElse("")
-        val price = Num.parse(m.group("price"))
-        val currency = Option(m.group("currency")).filter(_.nonEmpty).getOrElse("RUB")
-        val total = if (truthy(qty) && truthy(price)) Some(qty.get * price.get) else None
-        val it = Item.base(name, qty, unit, price, currency, total, "regex_match", 0.8)
-        if (validateBasic(it)) Some(it) else None
-      } catch { case _: Exception => None }
-      }
-      if (__r.isDefined) return __r
-      __pi += 1
-    }
-    None
+  def parseSingleLine(line: String): Option[Item] = firstMatch(Patterns.textPatterns, line)(lineItem)
+
+  private val lineItem: (Pattern, Matcher) => Option[Item] = (_, m) => {
+    val name = m.group("name").pyStrip
+    val qty = Num.parse(m.group("qty"))
+    // m.group("unit") THROWS when the pattern lacks the group — mirroring
+    // Python's IndexError that makes pattern 3 (no unit group) dead code
+    // in the reference (parser.py:222-231 under except).
+    val unit = Option(m.group("unit")).getOrElse("")
+    val price = Num.parse(m.group("price"))
+    val currency = Option(m.group("currency")).filter(_.nonEmpty).getOrElse("RUB")
+    val total = if (truthy(qty) && truthy(price)) Some(qty.get * price.get) else None
+    val it = Item.base(name, qty, unit, price, currency, total, "regex_match", 0.8)
+    if (validateBasic(it)) Some(it) else None
   }
+
+  def validate(it: Item): Boolean = validateBasic(it)
 }

@@ -5,6 +5,7 @@ import graft.core.Py.PyStringOps
 import graft.model.Item
 import graft.rules.Rules
 import ParserCommon._
+import java.util.regex.{Matcher, Pattern}
 
 /**
  * Universal parser core (`_parse_universal`) — semantics of the reference
@@ -12,26 +13,18 @@ import ParserCommon._
  * 297-831): synonym mapping -> positional fallback -> content analysis for
  * tables; lenient prefilter + two regex patterns for text.
  */
-object UniversalCoreParser {
+object UniversalCoreParser extends DocumentParser {
 
-  def parse(text: String, tables: Seq[Tab]): Seq[Item] =
-    parse(new SharedLines(text), tables)
-
-  def parse(shared: SharedLines, tables: Seq[Tab]): Seq[Item] = {
-    val items = tables.zipWithIndex.flatMap { case (t, i) => parseTable(t, i) } ++
-      (if (shared.text != null && shared.text.nonEmpty) parseText(shared) else Nil)
-    dedup(items).filter(validate)
+  protected def parseTable(table: Tab, tableIdx: Int): Seq[Item] = {
+    val bySyn = mapBySynonyms(table, Rules.universalColumnSynonyms, clean = true).toMap
+    val mapping: Map[String, Int] =
+      if (bySyn.contains("name") && bySyn.size >= 2) bySyn
+      else byPositionUniversal(table)
+    if (mapping.nonEmpty)
+      eachRow(table, 0)(rowIdx => mappedRow(table.rows(rowIdx), mapping, tableIdx, rowIdx))
+    else // content analysis over rows 1..5 (universal_parser.py:349-468)
+      eachRow(table, 1, until = 6)(rowIdx => analyzeRowStructure(table.rowVals(rowIdx), tableIdx, rowIdx))
   }
-
-  private def parseTable(table: Tab, tableIdx: Int): Seq[Item] =
-    try {
-      val bySyn = mapBySynonyms(table, Rules.universalColumnSynonyms, clean = true).toMap
-      val mapping: Map[String, Int] =
-        if (bySyn.contains("name") && bySyn.size >= 2) bySyn
-        else byPositionUniversal(table)
-      if (mapping.nonEmpty) parseWithMapping(table, mapping, tableIdx)
-      else parseByContent(table, tableIdx)
-    } catch { case _: Exception => Nil }
 
   /** universal_parser.py:495-571 — header-keyword-guarded + count heuristics. */
   private[core] def byPositionUniversal(table: Tab): Map[String, Int] = {
@@ -64,135 +57,76 @@ object UniversalCoreParser {
     mapping
   }
 
-  private def parseWithMapping(table: Tab, m: Map[String, Int], tableIdx: Int): Seq[Item] =
-    table.rows.zipWithIndex.flatMap { case (row, rowIdx) =>
-      try {
-        val firstCell = if (row.nonEmpty) Py.pyStr(row(0)) else ""
-        if (Py.containsAnyLowered(firstCell, Rules.headerFirstCellUniversal)) None
-        else {
-          val number = if (m.contains("number")) ilocStr(row, m("number")) else ""
-          val article = if (m.contains("article")) ilocStr(row, m("article")) else ""
-          var name = if (m.contains("name")) ilocStr(row, m("name")) else ""
-          val qty = if (m.contains("qty")) Num.parse(iloc(row, m("qty")).orNull) else Some(1.0)
-          val unit = if (m.contains("unit")) ilocStr(row, m("unit")) else ""
-          val price = if (m.contains("price")) Num.parse(iloc(row, m("price")).orNull) else Some(0.0)
-          val total0 = if (m.contains("total")) Num.parse(iloc(row, m("total")).orNull) else None
-          val _ = number
-          if (isEmptyName(name)) None
-          else if (isServiceRow(name, Rules.serviceRowInvoice)) None
-          else {
-            name = Py.cleanName(name)
-            val total = backfillIfNone(total0, qty, price)
-            val it = Item(name, article.pyStrip, qty, unit.pyStrip, price, "RUB", total, "",
-              s"universal_table_${tableIdx}_row_$rowIdx", 0.9)
-            if (validate(it)) Some(it) else None
-          }
-        }
-      } catch { case _: Exception => None }
+  private def mappedRow(row: Row, m: Map[String, Int], tableIdx: Int, rowIdx: Int): Option[Item] =
+    if (isHeaderRow(row, Rules.headerFirstCellUniversal)) None
+    else {
+      val r = new MappedRow(row, m)
+      r.str("number") // read (it can raise) but never used
+      val article = r.str("article")
+      if (isEmptyName(r.name) || isServiceRow(r.name, Rules.serviceRowInvoice)) None
+      else {
+        val it = Item(Py.cleanName(r.name), article.pyStrip, r.qty, r.unit.pyStrip, r.price, "RUB",
+          r.total, "", s"universal_table_${tableIdx}_row_$rowIdx", 0.9)
+        if (validate(it)) Some(it) else None
+      }
     }
-
-  /** universal_parser.py:349-468 — content analysis over rows 1..5. */
-  private def parseByContent(table: Tab, tableIdx: Int): Seq[Item] = {
-    if (table.rows.length < 2) return Nil // table.shape[0] < 2 (data rows)
-    (1 until math.min(6, table.rows.length)).flatMap { rowIdx =>
-      try {
-        val values = table.rowVals(rowIdx)
-        if (values.length < 3) None
-        else analyzeRowStructure(values, tableIdx, rowIdx)
-      } catch { case _: Exception => None }
-    }
-  }
 
   private[core] def analyzeRowStructure(values: IndexedSeq[String], tableIdx: Int, rowIdx: Int): Option[Item] = {
     if (values.length < 3) return None
-    try {
-      var number: Option[String] = None
-      var name: Option[String] = None
-      var qty: Option[Double] = None
-      var unit: Option[String] = None
-      var price: Option[Double] = None
-      var total: Option[Double] = None
-      values.foreach { v =>
-        val vc = v.pyStrip
-        var consumed = false
-        if (number.isEmpty && Patterns.matchAt(Patterns.digitsOnly, vc)) { number = Some(vc); consumed = true }
-        if (!consumed && name.isEmpty && Patterns.search(Patterns.hasCyr2, vc) && vc.length > 5) {
-          name = Some(vc); consumed = true
-        }
-        if (!consumed && qty.isEmpty && Num.parse(vc).isDefined) { qty = Num.parse(vc); consumed = true }
-        if (!consumed && unit.isEmpty && Rules.analyzeUnits.contains(vc)) { unit = Some(vc); consumed = true }
-        if (!consumed && price.isEmpty && Num.parse(vc).isDefined && qty.isDefined) {
-          price = Num.parse(vc); consumed = true
-        }
-        if (!consumed && total.isEmpty && Num.parse(vc).isDefined && price.isDefined) {
-          total = Num.parse(vc); consumed = true
-        }
+    var number: Option[String] = None
+    var name: Option[String] = None
+    var qty: Option[Double] = None
+    var unit: Option[String] = None
+    var price: Option[Double] = None
+    var total: Option[Double] = None
+    values.foreach { v =>
+      val vc = v.pyStrip
+      var consumed = false
+      if (number.isEmpty && Patterns.matchAt(Patterns.digitsOnly, vc)) { number = Some(vc); consumed = true }
+      if (!consumed && name.isEmpty && Patterns.search(Patterns.hasCyr2, vc) && vc.length > 5) {
+        name = Some(vc); consumed = true
       }
-      if (name.isEmpty)
-        name = values.find(v => Patterns.search(Patterns.hasCyr2, v) && v.length > 5)
-      if (name.isEmpty || qty.isEmpty || price.isEmpty) return None
-      if (isServiceRow(name.get, Rules.serviceRowInvoice)) return None
-      val cleanedName = Py.cleanName(name.get)
-      val totalF = if (truthy(total)) total else Some(qty.get * price.get)
-      val it = Item(cleanedName, number.getOrElse(""), qty, unit.getOrElse(""), price, "RUB",
-        totalF, "", s"universal_content_analysis_${tableIdx}_row_$rowIdx", 0.6)
-      if (validate(it)) Some(it) else None
-    } catch { case _: Exception => None }
+      if (!consumed && qty.isEmpty && Num.parse(vc).isDefined) { qty = Num.parse(vc); consumed = true }
+      if (!consumed && unit.isEmpty && Rules.analyzeUnits.contains(vc)) { unit = Some(vc); consumed = true }
+      if (!consumed && price.isEmpty && Num.parse(vc).isDefined && qty.isDefined) {
+        price = Num.parse(vc); consumed = true
+      }
+      if (!consumed && total.isEmpty && Num.parse(vc).isDefined && price.isDefined) {
+        total = Num.parse(vc); consumed = true
+      }
+    }
+    if (name.isEmpty)
+      name = values.find(v => Patterns.search(Patterns.hasCyr2, v) && v.length > 5)
+    if (name.isEmpty || qty.isEmpty || price.isEmpty) return None
+    if (isServiceRow(name.get, Rules.serviceRowInvoice)) return None
+    val cleanedName = Py.cleanName(name.get)
+    val totalF = if (truthy(total)) total else Some(qty.get * price.get)
+    val it = Item(cleanedName, number.getOrElse(""), qty, unit.getOrElse(""), price, "RUB",
+      totalF, "", s"universal_content_analysis_${tableIdx}_row_$rowIdx", 0.6)
+    if (validate(it)) Some(it) else None
   }
 
   // -- text path (universal_parser.py:642-705): lenient prefilter, 2 patterns --
-  private def parseText(shared: SharedLines): Seq[Item] = {
-    val out = Seq.newBuilder[Item]
-    var lineIdx = 0
-    while (lineIdx < shared.stripped.length) {
-      val line = shared.stripped(lineIdx)
-      if (!line.isEmpty && line.length >= Rules.minLineLength && shared.hasDigit(lineIdx) &&
-          !shared.headerInvoice(lineIdx) && !shared.serviceInvoice(lineIdx) &&
-          !Patterns.matchAt(Patterns.allNumericLine, line))
-        parseLine(line).foreach(it =>
-          out += it.copy(source = s"universal_text_line_$lineIdx", confidence = 0.7))
-      lineIdx += 1
+  protected def parseText(shared: SharedLines): Seq[Item] =
+    eachLine(shared) { i =>
+      val line = shared.stripped(i)
+      if (shared.headerInvoice(i) || shared.serviceInvoice(i) ||
+          Patterns.matchAt(Patterns.allNumericLine, line)) None
+      else atLine(firstMatch(Patterns.universalPatterns, line)(lineItem), "universal_text_line_", i, 0.7)
     }
-    out.result()
-  }
 
-  private def parseLine(line: String): Option[Item] = {
-    // explicit first-match-wins loop: the iterator.flatMap chain
-    // allocated ~5 wrapper objects per call on the per-line hot path
-    val __ps = Patterns.universalPatterns
-    var __pi = 0
-    while (__pi < __ps.length) {
-      val p = __ps(__pi)
-      val __r: Option[Item] = {
-      val m = Patterns.cachedMatcher(p, line)
-      if (!m.find()) None
-      else try {
-        var name = m.group("name").pyStrip
-        val qty = Num.parse(m.group("qty"))
-        // pattern 2 lacks the 'unit' group -> group() throws -> pattern dead,
-        // mirroring the reference's IndexError (universal_parser.py:677)
-        val unit = Option(m.group("unit")).getOrElse("")
-        val price = Num.parse(m.group("price"))
-        val total0 = if (hasGroup(p, "total")) Option(m.group("total")).flatMap(Num.parse) else None
-        name = Py.cleanName(name)
-        val total =
-          if (truthy(total0)) total0
-          else (qty, price) match {
-            case (Some(q), Some(pr)) => Some(q * pr)
-            case _ => throw new PyTypeError // None * float
-          }
-        val it = Item(name, "", qty, unit, price, "RUB", total, "", "universal_regex", 0.8)
-        if (validate(it)) Some(it) else None
-      } catch { case _: Exception => None }
-      }
-      if (__r.isDefined) return __r
-      __pi += 1
-    }
-    None
+  private val lineItem: (Pattern, Matcher) => Option[Item] = (p, m) => {
+    val name = Py.cleanName(m.group("name").pyStrip)
+    val qty = Num.parse(m.group("qty"))
+    // pattern 2 lacks the 'unit' group -> group() throws -> pattern dead,
+    // mirroring the reference's IndexError (universal_parser.py:677)
+    val unit = Option(m.group("unit")).getOrElse("")
+    val price = Num.parse(m.group("price"))
+    val total0 = if (hasGroup(p, "total")) Option(m.group("total")).flatMap(Num.parse) else None
+    val it = Item(name, "", qty, unit, price, "RUB", backfillFalsy(total0, qty, price), "",
+      "universal_regex", 0.8)
+    if (validate(it)) Some(it) else None
   }
-
-  private def hasGroup(p: java.util.regex.Pattern, g: String): Boolean =
-    p.pattern().contains(s"(?<$g>")
 
   def validate(it: Item): Boolean =
     validateStrict(it, Rules.validationServiceWordsUniversal)

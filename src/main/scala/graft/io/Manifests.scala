@@ -2,7 +2,9 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /**
  * Chunked, manifest-committed, exactly-resumable extraction runs
@@ -50,19 +52,16 @@ object Manifests {
     Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** The texts of every manifest/`prefix`-NNNNN.json, in file-name order. */
-  private def readAll(outDir: String, prefix: String): Seq[String] = {
+  private val mapper = new ObjectMapper()
+
+  /** Every manifest/`prefix`-NNNNN.json, parsed, in file-name order. */
+  private def readAll(outDir: String, prefix: String): Seq[JsonNode] = {
     val dir = Paths.get(outDir, "manifest")
     if (!Files.exists(dir)) return Nil
-    import scala.jdk.CollectionConverters._
     scala.util.Using.resource(Files.list(dir))(_.iterator().asScala.toSeq)
       .filter(_.getFileName.toString.matches(prefix + "-\\d+\\.json")).sortBy(_.toString)
-      .map(Files.readString)
+      .map(f => mapper.readTree(Files.readString(f)))
   }
-
-  /** Integer field `k` of a manifest's JSON text. */
-  private def num(json: String, k: String): Long =
-    json.split("\"" + k + "\":")(1).takeWhile(c => c.isDigit || c == '-').toLong
 
   private def commit(outDir: String, m: ChunkManifest): Unit = {
     val filesJson = m.files
@@ -76,8 +75,10 @@ object Manifests {
   }
 
   def readManifests(outDir: String): Seq[ChunkManifest] =
-    readAll(outDir, "chunk").map(s => ChunkManifest(num(s, "chunk").toInt, num(s, "rows"),
-      num(s, "bytes"), num(s, "checksum"), "", ""))
+    readAll(outDir, "chunk").map(j => ChunkManifest(j.get("chunk").asInt, j.get("rows").asLong,
+      j.get("bytes").asLong, j.get("checksum").asLong, j.get("input").asText,
+      j.get("predicate").asText,
+      j.get("partition_files").asScala.map(f => f.get("file").asText -> f.get("bytes").asLong).toSeq))
 
   /**
    * Consistent read of a [[resumableExtract]] output — the Iceberg reader
@@ -134,12 +135,8 @@ object Manifests {
 
   /** All snapshot versions, oldest first. */
   def snapshots(outDir: String): Seq[Snapshot] =
-    readAll(outDir, "snapshot").map { s =>
-      val chunks = s.split("\"chunks\":\\[")(1).takeWhile(_ != ']')
-      Snapshot(num(s, "version").toInt,
-        if (chunks.isEmpty) Nil else chunks.split(',').toSeq.map(_.trim.toInt),
-        num(s, "rows"), num(s, "bytes"))
-    }
+    readAll(outDir, "snapshot").map(j => Snapshot(j.get("version").asInt,
+      j.get("chunks").asScala.map(_.asInt).toSeq, j.get("rows").asLong, j.get("bytes").asLong))
 
   /**
    * Time-travel read: exactly the chunk set frozen by snapshot `version`,

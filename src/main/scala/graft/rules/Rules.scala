@@ -57,6 +57,17 @@ object Rules {
     "supplier" -> Seq("поставщик", "supplier", "vendor", "компания", "организация", "наименование поставщика")
   )
 
+  // ---- invoice column words, tested as an elif chain (invoice_parser.py:93-146;
+  // table_extractor.py keeps an identical copy) ----
+  val invoiceColumnWords: Seq[(String, Seq[String])] = Seq(
+    "number" -> Seq("№", "номер", "позиция"),
+    "article" -> Seq("артикул", "код", "арт"),
+    "name" -> Seq("наименование", "товары", "работы", "услуги", "название"),
+    "qty" -> Seq("количество", "кол-во", "колво"),
+    "unit" -> Seq("ед", "единица", "изм"),
+    "price" -> Seq("цена", "стоимость", "руб"),
+    "total" -> Seq("сумма", "итого", "всего"))
+
   // ---- header-line indicators ----
   // invoice/universal/supplier-profile variant (invoice_parser.py:424-427)
   val headerLineInvoice: Seq[String] = Seq(

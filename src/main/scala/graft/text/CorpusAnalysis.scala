@@ -300,23 +300,19 @@ object CorpusAnalysis {
    * Corpus-mix audit: per-source document/token/char totals and each
    * source's share of all corpus tokens — the data-mixture report every
    * training pipeline keeps next to its sampling weights. One combinable
-   * groupBy on the dimension-sized source key; the global token total
-   * derives from the SAME aggregated table (reused exchange) and joins
-   * back as a broadcast single row, so the corpus is scanned once and
-   * nothing skews. Counts are integer-exact; the share is one division of
-   * exact longs — bit-identical across engines.
+   * groupBy on the dimension-sized source key, so the corpus is scanned
+   * once and nothing skews; the global token total is a window sum over
+   * those per-source rows (one row per source, so its single partition
+   * is dimension-sized). Counts are integer-exact; the share is one
+   * division of exact longs — bit-identical across engines.
    */
-  def sourceMix(df: DataFrame, sourceCol: String, textCol: String): DataFrame = {
-    val per = df.groupBy(col(sourceCol).as("source"))
+  def sourceMix(df: DataFrame, sourceCol: String, textCol: String): DataFrame =
+    df.groupBy(col(sourceCol).as("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(Dedup.tokens(col(textCol))).cast("long")).as("n_tokens"),
         sum(length(col(textCol)).cast("long")).as("n_chars_total"))
-    val tot = per.agg(sum("n_tokens").as("__tot"))
-    per.crossJoin(broadcast(tot))
       .withColumn("token_share",
-        col("n_tokens").cast("double") / col("__tot").cast("double"))
-      .drop("__tot")
-  }
+        col("n_tokens").cast("double") / sum("n_tokens").over(Window.partitionBy()).cast("double"))
 
   /** Source/domain blocklist filtering (the C4-style badlist step): a
     * broadcast LEFT ANTI join — the blocklist is dimension-sized by

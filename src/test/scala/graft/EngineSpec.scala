@@ -211,4 +211,34 @@ class EngineSpec extends AnyFunSuite {
     val r3 = Engine.parseTurn("c", 4, null)
     assert(r3.n_chars == 0)
   }
+
+  // exception scope: a mapped index past a ragged row's end raises
+  // RowIndexError, which each reference parser catches per row
+  private val ragged = Tab(
+    Vector(Some("Цена"), Some("Количество"), Some("Наименование")),
+    Vector(
+      Vector(Some("100"), Some("10"), Some("Кабель ВВГ 3х2,5")),
+      Vector(Some("250"), Some("4"), Some("Провод ПВС 2х1,5")),
+      Vector(Some("300"), Some("2")), // no name cell
+      Vector(Some("150"), Some("8"), Some("Кабель АВВГ 4х16"))))
+
+  test("a row that raises in a mapped table pass drops only that row") {
+    def sources(items: Seq[Item]) = items.map(_.source)
+    val kept = Seq("table_0_row_0", "table_0_row_1", "table_0_row_3")
+    assert(sources(TextParser.parse("", Seq(ragged))) == kept)
+    assert(sources(InvoiceParser.parse("", Seq(ragged))) == kept)
+    assert(sources(CommercialParser.parse("", Seq(ragged))) == kept)
+    assert(sources(UniversalCoreParser.parse("", Seq(ragged))) == kept.map("universal_" + _))
+    // competitive skips row 0 as its header, by position
+    assert(sources(CompetitiveParser.parse("", Seq(ragged))) == kept.tail)
+  }
+
+  test("a row that raises in TextParser's row-text fallback empties its table") {
+    def fallback(rows: Vector[Option[String]]*) =
+      TextParser.parse("", Seq(Tab(Vector(Some("a"), Some("b")), rows.toVector)))
+    val line = Vector(Some("Кабель ВВГ 10 шт 100 руб"), None)
+    assert(fallback(line).map(_.source) == Seq("table_0_row_0"))
+    // a null cell makes the row's notna-join raise: no per-row catch there
+    assert(fallback(line, Vector(Some("x"), null)).isEmpty)
+  }
 }

@@ -265,11 +265,11 @@ object PlansDump {
     }
     section("q55 source-mix audit (combinable per-source totals, broadcast single-row total)",
       "Per-source totals are one combinable groupBy on the dimension key; " +
-      "the corpus-wide token total is an aggregate over the same per-source " +
-      "table and joins back as a broadcast single row — nothing skews. " +
-      "Column pruning makes the total's copy of the per-source aggregate " +
-      "differ from the first, so its exchange is not reused: the corpus " +
-      "is scanned twice.") {
+      "the corpus-wide token total is a window sum over those per-source " +
+      "rows (one per source, so its single-partition Exchange is " +
+      "dimension-sized) — the corpus is scanned once and nothing skews. " +
+      "(The title keeps its old wording as the section's key for " +
+      "tools/plan_diff.py: the total no longer joins back as a broadcast row.)") {
       SparkEntry.byName("q55_source_mix").build(spark, dir)
     }
     section("q56 SemDeDup pairs (broadcast-centroid assignment, capped in-cluster join)",

@@ -102,6 +102,22 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(total == 300L)
   }
 
+  test("manifests read back the lineage they commit: input, chunk predicate, part files and sizes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-lineage").toString
+    val turns = graft.io.Transcripts.generateDF(spark, 60L)
+    assert(graft.io.Manifests.resumableExtract(spark, turns, dir, nChunks = 2, numPartitions = 2,
+      salt = 2, inputDesc = "sf0.001/turns") == 2)
+    val ms = graft.io.Manifests.readManifests(dir)
+    assert(ms.map(_.chunk) == Seq(0, 1))
+    ms.foreach { m =>
+      assert(m.input == "sf0.001/turns")
+      assert(m.predicate == s"pmod(xxhash64(conv_id), 2) = ${m.chunk}")
+      val onDisk = new java.io.File(s"$dir/chunk=${m.chunk}").listFiles()
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName).map(f => f.getName -> f.length()).toSeq
+      assert(onDisk.nonEmpty && m.files == onDisk, m)
+    }
+  }
+
   test("manifest JSON escapes its strings: a quote or backslash in the input keeps it parseable") {
     val dir = java.nio.file.Files.createTempDirectory("graft-manifest-json").toString
     val turns = graft.io.Transcripts.generateDF(spark, 40L)
