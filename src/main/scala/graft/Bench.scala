@@ -10,7 +10,10 @@ import org.apache.spark.sql.SparkSession
  */
 object Bench {
 
-  /** The session every query timing runs in (Bench and QuickQ). */
+  /** The session the program's own mains run in: Bench, Verify and QuickQ.
+    * Spark's generated-code cache holds 100 classes by default, fewer than
+    * one pass of the corpus chains generates, so a repeated query compiled
+    * its classes anew; at 1000 a timed run reuses the warm-up's classes. */
   private[graft] def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -18,6 +21,7 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", 1000)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -94,10 +94,8 @@ object CommercialParser extends DocumentParser {
   protected def parseText(shared: SharedLines): Seq[Item] =
     eachLine(shared) { i =>
       val line = shared.stripped(i)
-      val lower = shared.lower(i)
-      val excluded = Py.containsAny(lower, Rules.headerLineCommercial) ||
-        Py.containsAny(lower, Rules.serviceLineCommercial)
-      if (!passesStrictLinePrefilter(line, lower, excluded)) None
+      val excluded = Rules.headerLineCommercial.inLower(line) || Rules.serviceLineCommercial.inLower(line)
+      if (!passesStrictLinePrefilter(line, shared.lower(i), excluded)) None
       else atLine(firstMatch(Patterns.commercialPatterns, line)(lineItem), "text_line_", i, 0.7)
     }
 

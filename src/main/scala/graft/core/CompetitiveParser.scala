@@ -25,29 +25,29 @@ object CompetitiveParser extends DocumentParser {
     if (mapping.contains("name") && mapping.size >= 2) Some(mapping) else None
   }
 
-  private val cNum = Seq("№", "номер", "n", "number")
-  private val cName = Seq("наимен", "название", "описание", "товар")
-  private val cQty = Seq("кол-во", "количество", "qty", "amount")
-  private val cUnit = Seq("ед", "единица", "изм", "unit")
-  private val cPrice = Seq("цена", "стоимость", "price", "cost")
-  private val cTotal = Seq("сумма", "итого", "total", "sum")
+  private val cNum = Keywords("№", "номер", "n", "number")
+  private val cName = Keywords("наимен", "название", "описание", "товар")
+  private val cQty = Keywords("кол-во", "количество", "qty", "amount")
+  private val cUnit = Keywords("ед", "единица", "изм", "unit")
+  private val cPrice = Keywords("цена", "стоимость", "price", "cost")
+  private val cTotal = Keywords("сумма", "итого", "total", "sum")
 
   /** competitive_parser.py:163-202 — elif chain with no-overwrite guards. */
   private def identifyByContent(table: Tab): Map[String, Int] = {
     val header = table.header
     val mapping = mutable.LinkedHashMap.empty[String, Int]
     table.headerLower.zipWithIndex.foreach { case (s, idx) =>
-      if (Py.containsAny(s, cNum)) {
+      if (cNum.inLower(s)) {
         // skip position-number columns
-      } else if (!mapping.contains("name") && Py.containsAny(s, cName))
+      } else if (!mapping.contains("name") && cName.inLower(s))
         mapping("name") = idx
-      else if (!mapping.contains("qty") && Py.containsAny(s, cQty))
+      else if (!mapping.contains("qty") && cQty.inLower(s))
         mapping("qty") = idx
-      else if (!mapping.contains("unit") && Py.containsAny(s, cUnit))
+      else if (!mapping.contains("unit") && cUnit.inLower(s))
         mapping("unit") = idx
-      else if (!mapping.contains("price") && Py.containsAny(s, cPrice))
+      else if (!mapping.contains("price") && cPrice.inLower(s))
         mapping("price") = idx
-      else if (!mapping.contains("total") && Py.containsAny(s, cTotal))
+      else if (!mapping.contains("total") && cTotal.inLower(s))
         mapping("total") = idx
     }
     if (mapping.isEmpty && header.length >= 3)
@@ -94,7 +94,7 @@ object CompetitiveParser extends DocumentParser {
     val unit = {
       var i = 1; var u = ""
       while (u.isEmpty && i < values.length) {
-        if (Py.containsAnyLowered(values(i), Rules.tokenUnits)) u = values(i)
+        if (Rules.tokenUnits.inLower(values(i))) u = values(i)
         i += 1
       }
       u
@@ -102,7 +102,7 @@ object CompetitiveParser extends DocumentParser {
     val currency = {
       var i = 0; var c: String = null
       while (c == null && i < values.length) {
-        if (Py.containsAnyUppered(values(i), Rules.tokenCurrencies)) c = Py.upper(values(i))
+        if (Rules.tokenCurrencies.inUpper(values(i))) c = Py.upper(values(i))
         i += 1
       }
       if (c == null) "RUB" else c
@@ -118,10 +118,8 @@ object CompetitiveParser extends DocumentParser {
   protected def parseText(shared: SharedLines): Seq[Item] =
     parseStructuredTextShared(shared) ++ eachLine(shared) { i =>
       val line = shared.stripped(i)
-      val lower = shared.lower(i)
-      val excluded = Py.containsAny(lower, Rules.headerLineCompetitive) ||
-        Py.containsAny(lower, Rules.serviceLineCompetitive)
-      if (!passesStrictLinePrefilter(line, lower, excluded)) None
+      val excluded = Rules.headerLineCompetitive.inLower(line) || Rules.serviceLineCompetitive.inLower(line)
+      if (!passesStrictLinePrefilter(line, shared.lower(i), excluded)) None
       else {
         val tableLine = parseTableLine(line, i)
         if (tableLine.isDefined) tableLine
@@ -165,13 +163,13 @@ object CompetitiveParser extends DocumentParser {
 
   // R14 key-synonym lists hoisted out of the per-line loop (a Seq literal
   // in the loop body allocates a fresh List per line)
-  private val kName = Seq("наименование", "название", "товар")
-  private val kQty = Seq("количество", "кол-во", "кол", "объем")
-  private val kUnit = Seq("единица", "ед.изм", "ед")
-  private val kPrice = Seq("цена", "стоимость", "тариф")
-  private val kCurrency = Seq("валюта", "currency")
-  private val kTotal = Seq("сумма", "итого", "стоимость", "общая")
-  private val kSupplier = Seq("поставщик", "supplier", "компания")
+  private val kName = Keywords("наименование", "название", "товар")
+  private val kQty = Keywords("количество", "кол-во", "кол", "объем")
+  private val kUnit = Keywords("единица", "ед.изм", "ед")
+  private val kPrice = Keywords("цена", "стоимость", "тариф")
+  private val kCurrency = Keywords("валюта", "currency")
+  private val kTotal = Keywords("сумма", "итого", "стоимость", "общая")
+  private val kSupplier = Keywords("поставщик", "supplier", "компания")
 
   /** Core of the R14 block parser over a [from, until) range of
     * pre-stripped lines. */
@@ -190,15 +188,15 @@ object CompetitiveParser extends DocumentParser {
       if (line.nonEmpty && line.contains(":")) {
         // split(":", 2) without the array: first ':' partitions the line
         val ci = line.indexOf(':')
-        val key = Py.lower(line.substring(0, ci).pyStrip)
+        val key = line.substring(0, ci).pyStrip // lowered by the keyword tests
         val value = line.substring(ci + 1).pyStrip
-        if (Py.containsAny(key, kName)) name = Some(value)
-        else if (Py.containsAny(key, kQty)) qty = Some(Num.parse(value))
-        else if (Py.containsAny(key, kUnit)) unit = Some(value)
-        else if (Py.containsAny(key, kPrice)) price = Some(Num.parse(value))
-        else if (Py.containsAny(key, kCurrency)) currency = Some(value)
-        else if (Py.containsAny(key, kTotal)) total = Some(Num.parse(value))
-        else if (Py.containsAny(key, kSupplier)) supplier = Some(value)
+        if (kName.inLower(key)) name = Some(value)
+        else if (kQty.inLower(key)) qty = Some(Num.parse(value))
+        else if (kUnit.inLower(key)) unit = Some(value)
+        else if (kPrice.inLower(key)) price = Some(Num.parse(value))
+        else if (kCurrency.inLower(key)) currency = Some(value)
+        else if (kTotal.inLower(key)) total = Some(Num.parse(value))
+        else if (kSupplier.inLower(key)) supplier = Some(value)
       }
       li += 1
     }
@@ -250,7 +248,7 @@ object CompetitiveParser extends DocumentParser {
       val unit = {
         var j = 0; var u = ""
         while (u.isEmpty && j < parts.length) {
-          if (Py.containsAnyLowered(parts(j), Rules.tokenUnits)) u = parts(j)
+          if (Rules.tokenUnits.inLower(parts(j))) u = parts(j)
           j += 1
         }
         u
@@ -258,7 +256,7 @@ object CompetitiveParser extends DocumentParser {
       val currency = {
         var j = 0; var c: String = null
         while (c == null && j < parts.length) {
-          if (Py.containsAnyUppered(parts(j), Rules.tokenCurrencies)) c = Py.upper(parts(j))
+          if (Rules.tokenCurrencies.inUpper(parts(j))) c = Py.upper(parts(j))
           j += 1
         }
         if (c == null) "RUB" else c

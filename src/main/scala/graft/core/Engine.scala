@@ -72,10 +72,10 @@ object Engine {
       if (nValidParsers > 0) stats.iterator.map(_.avg_confidence).foldLeft(0.0)(_ + _) / nValidParsers
       else 0.0
 
-    val lowerText = Py.lower(t)
-    val docType = detectDocumentTypeLower(lowerText)
-    val (invS, comS, cmpS, conS) = documentTypeScoresLower(lowerText)
-    val (tq, tabq, oq) = qualityLower(if (t.nonEmpty) lowerText else null, tables)
+    val found = textFound(t)
+    val docType = detectDocumentType(found)
+    val (invS, comS, cmpS, conS) = documentTypeScores(found)
+    val (tq, tabq, oq) = quality(found, tables)
 
     TurnResult(
       conv_id = convId,
@@ -84,7 +84,7 @@ object Engine {
       n_lines = seg.lines.length,
       n_tables = tables.length,
       has_text = Py.pyStripLen(t) >= Rules.minTextLength,
-      needs_fallback = needsFallbackLower(t, lowerText, tables),
+      needs_fallback = needsFallback(t, found, tables),
       doc_type = docType,
       invoice_score = invS, commercial_score = comS,
       competitive_score = cmpS, contract_score = conS,
@@ -185,41 +185,62 @@ object Engine {
 
   /** The selection-time item filter (universal_parser.py:244-257). */
   def isBestSelectable(it: Item): Boolean = {
-    val name = Py.lower(String.valueOf(it.name))
-    if (Py.containsAny(name, Rules.bestSelectionServiceWords)) return false
+    val raw = String.valueOf(it.name)
+    if (Rules.bestSelectionServiceWords.inLower(raw)) return false
+    val name = Py.lower(raw)
     if (Py.pyStripLen(name) <= 10) return false
     if (!name.exists(_.isLetter)) return false
-    Py.containsAny(name, Rules.bestSelectionProductWords)
+    Rules.bestSelectionProductWords.inLower(raw)
   }
 
-  /** Simple 3-class doc-type detection over lowercased text
+  /** The whole-text keyword lists (A4 doc type and scores, A5 text
+    * quality, the F9 gate) as one [[Keywords]], so that one pass over a
+    * turn's text finds the words of all nine; `textMasks(j)` holds the bits
+    * of `textLists(j)`'s words. */
+  private val textLists = Array(Rules.docTypeCommercial, Rules.docTypeInvoice, Rules.docTypeCompetitive,
+    Rules.scoreInvoiceKeywords, Rules.scoreCommercialKeywords, Rules.scoreCompetitiveKeywords,
+    Rules.scoreContractKeywords, Rules.validationKeyElements, Rules.qualityGateKeywords)
+  private val textKeywords = new Keywords(textLists.toIndexedSeq.flatMap(_.words))
+  private val textMasks: Array[Long] = {
+    val ends = textLists.scanLeft(0)(_ + _.words.length)
+    textLists.indices.map(j => (ends(j) until ends(j + 1)).foldLeft(0L)((m, k) => m | 1L << k)).toArray
+  }
+
+  /** The words of the whole-text lists that occur in `text.lower()`. */
+  private[core] def textFound(text: String): Long = textKeywords.foundLower(text)
+
+  /** How many words of the whole-text `list` are among the `found` ones. */
+  private def hits(found: Long, list: Keywords): Int = {
+    var j = 0
+    while (textLists(j) ne list) j += 1
+    java.lang.Long.bitCount(found & textMasks(j))
+  }
+
+  /** Simple 3-class doc-type detection over the lowercased text
     * (universal_parser.py:833-848). */
-  def detectDocumentTypeLower(lower: String): String = {
-    if (Py.containsAny(lower, Rules.docTypeCommercial)) "commercial_proposal"
-    else if (Py.containsAny(lower, Rules.docTypeInvoice)) "invoice"
-    else if (Py.containsAny(lower, Rules.docTypeCompetitive)) "competitive_procedure"
+  def detectDocumentType(found: Long): String = {
+    if (hits(found, Rules.docTypeCommercial) > 0) "commercial_proposal"
+    else if (hits(found, Rules.docTypeInvoice) > 0) "invoice"
+    else if (hits(found, Rules.docTypeCompetitive) > 0) "competitive_procedure"
     else "unknown"
   }
 
   /** A4 — 4-class keyword-hit scores, normalized (ocr_processor.py:209-275).
     * Returned as (invoice, commercial, competitive, contract). */
-  def documentTypeScoresLower(lower: String): (Double, Double, Double, Double) = {
-    val inv = Py.countContains(lower, Rules.scoreInvoiceKeywords).toDouble
-    val com = Py.countContains(lower, Rules.scoreCommercialKeywords).toDouble
-    val cmp = Py.countContains(lower, Rules.scoreCompetitiveKeywords).toDouble
-    val con = Py.countContains(lower, Rules.scoreContractKeywords).toDouble
+  def documentTypeScores(found: Long): (Double, Double, Double, Double) = {
+    val inv = hits(found, Rules.scoreInvoiceKeywords).toDouble
+    val com = hits(found, Rules.scoreCommercialKeywords).toDouble
+    val cmp = hits(found, Rules.scoreCompetitiveKeywords).toDouble
+    val con = hits(found, Rules.scoreContractKeywords).toDouble
     val total = inv + com + cmp + con
     if (total > 0) (inv / total, com / total, cmp / total, con / total)
     else (0.0, 0.0, 0.0, 0.0)
   }
 
   /** A5 — quality validation (ocr_processor.py:277-321):
-    * (text_quality, table_quality, overall). */
-  def qualityLower(lowerOrNull: String, tables: Seq[Tab]): (Double, Double, Double) = {
-    val tq =
-      if (lowerOrNull != null)
-        Py.countContains(lowerOrNull, Rules.validationKeyElements).toDouble / Rules.validationKeyElements.length
-      else 0.0
+    * (text_quality, table_quality, overall); an empty text scores 0. */
+  def quality(found: Long, tables: Seq[Tab]): (Double, Double, Double) = {
+    val tq = hits(found, Rules.validationKeyElements).toDouble / Rules.validationKeyElements.words.length
     val tabq =
       if (tables.nonEmpty)
         tables.count(t => t.rows.length > 1 && t.nCols > 2).toDouble / tables.length
@@ -228,9 +249,9 @@ object Engine {
   }
 
   /** F9 — OCR-needed gate (enhanced_extractor.py:248-277). */
-  def needsFallbackLower(text: String, lower: String, tables: Seq[Tab]): Boolean = {
+  def needsFallback(text: String, found: Long, tables: Seq[Tab]): Boolean = {
     if (Py.pyStripLen(text) < 100) return true
-    if (Py.countContains(lower, Rules.qualityGateKeywords) < 2) return true
+    if (hits(found, Rules.qualityGateKeywords) < 2) return true
     if (tables.nonEmpty && !tables.exists(t => t.rows.length > 1 && t.nCols > 2)) return true
     false
   }

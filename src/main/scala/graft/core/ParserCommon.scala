@@ -13,7 +13,7 @@ object ParserCommon {
 
   /** Shared per-turn line views: every reference parser begins its text pass
     * with the same `text.split('\n')` + per-line `strip()` (+ lowercase for
-    * keyword checks). Computing them once per turn removes 6-7 redundant
+    * the itogo-line regex). Computing them once per turn removes 6-7 redundant
     * splits/lowercases per payload — pure reuse, zero semantic change. */
   final class SharedLines(val text: String) {
     val raw: Array[String] =
@@ -22,10 +22,8 @@ object ParserCommon {
     lazy val lower: Array[String] = stripped.map(Py.lower)
     // per-line keyword-list hits, computed once and shared by the parsers
     // that use identical lists (invoice+universal share both of theirs)
-    lazy val headerInvoice: Array[Boolean] =
-      lower.map(l => Py.containsAny(l, graft.rules.Rules.headerLineInvoice))
-    lazy val serviceInvoice: Array[Boolean] =
-      lower.map(l => Py.containsAny(l, graft.rules.Rules.serviceLineInvoice))
+    lazy val headerInvoice: Array[Boolean] = stripped.map(Rules.headerLineInvoice.inLower)
+    lazy val serviceInvoice: Array[Boolean] = stripped.map(Rules.serviceLineInvoice.inLower)
     /** ASCII-digit presence per line: any item a line-pattern can yield
       * requires a parseable qty/price (>0), which requires an ASCII digit
       * in the line — so digit-free lines can skip regex entirely with no
@@ -178,24 +176,15 @@ object ParserCommon {
     * through to their positional/content fallbacks. Mirrored faithfully
     * (confirmed by the tools/parity_check.py sweep against the reference).
     * Reads the [[Tab]]'s cached per-column keys (several parsers would
-    * otherwise recompute identical header cleanups per turn).
+    * otherwise recompute identical header cleanups per turn), which are
+    * lowered already. The reference lowers each synonym at use
+    * (`syn.lower() in col_str`); every synonym list is lowercase already
+    * (KeywordsSpec checks it).
     * @param clean whether to apply the [^\w\s]->space cleanup first */
-  def mapBySynonyms(table: Tab, fields: Seq[(String, Seq[String])],
-                    clean: Boolean): mutable.LinkedHashMap[String, Int] =
-    mapBySynonymsKeys(if (clean) table.headerClean else table.headerLower, fields)
-
-  /** Lowered synonym lists, memoized per fields value (the reference lowers
-    * each synonym at use — `syn.lower() in col_str` — which in the hot loop
-    * re-lowercases static data per column). */
-  private val loweredFieldsCache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[(String, Seq[String])], Seq[(String, Seq[String])]]()
-  private def loweredFields(fields: Seq[(String, Seq[String])]): Seq[(String, Seq[String])] =
-    loweredFieldsCache.computeIfAbsent(fields,
-      f => f.map { case (k, syns) => (k, syns.map(Py.lower)) })
-
-  private def mapBySynonymsKeys(cols: IndexedSeq[String],
-                                fields: Seq[(String, Seq[String])]): mutable.LinkedHashMap[String, Int] = {
-    val lf = loweredFields(fields).toIndexedSeq
+  def mapBySynonyms(table: Tab, fields: Seq[(String, Keywords)],
+                    clean: Boolean): mutable.LinkedHashMap[String, Int] = {
+    val cols = if (clean) table.headerClean else table.headerLower
+    val lf = fields.toIndexedSeq
     val mapping = mutable.LinkedHashMap.empty[String, Int]
     var idx = 0
     while (idx < cols.length) {
@@ -204,7 +193,7 @@ object ParserCommon {
       var break_ = false
       while (!break_ && fi < lf.length) {
         val field = lf(fi)._1
-        if (Py.containsAny(colStr, lf(fi)._2)) mapping(field) = idx
+        if (lf(fi)._2.inLower(colStr)) mapping(field) = idx
         if (mapping.contains(field)) break_ = true
         fi += 1
       }
@@ -218,7 +207,7 @@ object ParserCommon {
     * None headers skipped; later columns overwrite. Optionally collapse
     * whitespace in the header first (precise parser). */
   def mapByElifChain(header: IndexedSeq[Option[String]],
-                     fields: Seq[(String, Seq[String])],
+                     fields: Seq[(String, Keywords)],
                      collapseWs: Boolean = false): mutable.LinkedHashMap[String, Int] = {
     val mapping = mutable.LinkedHashMap.empty[String, Int]
     val fs = fields.toIndexedSeq
@@ -227,12 +216,11 @@ object ParserCommon {
       header(idx) match {
         case None => // pd.isna(col) -> continue
         case Some(c) =>
-          var s = Py.lower(c)
-          if (collapseWs) s = Py.collapseWs(s)
+          val s = if (collapseWs) Py.collapseWs(Py.lower(c)) else c
           var fi = 0
           var done = false
           while (!done && fi < fs.length) {
-            if (Py.containsAny(s, fs(fi)._2)) { mapping(fs(fi)._1) = idx; done = true }
+            if (fs(fi)._2.inLower(s)) { mapping(fs(fi)._1) = idx; done = true }
             fi += 1
           }
       }
@@ -249,8 +237,8 @@ object ParserCommon {
 
   /** Is the row a repeated header: does its first cell (`str(row.iloc[0])`,
     * lowered) contain one of `words`? */
-  def isHeaderRow(row: Row, words: Seq[String]): Boolean =
-    Py.containsAnyLowered(if (row.nonEmpty) Py.pyStr(row(0)) else "", words)
+  def isHeaderRow(row: Row, words: Keywords): Boolean =
+    words.inLower(if (row.nonEmpty) Py.pyStr(row(0)) else "")
 
   private val one = Some(1.0)
   private val zero = Some(0.0)
@@ -365,10 +353,10 @@ object ParserCommon {
   /** Strict item validation used by universal/commercial parsers
     * (universal_parser.py:773-813): falsy name/qty/price reject; service
     * words; >=2 letters; positive; name length >= 5 (on the lowered name). */
-  def validateStrict(it: Item, serviceWords: Seq[String]): Boolean = {
+  def validateStrict(it: Item, serviceWords: Keywords): Boolean = {
     if (it.name == null || it.name.isEmpty || !truthy(it.qty) || !truthy(it.price)) return false
+    if (serviceWords.inLower(it.name)) return false
     val name = Py.lower(it.name)
-    if (Py.containsAny(name, serviceWords)) return false
     if (!Patterns.search(Patterns.hasLetter2, name)) return false
     if (it.qty.get <= 0 || it.price.get <= 0) return false
     if (Py.pyStripLen(name) < 5) return false
@@ -377,10 +365,10 @@ object ParserCommon {
 
   /** Product-plausibility validation (table_extractor.py:218-256):
     * strict checks + product pattern / tech-spec whitelist. */
-  def validateProduct(it: Item, excludeWords: Seq[String]): Boolean = {
+  def validateProduct(it: Item, excludeWords: Keywords): Boolean = {
     if (it.name == null || it.name.isEmpty || !truthy(it.qty) || !truthy(it.price)) return false
+    if (excludeWords.inLower(it.name)) return false
     val name = Py.lower(it.name)
-    if (Py.containsAny(name, excludeWords)) return false
     if (!Patterns.search(Patterns.hasLetter2, name)) return false
     if (it.qty.get <= 0 || it.price.get <= 0) return false
     if (Py.pyStripLen(name) < 5) return false
@@ -399,6 +387,5 @@ object ParserCommon {
       Patterns.search(Patterns.hasLetter, line) && !Patterns.search(Patterns.itogoLine, lower)
 
   /** Service-row check on an item name. */
-  def isServiceRow(name: String, words: Seq[String]): Boolean =
-    Py.containsAnyLowered(name, words)
+  def isServiceRow(name: String, words: Keywords): Boolean = words.inLower(name)
 }

@@ -23,6 +23,9 @@ object SupplierProfiles {
       filters: Seq[Item => Boolean],
       validators: Seq[Item => Boolean])
 
+  private val cable = Keywords("кабель")
+  private val requisites = Keywords("инн", "кпп", "счет", "банк")
+
   // default profiles (supplier_profiles.py:277-403)
   val profiles: Seq[Profile] = Seq(
     Profile("baltkabel", "ООО 'БАЛТКАБЕЛЬ'", "7800000000",
@@ -34,18 +37,18 @@ object SupplierProfiles {
     Profile("energoforsazh", "ООО 'Энергофорсаж'", "5027177653",
       Map("number" -> 0, "article" -> 1, "name" -> 2, "qty" -> 3, "unit" -> 4, "price" -> 5, "total" -> 6),
       Seq("№.*артикул.*товары.*количество", "номер.*код.*наименование.*кол-во"),
-      Seq(it => Py.lower(it.name).contains("кабель"), it => it.qty.getOrElse(0.0) > 0),
+      Seq(it => cable.inLower(it.name), it => it.qty.getOrElse(0.0) > 0),
       Seq(it => it.name.length > 5, it => it.price.getOrElse(0.0) > 0)),
     Profile("elkom", "ООО 'Элком-Электро'", "7703214111",
       Map("number" -> 0, "name" -> 1, "qty" -> 2, "unit" -> 3, "price" -> 4, "total" -> 5),
       Seq("наименование.*количество.*цена", "товары.*кол-во.*стоимость"),
-      Seq(it => Py.lower(it.name).contains("кабель"), it => it.qty.getOrElse(0.0) > 0),
+      Seq(it => cable.inLower(it.name), it => it.qty.getOrElse(0.0) > 0),
       Seq(it => it.name.length > 5, it => it.price.getOrElse(0.0) > 0)),
     Profile("start", "ООО 'СТАРТ'", "2308266335",
       Map("number" -> 0, "name" -> 1, "qty" -> 2, "unit" -> 3, "price" -> 4, "total" -> 5),
       Seq("наименование.*количество.*цена", "товары.*кол-во.*стоимость"),
       Seq(it => it.qty.getOrElse(0.0) > 0,
-        it => !Py.containsAny(Py.lower(it.name), Seq("инн", "кпп", "счет", "банк"))),
+        it => !requisites.inLower(it.name)),
       Seq(it => it.name.length > 5, it => it.price.getOrElse(0.0) > 0)))
 
   private val profileById: Map[String, Profile] = profiles.map(p => p.id -> p).toMap

@@ -46,14 +46,14 @@ object TableExtractor {
 
 object PreciseTableParser {
 
-  private val elifFields: Seq[(String, Seq[String])] = Seq(
-    "number" -> Seq("№", "номер", "позиция"),
-    "article" -> Seq("артикул", "код", "арт"),
-    "name" -> Seq("наименование", "товары", "работы", "услуги", "название", "наимен"),
-    "qty" -> Seq("количество", "кол-во", "колво"),
-    "unit" -> Seq("ед", "единица", "изм"),
-    "price" -> Seq("цена", "стоимость", "руб", "без ндс"),
-    "total" -> Seq("сумма", "итого", "всего", "с ндс"))
+  private val elifFields: Seq[(String, Keywords)] = Seq(
+    "number" -> Keywords("№", "номер", "позиция"),
+    "article" -> Keywords("артикул", "код", "арт"),
+    "name" -> Keywords("наименование", "товары", "работы", "услуги", "название", "наимен"),
+    "qty" -> Keywords("количество", "кол-во", "колво"),
+    "unit" -> Keywords("ед", "единица", "изм"),
+    "price" -> Keywords("цена", "стоимость", "руб", "без ндс"),
+    "total" -> Keywords("сумма", "итого", "всего", "с ндс"))
 
   def parse(tables: Seq[Tab]): Seq[Item] = eachTable(tables)(extractFromTable)
 
@@ -90,7 +90,7 @@ object PreciseTableParser {
     * (precise_table_parser.py:266-281). */
   private def isServiceRowAnyCell(row: Row): Boolean =
     row.exists {
-      case Some(cell) => Py.containsAnyLowered(cell, Rules.excludeWordsPrecise)
+      case Some(cell) => Rules.excludeWordsPrecise.inLower(cell)
       case None => false
     }
 

@@ -142,147 +142,6 @@ object Py {
     pySplit(s).mkString(" ") // ' '.join(s.split())
   }
 
-  /** any(indicator in s for indicator in words) over a lowercase string.
-    * Hand loop: `words.exists(sLower.contains)` allocates a capturing
-    * closure on every call, and this runs per line per filter per parser. */
-  def containsAny(sLower: String, words: Seq[String]): Boolean = {
-    words match {
-      case l: List[String] =>
-        var w = l
-        while (w ne Nil) {
-          if (sLower.contains(w.head)) return true
-          w = w.tail
-        }
-        false
-      case _ =>
-        var i = 0
-        val n = words.length
-        while (i < n) {
-          if (sLower.contains(words(i))) return true
-          i += 1
-        }
-        false
-    }
-  }
-
-  /** count(1 for w in words if w in sLower) — allocation-free sibling of
-    * [[containsAny]] for the keyword-hit scores. */
-  def countContains(sLower: String, words: Seq[String]): Int = {
-    var c = 0
-    words match {
-      case l: List[String] =>
-        var w = l
-        while (w ne Nil) {
-          if (sLower.contains(w.head)) c += 1
-          w = w.tail
-        }
-      case _ =>
-        var i = 0
-        val n = words.length
-        while (i < n) {
-          if (sLower.contains(words(i))) c += 1
-          i += 1
-        }
-    }
-    c
-  }
-
-  /** `containsAny(lower(s), words)` without allocating the lowered copy:
-    * when every char of `s` is ASCII or basic-Cyrillic (where
-    * Character.toLowerCase is exactly Python str.lower — 1:1, no locale
-    * expansions), search case-insensitively in place; anything else falls
-    * back to the exact lower-then-contains path. Only for call sites
-    * whose lowered string is used for NOTHING but the containment check. */
-  def containsAnyLowered(s: String, words: Seq[String]): Boolean = {
-    var simple = true
-    var i = 0
-    while (simple && i < s.length) {
-      val c = s.charAt(i)
-      simple = c < 0x80 || (c >= 0x0400 && c <= 0x04FF)
-      i += 1
-    }
-    if (!simple) return containsAny(lower(s), words)
-    words match {
-      case l: List[String] =>
-        var w = l
-        while (w ne Nil) {
-          if (containsLowered(s, w.head)) return true
-          w = w.tail
-        }
-        false
-      case _ =>
-        var j = 0
-        val n = words.length
-        while (j < n) {
-          if (containsLowered(s, words(j))) return true
-          j += 1
-        }
-        false
-    }
-  }
-
-  /** `containsAny(upper(s), words)` without allocating the uppered copy —
-    * the exact mirror of [[containsAnyLowered]] (Character.toUpperCase is
-    * 1:1 with Python str.upper on ASCII + basic Cyrillic; anything else
-    * falls back to the exact upper-then-contains path). */
-  def containsAnyUppered(s: String, words: Seq[String]): Boolean = {
-    var simple = true
-    var i = 0
-    while (simple && i < s.length) {
-      val c = s.charAt(i)
-      simple = c < 0x80 || (c >= 0x0400 && c <= 0x04FF)
-      i += 1
-    }
-    if (!simple) return containsAny(upper(s), words)
-    words match {
-      case l: List[String] =>
-        var w = l
-        while (w ne Nil) {
-          if (containsUppered(s, w.head)) return true
-          w = w.tail
-        }
-        false
-      case _ =>
-        var j = 0
-        val n = words.length
-        while (j < n) {
-          if (containsUppered(s, words(j))) return true
-          j += 1
-        }
-        false
-    }
-  }
-
-  /** Is uppercase `w` a substring of upper(s)? 1:1-uppering inputs only. */
-  private def containsUppered(s: String, w: String): Boolean = {
-    val n = s.length
-    val m = w.length
-    if (m == 0) return true
-    var i = 0
-    while (i + m <= n) {
-      var j = 0
-      while (j < m && Character.toUpperCase(s.charAt(i + j)) == w.charAt(j)) j += 1
-      if (j == m) return true
-      i += 1
-    }
-    false
-  }
-
-  /** Is lowercase `w` a substring of lower(s)? 1:1-lowering inputs only. */
-  private def containsLowered(s: String, w: String): Boolean = {
-    val n = s.length
-    val m = w.length
-    if (m == 0) return true
-    var i = 0
-    while (i + m <= n) {
-      var j = 0
-      while (j < m && Character.toLowerCase(s.charAt(i + j)) == w.charAt(j)) j += 1
-      if (j == m) return true
-      i += 1
-    }
-    false
-  }
-
   /** Is `s` already whitespace-normal (no leading/trailing space, only
     * single interior ASCII spaces)? Then collapse/strip are no-ops. */
   private def isWsNormal(s: String): Boolean = {
@@ -302,6 +161,137 @@ object Py {
   def collapseWs(s: String): String =
     if (isWsNormal(s)) s
     else pyStrip(Patterns.cachedMatcher(wsRun, s).replaceAll(" "))
+}
+
+/** A keyword list compiled once for the engine's keyword tests: does any
+  * word occur in Python's `s.lower()` ([[inLower]]) or `s.upper()`
+  * ([[inUpper]]), and which of the words occur in `s.lower()`
+  * ([[foundLower]], whose bit count is `sum(w in s.lower() for w in words)`)?
+  * One left-to-right pass folds each char of `s` through a per-char case
+  * table and checks in place the words that can start there; nothing is
+  * allocated. A string holding a char the table cannot fold — one whose case
+  * is not one char in every context: İ, ß, Σ, a surrogate — takes the exact
+  * path instead: lower or upper the string, then test containment.
+  *
+  * `Py.lower` is idempotent (KeywordsSpec checks every code point), so a
+  * caller that holds an already-lowered string for other uses passes it. */
+final class Keywords(val words: IndexedSeq[String]) {
+  import Keywords._
+  require(!words.exists(_.indexOf(NoFold) >= 0), "a keyword holds U+FFFF")
+
+  private val ws = words.toArray
+  private val emptyMask = ws.indices.filter(ws(_).isEmpty).foldLeft(0L)((m, k) => m | 1L << k)
+  /** Indices of the one-char words. */
+  private val singles: Array[Int] = ws.indices.filter(ws(_).length == 1).toArray
+  /** Indices of the longer words by the [[pair]] slot of their first two chars. */
+  private val byPair: Array[Array[Int]] = {
+    val b = new Array[Array[Int]](PairSlots)
+    ws.indices.filter(ws(_).length >= 2).groupBy(k => pair(ws(k).charAt(0), ws(k).charAt(1)))
+      .foreach { case (slot, idx) => b(slot) = idx.toArray }
+    b
+  }
+
+  def inLower(s: String): Boolean = find(s, upper = false, all = false) != 0
+  def inUpper(s: String): Boolean = find(s, upper = true, all = false) != 0
+
+  /** Bit k set when `words(k)` occurs in `s.lower()`; at most 64 words. */
+  def foundLower(s: String): Long = {
+    require(ws.length <= 64, "a found-mask covers at most 64 words")
+    find(s, upper = false, all = true)
+  }
+
+  /** Bit k (mod 64) set when `words(k)` occurs in the lowered (uppered)
+    * `s`; unless `all`, any non-zero value once one word occurs. */
+  private def find(s: String, upper: Boolean, all: Boolean): Long = {
+    val found = scan(s, if (upper) Upper else Lower, all)
+    if (found != NotFolded) found | emptyMask
+    else { // the exact path
+      val t = if (upper) Py.upper(s) else Py.lower(s)
+      var m = 0L
+      var k = 0
+      while (k < ws.length) { if (t.contains(ws(k))) m |= 1L << k; k += 1 }
+      m
+    }
+  }
+
+  /** The non-empty words occurring in the fold of `s`, found in place: the
+    * mask of all of them when `all`, else 1 at the first one; [[NotFolded]]
+    * at the first char the table cannot fold (or when all 64 bits are
+    * found: the exact path then answers). A word found before that char is
+    * exact: every char up to its end folds 1:1 in any context, so its
+    * folded span is a substring of the lowered (uppered) string. */
+  private def scan(s: String, fold: Array[Char], all: Boolean): Long = {
+    val n = s.length
+    var found = 0L
+    var prev = NoFold
+    var i = 0
+    while (i < n) {
+      val f = fold(s.charAt(i))
+      if (f == NoFold) return NotFolded
+      var k = 0
+      while (k < singles.length) {
+        if (ws(singles(k)).charAt(0) == f) {
+          if (!all) return 1L
+          found |= 1L << singles(k)
+        }
+        k += 1
+      }
+      val b = byPair(pair(prev, f))
+      if (b != null && i > 0) { // a longer word may start at i - 1
+        k = 0
+        while (k < b.length) {
+          val wi = b(k)
+          if ((found & (1L << wi)) == 0 && occursAt(s, i - 1, ws(wi), fold)) {
+            if (!all) return 1L
+            found |= 1L << wi
+          }
+          k += 1
+        }
+      }
+      prev = f
+      i += 1
+    }
+    found
+  }
+}
+
+object Keywords {
+  def apply(words: String*): Keywords = new Keywords(words.toIndexedSeq)
+
+  private final val NoFold = '\uFFFF'
+  private final val NotFolded = -1L
+
+  /** A slot for two consecutive chars: their low five bits each, so the
+    * bigrams of the basic Cyrillic and ASCII lowercase letters do not
+    * collide among themselves. */
+  private final val PairSlots = 1024
+  private def pair(a: Char, b: Char): Int = (a & 31) << 5 | (b & 31)
+
+  /** `f` of each BMP char where it is one char in every context, else
+    * [[NoFold]]: İ lowers and ß uppers to two chars, Σ lowers by context
+    * (final sigma), a surrogate is half a code point. */
+  private def table(f: String => String, contextual: Char): Array[Char] = {
+    val t = new Array[Char](0x10000)
+    var c = 0
+    while (c < t.length) {
+      val ch = c.toChar
+      val m = if (Character.isSurrogate(ch) || ch == contextual || ch == NoFold) "" else f(String.valueOf(ch))
+      t(c) = if (m.length == 1) m.charAt(0) else NoFold
+      c += 1
+    }
+    t
+  }
+  private val Lower = table(Py.lower, '\u03A3')
+  private val Upper = table(Py.upper, NoFold)
+
+  /** Does `w` occur at `i` in the fold of `s`? */
+  private def occursAt(s: String, i: Int, w: String, fold: Array[Char]): Boolean = {
+    val m = w.length
+    if (i + m > s.length) return false
+    var j = 0
+    while (j < m && fold(s.charAt(i + j)) == w.charAt(j)) j += 1
+    j == m
+  }
 }
 
 /** Compiled regex patterns with Python-equivalent flags. */
@@ -342,11 +332,6 @@ object Patterns {
     Pattern.compile(Rules.commercialTechPrefix, Pattern.UNICODE_CHARACTER_CLASS) // no IGNORECASE in reference
   val startsWithLetter: Pattern = py("^[а-яёa-z]")
   val numericToken: Pattern = Pattern.compile("^[\\d\\.,]+$", Pattern.UNICODE_CHARACTER_CLASS)
-  /** Python str.split()-equivalent separator runs (R13 tokenizer). */
-  val pySplitRun: Pattern = Pattern.compile("[\\s\\x1c-\\x1f]+", Pattern.UNICODE_CHARACTER_CLASS)
-  /** re.split(r'\n\s*\n') with Python \s (T5 block splitter). */
-  val blockSplit: Pattern =
-    Pattern.compile("\\n[\\s\\x1c-\\x1f]*\\n", Pattern.UNICODE_CHARACTER_CLASS)
 
   val textPatterns: Seq[Pattern] = Seq(py(Rules.textP1), py(Rules.textP2), py(Rules.textP3))
   val invoicePatterns: Seq[Pattern] = Seq(py(Rules.invoiceP1))

@@ -26,15 +26,16 @@ object UniversalCoreParser extends DocumentParser {
       eachRow(table, 1, until = 6)(rowIdx => analyzeRowStructure(table.rowVals(rowIdx), tableIdx, rowIdx))
   }
 
+  private val headerName = Keywords("наименование", "товары")
+  private val headerQty = Keywords("кол-во", "количество")
+  private val headerPrice = Keywords("цена")
+
   /** universal_parser.py:495-571 — header-keyword-guarded + count heuristics. */
   private[core] def byPositionUniversal(table: Tab): Map[String, Int] = {
     val n = table.nCols
-    val headersLower = Py.lower(
-      table.header.flatten.map(_.toString).filter(_.pyStrip.nonEmpty).mkString(" "))
+    val headers = table.header.flatten.map(_.toString).filter(_.pyStrip.nonEmpty).mkString(" ")
     var mapping = Map.empty[String, Int]
-    if ((headersLower.contains("наименование") || headersLower.contains("товары")) &&
-        (headersLower.contains("кол-во") || headersLower.contains("количество")) &&
-        headersLower.contains("цена")) {
+    if (headerName.inLower(headers) && headerQty.inLower(headers) && headerPrice.inLower(headers)) {
       if (n >= 13)
         mapping = Map("number" -> 0, "name" -> 1, "qty" -> 2, "unit" -> 3, "price" -> 5, "total" -> 6)
       else if (n >= 7)

@@ -1,5 +1,7 @@
 package graft.rules
 
+import graft.core.Keywords
+
 /**
  * Canonical rule constants for the extraction engine.
  *
@@ -13,106 +15,106 @@ package graft.rules
 object Rules {
 
   // ---- generic text-parser column synonyms (app/pipeline/parser.py:13-32) ----
-  val textColumnPatterns: Seq[(String, Seq[String])] = Seq(
-    "name" -> Seq("наименование", "название", "товар", "описание", "name", "description", "item", "product"),
-    "qty" -> Seq("количество", "кол-во", "кол", "qty", "quantity", "amount", "шт"),
-    "unit" -> Seq("единица", "ед.изм", "ед", "unit", "measure", "измерение"),
-    "price" -> Seq("цена", "стоимость", "price", "cost", "rate"),
-    "currency" -> Seq("валюта", "currency", "curr", "руб", "usd", "eur"),
-    "total" -> Seq("сумма", "итого", "total", "sum", "amount")
+  val textColumnPatterns: Seq[(String, Keywords)] = Seq(
+    "name" -> Keywords("наименование", "название", "товар", "описание", "name", "description", "item", "product"),
+    "qty" -> Keywords("количество", "кол-во", "кол", "qty", "quantity", "amount", "шт"),
+    "unit" -> Keywords("единица", "ед.изм", "ед", "unit", "measure", "измерение"),
+    "price" -> Keywords("цена", "стоимость", "price", "cost", "rate"),
+    "currency" -> Keywords("валюта", "currency", "curr", "руб", "usd", "eur"),
+    "total" -> Keywords("сумма", "итого", "total", "sum", "amount")
   )
 
   // ---- universal parser column synonyms (app/pipeline/universal_parser.py:51-59) ----
-  val universalColumnSynonyms: Seq[(String, Seq[String])] = Seq(
-    "number" -> Seq("№", "номер", "n", "number", "позиция", "поз", "порядковый"),
-    "article" -> Seq("артикул", "код", "article", "code", "sku", "арт", "код товара"),
-    "name" -> Seq("товары", "работы", "услуги", "наименование", "описание", "name", "description", "название", "товар"),
-    "qty" -> Seq("количество", "кол-во", "qty", "amount", "объем", "кол", "к-во", "шт"),
-    "unit" -> Seq("ед", "единица", "изм", "unit", "measure", "единицы", "измерения"),
-    "price" -> Seq("цена", "стоимость", "price", "cost", "тариф", "цена за ед", "цена за единицу"),
-    "total" -> Seq("сумма", "итого", "total", "sum", "стоимость", "сумма с ндс", "сумма без ндс")
+  val universalColumnSynonyms: Seq[(String, Keywords)] = Seq(
+    "number" -> Keywords("№", "номер", "n", "number", "позиция", "поз", "порядковый"),
+    "article" -> Keywords("артикул", "код", "article", "code", "sku", "арт", "код товара"),
+    "name" -> Keywords("товары", "работы", "услуги", "наименование", "описание", "name", "description", "название", "товар"),
+    "qty" -> Keywords("количество", "кол-во", "qty", "amount", "объем", "кол", "к-во", "шт"),
+    "unit" -> Keywords("ед", "единица", "изм", "unit", "measure", "единицы", "измерения"),
+    "price" -> Keywords("цена", "стоимость", "price", "cost", "тариф", "цена за ед", "цена за единицу"),
+    "total" -> Keywords("сумма", "итого", "total", "sum", "стоимость", "сумма с ндс", "сумма без ндс")
   )
 
   // ---- commercial parser header patterns (app/pipeline/commercial_parser.py:17-24) ----
-  val commercialHeaderPatterns: Seq[(String, Seq[String])] = Seq(
-    "number" -> Seq("№", "номер", "n", "number", "позиция"),
-    "name" -> Seq("наименование", "название", "описание", "товар", "name", "description"),
-    "qty" -> Seq("кол-во", "количество", "qty", "amount", "объем"),
-    "unit" -> Seq("ед", "единица", "изм", "unit", "measure"),
-    "price" -> Seq("цена", "стоимость", "price", "cost", "тариф"),
-    "total" -> Seq("сумма", "итого", "total", "sum", "стоимость")
+  val commercialHeaderPatterns: Seq[(String, Keywords)] = Seq(
+    "number" -> Keywords("№", "номер", "n", "number", "позиция"),
+    "name" -> Keywords("наименование", "название", "описание", "товар", "name", "description"),
+    "qty" -> Keywords("кол-во", "количество", "qty", "amount", "объем"),
+    "unit" -> Keywords("ед", "единица", "изм", "unit", "measure"),
+    "price" -> Keywords("цена", "стоимость", "price", "cost", "тариф"),
+    "total" -> Keywords("сумма", "итого", "total", "sum", "стоимость")
   )
 
   // ---- competitive parser header patterns (app/pipeline/competitive_parser.py:17-46) ----
-  val competitiveHeaderPatterns: Seq[(String, Seq[String])] = Seq(
-    "name" -> Seq("наименование", "название", "товар", "описание", "name", "description", "item", "product",
+  val competitiveHeaderPatterns: Seq[(String, Keywords)] = Seq(
+    "name" -> Keywords("наименование", "название", "товар", "описание", "name", "description", "item", "product",
       "наименование товара", "название товара", "описание товара"),
-    "qty" -> Seq("количество", "кол-во", "кол", "qty", "quantity", "amount", "шт", "объем",
+    "qty" -> Keywords("количество", "кол-во", "кол", "qty", "quantity", "amount", "шт", "объем",
       "количество товара", "объем поставки"),
-    "unit" -> Seq("единица", "ед.изм", "ед", "unit", "measure", "измерение", "единица измерения", "ед. изм"),
-    "price" -> Seq("цена", "стоимость", "price", "cost", "rate", "тариф",
+    "unit" -> Keywords("единица", "ед.изм", "ед", "unit", "measure", "измерение", "единица измерения", "ед. изм"),
+    "price" -> Keywords("цена", "стоимость", "price", "cost", "rate", "тариф",
       "цена за единицу", "стоимость единицы", "цена закупки"),
-    "currency" -> Seq("валюта", "currency", "curr", "руб", "usd", "eur", "рубль", "доллар", "евро"),
-    "total" -> Seq("сумма", "итого", "total", "sum", "amount", "стоимость", "общая сумма", "стоимость позиции"),
-    "supplier" -> Seq("поставщик", "supplier", "vendor", "компания", "организация", "наименование поставщика")
+    "currency" -> Keywords("валюта", "currency", "curr", "руб", "usd", "eur", "рубль", "доллар", "евро"),
+    "total" -> Keywords("сумма", "итого", "total", "sum", "amount", "стоимость", "общая сумма", "стоимость позиции"),
+    "supplier" -> Keywords("поставщик", "supplier", "vendor", "компания", "организация", "наименование поставщика")
   )
 
   // ---- invoice column words, tested as an elif chain (invoice_parser.py:93-146;
   // table_extractor.py keeps an identical copy) ----
-  val invoiceColumnWords: Seq[(String, Seq[String])] = Seq(
-    "number" -> Seq("№", "номер", "позиция"),
-    "article" -> Seq("артикул", "код", "арт"),
-    "name" -> Seq("наименование", "товары", "работы", "услуги", "название"),
-    "qty" -> Seq("количество", "кол-во", "колво"),
-    "unit" -> Seq("ед", "единица", "изм"),
-    "price" -> Seq("цена", "стоимость", "руб"),
-    "total" -> Seq("сумма", "итого", "всего"))
+  val invoiceColumnWords: Seq[(String, Keywords)] = Seq(
+    "number" -> Keywords("№", "номер", "позиция"),
+    "article" -> Keywords("артикул", "код", "арт"),
+    "name" -> Keywords("наименование", "товары", "работы", "услуги", "название"),
+    "qty" -> Keywords("количество", "кол-во", "колво"),
+    "unit" -> Keywords("ед", "единица", "изм"),
+    "price" -> Keywords("цена", "стоимость", "руб"),
+    "total" -> Keywords("сумма", "итого", "всего"))
 
   // ---- header-line indicators ----
   // invoice/universal/supplier-profile variant (invoice_parser.py:424-427)
-  val headerLineInvoice: Seq[String] = Seq(
+  val headerLineInvoice: Keywords = Keywords(
     "наименование", "название", "количество", "кол-во", "цена", "стоимость",
     "единица", "валюта", "сумма", "итого", "поставщик", "счет", "оплату")
   // commercial variant (commercial_parser.py:409-412)
-  val headerLineCommercial: Seq[String] = Seq(
+  val headerLineCommercial: Keywords = Keywords(
     "наименование", "название", "количество", "кол-во", "цена", "стоимость",
     "единица", "валюта", "сумма", "итого", "поставщик", "коммерческое")
   // competitive variant (competitive_parser.py:512-515)
-  val headerLineCompetitive: Seq[String] = Seq(
+  val headerLineCompetitive: Keywords = Keywords(
     "наименование", "название", "количество", "кол-во", "цена", "стоимость",
     "единица", "валюта", "сумма", "итого", "поставщик")
 
   // ---- service-line indicators ----
   // invoice/universal/profile variant (invoice_parser.py:434-438)
-  val serviceLineInvoice: Seq[String] = Seq(
+  val serviceLineInvoice: Keywords = Keywords(
     "итого", "всего", "сумма", "контракт", "договор", "счет", "фактура",
     "поставщик:", "покупатель:", "дата:", "номер:", "подготовлено:", "для:",
     "инн", "кпп", "бик", "р/с", "банк", "получатель", "плательщик")
   // commercial variant (commercial_parser.py:419-422)
-  val serviceLineCommercial: Seq[String] = Seq(
+  val serviceLineCommercial: Keywords = Keywords(
     "итого", "всего", "сумма", "контракт", "договор", "счет", "фактура",
     "поставщик:", "покупатель:", "дата:", "номер:", "подготовлено:", "для:")
   // competitive variant (competitive_parser.py:522-525)
-  val serviceLineCompetitive: Seq[String] = Seq(
+  val serviceLineCompetitive: Keywords = Keywords(
     "итого", "всего", "сумма", "контракт", "договор", "счет", "фактура",
     "поставщик:", "покупатель:", "дата:", "номер:")
 
   // ---- service-row (name-level) indicators ----
   // invoice/universal variant (invoice_parser.py:445-450)
-  val serviceRowInvoice: Seq[String] = Seq(
+  val serviceRowInvoice: Keywords = Keywords(
     "итого", "всего", "сумма", "наименований", "наименования",
     "корпус", "комната", "дом", "шоссе", "указанные", "цены",
     "скидки", "действуют", "апреля", "года", "подготовлено",
     "инн", "кпп", "бик", "р/с", "банк", "получатель", "плательщик")
   // commercial/competitive variant (commercial_parser.py:429-433, competitive_parser.py:532-535)
-  val serviceRowShort: Seq[String] = Seq(
+  val serviceRowShort: Keywords = Keywords(
     "итого", "всего", "сумма", "наименований", "наименования",
     "корпус", "комната", "дом", "шоссе", "указанные", "цены",
     "скидки", "действуют", "апреля", "года", "подготовлено")
 
   // ---- item-name service words for strict validation ----
   // universal parser (universal_parser.py:784-791)
-  val validationServiceWordsUniversal: Seq[String] = Seq(
+  val validationServiceWordsUniversal: Keywords = Keywords(
     "инн", "кпп", "счет", "банк", "бик", "р/с", "к/с", "получатель", "плательщик",
     "оплата", "платеж", "договор", "счет на оплату", "коммерческое предложение",
     "итого", "всего", "сумма", "назначение", "важно", "примечание", "примечания",
@@ -120,16 +122,16 @@ object Rules {
     "россия", "область", "край", "город", "улица", "дом", "корпус", "комната",
     "почтовое", "индекс", "код", "вид", "срок", "плат", "наз", "пл", "очер")
   // commercial parser adds ТУ/cert words (commercial_parser.py:485-493)
-  val validationServiceWordsCommercial: Seq[String] =
-    validationServiceWordsUniversal ++ Seq("ту", "технические", "условия", "сертификат", "соответствия")
+  val validationServiceWordsCommercial: Keywords =
+    Keywords(validationServiceWordsUniversal.words ++ Seq("ту", "технические", "условия", "сертификат", "соответствия"): _*)
   // table_extractor exclude list (table_extractor.py:31-38)
-  val excludeWordsTableExtractor: Seq[String] = validationServiceWordsUniversal
+  val excludeWordsTableExtractor: Keywords = validationServiceWordsUniversal
   // precise parser exclude list (precise_table_parser.py:31-39)
-  val excludeWordsPrecise: Seq[String] =
-    validationServiceWordsUniversal ++ Seq("технические", "условия", "сертификат", "соответствия")
+  val excludeWordsPrecise: Keywords =
+    Keywords(validationServiceWordsUniversal.words ++ Seq("технические", "условия", "сертификат", "соответствия"): _*)
 
   // ---- best-parser selection service words (universal_parser.py:247-251) ----
-  val bestSelectionServiceWords: Seq[String] = Seq(
+  val bestSelectionServiceWords: Keywords = Keywords(
     "инн", "кпп", "счет", "банк", "бик", "р/с", "к/с", "получатель", "плательщик",
     "итого", "всего", "сумма", "ндс", "четыре", "миллио", "на восе", "мьдесят",
     "ве тысячи", "шестьсот", "ьдесят", "семь ру", "блей", "копеек", "копорское",
@@ -137,8 +139,8 @@ object Rules {
     "апреля", "в течение", "дн")
 
   // best-parser product whitelist (universal_parser.py:256)
-  val bestSelectionProductWords: Seq[String] =
-    Seq("кабель", "сип", "провод", "перевозка", "транспорт")
+  val bestSelectionProductWords: Keywords =
+    Keywords("кабель", "сип", "провод", "перевозка", "транспорт")
 
   // ---- product plausibility patterns (table_extractor.py:17-28) ----
   val productPatterns: Seq[String] = Seq(
@@ -147,51 +149,51 @@ object Rules {
 
   // ---- header-row first-cell indicators ----
   // invoice/universal table header skip (invoice_parser.py:196 / universal_parser.py:583)
-  val headerFirstCellInvoice: Seq[String] =
-    Seq("№", "номер", "артикул", "товары", "количество", "цена", "сумма")
-  val headerFirstCellUniversal: Seq[String] =
-    Seq("№", "номер", "артикул", "товары", "количество", "цена", "сумма", "наименование")
+  val headerFirstCellInvoice: Keywords =
+    Keywords("№", "номер", "артикул", "товары", "количество", "цена", "сумма")
+  val headerFirstCellUniversal: Keywords =
+    Keywords("№", "номер", "артикул", "товары", "количество", "цена", "сумма", "наименование")
   // commercial table header skip (commercial_parser.py:168)
-  val headerFirstCellCommercial: Seq[String] = Seq("наименование", "кол-во", "цена", "сумма", "№")
+  val headerFirstCellCommercial: Keywords = Keywords("наименование", "кол-во", "цена", "сумма", "№")
   // table_extractor / profile header row (table_extractor.py:177, supplier_profiles.py:128)
-  val headerFirstCellTable: Seq[String] =
-    Seq("№", "номер", "артикул", "товары", "количество", "цена", "сумма", "наименование")
+  val headerFirstCellTable: Keywords =
+    Keywords("№", "номер", "артикул", "товары", "количество", "цена", "сумма", "наименование")
   // precise parser adds "наимен" (precise_table_parser.py:250)
-  val headerFirstCellPrecise: Seq[String] =
-    Seq("№", "номер", "артикул", "товары", "количество", "цена", "сумма", "наименование", "наимен")
+  val headerFirstCellPrecise: Keywords =
+    Keywords("№", "номер", "артикул", "товары", "количество", "цена", "сумма", "наименование", "наимен")
 
   // ---- units / currencies ----
   // analyze-row-structure unit list (universal_parser.py:416)
   val analyzeUnits: Seq[String] = Seq("шт", "кг", "м", "л", "км", "м2", "м3", "тонн", "штук")
   // token-class unit substrings (competitive_parser.py:314,646)
-  val tokenUnits: Seq[String] = Seq("шт", "кг", "м", "л", "pcs", "kg", "m", "l")
+  val tokenUnits: Keywords = Keywords("шт", "кг", "м", "л", "pcs", "kg", "m", "l")
   // token-class currency substrings (competitive_parser.py:321,653)
-  val tokenCurrencies: Seq[String] = Seq("RUB", "USD", "EUR", "РУБ", "ДОЛЛ", "ЕВРО")
+  val tokenCurrencies: Keywords = Keywords("RUB", "USD", "EUR", "РУБ", "ДОЛЛ", "ЕВРО")
 
   // ---- document-type detection ----
   // simple 3-class variant (universal_parser.py:837-839)
-  val docTypeCommercial: Seq[String] = Seq("коммерческое предложение", "предложение", "поставщик", "товар")
-  val docTypeInvoice: Seq[String] = Seq("счет на оплату", "счет №", "оплата", "плательщик", "получатель")
-  val docTypeCompetitive: Seq[String] = Seq("конкурентная процедура", "тендер", "аукцион", "заявка")
+  val docTypeCommercial: Keywords = Keywords("коммерческое предложение", "предложение", "поставщик", "товар")
+  val docTypeInvoice: Keywords = Keywords("счет на оплату", "счет №", "оплата", "плательщик", "получатель")
+  val docTypeCompetitive: Keywords = Keywords("конкурентная процедура", "тендер", "аукцион", "заявка")
   // 4-class scored variant (ocr_processor.py:227-248)
-  val scoreInvoiceKeywords: Seq[String] = Seq(
+  val scoreInvoiceKeywords: Keywords = Keywords(
     "счет", "счет-фактура", "invoice", "bill", "оплата", "платеж",
     "ндс", "итого", "сумма", "к оплате", "банковские реквизиты")
-  val scoreCommercialKeywords: Seq[String] = Seq(
+  val scoreCommercialKeywords: Keywords = Keywords(
     "коммерческое предложение", "commercial proposal", "предложение",
     "условия поставки", "сроки поставки", "гарантия", "спецификация")
-  val scoreCompetitiveKeywords: Seq[String] = Seq(
+  val scoreCompetitiveKeywords: Keywords = Keywords(
     "конкурс", "тендер", "аукцион", "заявка", "предложение",
     "техническое задание", "тз", "спецификация")
-  val scoreContractKeywords: Seq[String] = Seq(
+  val scoreContractKeywords: Keywords = Keywords(
     "договор", "контракт", "соглашение", "contract", "agreement",
     "стороны", "обязательства", "ответственность", "форс-мажор")
 
   // ---- quality gates ----
   // OCR-needed gate keywords (enhanced_extractor.py:263)
-  val qualityGateKeywords: Seq[String] = Seq("товар", "цена", "количество", "сумма", "итого", "ндс")
+  val qualityGateKeywords: Keywords = Keywords("товар", "цена", "количество", "сумма", "итого", "ндс")
   // validation key elements (ocr_processor.py:299)
-  val validationKeyElements: Seq[String] = Seq("товар", "цена", "количество", "сумма", "итого")
+  val validationKeyElements: Keywords = Keywords("товар", "цена", "количество", "сумма", "итого")
 
   // ---- thresholds (app/utils/config.py:12-39) ----
   val autoMatchThreshold = 90.0

@@ -94,8 +94,8 @@ class NumSpec extends AnyFunSuite {
     val words = Seq("итого", "всего", "abc", "№", "ого в")
     (1 to 20000).foreach { _ =>
       val s = (0 until rnd.nextInt(25)).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
-      val exact = graft.core.Py.containsAny(graft.core.Py.lower(s), words)
-      val fast = graft.core.Py.containsAnyLowered(s, words)
+      val exact = KeywordRefs.containsAny(graft.core.Py.lower(s), words)
+      val fast = KeywordRefs.containsAnyLowered(s, words)
       assert(fast == exact, s"'$s'")
     }
   }

@@ -8,11 +8,21 @@ import ParserCommon._
   * for the two biggest allocators (competitive, universal).
   * SharedLines+segmentation are precomputed OUTSIDE the measured closure,
   * so each number is the phase alone. For stack samples use the JDK's JFR
-  * (`jcmd <pid> JFR.start`, `jfr print`). Usage: sbt "Test/runMain graft.core.AllocProbe [n]" */
+  * (`jcmd <pid> JFR.start`, `jfr print`); `engine <seconds>` after `n`
+  * skips the probes and only loops `Engine.parseTurn` over the n turns on
+  * one thread for that long, a steady target for a stack sampler.
+  * Usage: sbt "Test/runMain graft.core.AllocProbe [n] [engine <seconds>]" */
 object AllocProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 4000
     val texts = (0L until n.toLong).map(id => Transcripts.payload(42L, id)).toArray
+    if (args.length > 2 && args(1) == "engine") {
+      val end = System.nanoTime() + args(2).toLong * 1000000000L
+      var turns = 0L
+      while (System.nanoTime() < end) { Engine.parseTurn("c", 0, texts((turns % n).toInt)); turns += 1 }
+      println(s"ENGINE loop: $turns turns")
+      return
+    }
     val shared = texts.map(t => new SharedLines(t))
     val segs = shared.map(s => Segmentation.segmentShared(s).tables)
     val mx = java.lang.management.ManagementFactory.getThreadMXBean
@@ -73,13 +83,15 @@ object AllocProbe {
       } catch { case _: Exception => graft.model.ParserResult("competitive", Nil, error = true) })
     }
     alloc("env.selectBest")(i => Engine.selectBest(parserResults(i)))
-    alloc("env.lowerText")(i => Py.lower(texts(i)))
-    val lowers = texts.map(Py.lower)
-    alloc("env.scores+quality") { i =>
-      Engine.documentTypeScoresLower(lowers(i))
-      Engine.qualityLower(lowers(i), segs(i))
-      Engine.detectDocumentTypeLower(lowers(i))
+    // the whole-text keyword pass and the envelope fields that read it
+    val envKeywords: Int => Any = { i =>
+      val found = Engine.textFound(texts(i))
+      Engine.documentTypeScores(found)
+      Engine.quality(found, segs(i))
+      Engine.detectDocumentType(found)
+      Engine.needsFallback(texts(i), found, segs(i))
     }
+    alloc("env.scores+quality")(envKeywords)
     alloc("env.recommendations")(i => Engine.recommendations(if (i % 2 == 0) "invoice" else "unknown"))
     alloc("ENGINE.full")(i => Engine.parseTurn("c", 0, texts(i)))
     time("sharedLines+segment")(i => Segmentation.segmentShared(new SharedLines(texts(i))))
@@ -88,6 +100,7 @@ object AllocProbe {
     time("invoice.full")(i => try InvoiceParser.parse(shared(i), segs(i)) catch { case _: Exception => Nil })
     time("commercial.full")(i => try CommercialParser.parse(shared(i), segs(i)) catch { case _: Exception => Nil })
     time("supplierProfile")(i => try SupplierProfiles.parseWithProfile(texts(i), segs(i)) catch { case _: Exception => Nil })
+    time("env.scores+quality")(envKeywords)
     time("tableExtractor")(i => try TableExtractor.parse(segs(i)) catch { case _: Exception => Nil })
     time("preciseTable")(i => try PreciseTableParser.parse(segs(i)) catch { case _: Exception => Nil })
     time("ENGINE.full")(i => Engine.parseTurn("c", 0, texts(i)))

@@ -17,10 +17,18 @@ def canon(df):
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
 
+def part_file(name):
+    """The one parquet part file of query `name`'s output directory (Verify
+    writes each result coalesced to one partition)."""
+    parts = glob.glob(f"{outdir}/{name}/*.parquet")
+    if len(parts) != 1:
+        raise ValueError(f"{outdir}/{name} holds {len(parts)} parquet part files, expected exactly 1")
+    return parts[0]
+
 fails = 0
 for name, sql in sorted(oracle.items()):
     try:
-        spark_df = pd.read_parquet(glob.glob(f"{outdir}/{name}/*.parquet")[0])
+        spark_df = pd.read_parquet(part_file(name))
         for stmt in [s for s in sql.split(';\n') if s.strip()]:
             duck_res = con.sql(stmt)
         duck_df = duck_res.df()
