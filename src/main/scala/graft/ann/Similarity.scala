@@ -163,21 +163,24 @@ object Similarity {
    * A seed centroid that attracts no sample vectors in the Lloyd step is
    * dropped (its group never forms), so the effective k can shrink — the
    * standard coarse-quantizer behavior; probes adapt to what remains.
+   * An empty corpus fails fast: there is nothing to train on.
    */
   def trainIvfCentroids(emb: DataFrame, idCol: String, vecCol: String,
                         k: Int, trainN: Int = 4096): DataFrame = {
     val hashed = idVec(emb, idCol, vecCol)
       .withColumn("__h", md5(concat(lit("ivf:"), col("id").cast("string"))))
     // the sample count (for the seed stride) rides in the SAME
-    // single-partition window pass that ranks the sample — no separate
-    // count() action: stride = max(1, n div k), identical integer math
-    // to the former driver-side max(1L, n / k)
+    // single-partition window pass that ranks the sample — no count()
+    // over the corpus: stride = max(1, n div k), identical integer math
+    // to the former driver-side max(1L, n / k). The one extra action is
+    // the emptiness probe below, on the checkpointed <= trainN-row sample.
     val w = Window.orderBy(col("__h"), col("id"))
     val tr = hashed.orderBy(col("__h"), col("id")).limit(trainN)
       .withColumn("__rk", row_number().over(w) - 1)
       .withColumn("__n", count(lit(1)).over(
         w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
       .localCheckpoint() // bounded (<= trainN rows); feeds seeds + Lloyd
+    require(!tr.isEmpty, "trainIvfCentroids: empty corpus — nothing to train on")
     val stride = greatest(lit(1L), expr(s"__n div ${k}L")) // integer div, exact
     val seeds = tr.where(pmod(col("__rk"), stride) === 0)
       .orderBy("__rk").limit(k)

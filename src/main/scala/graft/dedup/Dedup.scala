@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DataType
+import graft.expr.textops.{shingles_of, tokens_of}
 
 /**
  * Corpus-level deduplication operators for training-data pipelines:
@@ -95,27 +96,6 @@ object Dedup {
         count(lit(1)).as("n_shared_families"))
   }
 
-  /** Lowercase alnum tokens — native single-pass expression
-    * (graft.expr.TextCore.tokens; `lower` stays a Catalyst argument). The HOF
-    * formulation (graft.HofRefs.tokensHof, the differential reference in
-    * the test tree) recompiled the split regex and ran the empty-filter
-    * lambda interpreted per row.
-    */
-  def tokens(textCol: Column): Column = graft.expr.textops.tokens_of(textCol)
-
-  /** Word k-shingles as strings ("a b c"); fewer than k tokens -> empty.
-    * Native single-pass expression (graft.expr.TextCore.shingles): same
-    * String.split token stream, same space-joined grams, same
-    * first-occurrence array_distinct order as graft.HofRefs.shinglesHof. */
-  def shingles(textCol: Column, k: Int): Column =
-    graft.expr.textops.shingles_of(textCol, k)
-
-  /** Portable 60-bit hash of a string: first 15 hex chars of md5, parsed as
-    * an integer — bit-identical in any engine with md5 (DuckDB:
-    * ('0x'||substr(md5(s),1,15))::BIGINT). */
-  def md5Hash60(s: Column): Column =
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long")
-
   /**
    * Span-level duplicated-text coverage — the substring-dedup shape of
    * Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -149,9 +129,9 @@ object Dedup {
     // positional gram HASHES in one native pass (graft.expr.TextCore.gramHashes):
     // the gram strings are never materialized as rows — each row explodes
     // straight to (pos, 60-bit md5), the only columns the count/semi-join
-    // pipeline reads. TextOpsSpec's positional-gram md5Hash60 fold is the
-    // differential reference formulation.
-    val base = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("tk"))
+    // pipeline reads. TextOpsSpec's positional-gram HofRefs.md5Hash60 fold
+    // is the differential reference formulation.
+    val base = df.select(col(idCol).as("doc_id"), tokens_of(col(textCol)).as("tk"))
       .select(col("doc_id"), size(col("tk")).cast("long").as("n_tokens"),
         posexplode(graft.expr.textops.gram_hashes(col("tk"), k)).as(Seq("pos", "h")))
       .select(col("doc_id"), col("n_tokens"), col("pos").cast("long").as("pos"), col("h"))
@@ -199,7 +179,7 @@ object Dedup {
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("__s").as("s"), col("__e").as("e"))))
         .as("__spans"))
-    val docs = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("tk"))
+    val docs = df.select(col(idCol).as("doc_id"), tokens_of(col(textCol)).as("tk"))
     docs.join(spans, Seq("doc_id"), "left")
       .withColumn("__kept",
         when(col("__spans").isNull, col("tk")).otherwise(
@@ -231,9 +211,9 @@ object Dedup {
    */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, numHashes: Int = 32): DataFrame =
-    df.where(size(tokens(col(textCol))) >= k) // == "has at least one shingle"
+    df.where(size(tokens_of(col(textCol))) >= k) // == "has at least one shingle"
       .select(col(idCol),
-        graft.expr.signatures.minhash_sig(shingles(col(textCol), k), numHashes).as("sig"))
+        graft.expr.signatures.minhash_sig(shingles_of(col(textCol), k), numHashes).as("sig"))
 
   /** Per-band bucket keys: md5 of the band's comma-joined signature rows. */
   def minhashBuckets(sigCol: Column, bands: Int, rowsPerBand: Int): Column =
@@ -315,7 +295,7 @@ object Dedup {
       .union(pairs.select(col("id_b").as(idCol)))
       .distinct()
     val cands = df.join(candIds, Seq(idCol), "left_semi")
-    val sh = cands.select(col(idCol).as("vid"), shingles(col(textCol), k).as("vsh"))
+    val sh = cands.select(col(idCol).as("vid"), shingles_of(col(textCol), k).as("vsh"))
     pairs.select("id_a", "id_b")
       .join(sh.select(col("vid").as("id_a"), col("vsh").as("sh_a")), Seq("id_a"))
       .join(sh.select(col("vid").as("id_b"), col("vsh").as("sh_b")), Seq("id_b"))
@@ -432,15 +412,15 @@ object Dedup {
     // computed in the same pass as the collapse and materialized
     // alongside it; famAgg/sigs are projections of the shared blocks.
     // Signing the REP's raw text is family-invariant: members differ
-    // only in case/whitespace, which tokens() normalizes away. The
+    // only in case/whitespace, which tokens_of() normalizes away. The
     // bucket-cap guard reads its input twice (count + filter); off this
     // checkpoint both passes are a band-slice/md5, not a second
     // shingle+signature fold over every rep. The sig-null filter below
     // is exactly [[minhashSignatures]]' has-at-least-one-shingle gate
     // (< k tokens -> when() null).
     val famSig = collapseFamilies(fam(df, idCol, textCol), col("doc_id"), count(lit(1)))
-      .withColumn("sig", when(size(tokens(col("__text"))) >= k,
-        graft.expr.signatures.minhash_sig(shingles(col("__text"), k), bands * rowsPerBand)))
+      .withColumn("sig", when(size(tokens_of(col("__text"))) >= k,
+        graft.expr.signatures.minhash_sig(shingles_of(col("__text"), k), bands * rowsPerBand)))
       .localCheckpoint()
     val famAgg = famSig.drop("sig")
     val sigs = famSig.where(col("sig").isNotNull).select(col("__fh"), col("sig"))
@@ -477,7 +457,7 @@ object Dedup {
     val famOut = index.famAgg.join(repClusters, Seq("__keeper"), "left")
       .withColumn("__cluster", coalesce(col("__clu"),
         when(col("__n") >= 2 && lit(1.0) > index.threshold &&
-          size(tokens(col("__text"))) >= index.k, col("__keeper"))))
+          size(tokens_of(col("__text"))) >= index.k, col("__keeper"))))
       .where(col("__cluster").isNotNull)
       .select("__fh", "__cluster")
     famMap.select("doc_id", "__fh").join(famOut, Seq("__fh"))
@@ -651,7 +631,7 @@ object Dedup {
    */
   def simhashBlocks(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol),
-      graft.expr.signatures.simhash_blocks(tokens(col(textCol))).as("blocks"))
+      graft.expr.signatures.simhash_blocks(tokens_of(col(textCol))).as("blocks"))
 
   /** Hamming-near pairs via the 4x16-bit block pigeonhole (any pair within
     * hamming distance 3 shares at least one exact block). Same

@@ -21,20 +21,29 @@ import org.apache.spark.sql.graftbridge.Bridge
  */
 object SigCore {
 
-  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+  private val md5Local = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
 
-  /** First 15 hex chars of md5 as a 60-bit non-negative long
-    * (== ('0x'||substr(md5(s),1,15))::BIGINT == conv(substring(md5hex,1,15),16,10)). */
-  def md5Hash60(bytes: Array[Byte]): Long = {
-    val d = md5.get()
+  /** This thread's MD5, reset — the one digest every graft.expr kernel
+    * hashes with. */
+  private[expr] def md5(): java.security.MessageDigest = {
+    val d = md5Local.get()
     d.reset()
-    val dig = d.digest(bytes)
+    d
+  }
+
+  /** A finished md5 digest's first 15 hex chars as a 60-bit non-negative
+    * long (== ('0x'||substr(md5(s),1,15))::BIGINT ==
+    * conv(substring(md5hex,1,15),16,10)). */
+  private[expr] def hash60(dig: Array[Byte]): Long = {
     var v = 0L
     var i = 0
     while (i < 7) { v = (v << 8) | (dig(i) & 0xffL); i += 1 }
     (v << 4) | ((dig(7) & 0xffL) >>> 4)
   }
+
+  /** [[hash60]] of the md5 of `bytes`. */
+  def md5Hash60(bytes: Array[Byte]): Long = hash60(md5().digest(bytes))
 
   private val P = 2147483647L
 
@@ -79,13 +88,11 @@ object SigCore {
     * null token -> null, as for a null array. */
   def simhashBlocks(arr: ArrayData): ArrayData = {
     val counts = new Array[Int](64)
-    val d = md5.get()
     var i = 0
     val n = arr.numElements()
     while (i < n) {
       if (arr.isNullAt(i)) return null
-      d.reset()
-      val dig = d.digest(arr.getUTF8String(i).getBytes)
+      val dig = md5().digest(arr.getUTF8String(i).getBytes)
       val hi = ((dig(0) & 0xffL) << 24) | ((dig(1) & 0xffL) << 16) | ((dig(2) & 0xffL) << 8) | (dig(3) & 0xffL)
       val lo = ((dig(4) & 0xffL) << 24) | ((dig(5) & 0xffL) << 16) | ((dig(6) & 0xffL) << 8) | (dig(7) & 0xffL)
       var g = 0

@@ -14,16 +14,22 @@ import org.apache.spark.unsafe.types.UTF8String
  * The declarative chain `filter(split(lower(text), "[^a-z0-9]+"), _ != "")`
  * -> arrays_zip of k shifted slices -> transform(concat_ws) ->
  * array_distinct re-evaluates the token split per slice reference, runs
- * every lambda interpreted, and `String.split` recompiles the regex
- * Pattern on EVERY row (the exact code path `UTF8String.split` takes).
- * These kernels produce bit-identical outputs — same String.split(-1)
- * semantics via a cached Pattern (Pattern.split IS String.split's slow
- * path), same empty-token filter, same space-joined grams, same
- * first-occurrence array_distinct order, same md5/60-bit gram hash as
- * `conv(substring(md5(s),1,15),16,10)` — in one pass per row. Lower stays
- * a real Catalyst `Lower` child, so case mapping is byte-for-byte Spark's.
- * TextOpsSpec holds the differential against the HOF formulations on real
- * documents and adversarial strings.
+ * every lambda interpreted, and recompiles the split regex on every row.
+ * These kernels produce bit-identical outputs in one pass per row.
+ *
+ * Tokens come from one scanner over the bytes of the lowered
+ * `UTF8String`: the maximal `[a-z0-9]` byte runs. They are exactly the
+ * non-empty parts of the regex split, with no decode: the separator class
+ * is ASCII, every byte of a multi-byte UTF-8 character is >= 0x80 (so it
+ * lies in a separator run), and `Lower` always returns valid UTF-8 (an
+ * invalid input decodes to U+FFFD, a separator). Tokens and shingles are
+ * copied out of that buffer, never views into it (codegen reuses the
+ * input row's buffer across rows). Shingles are the space-joined k-grams
+ * in array_distinct's first-occurrence order; every 60-bit hash is
+ * [[SigCore.hash60]] of an md5 (== `conv(substring(md5(s),1,15),16,10)`).
+ * Lower stays a real Catalyst `Lower` child, so case mapping is
+ * byte-for-byte Spark's. TextOpsSpec holds the differential against the
+ * HOF formulations on real documents and adversarial strings.
  *
  * Null semantics replicated: tokens(null) = null (split is
  * null-intolerant); shingles/gram-hashes of a null input = EMPTY array
@@ -32,58 +38,54 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 object TextCore {
 
-  private val tokenSep = java.util.regex.Pattern.compile("[^a-z0-9]+")
+  private def isTokenByte(b: Byte): Boolean = (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
 
-  /** `filter(split(lowered, "[^a-z0-9]+"), _ != "")` in one pass —
-    * String.split(-1) semantics (leading empty kept by split, then
-    * dropped by the filter like every other empty part). */
-  def tokens(lowered: UTF8String): ArrayData = {
-    val parts = tokenSep.split(lowered.toString, -1)
-    var n = 0
+  /** The scanner: the maximal `[a-z0-9]` byte runs of the lowered text,
+    * each copied out as a token. */
+  private def scan(lowered: UTF8String): java.util.ArrayList[UTF8String] = {
+    val bytes = lowered.getBytes
+    val toks = new java.util.ArrayList[UTF8String]()
     var i = 0
-    while (i < parts.length) { if (!parts(i).isEmpty) n += 1; i += 1 }
-    val out = new Array[AnyRef](n)
-    var j = 0
-    i = 0
-    while (i < parts.length) {
-      if (!parts(i).isEmpty) { out(j) = UTF8String.fromString(parts(i)); j += 1 }
-      i += 1
+    while (i < bytes.length) {
+      if (isTokenByte(bytes(i))) {
+        val start = i
+        while (i < bytes.length && isTokenByte(bytes(i))) i += 1
+        toks.add(UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, start, i)))
+      } else i += 1
     }
-    new GenericArrayData(out)
+    toks
   }
 
-  /** Distinct word k-shingles of the lowered text (first-occurrence
-    * order, exactly array_distinct's) — fewer than k tokens -> empty. */
-  def shingles(lowered: UTF8String, k: Int): ArrayData = {
-    if (lowered == null) return new GenericArrayData(new Array[AnyRef](0))
-    val parts = tokenSep.split(lowered.toString, -1)
-    val toks = new java.util.ArrayList[String]()
+  /** `filter(split(lowered, "[^a-z0-9]+"), _ != "")` in one pass. */
+  def tokens(lowered: UTF8String): ArrayData = new GenericArrayData(scan(lowered).toArray)
+
+  private val space = UTF8String.fromString(" ")
+
+  /** Distinct word k-shingles of the lowered text — k tokens joined by one
+    * space, first-occurrence order (exactly array_distinct's); null or
+    * fewer than k tokens -> empty. */
+  private def distinctShingles(lowered: UTF8String, k: Int): java.util.LinkedHashSet[UTF8String] = {
+    val seen = new java.util.LinkedHashSet[UTF8String]()
+    if (lowered == null) return seen
+    val toks = scan(lowered)
     var i = 0
-    while (i < parts.length) { if (!parts(i).isEmpty) toks.add(parts(i)); i += 1 }
-    val n = toks.size
-    if (n < k) return new GenericArrayData(new Array[AnyRef](0))
-    val seen = new java.util.LinkedHashSet[String]()
-    i = 0
-    while (i <= n - k) {
-      val sb = new java.lang.StringBuilder(toks.get(i))
-      var j = 1
-      while (j < k) { sb.append(' ').append(toks.get(i + j)); j += 1 }
-      seen.add(sb.toString)
+    while (i <= toks.size - k) {
+      seen.add(UTF8String.concatWs(space, toks.subList(i, i + k).toArray(new Array[UTF8String](k)): _*))
       i += 1
     }
-    val out = new Array[AnyRef](seen.size)
-    val it = seen.iterator()
-    var m = 0
-    while (it.hasNext) { out(m) = UTF8String.fromString(it.next()); m += 1 }
-    new GenericArrayData(out)
+    seen
   }
 
-  /** 60-bit md5 hash (== conv(substring(md5(s),1,15),16,10)) of every
-    * positional k-gram of a token array, index order, non-distinct —
-    * the [[graft.dedup.Dedup]] dupSpans gram pipeline fused so the gram
-    * strings are never materialized as rows. Fewer than k tokens ->
-    * empty; null input -> empty (when-otherwise branch in the HOF); a
-    * null token is left out of its grams, as concat_ws leaves it out. */
+  /** The distinct word k-shingles of the lowered text, as strings. */
+  def shingles(lowered: UTF8String, k: Int): ArrayData =
+    new GenericArrayData(distinctShingles(lowered, k).toArray)
+
+  /** 60-bit md5 hash of every positional k-gram of a token array, index
+    * order, non-distinct — the [[graft.dedup.Dedup]] dupSpans gram
+    * pipeline fused so the gram strings are never materialized as rows.
+    * Fewer than k tokens -> empty; null input -> empty (when-otherwise
+    * branch in the HOF); a null token is left out of its grams, as
+    * concat_ws leaves it out. */
   def gramHashes(toks: ArrayData, k: Int): ArrayData = {
     if (toks == null) return ArrayData.toArrayData(new Array[Long](0))
     val n = toks.numElements()
@@ -91,12 +93,11 @@ object TextCore {
     val bs = new Array[Array[Byte]](n)
     var i = 0
     while (i < n) { if (!toks.isNullAt(i)) bs(i) = toks.getUTF8String(i).getBytes; i += 1 }
-    val d = java.security.MessageDigest.getInstance("MD5")
     val out = new Array[Long](n - k + 1)
     i = 0
     while (i <= n - k) {
       // concat_ws(" ", ...) of the HOF: a null token and its separator are skipped
-      d.reset()
+      val d = SigCore.md5()
       var first = true
       var j = 0
       while (j < k) {
@@ -106,51 +107,22 @@ object TextCore {
         }
         j += 1
       }
-      val dig = d.digest()
-      var v = 0L
-      var b = 0
-      while (b < 7) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-      out(i) = (v << 4) | ((dig(7) & 0xffL) >>> 4)
+      out(i) = SigCore.hash60(d.digest())
       i += 1
     }
     ArrayData.toArrayData(out)
   }
 
   /** 60-bit md5 hash of every DISTINCT word k-shingle (first-occurrence
-    * order) — [[shingles]] composed with the per-gram hash of
-    * [[gramHashes]] without materializing the gram strings as rows
-    * (the contamination pipeline's corpus pass, which KeyCaps runs
+    * order) — [[shingles]] hashed without materializing the gram strings
+    * as rows (the contamination pipeline's corpus pass, which KeyCaps runs
     * twice). Null / <k tokens -> empty. */
   def shingleHashes(lowered: UTF8String, k: Int): ArrayData = {
-    if (lowered == null) return ArrayData.toArrayData(new Array[Long](0))
-    val parts = tokenSep.split(lowered.toString, -1)
-    val toks = new java.util.ArrayList[String]()
-    var i = 0
-    while (i < parts.length) { if (!parts(i).isEmpty) toks.add(parts(i)); i += 1 }
-    val n = toks.size
-    if (n < k) return ArrayData.toArrayData(new Array[Long](0))
-    val seen = new java.util.LinkedHashSet[String]()
-    i = 0
-    while (i <= n - k) {
-      val sb = new java.lang.StringBuilder(toks.get(i))
-      var j = 1
-      while (j < k) { sb.append(' ').append(toks.get(i + j)); j += 1 }
-      seen.add(sb.toString)
-      i += 1
-    }
-    val d = java.security.MessageDigest.getInstance("MD5")
+    val seen = distinctShingles(lowered, k)
     val out = new Array[Long](seen.size)
     val it = seen.iterator()
     var m = 0
-    while (it.hasNext) {
-      d.reset()
-      val dig = d.digest(UTF8String.fromString(it.next()).getBytes)
-      var v = 0L
-      var b = 0
-      while (b < 7) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-      out(m) = (v << 4) | ((dig(7) & 0xffL) >>> 4)
-      m += 1
-    }
+    while (it.hasNext) { out(m) = SigCore.md5Hash60(it.next().getBytes); m += 1 }
     ArrayData.toArrayData(out)
   }
 
@@ -180,9 +152,8 @@ object TextCore {
   }
 
   /** struct(n_tokens, score_int) of the hashed-linear-classifier fold
-    * (q68): per token, bucket = md5_60("w:" + tok) mod nBuckets (the
-    * 60-bit packing == conv(substring(md5(s),1,15),16,10), same as
-    * [[gramHashes]]), weight = (bucket * 2654435761) mod 8191 - 4095,
+    * (q68): per token, bucket = md5_60("w:" + tok) mod nBuckets
+    * ([[SigCore.hash60]]), weight = (bucket * 2654435761) mod 8191 - 4095,
     * summed left-to-right. All intermediates are non-negative and
     * bounded (nBuckets is capped at the wrapper so bucket * 2654435761
     * cannot overflow), so % == pmod and Long arithmetic is exact. The
@@ -192,20 +163,15 @@ object TextCore {
     * token nulls score_int, as the HOF's null concat nulls its fold. */
   def classifierScore(toks: ArrayData, nBuckets: Long): org.apache.spark.sql.catalyst.InternalRow = {
     val n = toks.numElements()
-    val d = java.security.MessageDigest.getInstance("MD5")
     var score = 0L
     var i = 0
     while (i < n) {
       if (toks.isNullAt(i)) return org.apache.spark.sql.catalyst.InternalRow(n.toLong, null)
-      d.reset()
+      val d = SigCore.md5()
       d.update('w'.toByte)
       d.update(':'.toByte)
       d.update(toks.getUTF8String(i).getBytes)
-      val dig = d.digest()
-      var v = 0L
-      var b = 0
-      while (b < 7) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-      val h = (v << 4) | ((dig(7) & 0xffL) >>> 4)
+      val h = SigCore.hash60(d.digest())
       score += (h % nBuckets) * 2654435761L % 8191L - 4095L
       i += 1
     }
@@ -216,19 +182,18 @@ object TextCore {
     * Gopher duplicate-2-gram signal, one pass with a hash set instead of
     * materializing the gram array twice (size + array_distinct). Null or
     * <2 tokens -> (0, 0), the HOF's when-otherwise(empty) branch. A null
-    * token is left out of its grams, as the HOF's concat_ws leaves it out. */
+    * token is left out of its grams, as the HOF's concat_ws leaves it out
+    * (`UTF8String.concatWs` skips a null input the same way). */
   def twoGramCounts(toks: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
     if (toks == null || toks.numElements() < 2)
       return org.apache.spark.sql.catalyst.InternalRow(0L, 0L)
     val n = toks.numElements()
-    def tok(i: Int): String = if (toks.isNullAt(i)) null else toks.getUTF8String(i).toString
-    val seen = new java.util.HashSet[String]()
+    def tok(i: Int): UTF8String = if (toks.isNullAt(i)) null else toks.getUTF8String(i)
+    val seen = new java.util.HashSet[UTF8String]()
     var dup = 0L
     var i = 0
     while (i < n - 1) {
-      val a = tok(i); val b = tok(i + 1)
-      val g = if (a == null) (if (b == null) "" else b) else if (b == null) a else a + " " + b
-      if (!seen.add(g)) dup += 1
+      if (!seen.add(UTF8String.concatWs(space, tok(i), tok(i + 1)))) dup += 1
       i += 1
     }
     org.apache.spark.sql.catalyst.InternalRow((n - 1).toLong, dup)

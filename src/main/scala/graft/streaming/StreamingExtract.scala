@@ -162,10 +162,10 @@ object StreamingExtract {
     import spark.implicits._
     val sigs = docs
       .withWatermark(tsCol, horizon)
-      .where(size(graft.dedup.Dedup.tokens(col(textCol))) >= k)
+      .where(size(graft.expr.textops.tokens_of(col(textCol))) >= k)
       .select(col(idCol).cast("long").as("id"), col(tsCol).as("__ts"),
         graft.expr.signatures.minhash_sig(
-          graft.dedup.Dedup.shingles(col(textCol), k), bands * rowsPerBand).as("sig"))
+          graft.expr.textops.shingles_of(col(textCol), k), bands * rowsPerBand).as("sig"))
     val banded = sigs.select(col("id"), col("__ts"), unix_micros(col("__ts")).as("us"),
         posexplode(graft.dedup.Dedup.minhashBuckets(col("sig"), bands, rowsPerBand))
           .as(Seq("band", "bucket")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.dedup.Dedup
+import graft.expr.textops.tokens_of
 
 /**
  * Corpus-level training-data operators: statistics and filters that need
@@ -31,7 +32,7 @@ object CorpusAnalysis {
    */
   def distinctiveTerms(df: DataFrame, idCol: String, textCol: String,
                        topK: Int = 5): DataFrame = {
-    val toks = df.select(col(idCol).as("doc_id"), explode(Dedup.tokens(col(textCol))).as("term"))
+    val toks = df.select(col(idCol).as("doc_id"), explode(tokens_of(col(textCol))).as("term"))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     // document frequency via a map-side-combinable groupBy over the SAME
     // aggregated tf rows, joined back on term. NOT a window count over
@@ -191,7 +192,7 @@ object CorpusAnalysis {
    * once (reused exchange).
    */
   def lexicalCommonness(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = df.select(col(idCol).as("doc_id"), explode(Dedup.tokens(col(textCol))).as("term"))
+    val toks = df.select(col(idCol).as("doc_id"), explode(tokens_of(col(textCol))).as("term"))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("__tf"))
     val freq = tf.groupBy("term").agg(sum("__tf").as("__freq"))
     tf.join(freq, Seq("term"))
@@ -212,7 +213,7 @@ object CorpusAnalysis {
    * only.
    */
   def vocabTopK(df: DataFrame, textCol: String, k: Int): DataFrame = {
-    val toks = df.select(explode(Dedup.tokens(col(textCol))).as("term"))
+    val toks = df.select(explode(tokens_of(col(textCol))).as("term"))
     toks.groupBy("term").agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), asc("term"))
       .limit(k)
@@ -248,7 +249,7 @@ object CorpusAnalysis {
    */
   def oovAudit(df: DataFrame, idCol: String, textCol: String,
                vocab: DataFrame): DataFrame = {
-    val toks = df.select(col(idCol), explode_outer(Dedup.tokens(col(textCol))).as("term"))
+    val toks = df.select(col(idCol), explode_outer(tokens_of(col(textCol))).as("term"))
     toks.join(broadcast(vocab.select(col("term")).withColumn("__in", lit(1))),
         Seq("term"), "left")
       .groupBy(col(idCol))
@@ -281,7 +282,7 @@ object CorpusAnalysis {
    * (Spark's `sequence(0, -1)` would DESCEND, not produce empty).
    */
   def bpePairCounts(df: DataFrame, textCol: String, k: Int): DataFrame = {
-    val wc = df.select(explode(Dedup.tokens(col(textCol))).as("word"))
+    val wc = df.select(explode(tokens_of(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("__wc"))
     wc.where(length(col("word")) >= 2)
       .select(explode(transform(
@@ -309,7 +310,7 @@ object CorpusAnalysis {
   def sourceMix(df: DataFrame, sourceCol: String, textCol: String): DataFrame =
     df.groupBy(col(sourceCol).as("source"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(Dedup.tokens(col(textCol))).cast("long")).as("n_tokens"),
+        sum(size(tokens_of(col(textCol))).cast("long")).as("n_tokens"),
         sum(length(col(textCol)).cast("long")).as("n_chars_total"))
       .withColumn("token_share",
         col("n_tokens").cast("double") / sum("n_tokens").over(Window.partitionBy()).cast("double"))

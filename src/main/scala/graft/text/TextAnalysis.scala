@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
+import graft.expr.textops.tokens_of
 
 /**
  * Text-analysis operators for large-scale training-data pipelines:
@@ -295,7 +296,7 @@ object TextAnalysis {
     * interpreted struct-accumulator fold allocated one struct per token;
     * graft.HofRefs.repetitionPiecesHof is the differential reference). */
   private[graft] def repetitionPieces(t: Column): (Column, Column, Column, Column) = {
-    val toks = Dedup.tokens(t)
+    val toks = tokens_of(t)
     val tg = graft.expr.textops.two_gram_counts(toks)
     (toks, graft.expr.textops.top_run_count(toks),
       tg.getField("n2"), tg.getField("ndup"))
@@ -412,7 +413,7 @@ object TextAnalysis {
     // graft.HofRefs.hashClassifierScoreHof is the differential reference
     // the struct is projected once and expanded after: selecting both
     // fields off the call itself evaluated the classifier twice per row
-    val cs = graft.expr.textops.classifier_score(Dedup.tokens(col(textCol)), nBuckets.toLong)
+    val cs = graft.expr.textops.classifier_score(tokens_of(col(textCol)), nBuckets.toLong)
     df.select(col(idCol), cs.as("cs"))
       .select(col(idCol), col("cs.n_tokens").as("n_tokens"), col("cs.score_int").as("score_int"))
       .withColumn("keep", col("score_int") > 0L)

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.dedup.Dedup
-import graft.dedup.Dedup.{P, hashParams, md5Hash60, shingles, tokens}
+import graft.dedup.Dedup.{P, hashParams}
+import graft.expr.textops.{shingles_of, tokens_of}
 
 /** The declarative (pure higher-order-function) formulations of the native
   * expressions in graft.expr — the same math written with Spark's built-in
@@ -13,6 +13,13 @@ import graft.dedup.Dedup.{P, hashParams, md5Hash60, shingles, tokens}
 object HofRefs {
 
   // ---- text: tokens, shingles, signatures (graft.dedup.Dedup) ----------
+
+  /** Portable 60-bit hash of a string: first 15 hex chars of md5, parsed as
+    * an integer — the Spark formulation of the native 60-bit hashes
+    * (graft.expr.SigCore.hash60) and of the DuckDB oracles'
+    * ('0x'||substr(md5(s),1,15))::BIGINT. */
+  def md5Hash60(s: Column): Column =
+    conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 
   /** The declarative (pure-HOF) tokenizer — differential reference. */
   def tokensHof(textCol: Column): Column =
@@ -39,7 +46,7 @@ object HofRefs {
   def minhashSigHof(textCol: Column, k: Int, numHashes: Int): Column = {
     val paramsLit = array(hashParams(numHashes).map { case (a, c) =>
       struct(lit(a).as("a"), lit(c).as("c")) }: _*)
-    val base = transform(shingles(textCol, k), s => pmod(md5Hash60(s), lit(P)))
+    val base = transform(shingles_of(textCol, k), s => pmod(md5Hash60(s), lit(P)))
     aggregate(base, array_repeat(lit(P), numHashes),
       (acc, h) => zip_with(acc, paramsLit,
         (m, pr) => least(m, pmod(pr.getField("a") * h + pr.getField("c"), lit(P)))))
@@ -49,7 +56,7 @@ object HofRefs {
     * native expression; kept for SparkSpec's equivalence test. One fold
     * carrying all 64 bit-sums, thresholded in the finish lambda. */
   def simhashBlocksHof(textCol: Column): Column = {
-    val th = transform(tokens(textCol), t => struct(
+    val th = transform(tokens_of(textCol), t => struct(
       conv(substring(md5(t), 1, 8), 16, 10).cast("long").as("hi"),
       conv(substring(md5(t), 9, 8), 16, 10).cast("long").as("lo")))
     // per-bit descriptor: which half holds global bit g, and its mask
@@ -154,7 +161,7 @@ object HofRefs {
     * TextOpsSpec. */
   def hashClassifierScoreHof(df: DataFrame, idCol: String, textCol: String,
                                             nBuckets: Int): DataFrame = {
-    val toks = Dedup.tokens(col(textCol))
+    val toks = tokens_of(col(textCol))
     df.select(col(idCol),
         size(toks).cast("long").as("n_tokens"),
         classifierFoldHof(toks, nBuckets).as("score_int"))

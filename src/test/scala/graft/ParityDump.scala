@@ -35,6 +35,10 @@ object ParityDump {
     s""""total":${jnum(it.total)},"supplier":${jstr(it.supplier)},"source":${jstr(it.source)},""" +
     s""""confidence":${it.confidence}}"""
 
+  private def jstat(p: graft.model.ParserStat): String =
+    s"""{"parser":${jstr(p.parser)},"count":${p.count},"total_cost":${p.total_cost},""" +
+    s""""avg_confidence":${p.avg_confidence}}"""
+
   /** Deterministic fuzz payload: random mix of Russian/service/product
     * words, numbers in assorted formats, units, currencies, punctuation,
     * newlines, colons and multi-space runs — exercises branch combinations
@@ -111,7 +115,21 @@ object ParityDump {
         s""""grand_total_cost":${tr.grand_total_cost},""" +
         s""""grand_avg_confidence":${tr.grand_avg_confidence},""" +
         s""""best_items":[${tr.best_items.map(jitem).mkString(",")}]}"""
-      sb.append(s"""{"id":$i,"text":${jstr(text)},"tables":$tablesJson,$envelope,""")
+      // every other TurnResult field (text facts, A4 scores, A5 qualities,
+      // the supplier, per-parser stats, the assembled text and its blocks,
+      // the recommendations); conv_id and turn_idx are the fixed "c", 0
+      val turn =
+        s""""turn":{"n_chars":${tr.n_chars},"n_lines":${tr.n_lines},"n_tables":${tr.n_tables},""" +
+        s""""has_text":${tr.has_text},"needs_fallback":${tr.needs_fallback},""" +
+        s""""invoice_score":${tr.invoice_score},"commercial_score":${tr.commercial_score},""" +
+        s""""competitive_score":${tr.competitive_score},"contract_score":${tr.contract_score},""" +
+        s""""text_quality":${tr.text_quality},"table_quality":${tr.table_quality},""" +
+        s""""overall_quality":${tr.overall_quality},""" +
+        s""""best_avg_confidence":${tr.best_avg_confidence},"supplier_id":${jstr(tr.supplier_id)},""" +
+        s""""parser_stats":[${tr.parser_stats.map(jstat).mkString(",")}],""" +
+        s""""extracted_text":${jstr(tr.extracted_text)},"blocks":[${tr.blocks.map(jstr).mkString(",")}],""" +
+        s""""recommendations":[${tr.recommendations.map(jstr).mkString(",")}]}"""
+      sb.append(s"""{"id":$i,"text":${jstr(text)},"tables":$tablesJson,$envelope,$turn,""")
       sb.append(parsers.map { case (k, v) => s"${jstr(k)}:$v" }.mkString(","))
       sb.append("}\n")
     }

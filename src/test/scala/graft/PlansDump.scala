@@ -263,13 +263,11 @@ object PlansDump {
       "once; the rank window runs over the K-row result only.") {
       SparkEntry.byName("q54_vocab_topk").build(spark, dir)
     }
-    section("q55 source-mix audit (combinable per-source totals, broadcast single-row total)",
+    section("q55 source-mix audit (combinable per-source totals, window total over the sources)",
       "Per-source totals are one combinable groupBy on the dimension key; " +
       "the corpus-wide token total is a window sum over those per-source " +
       "rows (one per source, so its single-partition Exchange is " +
-      "dimension-sized) — the corpus is scanned once and nothing skews. " +
-      "(The title keeps its old wording as the section's key for " +
-      "tools/plan_diff.py: the total no longer joins back as a broadcast row.)") {
+      "dimension-sized) — the corpus is scanned once and nothing skews.") {
       SparkEntry.byName("q55_source_mix").build(spark, dir)
     }
     section("q56 SemDeDup pairs (broadcast-centroid assignment, capped in-cluster join)",

@@ -262,14 +262,14 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((100L, ""), (101L, "one two"), (102L, "ПРИВЕТ мир 123 x y z")))
       .toDF("doc_id", "text")
     val mExpr = docs.select(col("doc_id"),
-        graft.expr.signatures.minhash_sig(graft.dedup.Dedup.shingles(col("text"), 3), 32).as("sig"))
+        graft.expr.signatures.minhash_sig(graft.expr.textops.shingles_of(col("text"), 3), 32).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val mHof = docs.select(col("doc_id"),
         HofRefs.minhashSigHof(col("text"), 3, 32).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(mExpr == mHof)
     val sExpr = docs.select(col("doc_id"),
-        graft.expr.signatures.simhash_blocks(graft.dedup.Dedup.tokens(col("text"))).as("b"))
+        graft.expr.signatures.simhash_blocks(graft.expr.textops.tokens_of(col("text"))).as("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val sHof = docs.select(col("doc_id"),
         HofRefs.simhashBlocksHof(col("text")).as("b"))
@@ -1166,6 +1166,15 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect { case p => p.expressions.flatMap(_.collect { case l: Literal => l }) }
       .flatten.map(_.toString.length).maxOption.getOrElse(0)
     assert(maxLit < 1000, s"data-sized literal leaked into the plan (len=$maxLit)")
+  }
+
+  test("trainIvfCentroids fails with a clear message on an empty corpus") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    val err = intercept[IllegalArgumentException] {
+      graft.ann.Similarity.trainIvfCentroids(empty, "vec_id", "embedding", k = 4)
+    }
+    assert(err.getMessage.contains("empty corpus"), err.getMessage)
   }
 
   test("incremental SemDeDup: old pairs + new-member pairs equal a full run on the union") {

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * topRunCount / twoGramCounts / classifierScore) against the declarative
   * HOF formulations they replaced — exact, on real documents and
   * adversarial strings (unicode, empties, punctuation-only, nulls, case
-  * edges), under codegen with fallback off (see [[CodegenOnly]]) and in
-  * lambda (interpreted) position. */
+  * edges, UTF-8 byte boundaries, invalid UTF-8), under codegen with
+  * fallback off (see [[CodegenOnly]]) and in lambda (interpreted)
+  * position. */
 class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = {
@@ -34,7 +35,19 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     "tab\tsep\nnewline\r\nwin", "dup dup dup DUP dup", "x  y   z",
     "£$%^&*()", "Ｆｕｌｌｗｉｄｔｈ１２３", "İstanbul ı dotless",
     "a-b_c~d", "0", "00 00 00", "word " * 50, "a b a b a b a b",
-    "ΣΊΣΥΦΟΣ σίσυφος", "ss ß SS")
+    "ΣΊΣΥΦΟΣ σίσυφος", "ss ß SS",
+    // byte boundaries: ASCII glued to multi-byte characters, a character
+    // whose lowercase is ASCII (Kelvin sign -> k), a 4-byte character, and
+    // a string of non-ASCII separators only
+    "xéy", "naïve", "\u212A", "\u212Aelvin 5\u212A", "a\uD83D\uDE00b",
+    "\u00a0—…\u3000\uD83D\uDE00é")
+
+  /** Rows of invalid UTF-8 (stray continuation bytes, truncated sequences,
+    * 0xff), reaching the kernels as a binary column cast to string. */
+  private def invalidUtf8: Seq[Array[Byte]] = Seq(
+    Array(0x61, 0xff, 0x42, 0xc3, 0x78, 0xe2, 0x82, 0x20, 0x6f, 0x4b, 0x80),
+    Array(0x80, 0x80, 0x41, 0x20, 0x62, 0xf0, 0x9f, 0x98),
+    Array(0xc3, 0xa9, 0xc3, 0x7a, 0x31, 0xed, 0xa0, 0x80, 0x32)).map(_.map(_.toByte))
 
   private def docsDf: DataFrame =
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
@@ -44,9 +57,16 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = adversarial.zipWithIndex.map { case (t, i) =>
       org.apache.spark.sql.Row(i.toLong, t)
     }
+    val raw = invalidUtf8.zipWithIndex.map { case (b, i) =>
+      org.apache.spark.sql.Row((adversarial.size + i).toLong, b)
+    }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
       StructType(Seq(StructField("doc_id", LongType, nullable = false),
         StructField("text", StringType, nullable = true))))
+      .unionByName(spark.createDataFrame(spark.sparkContext.parallelize(raw, 1),
+        StructType(Seq(StructField("doc_id", LongType, nullable = false),
+          StructField("raw", BinaryType, nullable = false))))
+        .select(col("doc_id"), col("raw").cast("string").as("text")))
   }
 
   private def assertColsEqual(df: DataFrame, nat: org.apache.spark.sql.Column,
@@ -62,7 +82,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("TokensExpr == HOF tokenizer on real docs + adversarial strings") { CodegenOnly(spark) {
     for (df <- Seq(docsDf, advDf)) {
       assertColsEqual(df,
-        graft.dedup.Dedup.tokens(col("text")),
+        graft.expr.textops.tokens_of(col("text")),
         HofRefs.tokensHof(col("text")), "tokens")
     }
   }}
@@ -70,7 +90,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ShinglesExpr == HOF shingles (k=3 and k=8)") { CodegenOnly(spark) {
     for (df <- Seq(docsDf, advDf); k <- Seq(3, 8)) {
       assertColsEqual(df,
-        graft.dedup.Dedup.shingles(col("text"), k),
+        graft.expr.textops.shingles_of(col("text"), k),
         HofRefs.shinglesHof(col("text"), k), s"shingles k=$k")
     }
   }}
@@ -83,13 +103,13 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val joined = transform(zipped,
       s => concat_ws(" ", (0 until k).map(j => s.getField(j.toString)): _*))
     val grams = when(n >= k, joined).otherwise(array().cast("array<string>"))
-    transform(grams, g => graft.dedup.Dedup.md5Hash60(g))
+    transform(grams, g => HofRefs.md5Hash60(g))
   }
 
   test("GramHashes == positionalGrams + md5Hash60 (k=8)") { CodegenOnly(spark) {
     for (df <- Seq(docsDf, advDf); k <- Seq(2, 8)) {
       assertColsEqual(df,
-        graft.expr.textops.gram_hashes(graft.dedup.Dedup.tokens(col("text")), k),
+        graft.expr.textops.gram_hashes(graft.expr.textops.tokens_of(col("text")), k),
         hofHashes(HofRefs.tokensHof(col("text")), k), s"gram_hashes k=$k")
     }
   }}
@@ -110,7 +130,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assertColsEqual(df,
         graft.expr.textops.shingle_hashes(col("text"), k),
         transform(HofRefs.shinglesHof(col("text"), k),
-          g => graft.dedup.Dedup.md5Hash60(g)), s"shingle_hashes k=$k")
+          g => HofRefs.md5Hash60(g)), s"shingle_hashes k=$k")
     }
   }}
 
@@ -176,13 +196,13 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = docsDf.limit(50).unionByName(advDf)
     val viaLambda = df
       .withColumn("one", array(col("text")))
-      .withColumn("tk", transform(col("one"), t => graft.dedup.Dedup.tokens(t)))
-      .withColumn("sh", transform(col("one"), t => graft.dedup.Dedup.shingles(t, 3)))
+      .withColumn("tk", transform(col("one"), t => graft.expr.textops.tokens_of(t)))
+      .withColumn("sh", transform(col("one"), t => graft.expr.textops.shingles_of(t, 3)))
       .select(col("doc_id"), element_at(col("tk"), 1).as("tk1"),
         element_at(col("sh"), 1).as("sh1"))
     val direct = df.select(col("doc_id"),
-      graft.dedup.Dedup.tokens(col("text")).as("tk1"),
-      graft.dedup.Dedup.shingles(col("text"), 3).as("sh1"))
+      graft.expr.textops.tokens_of(col("text")).as("tk1"),
+      graft.expr.textops.shingles_of(col("text"), 3).as("sh1"))
     val l = viaLambda.collect().map(r => r.getLong(0) -> (r.get(1), r.get(2))).toMap
     val d = direct.collect().map(r => r.getLong(0) -> (r.get(1), r.get(2))).toMap
     assert(l.keySet == d.keySet)

@@ -5,8 +5,10 @@
 
 A section is one `## <title>` heading of the dump; only its fenced plan
 block is compared, never the prose note above it. Sections are matched by
-title. Optional arguments restrict the comparison to sections whose title
-starts with one of them (`q57` matches "q57 composed corpus chain ...").
+their `qNN` prefix, so a retitled query section still meets its old self; a
+section without a q-number is matched by its whole title. Optional
+arguments restrict the comparison to sections whose title starts with one
+of them (`q57` matches "q57 composed corpus chain ...").
 
 An AQE section is compared on its Final Plan tree, the detail blocks of the
 nodes in that tree, with every node renumbered in the order it first
@@ -55,6 +57,7 @@ BCAST_SIZE = re.compile(r"(BroadcastQueryStage \(\d+\), Statistics\(sizeInBytes=
 TREE_ID = re.compile(r"\((\d+)\)")
 DETAIL_ID = re.compile(r"^\((\d+)\)")
 REUSES = re.compile(r"(Reuses operator id: )(\d+)")
+QNUM = re.compile(r"q\d+\b")
 
 
 def final_plan(lines):
@@ -104,20 +107,27 @@ def mask(lines):
     return out
 
 
+def section_key(title):
+    """A section's match key: its `qNN` prefix, else its whole title."""
+    m = QNUM.match(title)
+    return m.group(0) if m else title
+
+
 def sections(path):
-    """title -> masked lines of the section's fenced blocks."""
-    secs, title, in_code = {}, None, False
+    """key -> (title, masked lines of the section's fenced blocks)."""
+    secs, key, in_code = {}, None, False
     with open(path, encoding="utf-8") as f:
         for raw in f:
             line = raw.rstrip("\n")
             if not in_code and line.startswith("## "):
                 title = line[3:].strip()
-                secs[title] = []
+                key = section_key(title)
+                secs[key] = (title, [])
             elif line.startswith("```"):
                 in_code = not in_code
-            elif in_code and title is not None:
-                secs[title].append(line)
-    return {t: mask(final_plan(ls)) for t, ls in secs.items()}
+            elif in_code and key is not None:
+                secs[key][1].append(line)
+    return {k: (t, mask(final_plan(ls))) for k, (t, ls) in secs.items()}
 
 
 def main(argv):
@@ -126,24 +136,25 @@ def main(argv):
         return 2
     old, new = sections(argv[1]), sections(argv[2])
     wanted = argv[3:]
-    titles = [t for t in dict.fromkeys(list(old) + list(new))
-              if not wanted or any(t.startswith(w) for w in wanted)]
-    unmatched = [w for w in wanted if not any(t.startswith(w) for t in titles)]
+    title = lambda k: (new.get(k) or old[k])[0]
+    keys = [k for k in dict.fromkeys(list(old) + list(new))
+            if not wanted or any(title(k).startswith(w) for w in wanted)]
+    unmatched = [w for w in wanted if not any(title(k).startswith(w) for k in keys)]
     for w in unmatched:
         print(f"MISSING  {w}: no section title starts with it")
     bad = len(unmatched)
-    for t in titles:
-        if t not in old or t not in new:
-            print(f"MISSING  {t} (only in {'new' if t in new else 'old'})")
+    for k in keys:
+        if k not in old or k not in new:
+            print(f"MISSING  {title(k)} (only in {'new' if k in new else 'old'})")
             bad += 1
-        elif old[t] == new[t]:
-            print(f"same     {t}")
+        elif old[k][1] == new[k][1]:
+            print(f"same     {title(k)}")
         else:
-            print(f"DIFF     {t}")
+            print(f"DIFF     {title(k)}")
             sys.stdout.writelines(l + "\n" for l in difflib.unified_diff(
-                old[t], new[t], "old", "new", n=1, lineterm=""))
+                old[k][1], new[k][1], "old", "new", n=1, lineterm=""))
             bad += 1
-    print(f"sections={len(titles)} differing={bad}")
+    print(f"sections={len(keys)} differing={bad}")
     return 1 if bad else 0
 
 
