@@ -26,6 +26,17 @@ object SparkEntry {
   private[graft] def sfOf(dir: String): Double =
     "sf([0-9.]+)".r.findFirstMatchIn(dir).map(_.group(1).toDouble).getOrElse(0.01)
 
+  // ---- the text primitives as the oracles spell them in DuckDB SQL ---------
+  /** `tokens_of`: the lowercase [a-z0-9] runs of `c`. */
+  private def tokSql(c: String): String =
+    s"list_filter(string_split_regex(lower($c), '[^a-z0-9]+'), x -> x != '')"
+
+  /** The whitespace split of the trimmed `c` (its length: the ws token count). */
+  private def wsSql(c: String): String = raw"string_split_regex(trim($c), '\s+')"
+
+  /** `Dedup.normText`: whitespace runs to one space, trimmed, lowercased. */
+  private def normSql(c: String): String = raw"lower(trim(regexp_replace($c, '\s+', ' ', 'g')))"
+
   /** Flagship: full 7-parser extraction over deterministic synthetic
     * transcripts at sf=0.001 scale; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
@@ -79,15 +90,25 @@ object SparkEntry {
       |  SELECT try_cast(replace(d, ' ', '') AS DOUBLE) FROM c2)""".stripMargin
 
   // ---- T1: line explode with stable line_idx ------------------------------
-  private def qLineExplode(spark: SparkSession, dir: String): DataFrame =
+  /** Each document's " data "-separated segments with their 0-based index:
+    * its lines (q03/q04), or the turns of a documents-derived transcript
+    * (conv = doc, turn = segment — q64/q69). */
+  private def docSegments(spark: SparkSession, dir: String, idCol: String, idxCol: String,
+                          segCol: String): DataFrame =
     t(spark, dir, "documents")
-      .select(col("doc_id"), posexplode(split(col("text"), " data ")).as(Seq("line_idx", "line")))
-      .select(col("doc_id"), col("line_idx").cast("long").as("line_idx"), col("line"))
+      .select(col("doc_id").as(idCol), posexplode(split(col("text"), " data ")).as(Seq(idxCol, segCol)))
+      .select(col(idCol), col(idxCol).cast("long").as(idxCol), col(segCol))
 
-  private val oLineExplode =
-    """WITH l AS (SELECT doc_id, string_split(text, ' data ') AS arr FROM documents)
-      |SELECT doc_id, i - 1 AS line_idx, arr[i] AS line
-      |FROM l, unnest(generate_series(1, len(arr))) AS g(i)""".stripMargin
+  /** [[docSegments]] in DuckDB SQL. */
+  private def docSegmentsSql(idCol: String, idxCol: String, segCol: String): String =
+    s"""SELECT doc_id AS $idCol, i - 1 AS $idxCol, arr[i] AS $segCol
+       |  FROM (SELECT doc_id, string_split(text, ' data ') AS arr FROM documents),
+       |       unnest(generate_series(1, len(arr))) AS g(i)""".stripMargin
+
+  private def qLineExplode(spark: SparkSession, dir: String): DataFrame =
+    docSegments(spark, dir, "doc_id", "line_idx", "line")
+
+  private val oLineExplode = docSegmentsSql("doc_id", "line_idx", "line")
 
   // ---- F6: line prefilters -------------------------------------------------
   private def qLineFilters(spark: SparkSession, dir: String): DataFrame =
@@ -97,12 +118,10 @@ object SparkEntry {
       .select(col("doc_id"), col("line_idx"), length(col("line")).cast("long").as("line_len"))
 
   private val oLineFilters =
-    """WITH l AS (SELECT doc_id, string_split(text, ' data ') AS arr FROM documents),
-      |e AS (SELECT doc_id, i - 1 AS line_idx, arr[i] AS line
-      |      FROM l, unnest(generate_series(1, len(arr))) AS g(i))
-      |SELECT doc_id, line_idx, len(line)::BIGINT AS line_len FROM e
-      |WHERE len(line) >= 10 AND regexp_matches(line, '[a-z]')
-      |  AND NOT regexp_matches(line, '^[0-9\s.,]+$')""".stripMargin
+    raw"""WITH e AS (${docSegmentsSql("doc_id", "line_idx", "line")})
+         |SELECT doc_id, line_idx, len(line)::BIGINT AS line_len FROM e
+         |WHERE len(line) >= 10 AND regexp_matches(line, '[a-z]')
+         |  AND NOT regexp_matches(line, '^[0-9\s.,]+$$')""".stripMargin
 
   // ---- R1: regex item extraction over constructed invoice lines -----------
   private def qRegexExtract(spark: SparkSession, dir: String): DataFrame = {
@@ -242,19 +261,26 @@ object SparkEntry {
       .select("p_partkey", "rank", "cand_id", "score", "is_auto")
   }
 
+  /** [[candidateProducts]] as the `cands` CTE. */
+  private def candsCte: String = candidateProducts.map { case (id, name) => s"($id,'$name')" }
+    .mkString("cands(cand_id, cand_name) AS (VALUES ", ", ", ")")
+
+  /** [[levTop3]] in DuckDB SQL over the (p_partkey, p_name, cand_id,
+    * cand_name) rows of `src`: `top3` = (p_partkey, rank, cand_id, score). */
+  private def levTop3Ctes(src: String): String =
+    s"""scored AS (
+       |  SELECT p_partkey, cand_id,
+       |    100.0 * (1.0 - levenshtein(lower(p_name), lower(cand_name)) /
+       |      greatest(len(lower(p_name)), len(lower(cand_name)))::DOUBLE) AS score
+       |  FROM $src),
+       |ranked AS (SELECT *, row_number() OVER (PARTITION BY p_partkey
+       |    ORDER BY score DESC, cand_id) AS rank FROM scored),
+       |top3 AS (SELECT p_partkey, rank, cand_id, score FROM ranked
+       |  WHERE rank <= 3 AND score >= 40.0)""".stripMargin
+
   private val oFuzzyTopK =
-    """WITH cands(cand_id, cand_name) AS (VALUES
-      |  (1,'small widget'), (2,'large bolt'), (3,'economy gadget'),
-      |  (4,'standard fitting'), (5,'promo anodized tube'), (6,'cold rolled steel')),
-      |scored AS (
-      |  SELECT p_partkey, cand_id,
-      |    100.0 * (1.0 - levenshtein(lower(p_name), lower(cand_name)) /
-      |      greatest(len(lower(p_name)), len(lower(cand_name)))::DOUBLE) AS score
-      |  FROM part, cands),
-      |ranked AS (SELECT *, row_number() OVER (PARTITION BY p_partkey
-      |    ORDER BY score DESC, cand_id) AS rank FROM scored)
-      |SELECT p_partkey, rank, cand_id, score, score >= 90.0 AS is_auto
-      |FROM ranked WHERE rank <= 3 AND score >= 40.0""".stripMargin
+    s"""WITH $candsCte, ${levTop3Ctes("part, cands")}
+       |SELECT *, score >= 90.0 AS is_auto FROM top3""".stripMargin
 
   // ---- J1 (blocked variant): token + char-3-gram blocking before scoring --
   // The large-catalog matcher shape (graft.matching.Matching.topMatchesBlocked)
@@ -281,39 +307,30 @@ object SparkEntry {
     levTop3(blocked).select("p_partkey", "rank", "cand_id", "score")
   }
 
-  private val oBlockedMatch =
-    """WITH cands(cand_id, cand_name) AS (VALUES
-      |  (1,'small widget'), (2,'large bolt'), (3,'economy gadget'),
-      |  (4,'standard fitting'), (5,'promo anodized tube'), (6,'cold rolled steel')),
-      |pt AS (SELECT p_partkey, p_name, unnest(list_distinct(tk ||
-      |    flatten([[t[i:i+2] FOR i IN range(1, greatest(len(t)-2, 1)+1)] FOR t IN tk]))) AS tok
-      |  FROM (SELECT p_partkey, p_name,
-      |          list_filter(string_split_regex(lower(p_name), '[^a-z0-9]+'), x -> x != '') AS tk
-      |        FROM part)),
-      |ct AS (SELECT cand_id, cand_name, unnest(list_distinct(tk ||
-      |    flatten([[t[i:i+2] FOR i IN range(1, greatest(len(t)-2, 1)+1)] FOR t IN tk]))) AS tok
-      |  FROM (SELECT cand_id, cand_name,
-      |          list_filter(string_split_regex(lower(cand_name), '[^a-z0-9]+'), x -> x != '') AS tk
-      |        FROM cands)),
-      |blocked AS (SELECT DISTINCT p_partkey, p_name, cand_id, cand_name
-      |            FROM pt JOIN ct USING (tok)),
-      |scored AS (SELECT p_partkey, cand_id,
-      |    100.0 * (1.0 - levenshtein(lower(p_name), lower(cand_name)) /
-      |      greatest(len(lower(p_name)), len(lower(cand_name)))::DOUBLE) AS score
-      |  FROM blocked),
-      |ranked AS (SELECT *, row_number() OVER (PARTITION BY p_partkey
-      |    ORDER BY score DESC, cand_id) AS rank FROM scored)
-      |SELECT p_partkey, rank, cand_id, score FROM ranked
-      |WHERE rank <= 3 AND score >= 40.0""".stripMargin
+  private val oBlockedMatch = {
+    // one row per (id, name, block key): the name's distinct tokens and
+    // each token's char 3-grams (a short token stands in for its own)
+    def keysSql(id: String, name: String, src: String): String =
+      s"""SELECT $id, $name, unnest(list_distinct(tk ||
+         |    flatten([[t[i:i+2] FOR i IN range(1, greatest(len(t)-2, 1)+1)] FOR t IN tk]))) AS tok
+         |  FROM (SELECT $id, $name, ${tokSql(name)} AS tk FROM $src)""".stripMargin
+    s"""WITH $candsCte,
+       |pt AS (${keysSql("p_partkey", "p_name", "part")}),
+       |ct AS (${keysSql("cand_id", "cand_name", "cands")}),
+       |blocked AS (SELECT DISTINCT p_partkey, p_name, cand_id, cand_name
+       |            FROM pt JOIN ct USING (tok)),
+       |${levTop3Ctes("blocked")}
+       |SELECT * FROM top3""".stripMargin
+  }
 
   // ---- dedup: exact --------------------------------------------------------
   private def qDedupExact(spark: SparkSession, dir: String): DataFrame =
     graft.dedup.Dedup.exact(t(spark, dir, "documents"), "doc_id", "text")
 
   private val oDedupExact =
-    """SELECT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS norm_hash,
-      |  min(doc_id) AS keeper, count(*) AS n_docs
-      |FROM documents GROUP BY 1""".stripMargin
+    s"""SELECT md5(${normSql("text")}) AS norm_hash,
+       |  min(doc_id) AS keeper, count(*) AS n_docs
+       |FROM documents GROUP BY 1""".stripMargin
 
   // ---- dedup: exact n-gram jaccard (bounded pair range) -------------------
   private def qNgramJaccard(spark: SparkSession, dir: String): DataFrame =
@@ -327,34 +344,18 @@ object SparkEntry {
         k = 3, maxId = 120L, threshold = 0.02).select("id_a", "id_b"))
 
   private val oDedupClusters =
-    """WITH RECURSIVE toks AS (
-      |  SELECT doc_id AS id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS tk
-      |  FROM documents WHERE doc_id < 120),
-      |sh AS (
-      |  SELECT id, list_distinct([array_to_string(tk[i:i+2], ' ')
-      |    FOR i IN range(1, greatest(len(tk) - 2, 0) + 1)]) AS s
-      |  FROM toks),
-      |pairs AS (
-      |  SELECT a.id AS id_a, b.id AS id_b
-      |  FROM sh a, sh b WHERE a.id < b.id
-      |    AND len(list_intersect(a.s, b.s)) /
-      |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)))::DOUBLE > 0.02),
-      |edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-      |          UNION ALL SELECT id_b, id_a FROM pairs),
-      |reach(u, v) AS (
-      |  SELECT u, v FROM edges
-      |  UNION
-      |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)
-      |SELECT u AS doc_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u""".stripMargin
+    s"""WITH RECURSIVE ${clusterCtes("documents WHERE doc_id < 120", threshold = 0.02)}
+       |SELECT doc_id, cluster_id FROM clusters""".stripMargin
 
   // ---- text analysis -------------------------------------------------------
   private def qLangId(spark: SparkSession, dir: String): DataFrame =
     graft.text.TextAnalysis.langId(t(spark, dir, "documents"))
       .select("doc_id", "hits_en", "hits_de", "hits_fr", "hits_es", "pred_lang")
 
-  private val oLangId =
-    """WITH h AS (SELECT doc_id,
+  /** q14's language ID: `lang` (doc_id, the four stopword hit counts,
+    * pred_lang = the most-hit language, ties to the earlier, else 'und'). */
+  private def langCtes: String =
+    """lh AS (SELECT doc_id,
       |  (contains(' '||lower(text)||' ',' the ')::INT + contains(' '||lower(text)||' ',' of ')::INT
       |    + contains(' '||lower(text)||' ',' and ')::INT)::BIGINT AS hits_en,
       |  (contains(' '||lower(text)||' ',' der ')::INT + contains(' '||lower(text)||' ',' und ')::INT
@@ -363,32 +364,36 @@ object SparkEntry {
       |    + contains(' '||lower(text)||' ',' et ')::INT)::BIGINT AS hits_fr,
       |  (contains(' '||lower(text)||' ',' el ')::INT + contains(' '||lower(text)||' ',' los ')::INT
       |    + contains(' '||lower(text)||' ',' y ')::INT)::BIGINT AS hits_es
-      | FROM documents)
-      |SELECT doc_id, hits_en, hits_de, hits_fr, hits_es,
+      | FROM documents),
+      |lang AS (SELECT *,
       |  CASE WHEN hits_en >= hits_de AND hits_en >= hits_fr AND hits_en >= hits_es AND hits_en > 0 THEN 'en'
       |       WHEN hits_de >= hits_fr AND hits_de >= hits_es AND hits_de > 0 THEN 'de'
       |       WHEN hits_fr >= hits_es AND hits_fr > 0 THEN 'fr'
       |       WHEN hits_es > 0 THEN 'es'
       |       ELSE 'und' END AS pred_lang
-      |FROM h""".stripMargin
+      |  FROM lh)""".stripMargin
+
+  private val oLangId = s"WITH $langCtes\nSELECT * FROM lang"
 
   private def qQuality(spark: SparkSession, dir: String): DataFrame =
     graft.text.TextAnalysis.qualityScore(t(spark, dir, "documents"))
       .select("doc_id", "n_chars", "n_words", "avg_word_len", "stopword_hits", "is_quality")
 
-  private val oQuality =
-    """WITH q AS (SELECT doc_id,
-      |  len(text)::BIGINT AS n_chars,
-      |  len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_words,
-      |  len(replace(trim(text), ' ', ''))::DOUBLE /
-      |    len(string_split_regex(trim(text), '\s+'))::DOUBLE AS avg_word_len,
-      |  (contains(' '||lower(text)||' ', ' the ')::INT +
-      |   contains(' '||lower(text)||' ', ' a ')::INT +
-      |   contains(' '||lower(text)||' ', ' of ')::INT)::BIGINT AS stopword_hits
-      | FROM documents)
-      |SELECT doc_id, n_chars, n_words, avg_word_len, stopword_hits,
-      |  n_words >= 20 AND avg_word_len >= 2.0 AND avg_word_len <= 12.0 AS is_quality
-      |FROM q""".stripMargin
+  /** q32's quality statistics: `q` (doc_id, n_chars, n_words, avg_word_len,
+    * stopword_hits); [[isQualitySql]] is its gate. */
+  private def qualityCte: String =
+    s"""q AS (SELECT doc_id,
+       |  len(text)::BIGINT AS n_chars,
+       |  len(${wsSql("text")})::BIGINT AS n_words,
+       |  len(replace(trim(text), ' ', ''))::DOUBLE / len(${wsSql("text")})::DOUBLE AS avg_word_len,
+       |  (contains(' '||lower(text)||' ', ' the ')::INT +
+       |   contains(' '||lower(text)||' ', ' a ')::INT +
+       |   contains(' '||lower(text)||' ', ' of ')::INT)::BIGINT AS stopword_hits
+       | FROM documents)""".stripMargin
+
+  private def isQualitySql = "q.n_words >= 20 AND q.avg_word_len >= 2.0 AND q.avg_word_len <= 12.0"
+
+  private val oQuality = s"WITH $qualityCte\nSELECT *, $isQualitySql AS is_quality FROM q"
 
   /** Stratified variant: per-language keep rates over the documents table
     * (upsample 'de', downsample 'en' — the corpus-mixing shape). */
@@ -397,106 +402,105 @@ object SparkEntry {
       t(spark, dir, "documents").select("doc_id", "lang", "n_chars"),
       "doc_id", "lang", Map("en" -> 32, "de" -> 192), defaultOutOf256 = 64)
 
-  private val oStratifiedSample =
-    """SELECT doc_id, lang, n_chars FROM documents
-      |WHERE substr(md5(doc_id::VARCHAR), 1, 2) <
-      |  (CASE WHEN lang = 'de' THEN 'c0' WHEN lang = 'en' THEN '20' ELSE '40' END)""".stripMargin
+  /** q45's per-language md5 gate (keep 'de' at 192/256, 'en' at 32/256,
+    * others at 64/256), a predicate over doc_id and lang. */
+  private def stratGateSql =
+    "substr(md5(doc_id::VARCHAR), 1, 2) <\n  " +
+      "(CASE WHEN lang = 'de' THEN 'c0' WHEN lang = 'en' THEN '20' ELSE '40' END)"
+
+  private val oStratifiedSample = s"SELECT doc_id, lang, n_chars FROM documents\nWHERE $stratGateSql"
 
   /** Sequence packing: concat-then-chunk into 512-token packs, 8 shards. */
   private def qPackSequences(spark: SparkSession, dir: String): DataFrame =
     graft.text.TextAnalysis.packSequences(
       t(spark, dir, "documents"), "doc_id", "text", packTokens = 512, nShards = 8)
 
-  private val oPackSequences =
-    """WITH t AS (
-      |  SELECT doc_id, doc_id % 8 AS shard,
-      |         len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens
-      |  FROM documents),
-      |o AS (
-      |  SELECT doc_id, shard, n_tokens,
-      |         (sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) - n_tokens)::BIGINT AS tok_start
-      |  FROM t)
-      |SELECT shard, pack_id, doc_id,
-      |       greatest(tok_start, pack_id*512) - tok_start AS seg_start_in_doc,
-      |       least(tok_start + n_tokens, (pack_id+1)*512) - greatest(tok_start, pack_id*512) AS seg_len
-      |FROM o, unnest(generate_series(tok_start//512, (tok_start + n_tokens - 1)//512)) AS u(pack_id)""".stripMargin
+  /** q46's packing of the (doc_id, text) rows of `src`: CTEs `pt`, `po`
+    * and the final SELECT of the pack segments. */
+  private def packSql(src: String): String =
+    s"""pt AS (SELECT doc_id, doc_id % 8 AS shard, len(${wsSql("text")})::BIGINT AS n_tokens
+       |  FROM $src),
+       |po AS (SELECT doc_id, shard, n_tokens,
+       |    (sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) - n_tokens)::BIGINT AS tok_start
+       |  FROM pt)
+       |SELECT shard, pack_id, doc_id,
+       |  greatest(tok_start, pack_id*512) - tok_start AS seg_start_in_doc,
+       |  least(tok_start + n_tokens, (pack_id+1)*512) - greatest(tok_start, pack_id*512) AS seg_len
+       |FROM po, unnest(generate_series(tok_start//512, (tok_start + n_tokens - 1)//512)) AS u(pack_id)""".stripMargin
+
+  private val oPackSequences = s"WITH ${packSql("documents")}"
 
   /** Whole-doc greedy packing: docs never split across context windows. */
   private def qPackWhole(spark: SparkSession, dir: String): DataFrame =
     graft.text.TextAnalysis.packWholeDocs(
       t(spark, dir, "documents"), "doc_id", "text", packTokens = 512, nShards = 8)
 
-  /** q63: the same greedy fold as a per-shard recursive CTE over doc rank. */
+  /** The greedy whole-doc fold as a per-shard recursive CTE over doc rank,
+    * over the (doc_id, shard, n = token count) rows of `src`: CTEs `d`, `r`
+    * and the final SELECT of each doc's pack (q63, q78). */
+  private def packWholeSql(src: String, packTokens: Int): String =
+    s"""d AS (
+       |  SELECT doc_id, shard, n,
+       |         row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rk
+       |  FROM $src),
+       |r AS (
+       |  SELECT doc_id, shard, n, rk, 0::BIGINT AS pack_id, 0::BIGINT AS pack_offset,
+       |         n AS fill
+       |  FROM d WHERE rk = 1
+       |  UNION ALL
+       |  SELECT d.doc_id, d.shard, d.n, d.rk,
+       |    CASE WHEN r.fill > 0 AND r.fill + d.n > $packTokens THEN r.pack_id + 1 ELSE r.pack_id END,
+       |    CASE WHEN r.fill > 0 AND r.fill + d.n > $packTokens THEN 0::BIGINT ELSE r.fill END,
+       |    CASE WHEN r.fill > 0 AND r.fill + d.n > $packTokens THEN d.n ELSE r.fill + d.n END
+       |  FROM r JOIN d ON d.shard = r.shard AND d.rk = r.rk + 1)
+       |SELECT doc_id, shard, n AS n_tokens, pack_id, pack_offset, n > $packTokens AS oversize
+       |FROM r""".stripMargin
+
   private val oPackWhole =
-    """WITH RECURSIVE t AS (
-      |  SELECT doc_id, doc_id % 8 AS shard,
-      |         len(string_split_regex(trim(text), '\s+'))::BIGINT AS n
-      |  FROM documents),
-      |d AS (
-      |  SELECT doc_id, shard, n,
-      |         row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rk
-      |  FROM t),
-      |r AS (
-      |  SELECT doc_id, shard, n, rk, 0::BIGINT AS pack_id, 0::BIGINT AS pack_offset,
-      |         n AS fill
-      |  FROM d WHERE rk = 1
-      |  UNION ALL
-      |  SELECT d.doc_id, d.shard, d.n, d.rk,
-      |    CASE WHEN r.fill > 0 AND r.fill + d.n > 512 THEN r.pack_id + 1 ELSE r.pack_id END,
-      |    CASE WHEN r.fill > 0 AND r.fill + d.n > 512 THEN 0::BIGINT ELSE r.fill END,
-      |    CASE WHEN r.fill > 0 AND r.fill + d.n > 512 THEN d.n ELSE r.fill + d.n END
-      |  FROM r JOIN d ON d.shard = r.shard AND d.rk = r.rk + 1)
-      |SELECT doc_id, shard, n AS n_tokens, pack_id, pack_offset, n > 512 AS oversize
-      |FROM r""".stripMargin
+    s"""WITH RECURSIVE t AS (
+       |  SELECT doc_id, doc_id % 8 AS shard, len(${wsSql("text")})::BIGINT AS n FROM documents),
+       |${packWholeSql("t", packTokens = 512)}""".stripMargin
 
   /** Transcript boilerplate-turn strip: turns repeated across >=2
     * conversations are cut from the assembled conversation. The transcript
     * shape is derived deterministically from `documents` (conv = doc, turn
     * = " data "-separated segment — the corpus' line structure, same as
     * q03/q38) so the oracle is pure SQL. */
-  private def qStripBoilerTurns(spark: SparkSession, dir: String): DataFrame = {
-    val turns = t(spark, dir, "documents")
-      .select(col("doc_id").as("conv_id"),
-        posexplode(split(col("text"), " data ")).as(Seq("turn_idx", "text")))
-      .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"), col("text"))
+  private def qStripBoilerTurns(spark: SparkSession, dir: String): DataFrame =
     graft.text.CorpusAnalysis.stripBoilerplateTurns(
-      turns, "conv_id", "turn_idx", "text", minConvs = 2)
-  }
+      docSegments(spark, dir, "conv_id", "turn_idx", "text"), "conv_id", "turn_idx", "text",
+      minConvs = 2)
 
   private val oStripBoilerTurns =
-    """WITH turns AS (
-      |  SELECT doc_id AS conv_id, i - 1 AS turn_idx, arr[i] AS text
-      |  FROM (SELECT doc_id, string_split(text, ' data ') AS arr FROM documents),
-      |       unnest(generate_series(1, len(arr))) AS g(i)),
-      |n AS (SELECT conv_id, turn_idx, text,
-      |  md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS h FROM turns),
-      |pc AS (SELECT h, conv_id FROM n GROUP BY h, conv_id),
-      |cc AS (SELECT h, count(*)::BIGINT AS nconv FROM pc GROUP BY 1),
-      |f AS (SELECT n.conv_id, n.turn_idx, n.text, cc.nconv >= 2 AS boiler
-      |  FROM n JOIN cc USING (h))
-      |SELECT conv_id, count(*)::BIGINT AS n_turns,
-      |  sum(CASE WHEN boiler THEN 1 ELSE 0 END)::BIGINT AS n_boiler_turns,
-      |  coalesce(string_agg(CASE WHEN NOT boiler THEN text END, chr(10) ORDER BY turn_idx), '') AS clean_text
-      |FROM f GROUP BY conv_id""".stripMargin
+    s"""WITH turns AS (${docSegmentsSql("conv_id", "turn_idx", "text")}),
+       |n AS (SELECT conv_id, turn_idx, text, md5(${normSql("text")}) AS h FROM turns),
+       |pc AS (SELECT h, conv_id FROM n GROUP BY h, conv_id),
+       |cc AS (SELECT h, count(*)::BIGINT AS nconv FROM pc GROUP BY 1),
+       |f AS (SELECT n.conv_id, n.turn_idx, n.text, cc.nconv >= 2 AS boiler
+       |  FROM n JOIN cc USING (h))
+       |SELECT conv_id, count(*)::BIGINT AS n_turns,
+       |  sum(CASE WHEN boiler THEN 1 ELSE 0 END)::BIGINT AS n_boiler_turns,
+       |  coalesce(string_agg(CASE WHEN NOT boiler THEN text END, chr(10) ORDER BY turn_idx), '') AS clean_text
+       |FROM f GROUP BY conv_id""".stripMargin
 
   /** Exact per-source length-quantile profile (nearest-rank p50/p90/p99). */
   private def qLengthProfile(spark: SparkSession, dir: String): DataFrame =
     graft.text.TextAnalysis.lengthProfile(t(spark, dir, "documents"), "source", "text")
 
   private val oLengthProfile =
-    """WITH d AS (SELECT source,
-      |    len(string_split_regex(trim(text), '\s+'))::BIGINT AS n FROM documents),
-      |vc AS (SELECT source, n, count(*)::BIGINT AS cnt FROM d GROUP BY 1, 2),
-      |c AS (SELECT source, n, cnt,
-      |  sum(cnt) OVER (PARTITION BY source) AS total,
-      |  sum(cnt) OVER (PARTITION BY source ORDER BY n
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-      |  FROM vc)
-      |SELECT source, max(total)::BIGINT AS n_docs,
-      |  min(CASE WHEN cum*100 >= total*50 THEN n END) AS p50_tokens,
-      |  min(CASE WHEN cum*100 >= total*90 THEN n END) AS p90_tokens,
-      |  min(CASE WHEN cum*100 >= total*99 THEN n END) AS p99_tokens
-      |FROM c GROUP BY source""".stripMargin
+    s"""WITH d AS (SELECT source,
+       |    len(${wsSql("text")})::BIGINT AS n FROM documents),
+       |vc AS (SELECT source, n, count(*)::BIGINT AS cnt FROM d GROUP BY 1, 2),
+       |c AS (SELECT source, n, cnt,
+       |  sum(cnt) OVER (PARTITION BY source) AS total,
+       |  sum(cnt) OVER (PARTITION BY source ORDER BY n
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+       |  FROM vc)
+       |SELECT source, max(total)::BIGINT AS n_docs,
+       |  min(CASE WHEN cum*100 >= total*50 THEN n END) AS p50_tokens,
+       |  min(CASE WHEN cum*100 >= total*90 THEN n END) AS p90_tokens,
+       |  min(CASE WHEN cum*100 >= total*99 THEN n END) AS p99_tokens
+       |FROM c GROUP BY source""".stripMargin
 
   /** Int8 scalar quantization of the embedding corpus (digest compare). */
   private def qQuantize(spark: SparkSession, dir: String): DataFrame =
@@ -572,80 +576,58 @@ object SparkEntry {
     graft.dedup.Dedup.removeDupSpans(t(spark, dir, "documents"), "doc_id", "text",
       k = 8, minCount = 2)
 
+  /** q51's duplicated-span islands: `t` (doc_id, tk), then `s` (doc_id,
+    * n_tokens, island, st, en) — the merged [st, en) token ranges covered
+    * by 8-grams that occur at least twice in the corpus. */
+  private def dupSpanCtes: String =
+    s"""t AS (SELECT doc_id, ${tokSql("text")} AS tk FROM documents),
+       |g AS (
+       |  SELECT doc_id, len(tk)::BIGINT AS n_tokens, u.pos,
+       |    ('0x' || substr(md5(array_to_string(list_slice(tk, u.pos + 1, u.pos + 8), ' ')), 1, 15))::BIGINT AS h
+       |  FROM t, unnest(range(0, len(tk) - 8 + 1)) AS u(pos)
+       |  WHERE len(tk) >= 8),
+       |f AS (
+       |  SELECT doc_id, n_tokens, pos FROM (
+       |    SELECT doc_id, n_tokens, pos, count(*) OVER (PARTITION BY h) AS cnt FROM g)
+       |  WHERE cnt >= 2),
+       |m AS (
+       |  SELECT doc_id, n_tokens, pos,
+       |    max(pos + 8) OVER (PARTITION BY doc_id ORDER BY pos
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS max_end
+       |  FROM f),
+       |i AS (
+       |  SELECT doc_id, n_tokens, pos,
+       |    sum(CASE WHEN max_end IS NULL OR pos > max_end THEN 1 ELSE 0 END)
+       |      OVER (PARTITION BY doc_id ORDER BY pos) AS island
+       |  FROM m),
+       |s AS (
+       |  SELECT doc_id, n_tokens, island, min(pos) AS st, max(pos + 8) AS en
+       |  FROM i GROUP BY doc_id, n_tokens, island)""".stripMargin
+
   private val oDupSpans =
-    """WITH t AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS tk
-      |  FROM documents),
-      |g AS (
-      |  SELECT doc_id, len(tk)::BIGINT AS n_tokens, u.pos,
-      |    ('0x' || substr(md5(array_to_string(list_slice(tk, u.pos + 1, u.pos + 8), ' ')), 1, 15))::BIGINT AS h
-      |  FROM t, unnest(range(0, len(tk) - 8 + 1)) AS u(pos)
-      |  WHERE len(tk) >= 8),
-      |f AS (
-      |  SELECT doc_id, n_tokens, pos FROM (
-      |    SELECT doc_id, n_tokens, pos, count(*) OVER (PARTITION BY h) AS cnt FROM g)
-      |  WHERE cnt >= 2),
-      |m AS (
-      |  SELECT doc_id, n_tokens, pos,
-      |    max(pos + 8) OVER (PARTITION BY doc_id ORDER BY pos
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS max_end
-      |  FROM f),
-      |i AS (
-      |  SELECT doc_id, n_tokens, pos,
-      |    sum(CASE WHEN max_end IS NULL OR pos > max_end THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY doc_id ORDER BY pos) AS island
-      |  FROM m),
-      |s AS (
-      |  SELECT doc_id, n_tokens, island, min(pos) AS st, max(pos + 8) AS en
-      |  FROM i GROUP BY doc_id, n_tokens, island)
-      |SELECT doc_id, n_tokens, count(*) AS n_dup_spans, sum(en - st)::BIGINT AS dup_tokens
-      |FROM s GROUP BY doc_id, n_tokens""".stripMargin
+    s"""WITH $dupSpanCtes
+       |SELECT doc_id, n_tokens, count(*) AS n_dup_spans, sum(en - st)::BIGINT AS dup_tokens
+       |FROM s GROUP BY doc_id, n_tokens""".stripMargin
 
   /** q61: q51's island CTEs, then rebuild the kept token stream — a token
     * index survives iff no merged island [st,en) covers it. */
   private val oRemoveDupSpans =
-    """WITH t AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS tk
-      |  FROM documents),
-      |g AS (
-      |  SELECT doc_id, u.pos,
-      |    ('0x' || substr(md5(array_to_string(list_slice(tk, u.pos + 1, u.pos + 8), ' ')), 1, 15))::BIGINT AS h
-      |  FROM t, unnest(range(0, len(tk) - 8 + 1)) AS u(pos)
-      |  WHERE len(tk) >= 8),
-      |f AS (
-      |  SELECT doc_id, pos FROM (
-      |    SELECT doc_id, pos, count(*) OVER (PARTITION BY h) AS cnt FROM g)
-      |  WHERE cnt >= 2),
-      |m AS (
-      |  SELECT doc_id, pos,
-      |    max(pos + 8) OVER (PARTITION BY doc_id ORDER BY pos
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS max_end
-      |  FROM f),
-      |i AS (
-      |  SELECT doc_id, pos,
-      |    sum(CASE WHEN max_end IS NULL OR pos > max_end THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY doc_id ORDER BY pos) AS island
-      |  FROM m),
-      |s AS (
-      |  SELECT doc_id, island, min(pos) AS st, max(pos + 8) AS en
-      |  FROM i GROUP BY doc_id, island),
-      |tok AS (
-      |  SELECT t.doc_id, u.i, tk[u.i + 1] AS tok
-      |  FROM t, unnest(range(0, len(tk))) AS u(i)),
-      |kept AS (
-      |  SELECT tok.doc_id, string_agg(tok.tok, ' ' ORDER BY tok.i) AS clean_text,
-      |    count(*)::BIGINT AS kept_tokens
-      |  FROM tok
-      |  WHERE NOT EXISTS (SELECT 1 FROM s
-      |    WHERE s.doc_id = tok.doc_id AND tok.i >= s.st AND tok.i < s.en)
-      |  GROUP BY tok.doc_id)
-      |SELECT t.doc_id, len(tk)::BIGINT AS n_tokens,
-      |  coalesce(kept.kept_tokens, 0)::BIGINT AS kept_tokens,
-      |  (len(tk) - coalesce(kept.kept_tokens, 0))::BIGINT AS removed_tokens,
-      |  coalesce(kept.clean_text, '') AS clean_text
-      |FROM t LEFT JOIN kept ON t.doc_id = kept.doc_id""".stripMargin
+    s"""WITH $dupSpanCtes,
+       |tok AS (
+       |  SELECT t.doc_id, u.i, tk[u.i + 1] AS tok
+       |  FROM t, unnest(range(0, len(tk))) AS u(i)),
+       |kept AS (
+       |  SELECT tok.doc_id, string_agg(tok.tok, ' ' ORDER BY tok.i) AS clean_text,
+       |    count(*)::BIGINT AS kept_tokens
+       |  FROM tok
+       |  WHERE NOT EXISTS (SELECT 1 FROM s
+       |    WHERE s.doc_id = tok.doc_id AND tok.i >= s.st AND tok.i < s.en)
+       |  GROUP BY tok.doc_id)
+       |SELECT t.doc_id, len(tk)::BIGINT AS n_tokens,
+       |  coalesce(kept.kept_tokens, 0)::BIGINT AS kept_tokens,
+       |  (len(tk) - coalesce(kept.kept_tokens, 0))::BIGINT AS removed_tokens,
+       |  coalesce(kept.clean_text, '') AS clean_text
+       |FROM t LEFT JOIN kept ON t.doc_id = kept.doc_id""".stripMargin
 
   private def qSample(spark: SparkSession, dir: String): DataFrame =
     graft.text.TextAnalysis.deterministicSample(
@@ -660,21 +642,19 @@ object SparkEntry {
       .select("doc_id", "ws_tokens", "word_tokens")
 
   private val oTokenCounts =
-    """SELECT doc_id,
-      |  len(string_split_regex(trim(text), '\s+'))::BIGINT AS ws_tokens,
-      |  len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != ''))::BIGINT AS word_tokens
-      |FROM documents""".stripMargin
+    s"""SELECT doc_id, len(${wsSql("text")})::BIGINT AS ws_tokens,
+       |  len(${tokSql("text")})::BIGINT AS word_tokens
+       |FROM documents""".stripMargin
 
   private def qFingerprint(spark: SparkSession, dir: String): DataFrame =
     graft.text.TextAnalysis.fingerprint(t(spark, dir, "documents"))
       .select("doc_id", "fp", "fp_bucket", "norm_len")
 
   private val oFingerprint =
-    """SELECT doc_id,
-      |  md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp,
-      |  substr(md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))), 1, 8) AS fp_bucket,
-      |  len(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))::BIGINT AS norm_len
-      |FROM documents""".stripMargin
+    s"""SELECT doc_id, md5(${normSql("text")}) AS fp,
+       |  substr(md5(${normSql("text")}), 1, 8) AS fp_bucket,
+       |  len(${normSql("text")})::BIGINT AS norm_len
+       |FROM documents""".stripMargin
 
   // ---- Gopher-style repetition filters --------------------------------------
   private def qRepetition(spark: SparkSession, dir: String): DataFrame =
@@ -682,86 +662,53 @@ object SparkEntry {
 
   /** Integer-exact counts + single-division fractions, replicable in SQL:
     * the top-word count via unnest/group/max (same integer as the sorted-
-    * run fold), duplicate 2-grams via len - len(distinct). */
-  private val oRepetition =
-    """WITH toks AS (SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS tk
-      |  FROM documents),
-      |tw AS (SELECT doc_id, max(c) AS top_word_count FROM (
-      |    SELECT doc_id, count(*) AS c FROM (SELECT doc_id, unnest(tk) AS w FROM toks)
-      |    GROUP BY doc_id, w) GROUP BY doc_id),
-      |g AS (SELECT doc_id,
-      |    CASE WHEN len(tk) >= 2
-      |         THEN [tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]
-      |         ELSE [] END AS grams,
-      |    len(tk)::BIGINT AS n_words
-      |  FROM toks)
-      |SELECT g.doc_id, n_words,
-      |  coalesce(top_word_count, 0)::BIGINT AS top_word_count,
-      |  len(grams)::BIGINT AS n_2grams,
-      |  (len(grams) - len(list_distinct(grams)))::BIGINT AS n_dup_2grams,
-      |  CASE WHEN n_words > 0 THEN coalesce(top_word_count, 0) / n_words::DOUBLE ELSE 0.0 END AS top_word_frac,
-      |  CASE WHEN len(grams) > 0 THEN (len(grams) - len(list_distinct(grams))) / len(grams)::DOUBLE ELSE 0.0 END AS dup_2gram_frac,
-      |  (CASE WHEN n_words > 0 THEN coalesce(top_word_count, 0) / n_words::DOUBLE ELSE 0.0 END) > 0.2
-      |    OR (CASE WHEN len(grams) > 0 THEN (len(grams) - len(list_distinct(grams))) / len(grams)::DOUBLE ELSE 0.0 END) > 0.2 AS is_repetitive
-      |FROM g LEFT JOIN tw ON g.doc_id = tw.doc_id""".stripMargin
+    * run fold), duplicate 2-grams via len - len(distinct). CTE `rep`
+    * (doc_id, the counts and the two fractions); [[isRepetitiveSql]] is
+    * its gate. */
+  private def repetitionCtes: String =
+    s"""rtk AS (SELECT doc_id, ${tokSql("text")} AS tk FROM documents),
+       |rtw AS (SELECT doc_id, max(c) AS top_word_count FROM (
+       |    SELECT doc_id, count(*) AS c FROM (SELECT doc_id, unnest(tk) AS w FROM rtk)
+       |    GROUP BY doc_id, w) GROUP BY doc_id),
+       |rg AS (SELECT rtk.doc_id, len(tk)::BIGINT AS n_words,
+       |    coalesce(top_word_count, 0)::BIGINT AS top_word_count,
+       |    CASE WHEN len(tk) >= 2
+       |         THEN [tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]
+       |         ELSE [] END AS grams
+       |  FROM rtk LEFT JOIN rtw ON rtk.doc_id = rtw.doc_id),
+       |rep AS (SELECT doc_id, n_words, top_word_count,
+       |    len(grams)::BIGINT AS n_2grams,
+       |    (len(grams) - len(list_distinct(grams)))::BIGINT AS n_dup_2grams,
+       |    CASE WHEN n_words > 0 THEN top_word_count / n_words::DOUBLE ELSE 0.0 END AS top_word_frac,
+       |    CASE WHEN len(grams) > 0 THEN (len(grams) - len(list_distinct(grams))) / len(grams)::DOUBLE
+       |         ELSE 0.0 END AS dup_2gram_frac
+       |  FROM rg)""".stripMargin
+
+  private def isRepetitiveSql = "(top_word_frac > 0.2 OR dup_2gram_frac > 0.2)"
+
+  private val oRepetition = s"WITH $repetitionCtes\nSELECT *, $isRepetitiveSql AS is_repetitive FROM rep"
 
   // ---- composite corpus filter (C4/Gopher keep/drop pipeline) ---------------
   private def qCorpusFilter(spark: SparkSession, dir: String): DataFrame =
     graft.text.TextAnalysis.corpusFilter(t(spark, dir, "documents"), "doc_id", "text", lang = "en")
 
-  private val oCorpusFilter =
-    """WITH q AS (SELECT doc_id,
-      |    len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_words,
-      |    len(replace(trim(text), ' ', ''))::DOUBLE /
-      |      len(string_split_regex(trim(text), '\s+'))::DOUBLE AS avg_word_len
-      |  FROM documents),
-      |l AS (SELECT doc_id,
-      |  (contains(' '||lower(text)||' ',' the ')::INT + contains(' '||lower(text)||' ',' of ')::INT
-      |    + contains(' '||lower(text)||' ',' and ')::INT) AS hits_en,
-      |  (contains(' '||lower(text)||' ',' der ')::INT + contains(' '||lower(text)||' ',' und ')::INT
-      |    + contains(' '||lower(text)||' ',' die ')::INT) AS hits_de,
-      |  (contains(' '||lower(text)||' ',' le ')::INT + contains(' '||lower(text)||' ',' la ')::INT
-      |    + contains(' '||lower(text)||' ',' et ')::INT) AS hits_fr,
-      |  (contains(' '||lower(text)||' ',' el ')::INT + contains(' '||lower(text)||' ',' los ')::INT
-      |    + contains(' '||lower(text)||' ',' y ')::INT) AS hits_es
-      | FROM documents),
-      |lang AS (SELECT doc_id,
-      |  CASE WHEN hits_en >= hits_de AND hits_en >= hits_fr AND hits_en >= hits_es AND hits_en > 0 THEN 'en'
-      |       WHEN hits_de >= hits_fr AND hits_de >= hits_es AND hits_de > 0 THEN 'de'
-      |       WHEN hits_fr >= hits_es AND hits_fr > 0 THEN 'fr'
-      |       WHEN hits_es > 0 THEN 'es'
-      |       ELSE 'und' END AS pred_lang
-      |  FROM l),
-      |toks AS (SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS tk
-      |  FROM documents),
-      |tw AS (SELECT doc_id, max(c) AS twc FROM (
-      |    SELECT doc_id, count(*) AS c FROM (SELECT doc_id, unnest(tk) AS w FROM toks)
-      |    GROUP BY doc_id, w) GROUP BY doc_id),
-      |rep AS (SELECT toks.doc_id,
-      |    CASE WHEN len(tk) > 0 THEN coalesce(twc, 0) / len(tk)::DOUBLE ELSE 0.0 END AS top_frac,
-      |    CASE WHEN len(tk) >= 2 THEN
-      |      (len([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]) -
-      |       len(list_distinct([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]))) /
-      |      len([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))])::DOUBLE
-      |      ELSE 0.0 END AS dup_frac
-      |  FROM toks LEFT JOIN tw ON toks.doc_id = tw.doc_id),
-      |dd AS (SELECT doc_id, row_number() OVER (
-      |    PARTITION BY md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-      |    ORDER BY doc_id) AS rn
-      |  FROM documents)
-      |SELECT q.doc_id,
-      |  (n_words >= 20 AND avg_word_len >= 2.0 AND avg_word_len <= 12.0) AS pass_quality,
-      |  (pred_lang = 'en') AS pass_lang,
-      |  NOT (top_frac > 0.2 OR dup_frac > 0.2) AS pass_repetition,
-      |  (rn = 1) AS pass_dedup,
-      |  (n_words >= 20 AND avg_word_len >= 2.0 AND avg_word_len <= 12.0)
-      |    AND pred_lang = 'en' AND NOT (top_frac > 0.2 OR dup_frac > 0.2)
-      |    AND rn = 1 AS keep
-      |FROM q JOIN lang ON q.doc_id = lang.doc_id
-      |  JOIN rep ON q.doc_id = rep.doc_id
-      |  JOIN dd ON q.doc_id = dd.doc_id""".stripMargin
+  /** q44's four gates per document: `cf` (doc_id, pass_quality, pass_lang,
+    * pass_repetition, pass_dedup — the first-wins exact-duplicate keeper —
+    * and keep, all four). */
+  private def corpusFilterCtes: String =
+    s"""$qualityCte,
+       |$langCtes,
+       |$repetitionCtes,
+       |dd AS (SELECT doc_id,
+       |    row_number() OVER (PARTITION BY md5(${normSql("text")}) ORDER BY doc_id) AS rn
+       |  FROM documents),
+       |cf AS (SELECT *, pass_quality AND pass_lang AND pass_repetition AND pass_dedup AS keep
+       |  FROM (SELECT q.doc_id, $isQualitySql AS pass_quality, pred_lang = 'en' AS pass_lang,
+       |      NOT $isRepetitiveSql AS pass_repetition, rn = 1 AS pass_dedup
+       |    FROM q JOIN lang ON q.doc_id = lang.doc_id
+       |      JOIN rep ON q.doc_id = rep.doc_id JOIN dd ON q.doc_id = dd.doc_id))""".stripMargin
+
+  private val oCorpusFilter = s"WITH $corpusFilterCtes\nSELECT * FROM cf"
 
   // ---- S4/S5: text-layer metrics ------------------------------------------
   private def qTextMetrics(spark: SparkSession, dir: String): DataFrame =
@@ -920,15 +867,15 @@ object SparkEntry {
     graft.text.CorpusAnalysis.distinctiveTerms(t(spark, dir, "documents"), "doc_id", "text", topK = 5)
 
   private val oDistinctiveTerms =
-    """WITH toks AS (SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')) AS term
-      |  FROM documents),
-      |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-      |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |r AS (SELECT doc_id, term, tf, df,
-      |    row_number() OVER (PARTITION BY doc_id ORDER BY tf DESC, df, term) AS rank
-      |  FROM tf JOIN dfq USING (term))
-      |SELECT doc_id, rank, term, tf, df FROM r WHERE rank <= 5""".stripMargin
+    s"""WITH toks AS (SELECT doc_id,
+       |    unnest(${tokSql("text")}) AS term
+       |  FROM documents),
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+       |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+       |r AS (SELECT doc_id, term, tf, df,
+       |    row_number() OVER (PARTITION BY doc_id ORDER BY tf DESC, df, term) AS rank
+       |  FROM tf JOIN dfq USING (term))
+       |SELECT doc_id, rank, term, tf, df FROM r WHERE rank <= 5""".stripMargin
 
   /** Deterministic PII-bearing text built from the customer table (name ->
     * synthetic email, key-derived NN-NNN-NNN-NNNN phone). */
@@ -976,21 +923,16 @@ object SparkEntry {
       k = 8, benchOutOf256 = 16, maxDf = 10000)
 
   private val oContamination =
-    """WITH toks AS (SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS tk
-      |  FROM documents),
-      |sh AS (SELECT doc_id, list_distinct([array_to_string(tk[i:i+7], ' ')
-      |    FOR i IN range(1, greatest(len(tk) - 7, 0) + 1)]) AS s
-      |  FROM toks WHERE len(tk) >= 8),
-      |e0 AS (SELECT doc_id, ('0x' || substr(md5(unnest(s)), 1, 15))::BIGINT AS h FROM sh),
-      |okh AS (SELECT h FROM e0 GROUP BY h HAVING count(*) <= 10000),
-      |e AS (SELECT e0.* FROM e0 JOIN okh USING (h)),
-      |bench AS (SELECT doc_id AS bench_id, h FROM e
-      |          WHERE substr(md5(doc_id::VARCHAR), 1, 2) < '10')
-      |SELECT e.doc_id, count(DISTINCT e.h) AS n_shared_ngrams,
-      |  count(DISTINCT bench.bench_id) AS n_bench_docs
-      |FROM e JOIN bench USING (h) WHERE e.doc_id != bench.bench_id
-      |GROUP BY e.doc_id""".stripMargin
+    s"""WITH ${toksSql(8)},
+       |e0 AS (SELECT id AS doc_id, ('0x' || substr(md5(unnest(s)), 1, 15))::BIGINT AS h FROM sh),
+       |okh AS (SELECT h FROM e0 GROUP BY h HAVING count(*) <= 10000),
+       |e AS (SELECT e0.* FROM e0 JOIN okh USING (h)),
+       |bench AS (SELECT doc_id AS bench_id, h FROM e
+       |          WHERE substr(md5(doc_id::VARCHAR), 1, 2) < '10')
+       |SELECT e.doc_id, count(DISTINCT e.h) AS n_shared_ngrams,
+       |  count(DISTINCT bench.bench_id) AS n_bench_docs
+       |FROM e JOIN bench USING (h) WHERE e.doc_id != bench.bench_id
+       |GROUP BY e.doc_id""".stripMargin
 
   private def qBoilerplate(spark: SparkSession, dir: String): DataFrame =
     graft.text.CorpusAnalysis.boilerplateLines(t(spark, dir, "documents"), "doc_id", "text",
@@ -1008,17 +950,42 @@ object SparkEntry {
 
   // ---- as-of join (events): each purchase joined to the user's latest
   // prior-or-simultaneous click — oracled by DuckDB's native ASOF JOIN.
-  private def qAsofJoin(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events").withColumn("ts", col("ts").cast("timestamp"))
+  /** `events` with ts cast to timestamp (TIMESTAMP_NTZ; session tz is UTC). */
+  private def timedEvents(spark: SparkSession, dir: String): DataFrame =
+    t(spark, dir, "events").withColumn("ts", col("ts").cast("timestamp"))
+
+  private def clicks(ev: DataFrame): DataFrame =
+    ev.where(col("event_type") === "click").select(col("user_id"), col("ts"), col("value"))
+
+  /** q39/q42: each purchase of `ev` with its user's latest click at or
+    * before it (`asOf` is the as-of join) and the lag between the two. */
+  private def purchaseClicks(ev: DataFrame)(
+      asOf: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val purchases = ev.where(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"), col("value").as("purchase_value"))
-    val clicks = ev.where(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("value"))
-    graft.relational.AsOf.asofJoin(purchases, clicks, "user_id", "ts", Seq("ts", "value"))
+    asOf(purchases, clicks(ev))
       .select(col("event_id"), col("user_id"), col("purchase_value"),
         col("asof_value").as("click_value"),
         (unix_micros(col("ts")) - unix_micros(col("asof_ts"))).as("lag_us"))
   }
+
+  /** [[clicks]] of the events table `ev` as the `c` CTE. */
+  private def clicksCte(ev: String): String =
+    s"c AS (SELECT user_id, ts, value FROM $ev WHERE event_type = 'click')"
+
+  /** [[purchaseClicks]] over the events table `ev` in DuckDB SQL. */
+  private def purchaseClicksSql(ev: String): String =
+    s"""p AS (SELECT event_id, user_id, ts, value FROM $ev WHERE event_type = 'purchase'),
+       |${clicksCte(ev)}
+       |SELECT p.event_id, p.user_id, p.value AS purchase_value, c.value AS click_value,
+       |  epoch_us(p.ts) - epoch_us(c.ts) AS lag_us
+       |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin
+
+  private def qAsofJoin(spark: SparkSession, dir: String): DataFrame =
+    purchaseClicks(timedEvents(spark, dir))(
+      graft.relational.AsOf.asofJoin(_, _, "user_id", "ts", Seq("ts", "value")))
+
+  private val oAsofJoin = s"WITH ${purchaseClicksSql("events")}"
 
   /** The salted (time-bucketed) as-of variant on a ZIPF-HOT fixture:
     * every user id not divisible by 3 collapses onto user 0, so one key
@@ -1028,47 +995,25 @@ object SparkEntry {
     * native ASOF JOIN over the same remap; no (user, ts) ties exist in
     * the remapped click stream at any sf, so the arbitrary-tie contract
     * is never hit. */
-  private def qAsofSalted(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events").withColumn("ts", col("ts").cast("timestamp"))
-      .withColumn("user_id",
-        when(col("user_id") % 3 === 0, col("user_id")).otherwise(lit(0L)))
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"), col("value").as("purchase_value"))
-    val clicks = ev.where(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("value"))
-    graft.relational.AsOf.asofJoinSalted(purchases, clicks, "user_id", "ts",
-        Seq("ts", "value"), bucketWidthUs = 6L * 3600000000L)
-      .select(col("event_id"), col("user_id"), col("purchase_value"),
-        col("asof_value").as("click_value"),
-        (unix_micros(col("ts")) - unix_micros(col("asof_ts"))).as("lag_us"))
-  }
+  private def qAsofSalted(spark: SparkSession, dir: String): DataFrame =
+    purchaseClicks(timedEvents(spark, dir)
+        .withColumn("user_id", when(col("user_id") % 3 === 0, col("user_id")).otherwise(lit(0L))))(
+      graft.relational.AsOf.asofJoinSalted(_, _, "user_id", "ts",
+        Seq("ts", "value"), bucketWidthUs = 6L * 3600000000L))
 
   private val oAsofSaltedHot =
-    """WITH ev AS (SELECT event_id, ts,
-      |    CASE WHEN user_id % 3 = 0 THEN user_id ELSE 0 END AS user_id,
-      |    event_type, value FROM events),
-      |p AS (SELECT event_id, user_id, ts, value FROM ev WHERE event_type = 'purchase'),
-      |c AS (SELECT user_id, ts, value FROM ev WHERE event_type = 'click')
-      |SELECT p.event_id, p.user_id, p.value AS purchase_value, c.value AS click_value,
-      |  epoch_us(p.ts) - epoch_us(c.ts) AS lag_us
-      |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin
-
-  private val oAsofJoin =
-    """WITH p AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
-      |c AS (SELECT user_id, ts, value FROM events WHERE event_type = 'click')
-      |SELECT p.event_id, p.user_id, p.value AS purchase_value, c.value AS click_value,
-      |  epoch_us(p.ts) - epoch_us(c.ts) AS lag_us
-      |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin
+    s"""WITH ev AS (SELECT event_id, ts,
+       |    CASE WHEN user_id % 3 = 0 THEN user_id ELSE 0 END AS user_id,
+       |    event_type, value FROM events),
+       |${purchaseClicksSql("ev")}""".stripMargin
 
   // ---- banded range join: clicks within the hour before each error ---------
   private def qRangeJoin(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events").withColumn("ts", col("ts").cast("timestamp"))
+    val ev = timedEvents(spark, dir)
     val errors = ev.where(col("event_type") === "error")
       .select(col("event_id"), col("user_id"), col("ts"))
-    val clicks = ev.where(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("value"))
     graft.relational.RangeJoin
-      .intervalJoin(errors, clicks, "user_id", "ts", 3600000000L, Seq("value"))
+      .intervalJoin(errors, clicks(ev), "user_id", "ts", 3600000000L, Seq("value"))
       .groupBy("event_id")
       .agg(count(lit(1)).as("n_clicks"),
         max(col("r_value")).as("max_click_value"),
@@ -1076,13 +1021,13 @@ object SparkEntry {
   }
 
   private val oRangeJoin =
-    """WITH e AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'),
-      |c AS (SELECT user_id, ts, value FROM events WHERE event_type = 'click')
-      |SELECT e.event_id, count(*) AS n_clicks,
-      |  max(c.value) AS max_click_value, min(c.value) AS min_click_value
-      |FROM e JOIN c ON e.user_id = c.user_id
-      |  AND epoch_us(e.ts) - epoch_us(c.ts) BETWEEN 0 AND 3599999999
-      |GROUP BY e.event_id""".stripMargin
+    s"""WITH e AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'),
+       |${clicksCte("events")}
+       |SELECT e.event_id, count(*) AS n_clicks,
+       |  max(c.value) AS max_click_value, min(c.value) AS min_click_value
+       |FROM e JOIN c ON e.user_id = c.user_id
+       |  AND epoch_us(e.ts) - epoch_us(c.ts) BETWEEN 0 AND 3599999999
+       |GROUP BY e.event_id""".stripMargin
 
   private def qMultimodalMeta(spark: SparkSession, dir: String): DataFrame = {
     val media = graft.mm.Multimodal.synthesizeMedia(t(spark, dir, "documents"), "doc_id", "text")
@@ -1106,15 +1051,44 @@ object SparkEntry {
       s" * sqrt(${sum(s"[$b[i+1] * $b[i+1] FOR i IN range(len($b))]")}))"
   }
 
-  private def toksSql(k: Int): String =
-    s"""toks AS (
-       |  SELECT doc_id AS id,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS tk
-       |  FROM documents),
+  /** `toks` (id = doc_id, tk = its tokens) over the rows of `src`. */
+  private def tokCte(src: String = "documents"): String =
+    s"toks AS (SELECT doc_id AS id, ${tokSql("text")} AS tk FROM $src)"
+
+  /** [[tokCte]], then `sh` (id, s = its distinct k-token shingles) over the
+    * rows with at least k tokens. */
+  private def toksSql(k: Int, src: String = "documents"): String =
+    s"""${tokCte(src)},
        |sh AS (
        |  SELECT id, list_distinct([array_to_string(tk[i:i+${k - 1}], ' ')
        |    FOR i IN range(1, greatest(len(tk) - ${k - 1}, 0) + 1)]) AS s
        |  FROM toks WHERE len(tk) >= $k)""".stripMargin
+
+  /** Recursive-CTE connected components over the (id_a, id_b) edges of
+    * `pairs`: `clusters` (doc_id, cluster_id = the least id of its component). */
+  private def componentsCtes(pairs: String): String =
+    s"""edges AS (SELECT id_a AS u, id_b AS v FROM $pairs
+       |          UNION ALL SELECT id_b, id_a FROM $pairs),
+       |reach(u, v) AS (
+       |  SELECT u, v FROM edges
+       |  UNION
+       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+       |clusters AS (
+       |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u)""".stripMargin
+
+  /** Exhaustive near-dup clusters over the docs of `src` (q31, q34, q52,
+    * q57, q58): brute-force 3-shingle Jaccard pairs above `threshold`,
+    * then [[componentsCtes]] — deliberately NOT the LSH path, so green
+    * means the banded path recovers exactly what brute force finds. Needs
+    * WITH RECURSIVE. */
+  private def clusterCtes(src: String, threshold: Double): String =
+    s"""${toksSql(3, src)},
+       |pairs AS (
+       |  SELECT a.id AS id_a, b.id AS id_b
+       |  FROM sh a, sh b WHERE a.id < b.id
+       |    AND len(list_intersect(a.s, b.s)) /
+       |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)))::DOUBLE > $threshold),
+       |${componentsCtes("pairs")}""".stripMargin
 
   private def minhashCandSql(k: Int, bands: Int, rowsPerBand: Int, maxBucket: Int): String = {
     val params = graft.dedup.Dedup.hashParams(bands * rowsPerBand)
@@ -1143,10 +1117,7 @@ object SparkEntry {
       s"(CASE WHEN 2 * len(list_filter(h, x -> ((x.$src >> ${g % 32}) & 1) = 1)) > len(h) THEN ${1L << j} ELSE 0 END)"
     }.mkString("(", " +\n    ", ")::BIGINT")
     val blockList = (0 until 4).map(blockExpr).mkString("[", ",\n  ", "]")
-    s"""WITH toks AS (
-       |  SELECT doc_id AS id,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS tk
-       |  FROM documents),
+    s"""WITH ${tokCte()},
        |th AS (SELECT id, list_transform(tk, t ->
        |  {'hi': ('0x' || substr(md5(t), 1, 8))::BIGINT,
        |   'lo': ('0x' || substr(md5(t), 9, 8))::BIGINT}) AS h FROM toks),
@@ -1241,19 +1212,21 @@ object SparkEntry {
     graft.ann.Similarity.semDedupPairs(t(spark, dir, "embeddings"), "vec_id", "embedding",
       k = 16, trainN = 4096, threshold = 0.3, maxBucket = 10000)
 
-  /** q56 oracle: the SAME deterministic training/assignment CTEs as q30
-    * (bit-identical centroids), then in-cluster pairs above the cosine
-    * threshold with the cap mirrored as HAVING count(*) <= maxBucket. */
-  private val oSemDedup = {
-    val t = 0.3
-    s"""WITH ${ivfTrainCtes(16, 4096)},
-       |ok AS (SELECT cid FROM asg GROUP BY 1 HAVING count(*) <= 10000),
+  /** The in-cluster pairs of q56/q59/q60 over the `asg` of
+    * [[ivfTrainCtes]]: `ex` = the members of clusters of at most maxBucket
+    * (10000) members (the KeyCaps cap as HAVING), `sp` = (id_a < id_b, cid,
+    * cosine) above the 0.3 threshold. */
+  private def semPairsCtes: String =
+    s"""ok AS (SELECT cid FROM asg GROUP BY 1 HAVING count(*) <= 10000),
        |ex AS (SELECT asg.* FROM asg JOIN ok USING (cid)),
-       |p AS (SELECT x.id AS id_a, y.id AS id_b, x.cid AS cid,
-       |        ${cosSql("x.v", "y.v")} AS cosine
-       |      FROM ex x JOIN ex y USING (cid) WHERE x.id < y.id)
-       |SELECT id_a, id_b, cid, cosine FROM p WHERE cosine > $t""".stripMargin
-  }
+       |sp AS (SELECT * FROM (
+       |    SELECT x.id AS id_a, y.id AS id_b, x.cid AS cid, ${cosSql("x.v", "y.v")} AS cosine
+       |    FROM ex x JOIN ex y USING (cid) WHERE x.id < y.id)
+       |  WHERE cosine > 0.3)""".stripMargin
+
+  /** q56 oracle: the SAME deterministic training/assignment CTEs as q30
+    * (bit-identical centroids), then the in-cluster pairs. */
+  private val oSemDedup = s"WITH ${ivfTrainCtes(16, 4096)},\n$semPairsCtes\nSELECT * FROM sp"
 
   /** q59: full SemDeDup keeper selection — semantic-dup groups as
     * connected components over the in-cluster pairs, keeper = the member
@@ -1268,20 +1241,10 @@ object SparkEntry {
     * refined centroids — bit-identical to the Spark side's table). */
   private val oSemDedupKeep =
     s"""WITH RECURSIVE ${ivfTrainCtes(16, 4096)},
-       |ok AS (SELECT cid FROM asg GROUP BY 1 HAVING count(*) <= 10000),
-       |ex AS (SELECT asg.* FROM asg JOIN ok USING (cid)),
-       |p AS (SELECT x.id AS id_a, y.id AS id_b
-       |      FROM ex x JOIN ex y USING (cid)
-       |      WHERE x.id < y.id AND ${cosSql("x.v", "y.v")} > 0.3),
-       |edges AS (SELECT id_a AS u, id_b AS v FROM p
-       |          UNION ALL SELECT id_b, id_a FROM p),
-       |reach(u, v) AS (
-       |  SELECT u, v FROM edges
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-       |comp AS (SELECT u AS id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u),
-       |wc AS (SELECT comp.cluster_id, comp.id, ${cosSql("ex.v", "cm.c")} AS cen_cos
-       |       FROM comp JOIN ex ON comp.id = ex.id JOIN cm ON ex.cid = cm.cid),
+       |$semPairsCtes,
+       |${componentsCtes("sp")},
+       |wc AS (SELECT c.cluster_id, c.doc_id AS id, ${cosSql("ex.v", "cm.c")} AS cen_cos
+       |       FROM clusters c JOIN ex ON c.doc_id = ex.id JOIN cm ON ex.cid = cm.cid),
        |sel AS (SELECT cluster_id, id, cen_cos,
        |         count(*) OVER (PARTITION BY cluster_id) AS n_members,
        |         row_number() OVER (PARTITION BY cluster_id ORDER BY cen_cos, id) AS rn
@@ -1297,15 +1260,12 @@ object SparkEntry {
     * is a from-scratch full run against the SAME old-trained quantizer —
     * green means the epoch split reproduces it exactly. */
   private def qSemDedupIncr(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val emb = t(spark, dir, "embeddings")
     val old = emb.where(col("vec_id") % 2 === 0)
     val fresh = emb.where(col("vec_id") % 2 =!= 0)
     val cents = graft.ann.Similarity.trainIvfCentroids(old, "vec_id", "embedding",
       k = 16, trainN = 4096)
-    val oldAssigned = graft.ann.Similarity.assignNearest(
-      old.select(col("vec_id").cast("long").as("id"),
-        col("embedding").cast("array<double>").as("v")), "v", cents)
+    val oldAssigned = graft.ann.Similarity.assignEmb(old, "vec_id", "embedding", cents)
       .localCheckpoint()
     val oldPairs = graft.ann.Similarity.semDedupPairsFromAssigned(
       oldAssigned, threshold = 0.3)
@@ -1319,16 +1279,8 @@ object SparkEntry {
     * disjoint and union to exactly this full run — the cluster cap is
     * never crossed at bench scales, so per-epoch capping == full-run
     * capping). */
-  private val oSemDedupIncr = {
-    val t = 0.3
-    s"""WITH ${ivfTrainCtes(16, 4096, trainWhere = "WHERE id % 2 = 0")},
-       |ok AS (SELECT cid FROM asg GROUP BY 1 HAVING count(*) <= 10000),
-       |ex AS (SELECT asg.* FROM asg JOIN ok USING (cid)),
-       |p AS (SELECT x.id AS id_a, y.id AS id_b, x.cid AS cid,
-       |        ${cosSql("x.v", "y.v")} AS cosine
-       |      FROM ex x JOIN ex y USING (cid) WHERE x.id < y.id)
-       |SELECT id_a, id_b, cid, cosine FROM p WHERE cosine > $t""".stripMargin
-  }
+  private val oSemDedupIncr =
+    s"WITH ${ivfTrainCtes(16, 4096, trainWhere = "WHERE id % 2 = 0")},\n$semPairsCtes\nSELECT * FROM sp"
 
   /** q26 oracle: the multimodal metadata contract — media synthesis (kind
     * from id mod 3, payload = UTF-8 bytes of text) and the md5-derived
@@ -1352,28 +1304,8 @@ object SparkEntry {
     * proves the banded candidate generation + verify recovers exactly the
     * clusters exhaustive comparison finds (at 16 bands x 2 rows the
     * per-pair miss probability at j>=0.9 is (1-j^2)^16 ~ 3e-12). */
-  /** Exhaustive all-pairs near-dup clusters as CTEs (shared by the q34 and
-    * q52 oracles): brute-force Jaccard pairs + recursive-CTE connected
-    * components — deliberately NOT the LSH path, so green means the banded
-    * path recovers exactly what brute force finds. */
-  private val lshClusterCtes =
-    s"""WITH RECURSIVE ${toksSql(3)},
-       |pairs AS (
-       |  SELECT a.id AS id_a, b.id AS id_b
-       |  FROM sh a, sh b WHERE a.id < b.id
-       |    AND len(list_intersect(a.s, b.s)) /
-       |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)))::DOUBLE > 0.5),
-       |edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-       |          UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(u, v) AS (
-       |  SELECT u, v FROM edges
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-       |clusters AS (
-       |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u)""".stripMargin
-
   private val oLshDedup =
-    s"""$lshClusterCtes
+    s"""WITH RECURSIVE ${clusterCtes("documents", threshold = 0.5)}
        |SELECT doc_id, cluster_id FROM clusters""".stripMargin
 
   /** CCNet-shaped lexical commonness score (integer-exact statistic). */
@@ -1381,68 +1313,77 @@ object SparkEntry {
     graft.text.CorpusAnalysis.lexicalCommonness(t(spark, dir, "documents"), "doc_id", "text")
 
   private val oLexicalCommonness =
-    """WITH toks AS (
-      |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')) AS term
-      |  FROM documents),
-      |f AS (SELECT doc_id, count(*) OVER (PARTITION BY term) AS freq FROM toks)
-      |SELECT doc_id, count(*) AS n_tokens, sum(freq)::BIGINT AS sum_token_freq,
-      |  sum(freq)::DOUBLE / count(*)::DOUBLE AS mean_token_freq
-      |FROM f GROUP BY doc_id""".stripMargin
+    s"""WITH toks AS (
+       |  SELECT doc_id, unnest(${tokSql("text")}) AS term
+       |  FROM documents),
+       |f AS (SELECT doc_id, count(*) OVER (PARTITION BY term) AS freq FROM toks)
+       |SELECT doc_id, count(*) AS n_tokens, sum(freq)::BIGINT AS sum_token_freq,
+       |  sum(freq)::DOUBLE / count(*)::DOUBLE AS mean_token_freq
+       |FROM f GROUP BY doc_id""".stripMargin
 
   /** Global top-50 vocabulary (tokenizer-seeding shape). */
   private def qVocabTopK(spark: SparkSession, dir: String): DataFrame =
     graft.text.CorpusAnalysis.vocabTopK(t(spark, dir, "documents"), "text", k = 50)
 
+  /** q54's corpus vocabulary: `top` = the 50 most frequent tokens (term,
+    * n), ties to the smaller term. */
+  private def vocabTopCtes: String =
+    s"""toks AS (SELECT unnest(${tokSql("text")}) AS term FROM documents),
+       |vc AS (SELECT term, count(*) AS n FROM toks GROUP BY 1),
+       |top AS (SELECT term, n FROM vc ORDER BY n DESC, term LIMIT 50)""".stripMargin
+
   private val oVocabTopK =
-    """WITH toks AS (SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')) AS term
-      |  FROM documents),
-      |vc AS (SELECT term, count(*) AS n FROM toks GROUP BY 1),
-      |top AS (SELECT term, n FROM vc ORDER BY n DESC, term LIMIT 50)
-      |SELECT row_number() OVER (ORDER BY n DESC, term) AS rank, term, n FROM top""".stripMargin
+    s"WITH $vocabTopCtes\nSELECT row_number() OVER (ORDER BY n DESC, term) AS rank, term, n FROM top"
 
   /** BPE first-merge statistic: top-K adjacent char pairs, vocab-weighted. */
   private def qBpePairs(spark: SparkSession, dir: String): DataFrame =
     graft.text.CorpusAnalysis.bpePairCounts(t(spark, dir, "documents"), "text", 50)
 
   private val oBpePairs =
-    """WITH toks AS (SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')) AS word
-      |  FROM documents),
-      |wc AS (SELECT word, count(*) AS wcnt FROM toks GROUP BY 1),
-      |p AS (SELECT substr(word, u.i + 1, 2) AS pair, wcnt
-      |  FROM wc, unnest(range(0, len(word) - 1)) AS u(i)
-      |  WHERE len(word) >= 2),
-      |pc AS (SELECT pair, sum(wcnt)::BIGINT AS n FROM p GROUP BY 1),
-      |top AS (SELECT pair, n FROM pc ORDER BY n DESC, pair LIMIT 50)
-      |SELECT row_number() OVER (ORDER BY n DESC, pair) AS rank, pair, n FROM top""".stripMargin
+    s"""WITH toks AS (SELECT unnest(${tokSql("text")}) AS word
+       |  FROM documents),
+       |wc AS (SELECT word, count(*) AS wcnt FROM toks GROUP BY 1),
+       |p AS (SELECT substr(word, u.i + 1, 2) AS pair, wcnt
+       |  FROM wc, unnest(range(0, len(word) - 1)) AS u(i)
+       |  WHERE len(word) >= 2),
+       |pc AS (SELECT pair, sum(wcnt)::BIGINT AS n FROM p GROUP BY 1),
+       |top AS (SELECT pair, n FROM pc ORDER BY n DESC, pair LIMIT 50)
+       |SELECT row_number() OVER (ORDER BY n DESC, pair) AS rank, pair, n FROM top""".stripMargin
 
   /** Corpus-mix audit: per-source doc/token/char totals + token share. */
   private def qSourceMix(spark: SparkSession, dir: String): DataFrame =
     graft.text.CorpusAnalysis.sourceMix(t(spark, dir, "documents"), "source", "text")
 
   private val oSourceMix =
-    """WITH per AS (SELECT source, count(*) AS n_docs,
-      |    sum(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')))::BIGINT AS n_tokens,
-      |    sum(len(text))::BIGINT AS n_chars_total
-      |  FROM documents GROUP BY 1)
-      |SELECT source, n_docs, n_tokens, n_chars_total,
-      |  n_tokens::DOUBLE / (SELECT sum(n_tokens) FROM per)::DOUBLE AS token_share
-      |FROM per""".stripMargin
+    s"""WITH per AS (SELECT source, count(*) AS n_docs,
+       |    sum(len(${tokSql("text")}))::BIGINT AS n_tokens,
+       |    sum(len(text))::BIGINT AS n_chars_total
+       |  FROM documents GROUP BY 1)
+       |SELECT source, n_docs, n_tokens, n_chars_total,
+       |  n_tokens::DOUBLE / (SELECT sum(n_tokens) FROM per)::DOUBLE AS token_share
+       |FROM per""".stripMargin
 
   /** Keep-best dedup representatives: longest doc per cluster, tie min id. */
   private def qClusterBest(spark: SparkSession, dir: String): DataFrame =
     graft.dedup.Dedup.clusterRepresentatives(
       t(spark, dir, "documents"), "doc_id", "text", scoreCol = "n_chars")
 
-  private val oClusterBest =
-    s"""$lshClusterCtes,
-       |scored AS (
+  /** q52's keep-best window over `clusters`: `sel` ranks each cluster's
+    * members by n_chars (read from `src`) descending, ties to the smaller
+    * doc_id, with the cluster's member count. */
+  private def keepBestCtes(src: String): String =
+    s"""scored AS (
        |  SELECT c.cluster_id, c.doc_id, d.n_chars
-       |  FROM clusters c JOIN documents d USING (doc_id)),
+       |  FROM clusters c JOIN $src d USING (doc_id)),
        |sel AS (
        |  SELECT cluster_id, doc_id, n_chars,
        |    count(*) OVER (PARTITION BY cluster_id) AS n_members,
        |    row_number() OVER (PARTITION BY cluster_id ORDER BY n_chars DESC, doc_id ASC) AS rn
-       |  FROM scored)
+       |  FROM scored)""".stripMargin
+
+  private val oClusterBest =
+    s"""WITH RECURSIVE ${clusterCtes("documents", threshold = 0.5)},
+       |${keepBestCtes("documents")}
        |SELECT cluster_id, n_members, doc_id AS keeper_id, n_chars AS keeper_score
        |FROM sel WHERE rn = 1""".stripMargin
 
@@ -1462,89 +1403,15 @@ object SparkEntry {
     * green also re-proves the banded chain inside the composition), the
     * q52 keep-best window, the q45 md5 gate, and the q46 packing. */
   private val oCorpusChain =
-    """WITH RECURSIVE fq AS (SELECT doc_id,
-      |    len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_words,
-      |    len(replace(trim(text), ' ', ''))::DOUBLE /
-      |      len(string_split_regex(trim(text), '\s+'))::DOUBLE AS avg_word_len
-      |  FROM documents),
-      |fl AS (SELECT doc_id,
-      |  (contains(' '||lower(text)||' ',' the ')::INT + contains(' '||lower(text)||' ',' of ')::INT
-      |    + contains(' '||lower(text)||' ',' and ')::INT) AS hits_en,
-      |  (contains(' '||lower(text)||' ',' der ')::INT + contains(' '||lower(text)||' ',' und ')::INT
-      |    + contains(' '||lower(text)||' ',' die ')::INT) AS hits_de,
-      |  (contains(' '||lower(text)||' ',' le ')::INT + contains(' '||lower(text)||' ',' la ')::INT
-      |    + contains(' '||lower(text)||' ',' et ')::INT) AS hits_fr,
-      |  (contains(' '||lower(text)||' ',' el ')::INT + contains(' '||lower(text)||' ',' los ')::INT
-      |    + contains(' '||lower(text)||' ',' y ')::INT) AS hits_es
-      | FROM documents),
-      |flang AS (SELECT doc_id,
-      |  CASE WHEN hits_en >= hits_de AND hits_en >= hits_fr AND hits_en >= hits_es AND hits_en > 0 THEN 'en'
-      |       WHEN hits_de >= hits_fr AND hits_de >= hits_es AND hits_de > 0 THEN 'de'
-      |       WHEN hits_fr >= hits_es AND hits_fr > 0 THEN 'fr'
-      |       WHEN hits_es > 0 THEN 'es'
-      |       ELSE 'und' END AS pred_lang
-      |  FROM fl),
-      |ftk AS (SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS tk
-      |  FROM documents),
-      |ftw AS (SELECT doc_id, max(c) AS twc FROM (
-      |    SELECT doc_id, count(*) AS c FROM (SELECT doc_id, unnest(tk) AS w FROM ftk)
-      |    GROUP BY doc_id, w) GROUP BY doc_id),
-      |frep AS (SELECT ftk.doc_id,
-      |    CASE WHEN len(tk) > 0 THEN coalesce(twc, 0) / len(tk)::DOUBLE ELSE 0.0 END AS top_frac,
-      |    CASE WHEN len(tk) >= 2 THEN
-      |      (len([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]) -
-      |       len(list_distinct([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]))) /
-      |      len([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))])::DOUBLE
-      |      ELSE 0.0 END AS dup_frac
-      |  FROM ftk LEFT JOIN ftw ON ftk.doc_id = ftw.doc_id),
-      |fdd AS (SELECT doc_id, row_number() OVER (
-      |    PARTITION BY md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-      |    ORDER BY doc_id) AS rn
-      |  FROM documents),
-      |surv AS (SELECT d.doc_id, d.text, d.lang, d.n_chars
-      |  FROM documents d
-      |  JOIN fq ON d.doc_id = fq.doc_id JOIN flang ON d.doc_id = flang.doc_id
-      |  JOIN frep ON d.doc_id = frep.doc_id JOIN fdd ON d.doc_id = fdd.doc_id
-      |  WHERE n_words >= 20 AND avg_word_len >= 2.0 AND avg_word_len <= 12.0
-      |    AND pred_lang = 'en' AND NOT (top_frac > 0.2 OR dup_frac > 0.2) AND rn = 1),
-      |toks AS (SELECT doc_id AS id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS tk
-      |  FROM surv),
-      |sh AS (SELECT id, list_distinct([array_to_string(tk[i:i+2], ' ')
-      |    FOR i IN range(1, greatest(len(tk) - 2, 0) + 1)]) AS s
-      |  FROM toks WHERE len(tk) >= 3),
-      |pairs AS (
-      |  SELECT a.id AS id_a, b.id AS id_b
-      |  FROM sh a, sh b WHERE a.id < b.id
-      |    AND len(list_intersect(a.s, b.s)) /
-      |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)))::DOUBLE > 0.5),
-      |edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-      |          UNION ALL SELECT id_b, id_a FROM pairs),
-      |reach(u, v) AS (
-      |  SELECT u, v FROM edges
-      |  UNION
-      |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-      |clusters AS (
-      |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u),
-      |sel AS (SELECT c.cluster_id, c.doc_id, row_number() OVER (
-      |    PARTITION BY c.cluster_id ORDER BY s.n_chars DESC, c.doc_id) AS rn
-      |  FROM clusters c JOIN surv s ON c.doc_id = s.doc_id),
-      |dedup AS (SELECT * FROM surv
-      |  WHERE doc_id NOT IN (SELECT doc_id FROM sel WHERE rn > 1)),
-      |samp AS (SELECT * FROM dedup
-      |  WHERE substr(md5(doc_id::VARCHAR), 1, 2) <
-      |    (CASE WHEN lang = 'de' THEN 'c0' WHEN lang = 'en' THEN '20' ELSE '40' END)),
-      |pt AS (SELECT doc_id, doc_id % 8 AS shard,
-      |    len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens
-      |  FROM samp),
-      |po AS (SELECT doc_id, shard, n_tokens,
-      |    (sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) - n_tokens)::BIGINT AS tok_start
-      |  FROM pt)
-      |SELECT shard, pack_id, doc_id,
-      |  greatest(tok_start, pack_id*512) - tok_start AS seg_start_in_doc,
-      |  least(tok_start + n_tokens, (pack_id+1)*512) - greatest(tok_start, pack_id*512) AS seg_len
-      |FROM po, unnest(generate_series(tok_start//512, (tok_start + n_tokens - 1)//512)) AS u(pack_id)""".stripMargin
+    s"""WITH RECURSIVE $corpusFilterCtes,
+       |surv AS (SELECT d.doc_id, d.text, d.lang, d.n_chars
+       |  FROM documents d JOIN cf ON d.doc_id = cf.doc_id WHERE cf.keep),
+       |${clusterCtes("surv", threshold = 0.5)},
+       |${keepBestCtes("surv")},
+       |dedup AS (SELECT * FROM surv
+       |  WHERE doc_id NOT IN (SELECT doc_id FROM sel WHERE rn > 1)),
+       |samp AS (SELECT * FROM dedup WHERE $stratGateSql),
+       |${packSql("samp")}""".stripMargin
 
   /** q58: incremental dedup — the indexed half of the corpus (even ids)
     * is folded with the odd-id batch WITHOUT re-signing it
@@ -1561,44 +1428,55 @@ object SparkEntry {
     graft.dedup.Dedup.incrementalDedupClusters(idx, docs, fresh, "doc_id", "text")._1
   }
 
-  /** q66: conversation integrity audit over an events-derived turns table
-    * whose derivation DELIBERATELY manufactures structural defects
-    * (turn_idx = event_id mod 40 gives dup indices + gaps; the 5-slot
-    * role wheel gives repeats and orphan tool turns) so every defect
-    * counter exercises. */
-  private def qConvIntegrity(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
+  /** The defective turns table of q66/q72/q73/q78/q80, derived from
+    * `events` so that it DELIBERATELY manufactures structural defects:
+    * conv_id = user_id mod 500, turn_idx = event_id mod 40 (dup indices +
+    * gaps), role from a 5-slot wheel (repeats and orphan tool turns),
+    * tool = t0/t1 on tool turns (null elsewhere), ts and event_id. */
+  private def eventTurns(spark: SparkSession, dir: String): DataFrame = {
     val roleWheel = array(lit("system"), lit("user"), lit("assistant"),
       lit("tool"), lit("user"))
-    val turns = ev.select(
+    val role = element_at(roleWheel,
+      (pmod(col("event_id") * 7L + 3L, lit(5L)) + 1L).cast("int"))
+    t(spark, dir, "events").select(
       pmod(col("user_id"), lit(500L)).as("conv_id"),
       pmod(col("event_id"), lit(40L)).as("turn_idx"),
-      element_at(roleWheel,
-        (pmod(col("event_id") * 7L + 3L, lit(5L)) + 1L).cast("int")).as("role"),
+      role.as("role"),
+      when(role === "tool", concat(lit("t"), pmod(col("event_id"), lit(2L))))
+        .otherwise(lit(null)).as("tool"),
       col("ts"), col("event_id"))
-    graft.text.TranscriptOps.convIntegrity(
-      turns, "conv_id", "turn_idx", "role", "ts", "event_id")
   }
 
+  /** [[eventTurns]] as the `turns` CTE. */
+  private def eventTurnsCte: String =
+    """turns AS (SELECT *, CASE WHEN role = 'tool' THEN 't' || (event_id % 2)::VARCHAR END AS tool
+      |  FROM (SELECT user_id % 500 AS conv_id, event_id % 40 AS turn_idx,
+      |      (['system','user','assistant','tool','user'])[((event_id*7+3) % 5 + 1)] AS role,
+      |      ts, event_id
+      |    FROM events))""".stripMargin
+
+  /** q66: conversation integrity audit over the defective [[eventTurns]],
+    * so every defect counter exercises. */
+  private def qConvIntegrity(spark: SparkSession, dir: String): DataFrame =
+    graft.text.TranscriptOps.convIntegrity(
+      eventTurns(spark, dir).select("conv_id", "turn_idx", "role", "ts", "event_id"),
+      "conv_id", "turn_idx", "role", "ts", "event_id")
+
   private val oConvIntegrity =
-    """WITH turns AS (
-      |  SELECT user_id % 500 AS conv_id, event_id % 40 AS turn_idx,
-      |    (['system','user','assistant','tool','user'])[((event_id*7+3) % 5 + 1)] AS role,
-      |    ts, event_id
-      |  FROM events),
-      |l AS (SELECT conv_id, turn_idx, role, ts,
-      |    lag(role) OVER w AS prev_role, lag(ts) OVER w AS prev_ts
-      |  FROM turns WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx, event_id)),
-      |a AS (SELECT conv_id, count(*)::BIGINT AS n_turns,
-      |    (count(*) - count(DISTINCT turn_idx))::BIGINT AS n_dup_idx,
-      |    (max(turn_idx) - min(turn_idx) + 1 - count(DISTINCT turn_idx))::BIGINT AS n_idx_gaps,
-      |    sum(CASE WHEN ts < prev_ts THEN 1 ELSE 0 END)::BIGINT AS n_ts_regress,
-      |    sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END)::BIGINT AS n_role_repeat,
-      |    sum(CASE WHEN role = 'tool' AND (prev_role IS NULL OR prev_role <> 'assistant')
-      |        THEN 1 ELSE 0 END)::BIGINT AS n_orphan_tool
-      |  FROM l GROUP BY conv_id)
-      |SELECT *, (n_dup_idx = 0 AND n_idx_gaps = 0 AND n_ts_regress = 0
-      |  AND n_role_repeat = 0 AND n_orphan_tool = 0) AS is_clean FROM a""".stripMargin
+    s"""WITH $eventTurnsCte,
+       |l AS (SELECT conv_id, turn_idx, role, ts,
+       |    lag(role) OVER w AS prev_role, lag(ts) OVER w AS prev_ts
+       |  FROM turns WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx, event_id)),
+       |a AS (SELECT conv_id, count(*)::BIGINT AS n_turns,
+       |    (count(*) - count(DISTINCT turn_idx))::BIGINT AS n_dup_idx,
+       |    (max(turn_idx) - min(turn_idx) + 1 - count(DISTINCT turn_idx))::BIGINT AS n_idx_gaps,
+       |    sum(CASE WHEN ts < prev_ts THEN 1 ELSE 0 END)::BIGINT AS n_ts_regress,
+       |    sum(CASE WHEN role = prev_role THEN 1 ELSE 0 END)::BIGINT AS n_role_repeat,
+       |    sum(CASE WHEN role = 'tool' AND (prev_role IS NULL OR prev_role <> 'assistant')
+       |        THEN 1 ELSE 0 END)::BIGINT AS n_orphan_tool
+       |  FROM l GROUP BY conv_id)
+       |SELECT *, (n_dup_idx = 0 AND n_idx_gaps = 0 AND n_ts_regress = 0
+       |  AND n_role_repeat = 0 AND n_orphan_tool = 0) AS is_clean FROM a""".stripMargin
 
   /** q67: deterministic global training-order shuffle (seed-keyed md5
     * permutation, balanced shards, dense per-shard positions). */
@@ -1621,47 +1499,39 @@ object SparkEntry {
       graft.skew.Par.floor(t(spark, dir, "documents")), "doc_id", "text", nBuckets = 1 << 20)
 
   private val oHashClassifier =
-    """WITH tk AS (SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS toks
-      |  FROM documents),
-      |sc AS (SELECT doc_id, len(toks)::BIGINT AS n_tokens,
-      |    coalesce(list_sum(list_transform(toks, t ->
-      |      ((('0x' || substr(md5('w:' || t), 1, 15))::BIGINT % 1048576)
-      |        * 2654435761) % 8191 - 4095)), 0)::BIGINT AS score_int
-      |  FROM tk)
-      |SELECT doc_id, n_tokens, score_int, score_int > 0 AS keep FROM sc""".stripMargin
+    s"""WITH tk AS (SELECT doc_id,
+       |    ${tokSql("text")} AS toks
+       |  FROM documents),
+       |sc AS (SELECT doc_id, len(toks)::BIGINT AS n_tokens,
+       |    coalesce(list_sum(list_transform(toks, t ->
+       |      ((('0x' || substr(md5('w:' || t), 1, 15))::BIGINT % 1048576)
+       |        * 2654435761) % 8191 - 4095)), 0)::BIGINT AS score_int
+       |  FROM tk)
+       |SELECT doc_id, n_tokens, score_int, score_int > 0 AS keep FROM sc""".stripMargin
 
   /** q69: context-budget truncation (keep the system turn + the longest
     * recent-turn suffix fitting 40 tokens) over the q64-style
     * documents-derived turns table. */
-  private def qTruncateContext(spark: SparkSession, dir: String): DataFrame = {
-    val turns = t(spark, dir, "documents")
-      .select(col("doc_id").as("conv_id"),
-        posexplode(split(col("text"), " data ")).as(Seq("turn_idx", "text")))
-      .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"), col("text"))
+  private def qTruncateContext(spark: SparkSession, dir: String): DataFrame =
     graft.text.TranscriptOps.truncateContext(
-      turns, "conv_id", "turn_idx", "text", budgetTokens = 40L)
-  }
+      docSegments(spark, dir, "conv_id", "turn_idx", "text"), "conv_id", "turn_idx", "text",
+      budgetTokens = 40L)
 
   private val oTruncateContext =
-    """WITH turns AS (
-      |  SELECT doc_id AS conv_id, i - 1 AS turn_idx, arr[i] AS text
-      |  FROM (SELECT doc_id, string_split(text, ' data ') AS arr FROM documents),
-      |       unnest(generate_series(1, len(arr))) AS g(i)),
-      |tk AS (SELECT conv_id, turn_idx, text,
-      |    len(string_split_regex(trim(text), '\s+'))::BIGINT AS tok FROM turns),
-      |f AS (SELECT *, sum(tok) OVER (PARTITION BY conv_id ORDER BY turn_idx DESC
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS revcum,
-      |    min(turn_idx) OVER (PARTITION BY conv_id) AS min_idx
-      |  FROM tk),
-      |k AS (SELECT *, (turn_idx = min_idx OR revcum <= 40) AS keep FROM f)
-      |SELECT conv_id, count(*)::BIGINT AS n_turns,
-      |  sum(CASE WHEN keep THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-      |  sum(tok)::BIGINT AS n_tokens_total,
-      |  sum(CASE WHEN keep THEN tok ELSE 0 END)::BIGINT AS n_tokens_kept,
-      |  md5(coalesce(string_agg(CASE WHEN keep THEN text END, chr(10) ORDER BY turn_idx), ''))
-      |    AS kept_md5
-      |FROM k GROUP BY conv_id""".stripMargin
+    s"""WITH turns AS (${docSegmentsSql("conv_id", "turn_idx", "text")}),
+       |tk AS (SELECT conv_id, turn_idx, text, len(${wsSql("text")})::BIGINT AS tok FROM turns),
+       |f AS (SELECT *, sum(tok) OVER (PARTITION BY conv_id ORDER BY turn_idx DESC
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS revcum,
+       |    min(turn_idx) OVER (PARTITION BY conv_id) AS min_idx
+       |  FROM tk),
+       |k AS (SELECT *, (turn_idx = min_idx OR revcum <= 40) AS keep FROM f)
+       |SELECT conv_id, count(*)::BIGINT AS n_turns,
+       |  sum(CASE WHEN keep THEN 1 ELSE 0 END)::BIGINT AS n_kept,
+       |  sum(tok)::BIGINT AS n_tokens_total,
+       |  sum(CASE WHEN keep THEN tok ELSE 0 END)::BIGINT AS n_tokens_kept,
+       |  md5(coalesce(string_agg(CASE WHEN keep THEN text END, chr(10) ORDER BY turn_idx), ''))
+       |    AS kept_md5
+       |FROM k GROUP BY conv_id""".stripMargin
 
   /** q70: overlapping-window RAG chunking (32-token windows, stride 24). */
   private def qChunkDocs(spark: SparkSession, dir: String): DataFrame =
@@ -1669,13 +1539,13 @@ object SparkEntry {
       t(spark, dir, "documents"), "doc_id", "text", windowTokens = 32, strideTokens = 24)
 
   private val oChunkDocs =
-    """WITH tk AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-      |d AS (SELECT doc_id, toks, len(toks)::BIGINT AS n,
-      |    (1 + (greatest(len(toks) - 32, 0) + 23) // 24)::BIGINT AS nc FROM tk)
-      |SELECT doc_id, u.i::BIGINT AS chunk_idx, (u.i * 24)::BIGINT AS tok_start,
-      |  (least(u.i*24 + 32, n) - u.i*24)::BIGINT AS n_chunk_tokens,
-      |  md5(array_to_string(toks[(u.i*24 + 1):least(u.i*24 + 32, n)], ' ')) AS chunk_md5
-      |FROM d, unnest(generate_series(0, nc - 1)) AS u(i)""".stripMargin
+    s"""WITH tk AS (SELECT doc_id, ${wsSql("text")} AS toks FROM documents),
+       |d AS (SELECT doc_id, toks, len(toks)::BIGINT AS n,
+       |    (1 + (greatest(len(toks) - 32, 0) + 23) // 24)::BIGINT AS nc FROM tk)
+       |SELECT doc_id, u.i::BIGINT AS chunk_idx, (u.i * 24)::BIGINT AS tok_start,
+       |  (least(u.i*24 + 32, n) - u.i*24)::BIGINT AS n_chunk_tokens,
+       |  md5(array_to_string(toks[(u.i*24 + 1):least(u.i*24 + 32, n)], ' ')) AS chunk_md5
+       |FROM d, unnest(generate_series(0, nc - 1)) AS u(i)""".stripMargin
 
   /** q71: conversation-level exact dedup. The turns fixture maps each
     * document to a conversation whose turn texts depend only on
@@ -1708,65 +1578,41 @@ object SparkEntry {
   /** q72: degenerate agent-loop detection over the q66-style defective
     * turns table, with tool names on tool turns (run identity is the
     * (role, tool) pair). minRun=3. */
-  private def qAgentLoops(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
-    val roleWheel = array(lit("system"), lit("user"), lit("assistant"),
-      lit("tool"), lit("user"))
-    val role = element_at(roleWheel,
-      (pmod(col("event_id") * 7L + 3L, lit(5L)) + 1L).cast("int"))
-    val turns = ev.select(
-      pmod(col("user_id"), lit(500L)).as("conv_id"),
-      pmod(col("event_id"), lit(40L)).as("turn_idx"),
-      role.as("role"),
-      when(role === "tool", concat(lit("t"), pmod(col("event_id"), lit(2L))))
-        .otherwise(lit(null)).as("tool"),
-      col("event_id"))
+  private def qAgentLoops(spark: SparkSession, dir: String): DataFrame =
     graft.text.TranscriptOps.agentLoops(
-      turns, "conv_id", "turn_idx", "role", "tool", "event_id", minRun = 3)
-  }
+      eventTurns(spark, dir).select("conv_id", "turn_idx", "role", "tool", "event_id"),
+      "conv_id", "turn_idx", "role", "tool", "event_id", minRun = 3)
 
   private val oAgentLoops =
-    """WITH turns AS (
-      |  SELECT user_id % 500 AS conv_id, event_id % 40 AS turn_idx,
-      |    (['system','user','assistant','tool','user'])[((event_id*7+3) % 5 + 1)] AS role,
-      |    event_id
-      |  FROM events),
-      |a AS (SELECT conv_id, turn_idx, event_id,
-      |    role || (CASE WHEN role = 'tool' THEN 't' || (event_id % 2)::VARCHAR
-      |             ELSE '' END) AS act FROM turns),
-      |l AS (SELECT *, CASE WHEN lag(act) OVER w IS NULL OR lag(act) OVER w <> act
-      |      THEN 1 ELSE 0 END AS newrun
-      |  FROM a WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx, event_id)),
-      |r AS (SELECT *, sum(newrun) OVER (PARTITION BY conv_id
-      |      ORDER BY turn_idx, event_id ROWS UNBOUNDED PRECEDING) AS run FROM l),
-      |runs AS (SELECT conv_id, run, count(*)::BIGINT AS run_len
-      |  FROM r GROUP BY conv_id, run)
-      |SELECT conv_id, count(*)::BIGINT AS n_runs, max(run_len)::BIGINT AS max_run_len,
-      |  sum(CASE WHEN run_len >= 3 THEN 1 ELSE 0 END)::BIGINT AS n_degenerate_runs,
-      |  sum(CASE WHEN run_len >= 3 THEN 1 ELSE 0 END) > 0 AS is_looping
-      |FROM runs GROUP BY conv_id""".stripMargin
+    s"""WITH $eventTurnsCte,
+       |a AS (SELECT conv_id, turn_idx, event_id, role || coalesce(tool, '') AS act FROM turns),
+       |l AS (SELECT *, CASE WHEN lag(act) OVER w IS NULL OR lag(act) OVER w <> act
+       |      THEN 1 ELSE 0 END AS newrun
+       |  FROM a WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx, event_id)),
+       |r AS (SELECT *, sum(newrun) OVER (PARTITION BY conv_id
+       |      ORDER BY turn_idx, event_id ROWS UNBOUNDED PRECEDING) AS run FROM l),
+       |runs AS (SELECT conv_id, run, count(*)::BIGINT AS run_len
+       |  FROM r GROUP BY conv_id, run)
+       |SELECT conv_id, count(*)::BIGINT AS n_runs, max(run_len)::BIGINT AS max_run_len,
+       |  sum(CASE WHEN run_len >= 3 THEN 1 ELSE 0 END)::BIGINT AS n_degenerate_runs,
+       |  sum(CASE WHEN run_len >= 3 THEN 1 ELSE 0 END) > 0 AS is_looping
+       |FROM runs GROUP BY conv_id""".stripMargin
 
   /** q73: turn-order repair over the q66 defective turns table — dense
     * re-sequencing with lineage (orig_idx kept, moved flagged). */
-  private def qRepairOrder(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
-    val turns = ev.select(
-      pmod(col("user_id"), lit(500L)).as("conv_id"),
-      pmod(col("event_id"), lit(40L)).as("turn_idx"),
-      col("event_id"))
-    graft.text.TranscriptOps.repairTurnOrder(turns, "conv_id", "turn_idx", "event_id")
-  }
+  private def qRepairOrder(spark: SparkSession, dir: String): DataFrame =
+    graft.text.TranscriptOps.repairTurnOrder(
+      eventTurns(spark, dir).select("conv_id", "turn_idx", "event_id"),
+      "conv_id", "turn_idx", "event_id")
 
   private val oRepairOrder =
-    """WITH turns AS (
-      |  SELECT user_id % 500 AS conv_id, event_id % 40 AS turn_idx, event_id
-      |  FROM events)
-      |SELECT conv_id, turn_idx AS orig_idx, event_id AS ord,
-      |  (row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx, event_id) - 1)::BIGINT
-      |    AS new_idx,
-      |  (row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx, event_id) - 1)
-      |    <> turn_idx AS moved
-      |FROM turns""".stripMargin
+    s"""WITH $eventTurnsCte
+       |SELECT conv_id, turn_idx AS orig_idx, event_id AS ord,
+       |  (row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx, event_id) - 1)::BIGINT
+       |    AS new_idx,
+       |  (row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx, event_id) - 1)
+       |    <> turn_idx AS moved
+       |FROM turns""".stripMargin
 
   /** q74: DPO preference-pair construction — completions grouped by a
     * shared-prompt key (doc_id mod 100 — 5 completions per prompt at
@@ -1779,15 +1625,15 @@ object SparkEntry {
   }
 
   private val oPreferencePairs =
-    """WITH c AS (SELECT doc_id % 100 AS prompt_fp, doc_id AS cid,
-      |    len(string_split_regex(trim(text), '\s+'))::BIGINT AS score FROM documents),
-      |b AS (SELECT prompt_fp, max(score) AS chosen_score FROM c GROUP BY prompt_fp),
-      |ch AS (SELECT c.prompt_fp, min(cid) AS chosen_id, max(b.chosen_score) AS chosen_score
-      |  FROM c JOIN b ON c.prompt_fp = b.prompt_fp AND c.score = b.chosen_score
-      |  GROUP BY c.prompt_fp)
-      |SELECT c.prompt_fp, chosen_id, chosen_score, cid AS rejected_id,
-      |  score AS rejected_score, chosen_score - score AS score_gap
-      |FROM c JOIN ch ON c.prompt_fp = ch.prompt_fp WHERE cid <> chosen_id""".stripMargin
+    s"""WITH c AS (SELECT doc_id % 100 AS prompt_fp, doc_id AS cid,
+       |    len(${wsSql("text")})::BIGINT AS score FROM documents),
+       |b AS (SELECT prompt_fp, max(score) AS chosen_score FROM c GROUP BY prompt_fp),
+       |ch AS (SELECT c.prompt_fp, min(cid) AS chosen_id, max(b.chosen_score) AS chosen_score
+       |  FROM c JOIN b ON c.prompt_fp = b.prompt_fp AND c.score = b.chosen_score
+       |  GROUP BY c.prompt_fp)
+       |SELECT c.prompt_fp, chosen_id, chosen_score, cid AS rejected_id,
+       |  score AS rejected_score, chosen_score - score AS score_gap
+       |FROM c JOIN ch ON c.prompt_fp = ch.prompt_fp WHERE cid <> chosen_id""".stripMargin
 
   /** q75: square-root temperature source sampling (alpha=0.5), gate and
     * rate both integer-exact across engines. */
@@ -1835,18 +1681,18 @@ object SparkEntry {
   }
 
   private val oCurriculum =
-    """WITH scored AS (SELECT doc_id, source,
-      |    len(string_split_regex(trim(text), '\s+'))::BIGINT AS score FROM documents),
-      |vc AS (SELECT source, score, count(*)::BIGINT AS cnt
-      |  FROM scored GROUP BY source, score),
-      |dim AS (SELECT source, score,
-      |    sum(cnt) OVER (PARTITION BY source) AS total,
-      |    (sum(cnt) OVER (PARTITION BY source ORDER BY score
-      |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - cnt) AS bef
-      |  FROM vc)
-      |SELECT s.doc_id, s.source, s.score,
-      |  ((d.bef * 4) // d.total)::BIGINT AS bucket, d.total::BIGINT AS n_group
-      |FROM scored s JOIN dim d ON s.source = d.source AND s.score = d.score""".stripMargin
+    s"""WITH scored AS (SELECT doc_id, source,
+       |    len(${wsSql("text")})::BIGINT AS score FROM documents),
+       |vc AS (SELECT source, score, count(*)::BIGINT AS cnt
+       |  FROM scored GROUP BY source, score),
+       |dim AS (SELECT source, score,
+       |    sum(cnt) OVER (PARTITION BY source) AS total,
+       |    (sum(cnt) OVER (PARTITION BY source ORDER BY score
+       |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - cnt) AS bef
+       |  FROM vc)
+       |SELECT s.doc_id, s.source, s.score,
+       |  ((d.bef * 4) // d.total)::BIGINT AS bucket, d.total::BIGINT AS n_group
+       |FROM scored s JOIN dim d ON s.source = d.source AND s.score = d.score""".stripMargin
 
   /** q78: composed end-to-end transcript-prep chain (repair → loop gate →
     * boiler strip → budget truncation → assemble → whole-conversation
@@ -1857,80 +1703,52 @@ object SparkEntry {
     * (minRun=3 gated out EVERY conversation — a vacuous chain), while
     * 6-runs flag only a deterministic minority. */
   private def qTranscriptChain(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
-    val roleWheel = array(lit("system"), lit("user"), lit("assistant"),
-      lit("tool"), lit("user"))
-    val role = element_at(roleWheel,
-      (pmod(col("event_id") * 7L + 3L, lit(5L)) + 1L).cast("int"))
     val text = when(pmod(col("event_id"), lit(7L)) === 0L,
         lit("please review the standard disclaimer"))
       .otherwise(concat(lit("msg "), col("event_id"), lit(" alpha beta"),
         when(pmod(col("event_id"), lit(2L)) === 0L, lit(" gamma delta"))
           .otherwise(lit(""))))
-    val turns = ev.select(
-      pmod(col("user_id"), lit(500L)).as("conv_id"),
-      pmod(col("event_id"), lit(40L)).as("turn_idx"),
-      role.as("role"),
-      when(role === "tool", concat(lit("t"), pmod(col("event_id"), lit(2L))))
-        .otherwise(lit(null)).as("tool"),
-      col("event_id"), text.as("text"))
+    val turns = eventTurns(spark, dir).select(col("conv_id"), col("turn_idx"), col("role"),
+      col("tool"), col("event_id"), text.as("text"))
     graft.text.TranscriptChain.transcriptChain(turns, "conv_id", "turn_idx",
       "role", "tool", "event_id", "text",
       minRun = 6, minConvs = 3, budgetTokens = 12L, packTokens = 64, nShards = 8)
   }
 
   private val oTranscriptChain =
-    """WITH RECURSIVE turns AS (
-      |  SELECT user_id % 500 AS conv_id, event_id % 40 AS turn_idx,
-      |    (['system','user','assistant','tool','user'])[((event_id*7+3) % 5 + 1)] AS role,
-      |    event_id,
-      |    CASE WHEN event_id % 7 = 0 THEN 'please review the standard disclaimer'
-      |         ELSE 'msg ' || event_id::VARCHAR || ' alpha beta' ||
-      |              (CASE WHEN event_id % 2 = 0 THEN ' gamma delta' ELSE '' END) END AS text
-      |  FROM events),
-      |t2 AS (SELECT *, CASE WHEN role = 'tool' THEN 't' || (event_id % 2)::VARCHAR END AS tool
-      |  FROM turns),
-      |rep AS (SELECT conv_id, role, tool, event_id AS ord, text,
-      |    (row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx, event_id) - 1)::BIGINT
-      |      AS new_idx
-      |  FROM t2),
-      |a AS (SELECT conv_id, new_idx, role || coalesce(tool, '') AS act FROM rep),
-      |l AS (SELECT *, CASE WHEN lag(act) OVER w IS NULL OR lag(act) OVER w <> act
-      |      THEN 1 ELSE 0 END AS newrun
-      |  FROM a WINDOW w AS (PARTITION BY conv_id ORDER BY new_idx)),
-      |r0 AS (SELECT *, sum(newrun) OVER (PARTITION BY conv_id ORDER BY new_idx
-      |      ROWS UNBOUNDED PRECEDING) AS run FROM l),
-      |bad AS (SELECT DISTINCT conv_id FROM (
-      |    SELECT conv_id, run, count(*) AS rl FROM r0 GROUP BY conv_id, run)
-      |  WHERE rl >= 6),
-      |gated AS (SELECT * FROM rep WHERE conv_id NOT IN (SELECT conv_id FROM bad)),
-      |hh AS (SELECT *, md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS h
-      |  FROM gated),
-      |nc AS (SELECT h, count(DISTINCT conv_id) AS nconv FROM hh GROUP BY h),
-      |k1 AS (SELECT hh.* FROM hh JOIN nc USING (h) WHERE nconv < 3),
-      |tk AS (SELECT *, len(string_split_regex(trim(text), '\s+'))::BIGINT AS tok FROM k1),
-      |f AS (SELECT *, sum(tok) OVER (PARTITION BY conv_id ORDER BY new_idx DESC
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS revcum,
-      |    min(new_idx) OVER (PARTITION BY conv_id) AS min_idx FROM tk),
-      |k2 AS (SELECT * FROM f WHERE new_idx = min_idx OR revcum <= 12),
-      |asm AS (SELECT conv_id, string_agg(text, chr(10) ORDER BY new_idx) AS clean_text
-      |  FROM k2 GROUP BY conv_id),
-      |t3 AS (SELECT conv_id AS doc_id, conv_id % 8 AS shard,
-      |    len(string_split_regex(trim(clean_text), '\s+'))::BIGINT AS n FROM asm),
-      |d AS (SELECT doc_id, shard, n,
-      |    row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rk FROM t3),
-      |r AS (
-      |  SELECT doc_id, shard, n, rk, 0::BIGINT AS pack_id, 0::BIGINT AS pack_offset,
-      |         n AS fill
-      |  FROM d WHERE rk = 1
-      |  UNION ALL
-      |  SELECT d.doc_id, d.shard, d.n, d.rk,
-      |    CASE WHEN r.fill > 0 AND r.fill + d.n > 64 THEN r.pack_id + 1 ELSE r.pack_id END,
-      |    CASE WHEN r.fill > 0 AND r.fill + d.n > 64 THEN 0::BIGINT ELSE r.fill END,
-      |    CASE WHEN r.fill > 0 AND r.fill + d.n > 64 THEN d.n ELSE r.fill + d.n END
-      |  FROM r JOIN d ON d.shard = r.shard AND d.rk = r.rk + 1)
-      |SELECT doc_id, shard, n AS n_tokens, pack_id, pack_offset, n > 64 AS oversize
-      |FROM r""".stripMargin
+    s"""WITH RECURSIVE $eventTurnsCte,
+       |tt AS (SELECT *,
+       |    CASE WHEN event_id % 7 = 0 THEN 'please review the standard disclaimer'
+       |         ELSE 'msg ' || event_id::VARCHAR || ' alpha beta' ||
+       |              (CASE WHEN event_id % 2 = 0 THEN ' gamma delta' ELSE '' END) END AS text
+       |  FROM turns),
+       |rep AS (SELECT conv_id, role, tool, event_id AS ord, text,
+       |    (row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx, event_id) - 1)::BIGINT
+       |      AS new_idx
+       |  FROM tt),
+       |a AS (SELECT conv_id, new_idx, role || coalesce(tool, '') AS act FROM rep),
+       |l AS (SELECT *, CASE WHEN lag(act) OVER w IS NULL OR lag(act) OVER w <> act
+       |      THEN 1 ELSE 0 END AS newrun
+       |  FROM a WINDOW w AS (PARTITION BY conv_id ORDER BY new_idx)),
+       |r0 AS (SELECT *, sum(newrun) OVER (PARTITION BY conv_id ORDER BY new_idx
+       |      ROWS UNBOUNDED PRECEDING) AS run FROM l),
+       |bad AS (SELECT DISTINCT conv_id FROM (
+       |    SELECT conv_id, run, count(*) AS rl FROM r0 GROUP BY conv_id, run)
+       |  WHERE rl >= 6),
+       |gated AS (SELECT * FROM rep WHERE conv_id NOT IN (SELECT conv_id FROM bad)),
+       |hh AS (SELECT *, md5(${normSql("text")}) AS h FROM gated),
+       |nc AS (SELECT h, count(DISTINCT conv_id) AS nconv FROM hh GROUP BY h),
+       |k1 AS (SELECT hh.* FROM hh JOIN nc USING (h) WHERE nconv < 3),
+       |tk AS (SELECT *, len(${wsSql("text")})::BIGINT AS tok FROM k1),
+       |f AS (SELECT *, sum(tok) OVER (PARTITION BY conv_id ORDER BY new_idx DESC
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS revcum,
+       |    min(new_idx) OVER (PARTITION BY conv_id) AS min_idx FROM tk),
+       |k2 AS (SELECT * FROM f WHERE new_idx = min_idx OR revcum <= 12),
+       |asm AS (SELECT conv_id, string_agg(text, chr(10) ORDER BY new_idx) AS clean_text
+       |  FROM k2 GROUP BY conv_id),
+       |t3 AS (SELECT conv_id AS doc_id, conv_id % 8 AS shard,
+       |    len(${wsSql("clean_text")})::BIGINT AS n FROM asm),
+       |${packWholeSql("t3", packTokens = 64)}""".stripMargin
 
   /** q79: mergeable KMV distinct-count sketch, k=16 — the 'tiny' group
     * (10 distinct ids) exercises the exact-below-k path, the 20 real
@@ -1958,39 +1776,21 @@ object SparkEntry {
   /** q80: tool-call transition matrix over the q72 defective-turns
     * fixture (role wheel + t0/t1 tool names) — corpus-wide (from, to)
     * action-pair counts incl. the `<start>` edge. */
-  private def qToolTransitions(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
-    val roleWheel = array(lit("system"), lit("user"), lit("assistant"),
-      lit("tool"), lit("user"))
-    val role = element_at(roleWheel,
-      (pmod(col("event_id") * 7L + 3L, lit(5L)) + 1L).cast("int"))
-    val turns = ev.select(
-      pmod(col("user_id"), lit(500L)).as("conv_id"),
-      pmod(col("event_id"), lit(40L)).as("turn_idx"),
-      role.as("role"),
-      when(role === "tool", concat(lit("t"), pmod(col("event_id"), lit(2L))))
-        .otherwise(lit(null)).as("tool"),
-      col("event_id"))
+  private def qToolTransitions(spark: SparkSession, dir: String): DataFrame =
     graft.text.TranscriptOps.toolTransitions(
-      turns, "conv_id", "turn_idx", "role", "tool", "event_id")
-  }
+      eventTurns(spark, dir).select("conv_id", "turn_idx", "role", "tool", "event_id"),
+      "conv_id", "turn_idx", "role", "tool", "event_id")
 
   private val oToolTransitions =
-    """WITH turns AS (
-      |  SELECT user_id % 500 AS conv_id, event_id % 40 AS turn_idx,
-      |    (['system','user','assistant','tool','user'])[((event_id*7+3) % 5 + 1)] AS role,
-      |    event_id
-      |  FROM events),
-      |a AS (SELECT conv_id, turn_idx, event_id,
-      |    role || (CASE WHEN role = 'tool' THEN ':t' || (event_id % 2)::VARCHAR
-      |             ELSE '' END) AS to_act FROM turns),
-      |l AS (SELECT conv_id, to_act,
-      |    coalesce(lag(to_act) OVER (PARTITION BY conv_id ORDER BY turn_idx, event_id),
-      |      '<start>') AS from_act
-      |  FROM a)
-      |SELECT from_act, to_act, count(*)::BIGINT AS n_transitions,
-      |  count(DISTINCT conv_id)::BIGINT AS n_convs
-      |FROM l GROUP BY 1, 2""".stripMargin
+    s"""WITH $eventTurnsCte,
+       |a AS (SELECT conv_id, turn_idx, event_id, role || coalesce(':' || tool, '') AS to_act FROM turns),
+       |l AS (SELECT conv_id, to_act,
+       |    coalesce(lag(to_act) OVER (PARTITION BY conv_id ORDER BY turn_idx, event_id),
+       |      '<start>') AS from_act
+       |  FROM a)
+       |SELECT from_act, to_act, count(*)::BIGINT AS n_transitions,
+       |  count(DISTINCT conv_id)::BIGINT AS n_convs
+       |FROM l GROUP BY 1, 2""".stripMargin
 
   /** q81: deterministic global bottom-k sample — exact 100-row eval
     * carve by md5 priority, TakeOrderedAndProject plan. */
@@ -2074,20 +1874,16 @@ object SparkEntry {
   }
 
   private val oOovAudit =
-    """WITH toks AS (SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')) AS term
-      |  FROM documents),
-      |vc AS (SELECT term, count(*) AS n FROM toks GROUP BY 1),
-      |top AS (SELECT term FROM vc ORDER BY n DESC, term LIMIT 50),
-      |dt AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')) AS term
-      |  FROM documents),
-      |agg AS (SELECT dt.doc_id, count(*)::BIGINT AS n_tokens,
-      |    sum(CASE WHEN top.term IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov
-      |  FROM dt LEFT JOIN top ON dt.term = top.term GROUP BY 1)
-      |SELECT d.doc_id, coalesce(agg.n_tokens, 0)::BIGINT AS n_tokens,
-      |  coalesce(agg.n_oov, 0)::BIGINT AS n_oov,
-      |  CASE WHEN coalesce(agg.n_tokens, 0) > 0
-      |    THEN coalesce(agg.n_oov, 0)::DOUBLE / agg.n_tokens::DOUBLE END AS oov_rate
-      |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin
+    s"""WITH $vocabTopCtes,
+       |dt AS (SELECT doc_id, unnest(${tokSql("text")}) AS term FROM documents),
+       |agg AS (SELECT dt.doc_id, count(*)::BIGINT AS n_tokens,
+       |    sum(CASE WHEN top.term IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov
+       |  FROM dt LEFT JOIN top ON dt.term = top.term GROUP BY 1)
+       |SELECT d.doc_id, coalesce(agg.n_tokens, 0)::BIGINT AS n_tokens,
+       |  coalesce(agg.n_oov, 0)::BIGINT AS n_oov,
+       |  CASE WHEN coalesce(agg.n_tokens, 0) > 0
+       |    THEN coalesce(agg.n_oov, 0)::DOUBLE / agg.n_tokens::DOUBLE END AS oov_rate
+       |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin
 
   // -------------------------------------------------------------------------
 
@@ -2188,19 +1984,12 @@ object SparkEntry {
   /** n-gram jaccard oracle: shingles built identically (token 3-grams over
     * lowercase alnum tokens, distinct). */
   private val oNgramJaccardFull =
-    """WITH toks AS (
-      |  SELECT doc_id AS id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS tk
-      |  FROM documents WHERE doc_id < 120),
-      |sh AS (
-      |  SELECT id, list_distinct([array_to_string(tk[i:i+2], ' ')
-      |    FOR i IN range(1, greatest(len(tk) - 2, 0) + 1)]) AS s
-      |  FROM toks),
-      |pairs AS (
-      |  SELECT a.id AS id_a, b.id AS id_b,
-      |    len(list_intersect(a.s, b.s))::BIGINT AS inter,
-      |    (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)))::BIGINT AS uni
-      |  FROM sh a, sh b WHERE a.id < b.id)
-      |SELECT id_a, id_b, inter, uni, inter / uni::DOUBLE AS jaccard
-      |FROM pairs WHERE inter / uni::DOUBLE > 0.02""".stripMargin
+    s"""WITH ${toksSql(3, "documents WHERE doc_id < 120")},
+       |pairs AS (
+       |  SELECT a.id AS id_a, b.id AS id_b,
+       |    len(list_intersect(a.s, b.s))::BIGINT AS inter,
+       |    (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)))::BIGINT AS uni
+       |  FROM sh a, sh b WHERE a.id < b.id)
+       |SELECT id_a, id_b, inter, uni, inter / uni::DOUBLE AS jaccard
+       |FROM pairs WHERE inter / uni::DOUBLE > 0.02""".stripMargin
 }

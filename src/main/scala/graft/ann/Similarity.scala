@@ -136,7 +136,8 @@ object Similarity {
   private def idVec(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     emb.select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("v"))
 
-  private def assignEmb(emb: DataFrame, idCol: String, vecCol: String, cents: DataFrame,
+  /** [[assignNearest]] over the (id, v) projection of an embedding table. */
+  private[graft] def assignEmb(emb: DataFrame, idCol: String, vecCol: String, cents: DataFrame,
                         outCol: String = "cid"): DataFrame =
     assignNearest(idVec(emb, idCol, vecCol), "v", cents, outCol)
 

@@ -39,11 +39,10 @@ object CapMetrics {
 
   /** Attach a named observation to a key-count DataFrame: number of keys
     * matching `dropCond` (the capped-away keys) and the total input rows
-    * those keys carried (`__keycap_n` summed). Empty site = no-op, so
-    * hot paths opt in per call site with a unique name. */
+    * those keys carried (`__keycap_n` summed). Every cap call site names
+    * itself, so every cap is reported. */
   private[skew] def observeDrops(counts: DataFrame, dropCond: Column, site: String): DataFrame =
-    if (site.isEmpty) counts
-    else counts.observe(Prefix + site,
+    counts.observe(Prefix + site,
       sum(when(dropCond, 1L).otherwise(0L)).as("dropped_keys"),
       sum(when(dropCond, col("__keycap_n")).otherwise(0L)).as("dropped_rows"))
 

@@ -48,13 +48,13 @@ object KeyCaps {
    * anti-join filters map-side: a billion-row degenerate key never
    * crosses an exchange at all.
    *
-   * `site` (optional): attach a named observation on the key-count branch
+   * `site`: the name of a named observation on the key-count branch
    * counting capped keys and the rows they drop — surfaced through
    * [[CapMetrics]] after any action on the final query. Names must be
-   * unique within one query; empty = no observation.
+   * unique within one query.
    */
   def dropOverCapKeys(df: DataFrame, keyCols: Seq[String], maxCount: Long,
-                      site: String = ""): DataFrame = {
+                      site: String): DataFrame = {
     val keys = keyCols.map(col)
     val counts = df.groupBy(keys: _*).agg(count(lit(1)).as("__keycap_n"))
     val observed = CapMetrics.observeDrops(counts, col("__keycap_n") > maxCount, site)
@@ -74,7 +74,7 @@ object KeyCaps {
    * below-min keys/rows the semi-join filters out.
    */
   def keepKeysWithCountAtLeast(df: DataFrame, keyCols: Seq[String], minCount: Long,
-                               site: String = ""): DataFrame = {
+                               site: String): DataFrame = {
     val keys = keyCols.map(col)
     val counts = df.groupBy(keys: _*).agg(count(lit(1)).as("__keycap_n"))
     val observed = CapMetrics.observeDrops(counts, col("__keycap_n") < minCount, site)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.util.ArrayData
+import graft.expr.VecCore
 
 /**
  * Streaming analog of the reference's inbox watcher (S2,
@@ -184,19 +186,6 @@ object StreamingExtract {
 
   // ---- watermark-bounded streaming SemDeDup --------------------------------
 
-  /** Sequential cosine with the EXACT fold order of
-    * graft.ann.Similarity.cosine (products summed left-to-right from 0.0)
-    * — bit-identical doubles, so the StreamingSpec differential compares
-    * cosines exactly, not approximately. */
-  private def cosineSeq(a: Array[Double], b: Array[Double]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < a.length) {
-      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
   /**
    * Streaming SemDeDup pairs — the semantic sibling of
    * [[streamingNearDup]]: each embedding is assigned map-side to its
@@ -205,8 +194,8 @@ object StreamingExtract {
    * trains k-means once, and a streaming job reuses the persisted epoch
    * quantizer, exactly like [[graft.ann.Similarity.semDedupPairsIncremental]]);
    * every cluster is paired by [[pairLiveBucket]] (its state, horizon and
-   * cap contracts), keeping a pair when its cosine, computed with the
-   * batch fold order, clears `threshold`. With a horizon wider than the
+   * cap contracts), keeping a pair when its cosine, computed by the
+   * batch kernel [[graft.expr.VecCore.cosineBoxed]], clears `threshold`. With a horizon wider than the
    * data span the pair set (cosines included, bit-exact) EQUALS batch
    * [[graft.ann.Similarity.semDedupPairsWithCentroids]].
    */
@@ -230,7 +219,9 @@ object StreamingExtract {
           pairLiveBucket(rows.map(r => BucketDoc(r._2, r._4, r._3)), state, maxBucket) {
             (lo, hi) =>
               // the batch side computes cosine(v_a, v_b) with id_a < id_b
-              val c = cosineSeq(lo.v, hi.v)
+              // ansi = false: a zero vector's cosine is NaN, never a pair
+              val c: Double = VecCore.cosineBoxed(
+                ArrayData.toArrayData(lo.v), ArrayData.toArrayData(hi.v), ansi = false)
               if (c > threshold) Some(SemPair(lo.id, hi.id, c)) else None
           }
       }

@@ -26,9 +26,9 @@ object CorpusAnalysis {
    * Top distinctive terms per document — the TF-IDF shape with an
    * integer-exact ranking: high term frequency first, low document
    * frequency (rarer = more distinctive) second, term lexicographic as
-   * the deterministic tie-break. Two shuffles (doc-term tf, term df) plus
-   * a term-keyed join; the per-doc window only ever sees that document's
-   * own distinct terms.
+   * the deterministic tie-break. Three shuffles (doc-term tf, doc-term
+   * again in the df branch, term df) plus a term-keyed join; the per-doc
+   * window only ever sees that document's own distinct terms.
    */
   def distinctiveTerms(df: DataFrame, idCol: String, textCol: String,
                        topK: Int = 5): DataFrame = {
@@ -40,9 +40,10 @@ object CorpusAnalysis {
     // stopword's df partition is n_docs rows serialized through ONE task —
     // the groupBy's partial_count collapses every map partition's share of
     // a hot term to one row before the term Exchange, and the join back is
-    // a sort-merge join AQE can skew-split. The (doc, term) shuffle feeding
-    // tf appears in both branches and is planned once (reused exchange);
-    // the per-doc rank window only ever sees one document's distinct terms.
+    // a sort-merge join AQE can skew-split. The df branch does not reuse
+    // tf's (doc, term) shuffle: Spark plans it from a second Scan and
+    // Generate with its own (doc, term) Exchange (PLANS.md q35). The per-doc
+    // rank window only ever sees one document's distinct terms.
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("doc_id").orderBy(desc("tf"), asc("df"), asc("term"))
     tf.join(dfreq, Seq("term"))

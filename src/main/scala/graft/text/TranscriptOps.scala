@@ -107,8 +107,10 @@ object TranscriptOps {
    * sorted collect (same contract as [[truncateContext]]'s kept_md5);
    * the keeper argmin is a combinable fingerprint-keyed min + join-back
    * — a billion-copy conversation family partial-aggregates map-side,
-   * never a fingerprint window. Two keyed exchanges total (conv, fp),
-   * both on uniform md5-derived keys.
+   * never a fingerprint window. Three keyed exchanges: Spark plans the
+   * conversation collapse twice, once on each side of the join-back (two
+   * Scans, two conv-keyed Exchanges — PLANS.md q71), plus the fingerprint
+   * Exchange on a uniform md5 key.
    */
   def convExactDedup(turns: DataFrame, convCol: String, idxCol: String,
                      textCol: String): DataFrame = {

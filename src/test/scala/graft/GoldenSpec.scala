@@ -1,8 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.Engine
-import graft.io.Transcripts
 
 /**
  * Per-turn byte-equality against the committed golden file (the north
@@ -12,30 +10,17 @@ import graft.io.Transcripts
  */
 class GoldenSpec extends AnyFunSuite {
 
-  private def render(id: Long): String = {
-    val t = Transcripts.turnFor(42L, id, 1000L, 0.05, 8)
-    val r = Engine.parseTurn(t.conv_id, t.turn_idx, t.text)
-    val sb = new StringBuilder
-    sb.append(s"=== turn $id conv=${r.conv_id} idx=${r.turn_idx} ===\n")
-    sb.append(s"meta|chars=${r.n_chars}|lines=${r.n_lines}|tables=${r.n_tables}|doc=${r.doc_type}|best=${r.best_parser}|count=${r.best_count}|cost=${r.best_total_cost}\n")
-    r.best_items.foreach { it =>
-      sb.append(s"item|${it.name}|${it.article}|${it.qty.getOrElse("")}|${it.unit}|${it.price.getOrElse("")}|${it.currency}|${it.total.getOrElse("")}|${it.supplier}|${it.source}|${it.confidence}\n")
-    }
-    sb.append("--- extracted_text ---\n").append(r.extracted_text).append("\n=== end ===\n")
-    sb.toString
-  }
-
   test("per-turn extraction byte-matches the committed golden for turns 0..39") {
     val is = getClass.getResourceAsStream("/golden/turns_seed42.txt")
     val golden = try new String(is.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
     finally is.close()
-    val actual = (0L until 40L).map(render).mkString
+    val actual = GoldenGen.renderAll
     assert(actual == golden)
   }
 
   test("engine is deterministic across repeated invocations") {
-    val out1 = (0L until 40L).map(render).mkString
-    val out2 = (0L until 40L).map(render).mkString
+    val out1 = GoldenGen.renderAll
+    val out2 = GoldenGen.renderAll
     assert(out1 == out2)
   }
 }

@@ -22,9 +22,10 @@ object PlansDump {
       // run the Dataset's own plan first: explain then shows AQE's final
       // plan (isFinalPlan=true, with the WholeStageCodegen *(n) markers)
       df.collect()
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      // cut long lines (giant serializer exprs) to 250 chars
-      sb.append(plan.linesIterator.map(l => if (l.length < 250) l else l.take(246) + " ...").mkString("\n"))
+      // whole lines, never cut: a cut at a fixed length of the unmasked
+      // text moves with the digit count of expression ids, so
+      // tools/plan_diff.py would see a changed line in an unchanged plan
+      sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")).stripLineEnd)
       sb.append("\n```\n\n")
     }
     graft.io.Transcripts.generateDF(spark, 200L).write.mode("overwrite").parquet("/tmp/plans_transcripts")

@@ -12,8 +12,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Per-query profile (dev) in Bench's session, after Bench's sf0.001
-  * warm-up. Usage: `Test/runMain graft.QuickQ [q...]` (no names: the
-  * benched set); SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS as for Bench.
+  * warm-up. Usage: `Test/runMain graft.QuickQ [q...]`, each q a registry
+  * name or its bare `qNN` (no names: the benched set); SPARK_GRAFT_SF_DIR
+  * and SPARK_GRAFT_CPUS as for Bench.
   * Each query runs 3 times; every run prints its wall time, the Spark
   * jobs, completed stages and finished tasks it ran, and the driver JVM's
   * GC ms, JIT ms and generated classes compiled (CodegenMetrics) it added.
@@ -23,9 +24,17 @@ object QuickQ {
     @volatile var end = 0L
   }
 
+  /** A registry entry by its name or by its bare `qNN` (the key of
+    * PLANS.md and tools/plan_diff.py); an unknown argument fails. */
+  private def lookup(arg: String): SparkEntry.Query =
+    SparkEntry.byName.get(arg).orElse(
+        if (arg.matches("q\\d+")) SparkEntry.registry.find(_.name.startsWith(arg + "_")) else None)
+      .getOrElse(throw new IllegalArgumentException(
+        s"QuickQ: unknown query '$arg' (give a registry name, e.g. q21_minhash_candidates, or q21)"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = Bench.envSfDir
-    val queries = if (args.isEmpty) SparkEntry.benched else args.toSeq.map(SparkEntry.byName)
+    val queries = if (args.isEmpty) SparkEntry.benched else args.toSeq.map(lookup)
     val spark = Bench.session(Bench.envCpus)
     val jobs = new ConcurrentHashMap[Int, Job]()
     val sites = new ConcurrentHashMap[Long, String]() // SQL execution id -> its action's call site

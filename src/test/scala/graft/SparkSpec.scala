@@ -957,14 +957,16 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("v").collect().map(_.getLong(0)).toSet
     for (cap <- Seq(1, 5, 63, 200, 4000)) {
-      val guarded = ids(graft.skew.KeyCaps.dropOverCapKeys(rows, Seq("key"), cap))
+      val guarded = ids(graft.skew.KeyCaps.dropOverCapKeys(rows, Seq("key"), cap,
+        site = "spec_zipf_drop"))
       val windowed = ids(rows
         .withColumn("__n", count(lit(1)).over(Window.partitionBy("key")))
         .where(col("__n") <= cap).drop("__n"))
       assert(guarded == windowed, s"dropOverCapKeys cap=$cap")
     }
     for (min <- Seq(1, 2, 64, 500)) {
-      val guarded = ids(graft.skew.KeyCaps.keepKeysWithCountAtLeast(rows, Seq("key"), min))
+      val guarded = ids(graft.skew.KeyCaps.keepKeysWithCountAtLeast(rows, Seq("key"), min,
+        site = "spec_zipf_keep"))
       val windowed = ids(rows
         .withColumn("__n", count(lit(1)).over(Window.partitionBy("key")))
         .where(col("__n") >= min).drop("__n"))
@@ -1061,7 +1063,8 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         (0 until 2000).map(i => (s"g$i", i.toLong, pad)) ++
         (0 until 2000).map(i => (s"g$i", (10000 + i).toLong, pad)))
         .toDF("key", "v", "pad").repartition(4)
-      val guarded = graft.skew.KeyCaps.keepKeysWithCountAtLeast(rows, Seq("key"), 2L)
+      val guarded = graft.skew.KeyCaps.keepKeysWithCountAtLeast(rows, Seq("key"), 2L,
+          site = "spec_skew_keep")
         .select("v") // collect through guarded's OWN QueryExecution (count() would plan its own)
       assert(guarded.collect().length == 64000)
       val plan = guarded.queryExecution.executedPlan.toString
@@ -1287,14 +1290,16 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("v").collect().map(_.getLong(0)).toSet
     for (cap <- Seq(1L, 4L, 5L)) {
-      val guarded = ids(graft.skew.KeyCaps.dropOverCapKeys(rows, Seq("key"), cap))
+      val guarded = ids(graft.skew.KeyCaps.dropOverCapKeys(rows, Seq("key"), cap,
+        site = "spec_null_drop"))
       val windowed = ids(rows
         .withColumn("__n", count(lit(1)).over(Window.partitionBy("key")))
         .where(col("__n") <= cap).drop("__n"))
       assert(guarded == windowed, s"null-key dropOverCapKeys cap=$cap")
     }
     for (min <- Seq(2L, 4L, 5L)) {
-      val guarded = ids(graft.skew.KeyCaps.keepKeysWithCountAtLeast(rows, Seq("key"), min))
+      val guarded = ids(graft.skew.KeyCaps.keepKeysWithCountAtLeast(rows, Seq("key"), min,
+        site = "spec_null_keep"))
       val windowed = ids(rows
         .withColumn("__n", count(lit(1)).over(Window.partitionBy("key")))
         .where(col("__n") >= min).drop("__n"))
